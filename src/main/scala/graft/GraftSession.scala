@@ -12,12 +12,24 @@ import org.apache.spark.sql.SparkSession
   *     `graft_poly_hash`, `graft_simhash64`);
   *   - AQE left on (runtime coalescing + skew-join splitting);
   *   - shuffle parallelism sized to the caller's cluster, not the
-  *     200-partition default.
+  *     200-partition default;
+  *   - `file:` paths on [[GraftLocalFileSystem]] ([[localFileSystem]]),
+  *     so local checkpoints and parquet writes do not fork a process
+  *     per created file when libhadoop is not loaded.
   *
   * All settings are plain configs — users with an existing session can
   * replicate them instead of calling this.
   */
 object GraftSession {
+
+  /** Hadoop settings that serve the `file` scheme from
+    * [[GraftLocalFileSystem]] through both Hadoop APIs: `FileSystem`
+    * (parquet parts, listing) and `FileContext` (Spark's streaming
+    * checkpoint manager). Other schemes are untouched.
+    */
+  val localFileSystem: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[GraftLocalFs].getName)
 
   /** NOTE: `spark.sql.extensions` is a static conf — getOrCreate
     * ignores it when a session already exists in the JVM. [[local]]
@@ -31,6 +43,7 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
+      .config(localFileSystem)
 
   /** Local session for tests / single-node runs. The SQL functions are
     * guaranteed registered even when getOrCreate returns a

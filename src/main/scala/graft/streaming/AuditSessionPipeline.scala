@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.GraftSession
 import graft.operators.{AuditJson, Sessionize}
 import graft.sources.AuditSource
 
@@ -150,10 +151,12 @@ object AuditSessionPipeline {
     */
   def main(args: Array[String]): Unit = {
     val config = Config.fromFile(args(0))
-    // spark-submit injects spark.master; default to local[*] for direct runs
-    val builder = SparkSession.builder()
+    // spark-submit injects spark.master (and any spark.sql.shuffle.partitions
+    // given with --conf); default to local[*] and its core count for direct runs
+    val builder = GraftSession
+      .builder(sys.props.get("spark.sql.shuffle.partitions")
+        .fold(Runtime.getRuntime.availableProcessors)(_.toInt))
       .appName("audit-sessions")
-      .config("spark.sql.session.timeZone", "UTC")
     val spark = sys.props.get("spark.master")
       .fold(builder.master("local[*]"))(_ => builder)
       .getOrCreate()

@@ -14,21 +14,10 @@ import graft.functions.GraftExtensions
 class GraftSessionSpec extends SparkSpec {
 
   test("GraftSession.local registers SQL functions even on a reused session") {
-    // getOrCreate on a pre-existing session applies non-static configs
-    // (Spark ≥3.4), so local() would leak shuffle.partitions=4 etc. into
-    // every later spec in this JVM — snapshot and restore around the call.
-    val touched = Seq(
-      "spark.sql.session.timeZone",
-      "spark.sql.shuffle.partitions",
-      "spark.sql.adaptive.enabled")
-    val saved = touched.map(k => k -> spark.conf.getOption(k))
-    try {
+    withRestoredConf(GraftSessionSpec.localTouches) {
       val viaLocal = GraftSession.local(cores = 4)
       // shared-session JVM: getOrCreate reuses; functions must still work
       assert(viaLocal.sql("SELECT graft_simhash64('a b c')").collect().nonEmpty)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -61,4 +50,17 @@ class GraftSessionSpec extends SparkSpec {
       java.lang.Double.doubleToLongBits(entApi.getDouble(0)))
     assert(entSql.getSeq[String](1) == entApi.getSeq[String](1))
   }
+}
+
+object GraftSessionSpec {
+
+  /** getOrCreate on a pre-existing session applies non-static configs
+    * (Spark ≥3.4), so `GraftSession.local` would leak
+    * shuffle.partitions=4 etc. into every later spec in this JVM:
+    * specs that call it restore these around the call.
+    */
+  val localTouches: Seq[String] = Seq(
+    "spark.sql.session.timeZone",
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.enabled") ++ GraftSession.localFileSystem.keys
 }

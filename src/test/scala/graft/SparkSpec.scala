@@ -7,6 +7,18 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Runs `body`, then puts the shared session's runtime `keys` back as
+    * they were, so settings made inside do not leak into later specs.
+    */
+  def withRestoredConf[T](keys: Iterable[String])(body: => T): T = {
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {
@@ -18,6 +30,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFileSystem)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

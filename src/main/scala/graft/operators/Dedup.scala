@@ -611,15 +611,12 @@ object Dedup {
       .localCheckpoint()
     // The checkpointed label frame is a LogicalRDD — size statistics
     // erased, so Catalyst would sort-merge-join every round against it
-    // (2 Exchanges + 2 Sorts per join, the Graph.rankBroadcast finding).
-    // The frame is |V(dup subgraph)|-bounded; hint the broadcast while
-    // the ACTUAL vertex count (a cheap count over the already-
-    // materialized checkpoint) stays under the cap, shuffle-join past
-    // it — results identical either way.
-    val cap = docs.sparkSession.conf
-      .getOption("graft.dedup.broadcastLabelCap").map(_.toLong).getOrElse(4000000L)
-    val bc: DataFrame => DataFrame =
-      if (labels.count() <= cap) broadcast else identity
+    // (2 Exchanges + 2 Sorts per join, as in Graph's loops). The frame
+    // is |V(dup subgraph)|-bounded; hint the broadcast while the ACTUAL
+    // vertex count (a cheap count over the already-materialized
+    // checkpoint) stays under the cap, shuffle-join past it — results
+    // identical either way.
+    val bc = Guard.broadcastIfSmall(labels.count())
     var changed = 1L
     while (changed > 0) {
       // carry the old label through the aggregation so convergence is

@@ -34,7 +34,7 @@ object Frontier {
     * CMS modulus (sharding needs stability, not avalanche; the
     * SQL-portable hash keeps the assignment oracle-checkable).
     */
-  def workerOf(host: Column, workers: Int): Column =
+  private def workerOf(host: Column, workers: Int): Column =
     pmod(graft.functions.GraftFunctions.polyHash(host, 31L, Sketch.CmsMod),
       lit(workers.toLong)).cast("int")
 
@@ -45,7 +45,7 @@ object Frontier {
     * instead of letting CreateMap throw DUPLICATED_MAP_KEY at task
     * execution time.
     */
-  def delayColumn(delays: Seq[(String, Long)], host: Column, defaultMs: Long): Column =
+  private def delayColumn(delays: Seq[(String, Long)], host: Column, defaultMs: Long): Column =
     if (delays.isEmpty) lit(defaultMs)
     else {
       val collapsed = delays.groupBy(_._1).toSeq.sortBy(_._1)
@@ -174,8 +174,8 @@ object Frontier {
     * `delayFrame` is (domain, delay_ms), [[Robots.effectiveDelayFrame]]'s
     * shape — the web-scale form: a literal map explodes plan size at
     * 10⁷–10⁸ registrable domains, a joined frame never enters the plan
-    * text. Count-guarded (the Profile.guardedSide discipline): at or
-    * under `maxBroadcastDomains` the counted frame collects to a
+    * text. Count-guarded ([[Guard.guardedSide]]): at or under
+    * `maxBroadcastDomains` the counted frame collects to a
     * driver-local relation and BROADCASTS (the identical driver
     * footprint a broadcast would pay anyway — and the count/derivation
     * job drops out of the output plan, so the frontier still pays
@@ -204,7 +204,7 @@ object Frontier {
     val lookup = delayFrame
       .groupBy(col("domain").as("__d"))
       .agg(max(col("delay_ms").cast("long")).as("__delay"))
-    val side = Guard.broadcastOrLazy(lookup, maxBroadcastDomains)
+    val (side, _, _) = Guard.guardedSide(lookup, maxBroadcastDomains, keepPersisted = false)
     val joined = frontier
       .join(side, frontier(hostCol) === col("__d"), "left")
       .drop("__d")

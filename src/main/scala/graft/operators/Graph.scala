@@ -51,8 +51,8 @@ object Graph {
   /** One integer-PageRank round from a PRE-JOINED `(src, dst, w, __out)`
     * adjacency (see [[adjWithDeg]] — adj ⋈ deg is loop-invariant, so
     * the callers hoist and persist it once instead of re-joining every
-    * round). `bc` is the caller's [[rankBroadcast]] decision applied to
-    * every |nodes|-bounded side.
+    * round). `bc` is the caller's [[Guard.broadcastIfSmall]] decision
+    * applied to every |nodes|-bounded side.
     */
   private def rankStep(adjDeg: DataFrame, nodes: DataFrame,
       r: DataFrame, bc: DataFrame => DataFrame): DataFrame =
@@ -77,28 +77,6 @@ object Graph {
     */
   private def rankOf(in: Column): Column =
     lit(150000L) + coalesce(in, lit(0L))
-
-  /** Per-run broadcast decision for the iteration loops' |nodes|-bounded
-    * frames (rank vectors, label frames, per-round contributions). The
-    * [[pin]] RDD rebase that keeps round plans constant-size also erases
-    * size statistics (a LogicalRDD reports the default
-    * `spark.sql.defaultSizeInBytes` — effectively infinite), so Catalyst
-    * sort-merge-joins every round against the tiny rank frame: two
-    * Exchanges + two Sorts per join, ~6 per round. An explicit broadcast
-    * hint restores the intended shape (guide §3.1: size estimates are
-    * badly wrong after opaque operations — hint when you know the side
-    * is small). Gated on the ACTUAL node count, known from the loop's
-    * own bounded action: above the cap (default 4M nodes ≈ a few
-    * hundred MB built; override with `graft.graph.broadcastNodeCap` for
-    * cluster memory budgets) the hint is withheld and the planner's
-    * shuffle join stands — results are identical either way, integer
-    * sums being order-free.
-    */
-  private def rankBroadcast(df: DataFrame, nNodes: Long): DataFrame => DataFrame = {
-    val cap = df.sparkSession.conf
-      .getOption("graft.graph.broadcastNodeCap").map(_.toLong).getOrElse(4000000L)
-    if (nNodes <= cap) broadcast else identity
-  }
 
   /** The loop-invariant adjacency ⋈ out-degree frame every PageRank
     * round consumes — computed and persisted ONCE per run (guide §2.4:
@@ -169,7 +147,7 @@ object Graph {
     val adjP = adj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     adjP.count(): Unit
     val nodes = nodesOf(adjP).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bc = rankBroadcast(adjP, nodes.count())
+    val bc = Guard.broadcastIfSmall(nodes.count())
     val adjDeg = adjWithDeg(adjP).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     if (iters <= PinFreeIters) {
       var r = nodes.withColumn("rank_micro", lit(1000000L))
@@ -223,7 +201,7 @@ object Graph {
     edges.count(): Unit
     var (lP, lCut) = pin(
       nodesOf(adj).select(col("node"), col("node").as("component")))
-    val bc = rankBroadcast(edges, lP.count())
+    val bc = Guard.broadcastIfSmall(lP.count())
     var changed = 1L
     while (changed > 0) {
       // ONE action per round (the pageRankConverged discipline): the
@@ -322,7 +300,7 @@ object Graph {
     val adjP = adj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     adjP.count(): Unit
     val nodes = nodesOf(adjP).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bc = rankBroadcast(adjP, nodes.count())
+    val bc = Guard.broadcastIfSmall(nodes.count())
     var (sP, sCut) = pin(nodes
       .withColumn("auth_micro", lit(1000000L))
       .withColumn("hub_micro", lit(1000000L)))
@@ -341,25 +319,6 @@ object Graph {
     }
     adjP.unpersist(); nodes.unpersist()
     sP
-  }
-
-  /** Plan-audit hook: ONE [[pageRankConverged]] round (step ⋈ previous
-    * rank) built exactly as the loop builds it, against an RDD-rebased
-    * rank frame — what `plans/r20/pagerank_round_{before,after}.txt`
-    * explain. No persist, no action; probe-only.
-    */
-  private[graft] def probeRankRound(adj: DataFrame): DataFrame = {
-    val adjP = adj
-    val nodes = nodesOf(adjP)
-    val nP = nodes.persist(); nP.count(): Unit
-    val bc = rankBroadcast(adjP, nP.count())
-    val r0 = nP.withColumn("rank_micro", lit(1000000L)).persist()
-    r0.count(): Unit
-    val rCut = adj.sparkSession.createDataFrame(r0.rdd, r0.schema)
-    rCut
-      .select(col("node"), col("rank_micro").as("__prev"))
-      .join(bc(rankContrib(adjWithDeg(adjP), rCut, bc)), Seq("node"), "left")
-      .select(col("node"), rankOf(col("__in")).as("rank_micro"), col("__prev"))
   }
 
   /** Result of a convergence-looped rank computation: the final rank
@@ -400,7 +359,7 @@ object Graph {
         0, 0L)
     }
     val nodes = nodesOf(adjP).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bc = rankBroadcast(adjP, nodes.count())
+    val bc = Guard.broadcastIfSmall(nodes.count())
     val adjDeg = adjWithDeg(adjP).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var (rP, rCut) = pin(nodes.withColumn("rank_micro", lit(1000000L)))
     var i = 0
@@ -472,7 +431,7 @@ object Graph {
         0, 0L)
     }
     val nodes = nodesOf(adjP).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bc = rankBroadcast(adjP, nodes.count())
+    val bc = Guard.broadcastIfSmall(nodes.count())
     var (sP, sCut) = pin(nodes
       .withColumn("auth_micro", lit(1000000L))
       .withColumn("hub_micro", lit(1000000L)))

@@ -84,8 +84,8 @@ object Profile {
     // threshold, leaving nothing persisted behind; past the guard the
     // join degrades to a shuffle (keepPersisted=false: this audit
     // returns a lazy plan, so nothing may stay cached without an owner).
-    val (side, _, _) =
-      guardedSide(renameKeys(groups, quasiIds), maxBroadcastGroups, keepPersisted = false)
+    val (side, _, _) = Guard.guardedSide(
+      renameKeys(groups, quasiIds), maxBroadcastGroups, keepPersisted = false)
     // NULL-SAFE join: groupBy already treats NULL as a QI value (its own
     // group), but a plain equi-join would silently DROP every NULL-QI row
     // from the audit — a privacy gate failing open for exactly the rows
@@ -105,54 +105,11 @@ object Profile {
   private def nullSafeCond(keys: Seq[String]): org.apache.spark.sql.Column =
     keys.map(c => col(c) <=> col(s"__g_$c")).reduce(_ && _)
 
-  /** Count-guarded join side for a "small by construction" group table:
-    * materialize it once; when it holds at most `maxRows`, collect it to
-    * a driver-local relation — the identical driver footprint a
-    * `broadcast` would pay anyway when shipping the table — and
-    * broadcast that, leaving NOTHING persisted behind. Past the guard,
-    * the behavior depends on who can release a cache:
-    *
-    *   - `keepPersisted = true` (callers that MATERIALIZE before
-    *     returning, e.g. tCloseness): return the persisted frame for a
-    *     shuffle join — the over-threshold case is exactly when the
-    *     input aggregation is largest, so discarding the
-    *     materialization would double-scan the corpus — and release it
-    *     via the returned thunk after materializing.
-    *   - `keepPersisted = false` (callers returning a LAZY plan, e.g.
-    *     kAnonymity/lDiversity): unpersist immediately and return the
-    *     lazy frame. The recompute (one extra aggregation scan) is the
-    *     accepted price of a leak-free contract — Spark's CacheManager
-    *     holds caches until an explicit unpersist, so a "plan-lifetime"
-    *     persist from a lazy-returning audit would accumulate across a
-    *     long-lived session with no owner to release it.
-    */
-  private def guardedSide(
-      small: DataFrame,
-      maxRows: Long,
-      keepPersisted: Boolean
-  ): (DataFrame, Long, () => Unit) = {
-    val persisted = small.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n =
-      try persisted.count()
-      catch { case t: Throwable => persisted.unpersist(); throw t }
-    if (n <= maxRows) {
-      val local = broadcast(small.sparkSession.createDataFrame(
-        persisted.collectAsList(), small.schema))
-      persisted.unpersist()
-      (local, n, () => ())
-    } else if (keepPersisted) {
-      (persisted, n, () => { persisted.unpersist(): Unit })
-    } else {
-      persisted.unpersist()
-      (small, n, () => ())
-    }
-  }
-
   /** Past this many quasi-identifier combinations the group table stops
-    * riding a broadcast (≈ tens of MB of driver memory) and the join
-    * degrades to a shuffle. Far above any legitimate QI table.
+    * riding a broadcast and the join degrades to a shuffle — [[Guard]]'s
+    * shared threshold, far above any legitimate QI table.
     */
-  val DefaultMaxBroadcastGroups: Long = 1L << 20
+  val DefaultMaxBroadcastGroups: Long = Guard.DefaultMaxBroadcastRows
 
   /** The k-anonymity REMEDY a release pipeline actually executes when
     * [[kAnonymity]] flags rows: local-recoding GENERALIZATION. `levels`
@@ -191,7 +148,7 @@ object Profile {
         .groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as(s"__k$i"))
       val (side, _, _) =
-        guardedSide(renameKeys(g, keys), maxBroadcastGroups, keepPersisted = false)
+        Guard.guardedSide(renameKeys(g, keys), maxBroadcastGroups, keepPersisted = false)
       // null-safe: a NULL quasi-identifier value is a group like any
       // other — an equi-join would drop those rows from the remedy
       acc.join(side, nullSafeCond(keys))
@@ -302,8 +259,8 @@ object Profile {
     val groups = df
       .groupBy(quasiIds.map(col): _*)
       .agg(countDistinct(col(sensitiveCol)).as("l_distinct"))
-    val (side, _, _) =
-      guardedSide(renameKeys(groups, quasiIds), maxBroadcastGroups, keepPersisted = false)
+    val (side, _, _) = Guard.guardedSide(
+      renameKeys(groups, quasiIds), maxBroadcastGroups, keepPersisted = false)
     // null-safe join-back, as kAnonymity: NULL-QI rows stay in the audit
     // (countDistinct ignores NULL sensitive values — a group whose only
     // sensitive "values" are NULL reports l_distinct = 0 and fails
@@ -387,11 +344,11 @@ object Profile {
       // register each release the moment its guardedSide returns — if
       // the SECOND call throws mid-materialization, the first's
       // over-guard persist must still release in the finally
-      val (gsSide, nQi, relGs) =
-        guardedSide(renameKeys(groupSizes, quasiIds), maxBroadcastGroups, keepPersisted = true)
+      val (gsSide, nQi, relGs) = Guard.guardedSide(
+        renameKeys(groupSizes, quasiIds), maxBroadcastGroups, keepPersisted = true)
       sideReleases = relGs :: sideReleases
       val (mSide, _, relM) =
-        guardedSide(marginals, maxBroadcastGroups, keepPersisted = true)
+        Guard.guardedSide(marginals, maxBroadcastGroups, keepPersisted = true)
       sideReleases = relM :: sideReleases
       val out = gv
         .join(mSide, col("__v") <=> col("__mv"))

@@ -167,12 +167,9 @@ object Sampling {
     * of each group in ascending `seqCol` order (ties broken on `idCol`)
     * — quota ENFORCEMENT rather than unbiased selection. This is
     * exactly what a streaming ingest enforcing the same quota table
-    * admits when rows arrive in `seqCol` order, so it serves as the
-    * oracle-checkable batch twin of
-    * [[graft.streaming.StreamingQuota.admit]] (spec-pinned equal on the
-    * same arrival sequence). Same scale shape as [[quotaSample]]: the
-    * |groups|-sized quota rides a broadcast, the corpus pays one
-    * group-keyed window shuffle. (The rank filter compares against the
+    * admits when rows arrive in `seqCol` order. Same scale shape as
+    * [[quotaSample]]: the |groups|-sized quota rides a broadcast, the
+    * corpus pays one group-keyed window shuffle. (The rank filter compares against the
     * joined `alloc` column, not a literal, so no map-side
     * WindowGroupLimit applies — a hot group's arrivals do cross the
     * shuffle; pre-thin with [[sampleByHash]] in that regime.)

@@ -47,16 +47,9 @@ object Sessionize {
       denied: Column,
       weight: Column
   ): DataFrame =
-    events
-      .groupBy(session_window(col(timeCol), gap).as("session"), col(keyCol))
-      .agg(sum(when(denied, weight).otherwise(lit(0))).as("denies"))
-      .filter(col("denies") =!= 0)
-      .select(
-        col(keyCol),
-        col("denies"),
-        col("session.start").as("session_start"),
-        col("session.end").as("session_end")
-      )
+    // Spark's own `session_window(Column, String)` is
+    // `session_window(timeColumn, lit(gapDuration))`: same plan
+    deniedCountsDynamic(events, timeCol, keyCol, lit(gap), denied, weight)
 
   /** Dynamic-gap variant: the inactivity gap is a per-EVENT expression
     * (e.g. shorter sessions after error events) — Spark's dynamic

@@ -2309,9 +2309,7 @@ object CorpusQueries {
 
     // Quota ADMISSION (arrival-order enforcement): the temperature
     // allocation's per-language budgets enforced over documents
-    // arriving in doc_id order — the oracle-checkable batch twin of
-    // StreamingQuota.admit (MemoryStream-pinned equal in
-    // StreamingCorpusOpsSpec). Unlike q_doremi_sample's unbiased
+    // arriving in doc_id order. Unlike q_doremi_sample's unbiased
     // hash-order selection, admission order is ARRIVAL order — the
     // semantics an ingest actually enforces. Quota rides a broadcast;
     // the corpus pays one group-keyed window shuffle.

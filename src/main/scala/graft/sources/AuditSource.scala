@@ -14,37 +14,27 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first mapping: `readStream.format("text")` with
   * `recursiveFileLookup`; the poll interval becomes the query trigger
-  * (`Trigger.ProcessingTime`), configured at sink time. Date pruning:
+  * (`Trigger.ProcessingTime`), configured at sink time. Date pruning
+  * for a bare `YYYYMMDD/` tree (the reference's layout):
   *
-  *   - **Scale path (preferred):** lay the tree out Hive-style
-  *     (`dt=YYYYMMDD/...`) and filter on the `dt` partition column —
-  *     Catalyst's PruneFileSourcePartitions then skips whole directories
-  *     at listing time, exactly `DateFileFilter`'s effect, at any scale.
-  *   - **Compatibility path:** for a bare `YYYYMMDD/` tree (no `key=`),
-  *     derive the date from `input_file_name()` and filter. Correct, but
-  *     prunes after listing; only the row scan is saved.
+  *   - **Batch:** [[batchPruned]] lists through [[DatePrunedFileIndex]],
+  *     which never descends into a below-min-date directory — full
+  *     `DateFileFilter` parity at listing time.
+  *   - **Stream:** [[streamPruned]] puts [[minDateGlob]] on the load
+  *     path, so every poll skips below-min-date day directories while
+  *     day directories created later still match.
+  *   - **Fallback:** [[filterByPathDate]] derives the date from
+  *     `input_file_name()` and filters. Correct, but prunes after
+  *     listing; only the row scan is saved.
   */
 object AuditSource {
 
-  /** Streaming text source over a (possibly partitioned) directory tree.
-    *
-    * @param maxFilesPerTrigger backpressure knob: cap files ingested per
-    *        micro-batch so a large backlog (or a bulk backfill drop)
-    *        drains in bounded-size batches instead of one giant one —
-    *        essential when pointing the stream at months of history
-    */
-  def stream(
-      spark: SparkSession,
-      path: String,
-      maxFilesPerTrigger: Option[Int] = None
-  ): DataFrame = {
-    val reader = spark.readStream
+  /** Streaming text source over a directory tree. */
+  def stream(spark: SparkSession, path: String): DataFrame =
+    spark.readStream
       .format("text")
       .option("recursiveFileLookup", "true")
-    maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
       .load(path)
-  }
 
   /** Batch twin — identical downstream operators apply (unified API). */
   def batch(spark: SparkSession, path: String): DataFrame =
@@ -53,28 +43,10 @@ object AuditSource {
       .option("recursiveFileLookup", "true")
       .load(path)
 
-  /** Hive-partitioned (`dt=YYYYMMDD`) variants: partition pruning does the
-    * directory skipping that DateFileFilter hand-implements.
-    */
-  def streamPartitioned(spark: SparkSession, path: String, minDate: Option[String]): DataFrame = {
-    val df = spark.readStream.format("text").load(path)
-    applyMinDate(df, minDate)
-  }
-
-  def batchPartitioned(spark: SparkSession, path: String, minDate: Option[String]): DataFrame =
-    applyMinDate(spark.read.format("text").load(path), minDate)
-
-  /** BASIC_ISO_DATE (`YYYYMMDD`) min-date filter on the dt partition
-    * column; comparison is lexicographic = chronological for this format
-    * (same trick DateFileFilter relies on).
-    */
-  private def applyMinDate(df: DataFrame, minDate: Option[String]): DataFrame =
-    minDate.fold(df)(d => df.filter(col("dt") >= lit(d)))
-
   /** Compatibility pruning for bare `YYYYMMDD/` trees: extract the date
     * component from the file path; non-date paths always pass (matching
     * `DateFileFilter.java:29-33`). Prunes AFTER listing — prefer
-    * [[batchPruned]] (enumeration-time skip) or the `dt=` layout.
+    * [[batchPruned]] (enumeration-time skip).
     */
   def filterByPathDate(df: DataFrame, minDate: String): DataFrame = {
     val dateInPath = regexp_extract(input_file_name(), "/([0-9]{8})/", 1)
@@ -139,20 +111,13 @@ object AuditSource {
     * prunes the day level, and [[filterByPathDate]] composes on top when
     * date dirs can also appear deeper in the tree.
     */
-  def streamPruned(
-      spark: SparkSession,
-      path: String,
-      minDate: String,
-      maxFilesPerTrigger: Option[Int] = None
-  ): DataFrame =
-    stream(spark, s"${path.stripSuffix("/")}/${minDateGlob(minDate)}",
-      maxFilesPerTrigger)
+  def streamPruned(spark: SparkSession, path: String, minDate: String): DataFrame =
+    stream(spark, s"${path.stripSuffix("/")}/${minDateGlob(minDate)}")
 
   /** Enumeration-time pruning for bare `YYYYMMDD/` trees — full
     * `DateFileFilter` parity: the listing itself never descends into
     * below-min-date directories ([[DatePrunedFileIndex]]), so file
-    * splits and tasks scale with the surviving days only. Use when the
-    * tree cannot be re-laid-out Hive-style.
+    * splits and tasks scale with the surviving days only.
     */
   def batchPruned(spark: SparkSession, path: String, minDate: Option[String]): DataFrame =
     batchPrunedWithIndex(spark, path, minDate)._1

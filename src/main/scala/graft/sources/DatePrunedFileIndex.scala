@@ -26,9 +26,9 @@ import org.apache.spark.sql.types.StructType
   * schedules) all of them before dropping rows. This index hands Spark's
   * `FileSourceScanExec` only the surviving files, so splits, tasks, and
   * scheduler state all scale with the days you keep, not the days you
-  * have. The Hive-partitioned `dt=` layout gets the same effect from
-  * Catalyst partition pruning ([[AuditSource.batchPartitioned]]); this
-  * class is for trees you cannot re-layout — reference parity.
+  * have. A Hive-partitioned `dt=` layout gets the same effect from
+  * Catalyst partition pruning (the `q_date_prune_partitioned` gate);
+  * this class is for the reference's bare `YYYYMMDD/` trees.
   *
   * Listing cost note: directories are walked serially on the driver —
   * right for the reference's tree shape (one dir per day, thousands of

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** One-query repeat timer: `runMain graft.tools.MicroBench <query> <reps>
   * [sfDir]` — median of reps isolates a query from ambient noise.
@@ -11,10 +11,8 @@ object MicroBench {
     val reps = if (args.length > 1) args(1).toInt else 5
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(shufflePartitions = cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

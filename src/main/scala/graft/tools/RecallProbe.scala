@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.Quantize
 
 /** One-off measurement harness for PQ codebook fidelity: mean recall of
@@ -12,8 +12,8 @@ import graft.operators.Quantize
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+    val spark = GraftSession.builder(shufflePartitions = 8)
+      .master("local[8]")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

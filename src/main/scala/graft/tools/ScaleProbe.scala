@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.{Dedup, Similarity}
 
 /** Scale-behavior probe: times the bucket-candidate operators on 1x/2x/
@@ -43,10 +44,8 @@ object ScaleProbe {
     def probe(label: String)(body: => Long): Unit =
       if (selected(label)) time(label)(body)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(shufflePartitions = cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Sequential multi-query timer for session-interaction bisection:
   * `runMain graft.tools.SeqBench <sfDir> <q1,q2,...>` runs the named
@@ -12,9 +12,8 @@ object SeqBench {
     val sfDir = args(0)
     val names = args(1).split(',').toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(shufflePartitions = cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

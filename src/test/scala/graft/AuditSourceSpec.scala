@@ -134,19 +134,4 @@ class AuditSourceSpec extends SparkSpec {
       assert(batch2 == Seq("later1", "misc", "new1"))
     } finally query.stop()
   }
-
-  test("hive-partitioned dt tree prunes via partition filter") {
-    val root = Files.createTempDirectory("audits_dt").toFile
-    for ((d, line) <- Seq("20210101" -> "old", "20210301" -> "new")) {
-      val dir = new java.io.File(root, s"dt=$d")
-      dir.mkdirs()
-      Files.writeString(new java.io.File(dir, "audit.log").toPath, line + "\n")
-    }
-    val pruned = AuditSource.batchPartitioned(spark, root.getAbsolutePath, Some("20210201"))
-    assert(pruned.select("value").collect().map(_.getString(0)).toSeq == Seq("new"))
-    // the filter must actually prune at the source: the plan's partition
-    // filters mention dt
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("dt"))
-  }
 }

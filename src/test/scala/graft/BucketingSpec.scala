@@ -11,7 +11,8 @@ class BucketingSpec extends SparkSpec {
   test("dynamic partition pruning: dim filter prunes fact partitions at runtime") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_dpp").toFile.getAbsolutePath
     val events = graft.queries.Q.events(spark, "/root/testdata/sf0.001")
-    graft.sources.PartitionedSink.writeDatePartitioned(events, "ts", tmp)
+    events.withColumn("dt", date_format(col("ts"), "yyyyMMdd"))
+      .write.partitionBy("dt").mode("append").parquet(tmp)
 
     val fact = spark.read.parquet(tmp)
     // dim filtered on a NON-join column, so fact partitions are not

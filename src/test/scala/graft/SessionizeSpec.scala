@@ -128,6 +128,32 @@ class SessionizeSpec extends SparkSpec with TableDrivenPropertyChecks {
       ("u2", 1L, "2022-09-26 10:05:00.0")))
   }
 
+  test("constant gap: String and Column forms give the same analyzed plan and rows") {
+    val denied = col("result") =!= 1
+    val weight = col("event_count")
+    val viaString = Sessionize.deniedCounts(
+      fourEvents, "evtTime", "reqUser", "1200 seconds", denied, weight)
+    val viaColumn = Sessionize.deniedCountsDynamic(
+      fourEvents, "evtTime", "reqUser", lit("1200 seconds"), denied, weight)
+    // Spark's own String overload, spelled out: what deniedCounts must
+    // keep planning as
+    val viaSpark = fourEvents
+      .groupBy(session_window(col("evtTime"), "1200 seconds").as("session"), col("reqUser"))
+      .agg(sum(when(denied, weight).otherwise(lit(0))).as("denies"))
+      .filter(col("denies") =!= 0)
+      .select(col("reqUser"), col("denies"),
+        col("session.start").as("session_start"), col("session.end").as("session_end"))
+    def plan(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.analyzed.toString.replaceAll("#\\d+", "#_")
+    assert(plan(viaString) == plan(viaColumn))
+    assert(plan(viaString) == plan(viaSpark))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    assert(rows(viaString) == rows(viaColumn))
+    assert(rows(viaString) == rows(viaSpark))
+    assert(rows(viaString).size == 2)
+  }
+
   test("format projection matches the reference's output pattern") {
     val formatted = Sessionize
       .formatResults(Sessionize.auditDeniedCounts(fourEvents, 1200))

@@ -333,82 +333,6 @@ class StreamingCorpusOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming quota admission matches the batch twin across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingQuota
-    import graft.streaming.StreamingQuota.Arrival
-    val allocs = Map("a" -> 3L, "b" -> 1L) // "c" absent -> admits nothing
-    val batch1 = Seq(Arrival("a", 1, 1), Arrival("a", 2, 2),
-      Arrival("b", 3, 3), Arrival("c", 4, 4))
-    val batch2 = Seq(Arrival("a", 5, 5), Arrival("a", 6, 6), Arrival("b", 7, 7))
-    val in = MemoryStream[Arrival]
-    val q = StreamingQuota.admit(in.toDS(), allocs)
-      .writeStream.format("memory").queryName("sq_admit_out")
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      in.addData(batch1: _*); q.processAllAvailable()
-      in.addData(batch2: _*); q.processAllAvailable()
-      val streamed = spark.table("sq_admit_out").as[Arrival].collect().toSet
-      // the state store carries the admitted count across batches: "a"
-      // admits 1,2 in batch 1 and only 5 in batch 2; "b" is exhausted
-      // after batch 1; "c" has no budget at all
-      assert(streamed == Set(Arrival("a", 1, 1), Arrival("a", 2, 2),
-        Arrival("a", 5, 5), Arrival("b", 3, 3)))
-      // unified API: the bounded branch admits the same set on the
-      // same total arrivals...
-      val all = batch1 ++ batch2
-      assert(StreamingQuota.admit(all.toDS(), allocs).collect().toSet == streamed)
-      // ...and so does the declarative window twin (the oracle-gated
-      // q_quota_admit shape)
-      val viaWindow = graft.operators.Sampling.quotaAdmit(
-        all.toDF(), "group", "seq", "id", allocs.toSeq.toDF("group", "alloc"))
-        .as[Arrival].collect().toSet
-      assert(viaWindow == streamed)
-    } finally q.stop()
-  }
-
-  test("streaming changelog: last emit per key equals the batch snapshot") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingChangelog
-    import graft.streaming.StreamingChangelog.Change
-    val batch1 = Seq(Change(1, 1, "U", "a1"), Change(2, 1, "U", "b1"),
-      Change(1, 2, "U", "a2"))
-    // batch 2: update 2, delete 1, and a STALE out-of-order change for
-    // 2 (seq 0 — must not regress the stored version), plus a fresh key
-    val batch2 = Seq(Change(2, 3, "U", "b2"), Change(1, 4, "D", ""),
-      Change(2, 0, "U", "stale"), Change(3, 1, "U", "c1"))
-    val in = MemoryStream[Change]
-    val q = StreamingChangelog.latestVersions(in.toDS())
-      .writeStream.format("memory").queryName("sc_cdc_out")
-      .outputMode(OutputMode.Update())
-      .start()
-    try {
-      in.addData(batch1: _*); q.processAllAvailable()
-      val afterB1 = spark.table("sc_cdc_out").as[Change].collect().toSet
-      // within one batch only the NEWEST version of a key emits
-      assert(afterB1 == Set(Change(1, 2, "U", "a2"), Change(2, 1, "U", "b1")))
-      in.addData(batch2: _*); q.processAllAvailable()
-      val emits = spark.table("sc_cdc_out").as[Change].collect().toSeq
-      // stale seq-0 change for key 2 emitted nothing
-      assert(!emits.contains(Change(2, 0, "U", "stale")))
-      // the last emit per key across the stream's lifetime...
-      val lastPerKey = emits.groupBy(_.key).map { case (_, v) => v.maxBy(_.seq) }.toSet
-      // ...equals the batch branch on the total log...
-      val all = batch1 ++ batch2
-      val batchTwin = StreamingChangelog.latestVersions(all.toDS()).collect().toSet
-      assert(lastPerKey == batchTwin)
-      // ...and dropping tombstones yields Changelog.applyLog's snapshot
-      // from an empty base
-      val emptyBase = Seq.empty[(Long, String)].toDF("key", "payload")
-      val applied = graft.operators.Changelog
-        .applyLog(emptyBase, all.toDF(), Seq("key"), "seq", "op")
-        .as[(Long, String)].collect().toSet
-      assert(lastPerKey.filter(_.op != "D").map(c => (c.key, c.payload)) == applied)
-      assert(applied == Set((2L, "b2"), (3L, "c1")))
-    } finally q.stop()
-  }
-
   test("audio decode runs on a stream identically to batch (map-only ingest)") {
     implicit val sqlCtx = spark.sqlContext
     val arriving = Seq(
@@ -611,58 +535,6 @@ class StreamingCorpusOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("revisit schedule: per-URL streak state streams to exactly the batch window") {
-    implicit val sqlCtx = spark.sqlContext
-    // the refresh loop's streaming half: fetch completions stream in,
-    // the two-long per-URL state tracks the unchanged streak, and the
-    // LATEST emit per canon equals the batch revisitSchedule over the
-    // concatenated history — ties (changed-last), resets, the
-    // exponential ladder and the cap all pinned across a batch split
-    val b1 = Seq(
-      ("u/hot", 100L, true), ("u/hot", 200L, true),
-      ("u/cool", 100L, true), ("u/cool", 200L, true),
-      ("u/dead", 100L, false), ("u/dead", 200L, false), ("u/dead", 300L, false),
-      ("u/dead", 400L, false), ("u/dead", 500L, false), ("u/dead", 600L, false))
-    val b2 = Seq(
-      ("u/hot", 300L, true),                          // still hot: streak 0
-      ("u/cool", 300L, false), ("u/cool", 400L, false), // cooled: streak 2
-      // same-ts tie INSIDE a batch, adversarial input order: the
-      // in-batch sort orders changed LAST, so the changed fetch wins
-      // recency and the streak is 0 (one emit — same-ts emits across
-      // batches would be indistinguishable to a latest-row reader)
-      ("u/tie", 100L, true), ("u/tie", 100L, false),
-      ("u/dead", 700L, false), ("u/dead", 800L, false),
-      ("u/dead", 900L, false), ("u/dead", 1000L, false),
-      ("u/dead", 1100L, false), ("u/dead", 1200L, false)) // 12 unchanged: cap
-    val in = MemoryStream[(String, Long, Boolean)]
-    val q = graft.streaming.StreamingRevisit.schedule(
-      in.toDF().toDF("canon", "fetch_ms", "changed"), baseMs = 100L, maxMs = 10000L)
-      .writeStream.format("memory").queryName("sc_revisit_out")
-      .outputMode(OutputMode.Update())
-      .start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      // Update sink appends every emit; latest per canon IS the schedule
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("canon")).orderBy(col("last_fetch_ms").desc)
-      def m(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => r.getAs[String]("canon") ->
-          ((r.getAs[Long]("last_fetch_ms"), r.getAs[Long]("unchanged_streak"),
-            r.getAs[Long]("interval_ms"), r.getAs[Long]("next_fetch_ms")))).toMap
-      val streamed = m(spark.table("sc_revisit_out")
-        .withColumn("__rk", row_number().over(w)).filter(col("__rk") === 1))
-      val batch = m(graft.streaming.StreamingRevisit.schedule(
-        (b1 ++ b2).toDF("canon", "fetch_ms", "changed"), 100L, 10000L))
-      assert(streamed == batch, s"streamed=$streamed batch=$batch")
-      // and the arms are the hand-walked values
-      assert(streamed("u/hot") == ((300L, 0L, 100L, 400L)))
-      assert(streamed("u/cool") == ((400L, 2L, 400L, 800L)))
-      assert(streamed("u/tie") == ((100L, 0L, 100L, 200L)))
-      assert(streamed("u/dead") == ((1200L, 12L, 10000L, 11200L)))
-    } finally q.stop()
-  }
-
   test(".warc.gz ingest streams: per-record members split identically on a stream") {
     implicit val sqlCtx = spark.sqlContext
     // recordsGz is a stateless map over blobs — the SAME code ingests
@@ -729,84 +601,6 @@ class StreamingCorpusOpsSpec extends SparkSpec {
       assert(streamed.exists { case (id, _, uri, body) =>
         id == 3L && uri == "u3" && body == "dict body"
       })
-    } finally q.stop()
-  }
-
-  test("frontier politeness: per-host slot state streams to exactly the batch schedule") {
-    implicit val sqlCtx = spark.sqlContext
-    // the crawl family's last streaming twin: admitted URLs stream in,
-    // one long of per-host state hands out politeness slots, and the
-    // plan equals the batch window when per-host arrival respects
-    // canon order (the fetcher contract); the slot counter must
-    // CONTINUE across micro-batches
-    val delays = Seq("a.com" -> 1000L, "b.com" -> 250L)
-    val b1 = Seq(("http://a.com/1", "a.com"), ("http://b.com/x", "b.com"))
-    val b2 = Seq(("http://a.com/2", "a.com"), ("http://a.com/3", "a.com"),
-      ("http://b.com/y", "b.com"), ("http://c.com/only", "c.com"))
-    val in = MemoryStream[(String, String)]
-    val q = graft.streaming.StreamingFrontier.schedule(
-      in.toDF().toDF("canon", "host"), delays, defaultDelayMs = 500L, workers = 4)
-      .writeStream.format("memory").queryName("sc_frontier_out")
-      .outputMode(OutputMode.Update())
-      .start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      def m(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => r.getAs[String]("canon") ->
-          ((r.getAs[Long]("slot"), r.getAs[Long]("fetch_at_ms"),
-            r.getAs[Int]("worker")))).toMap
-      val streamed = m(spark.table("sc_frontier_out"))
-      val batch = m(graft.streaming.StreamingFrontier.schedule(
-        (b1 ++ b2).toDF("canon", "host"), delays, 500L, 4)
-        .select(col("canon"), col("host"), col("slot"),
-          col("fetch_at_ms"), col("worker")))
-      assert(streamed == batch, s"streamed=$streamed batch=$batch")
-      // hand-walked: a.com slots 0,1,2 at 1000 ms; b.com at 250; c default
-      assert(streamed("http://a.com/3") == ((2L, 2000L, streamed("http://a.com/3")._3)))
-      assert(streamed("http://b.com/y") == ((1L, 250L, streamed("http://b.com/y")._3)))
-      assert(streamed("http://c.com/only")._2 == 0L)
-      // politeness invariant under ANY arrival: distinct slots per host
-      val slots = spark.table("sc_frontier_out")
-        .groupBy(col("host")).agg(countDistinct(col("slot")).as("d"),
-          count(lit(1)).as("n"))
-        .collect()
-      assert(slots.forall(r => r.getAs[Long]("d") == r.getAs[Long]("n")))
-    } finally q.stop()
-  }
-
-  test("KMV registers: sharded bounded-state stream equals the batch build") {
-    implicit val sqlCtx = spark.sqlContext
-    // the set-operation sketch's streaming contract: per-shard
-    // bottom-K state (≤ shards × K longs TOTAL, however many keys
-    // stream past), shard states collapsing to exactly the one-shot
-    // batch registers — order statistics absorb cross-batch duplicates
-    val b1 = (0 until 800).map(i => s"key$i")
-    val b2 = (400 until 1400).map(i => s"key$i") // half overlap
-    val in = MemoryStream[String]
-    val regs = graft.streaming.StreamingKmv.shardRegisters(
-      in.toDF().toDF("k"), "k", shards = 4)
-    val q = regs.toDF().writeStream
-      .format("memory").queryName("sc_kmv_out")
-      .outputMode(OutputMode.Update())
-      .start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val table = spark.table("sc_kmv_out")
-      // bounded state: every emitted register set stays within K
-      assert(table.select(max(size(col("hvs")))).head.getInt(0)
-        <= graft.operators.Sketch.KmvK)
-      def s(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.getAs[Long]("hv")).toSeq.sortBy(_ ^ Long.MinValue)
-      val streamed = s(graft.streaming.StreamingKmv.toSketch(table))
-      val batch = s(graft.operators.Sketch.kmvSketch((b1 ++ b2).toDF("k"), "k"))
-      assert(streamed == batch, "streamed registers must equal the batch rebuild")
-      // the unified API's batch branch collapses to the same sketch
-      val viaShards = s(graft.streaming.StreamingKmv.toSketch(
-        graft.streaming.StreamingKmv.shardRegisters(
-          (b1 ++ b2).toDF("k"), "k", shards = 4).toDF()))
-      assert(viaShards == batch)
     } finally q.stop()
   }
 

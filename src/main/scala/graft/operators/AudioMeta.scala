@@ -53,10 +53,6 @@ object AudioMeta {
       (b(o + 2) & 0x7F) << 7 | (b(o + 3) & 0x7F)
   }
 
-  private def be32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) << 24 | (b(o + 1) & 0xFF) << 16 |
-      (b(o + 2) & 0xFF) << 8 | (b(o + 3) & 0xFF)
-
   /** Parse a leading ID3v2.3/v2.4 tag: (majorVersion, textFrames,
     * bytesConsumed). Frame sizes are plain big-endian in v2.3 and
     * syncsafe in v2.4 (the classic interop trap — both paths here).
@@ -84,19 +80,19 @@ object AudioMeta {
     var i = 10
     if ((flags & 0x40) != 0) { // extended header precedes the frames
       if (i + 4 > end) return Some((ver, out.toSeq, end))
-      val esz =
+      val esz: Long =
         if (ver == 4) syncsafe(bytes, i) // includes its own size field
-        else be32(bytes, i) + 4 // v2.3 size EXCLUDES the 4 size bytes
-      if (esz < 4 || i + esz.toLong > end) return Some((ver, out.toSeq, end))
-      i += esz
+        else Bytes.be32(bytes, i) + 4 // v2.3 size EXCLUDES the 4 size bytes
+      if (esz < 4 || i + esz > end) return Some((ver, out.toSeq, end))
+      i += esz.toInt
     }
     var done = false
     while (!done && i + 10 <= end) {
       if (bytes(i) == 0) done = true // padding region
       else {
         val id = new String(bytes, i, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-        val fsz = if (ver == 4) syncsafe(bytes, i + 4) else be32(bytes, i + 4)
-        if (fsz < 0 || i + 10 + fsz.toLong > end) done = true // torn frame: stop
+        val fsz: Long = if (ver == 4) syncsafe(bytes, i + 4) else Bytes.be32(bytes, i + 4)
+        if (fsz < 0 || i + 10 + fsz > end) done = true // torn frame: stop
         else {
           if (id.startsWith("T") && fsz >= 1) {
             val enc = bytes(i + 10) & 0xFF
@@ -106,14 +102,14 @@ object AudioMeta {
               case _ => null // UTF-16 variants: out of contract, skip
             }
             if (cs != null) {
-              val txt = new String(bytes, i + 11, fsz - 1, cs)
+              val txt = new String(bytes, i + 11, fsz.toInt - 1, cs)
               // v2 text frames NUL-terminate (or NUL-separate lists):
               // take the first value
               val v = txt.takeWhile(_ != '\u0000')
               out += ((id, v))
             }
           }
-          i += 10 + fsz
+          i += 10 + fsz.toInt
         }
       }
     }

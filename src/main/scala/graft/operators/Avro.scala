@@ -109,13 +109,9 @@ object Avro {
           if (v == 1) "true" else if (v == 0) "false"
           else throw new IllegalArgumentException("junk boolean")
         case "double" =>
-          java.lang.Double.longBitsToDouble(
-            java.nio.ByteBuffer.wrap(c.take(8))
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong).toString
+          java.lang.Double.longBitsToDouble(Bytes.le64(c.take(8), 0)).toString
         case "float" =>
-          java.lang.Float.intBitsToFloat(
-            java.nio.ByteBuffer.wrap(c.take(4))
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt).toString
+          java.lang.Float.intBitsToFloat(Bytes.le32(c.take(4), 0).toInt).toString
         case "null" => ""
         case other => throw new IllegalArgumentException(s"type $other")
       }
@@ -125,21 +121,8 @@ object Avro {
     * per spec), bomb-capped, all-or-null.
     */
   private def inflateRaw(data: Array[Byte], maxOut: Long): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(true)
-    inf.setInput(data)
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](64 << 10)
-    try {
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && !inf.finished()) return null
-        out.write(buf, 0, n)
-        if (out.size() > maxOut) return null
-      }
-      out.toByteArray
-    } catch {
-      case _: java.util.zip.DataFormatException => null
-    } finally inf.end()
+    val inflated = Bytes.inflate(data, 0, data.length, raw = true, maxOut)
+    if (inflated == null) null else inflated._1
   }
 
   /** One container's read: `stage` is `ok` or the degrade
@@ -154,7 +137,7 @@ object Avro {
   private val Magic = Array[Byte]('O', 'b', 'j', 1)
 
   def read(bytes: Array[Byte], maxRecords: Int = 1 << 20,
-      maxBlockOut: Long = 64L << 20): AvroResult = {
+      maxBlockOut: Long = Bytes.MaxOut): AvroResult = {
     try {
       if (bytes == null || bytes.length < 4 ||
         bytes(0) != Magic(0) || bytes(1) != Magic(1) ||

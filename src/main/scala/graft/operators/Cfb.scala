@@ -24,7 +24,12 @@ import java.nio.charset.StandardCharsets.UTF_16LE
   */
 object Cfb {
 
-  private val Magic = Array(0xD0, 0xCF, 0x11, 0xE0, 0xA1, 0xB1, 0x1A, 0xE1)
+  import Bytes.{le16, le32, le64, putLe}
+
+  /** The OLE signature — also what an ECMA-376 ENCRYPTED OOXML package
+    * is on disk, so the OOXML readers sniff it through [[isCfb]].
+    */
+  private[operators] val Magic = Array(0xD0, 0xCF, 0x11, 0xE0, 0xA1, 0xB1, 0x1A, 0xE1)
 
   final val FreeSect = 0xFFFFFFFFL
   final val EndOfChain = 0xFFFFFFFEL
@@ -35,13 +40,6 @@ object Cfb {
   def isCfb(bytes: Array[Byte]): Boolean =
     bytes != null && bytes.length >= 8 &&
       (0 until 8).forall(i => (bytes(i) & 0xFF) == Magic(i))
-
-  private def u16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8)
-
-  private def u32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xFFL) | ((b(off + 1) & 0xFFL) << 8) |
-      ((b(off + 2) & 0xFFL) << 16) | ((b(off + 3) & 0xFFL) << 24)
 
   /** One directory entry: name, object type (1 storage, 2 stream,
     * 5 root), starting sector, byte size.
@@ -59,18 +57,18 @@ object Cfb {
     * countable `cfb` degrade. `maxBytes` caps total extracted stream
     * bytes (bomb guard).
     */
-  def parse(bytes: Array[Byte], maxBytes: Int = 64 << 20): Option[CfbDoc] = {
+  def parse(bytes: Array[Byte], maxBytes: Int = Bytes.MaxOut): Option[CfbDoc] = {
     if (!isCfb(bytes) || bytes.length < 512) return None
-    val shift = u16(bytes, 30)
+    val shift = le16(bytes, 30)
     if (shift != 9 && shift != 12) return None
     val ss = 1 << shift
-    if (u16(bytes, 32) != 6) return None // mini sector shift is always 6
-    val numFat = u32(bytes, 44)
-    val dirStart = u32(bytes, 48)
-    val miniCutoff = u32(bytes, 56)
-    val miniFatStart = u32(bytes, 60)
-    val difatStart = u32(bytes, 68)
-    val numDifat = u32(bytes, 72)
+    if (le16(bytes, 32) != 6) return None // mini sector shift is always 6
+    val numFat = le32(bytes, 44)
+    val dirStart = le32(bytes, 48)
+    val miniCutoff = le32(bytes, 56)
+    val miniFatStart = le32(bytes, 60)
+    val difatStart = le32(bytes, 68)
+    val numDifat = le32(bytes, 72)
     val nSectors = math.max(0L, (bytes.length.toLong - ss) / ss)
     if (numFat > nSectors + 1 || numDifat > nSectors) return None
 
@@ -82,7 +80,7 @@ object Cfb {
     val fatSectors = scala.collection.mutable.ArrayBuffer[Long]()
     var di = 0
     while (di < 109 && fatSectors.length < numFat) {
-      val s = u32(bytes, 76 + di * 4)
+      val s = le32(bytes, 76 + di * 4)
       if (s != FreeSect) fatSectors += s
       di += 1
     }
@@ -93,11 +91,11 @@ object Cfb {
       val off = sectorOff(dsec)
       var j = 0
       while (j < ss / 4 - 1 && fatSectors.length < numFat) {
-        val s = u32(bytes, off + j * 4)
+        val s = le32(bytes, off + j * 4)
         if (s != FreeSect) fatSectors += s
         j += 1
       }
-      dsec = u32(bytes, off + ss - 4)
+      dsec = le32(bytes, off + ss - 4)
       dguard += 1
     }
     if (fatSectors.length < numFat) return None
@@ -108,7 +106,7 @@ object Cfb {
     fatSectors.zipWithIndex.foreach { case (s, k) =>
       val off = sectorOff(s)
       var j = 0
-      while (j < ss / 4) { fat(k * (ss / 4) + j) = u32(bytes, off + j * 4); j += 1 }
+      while (j < ss / 4) { fat(k * (ss / 4) + j) = le32(bytes, off + j * 4); j += 1 }
     }
 
     def chain(start: Long): Option[Seq[Long]] = {
@@ -160,17 +158,17 @@ object Cfb {
     val nSlots = dirBytes.length / 128
     val raw: IndexedSeq[Option[RawEntry]] = (0 until nSlots).map { k =>
       val off = k * 128
-      val nameLen = u16(dirBytes, off + 64)
+      val nameLen = le16(dirBytes, off + 64)
       val typ = dirBytes(off + 66) & 0xFF
       if (typ == 0 || nameLen < 2 || nameLen > 64) None
       else {
         val name = new String(dirBytes, off, nameLen - 2, UTF_16LE)
-        val start = u32(dirBytes, off + 116)
+        val start = le32(dirBytes, off + 116)
         val size =
-          if (shift == 9) u32(dirBytes, off + 120) // v3: low 32 bits only
-          else u32(dirBytes, off + 120) | (u32(dirBytes, off + 124) << 32)
+          if (shift == 9) le32(dirBytes, off + 120) // v3: low 32 bits only
+          else le64(dirBytes, off + 120)
         Some(RawEntry(name, typ, start, size,
-          u32(dirBytes, off + 68), u32(dirBytes, off + 72), u32(dirBytes, off + 76)))
+          le32(dirBytes, off + 68), le32(dirBytes, off + 72), le32(dirBytes, off + 76)))
       }
     }
     val rootIdx = raw.indexWhere(_.exists(_.typ == 5))
@@ -237,7 +235,7 @@ object Cfb {
             val off = sectorOff(s)
             if (off + ss > bytes.length) return None
             var j = 0
-            while (j < ss / 4) { m(k * (ss / 4) + j) = u32(bytes, off + j * 4); j += 1 }
+            while (j < ss / 4) { m(k * (ss / 4) + j) = le32(bytes, off + j * 4); j += 1 }
           }
           Some(m)
         }
@@ -396,24 +394,19 @@ object Cfb {
     // directory entries
     val dir = new Array[Byte](dirSectors * ss)
     java.util.Arrays.fill(dir, 0.toByte)
-    def w16(b: Array[Byte], off: Int, v: Int): Unit = {
-      b(off) = (v & 0xFF).toByte; b(off + 1) = ((v >> 8) & 0xFF).toByte
-    }
-    def w32(b: Array[Byte], off: Int, v: Long): Unit =
-      (0 until 4).foreach(i => b(off + i) = ((v >> (8 * i)) & 0xFF).toByte)
     def entry(idx: Int, name: String, typ: Int, start: Long, size: Long,
         child: Long, right: Long): Unit = {
       val off = idx * 128
       val nb = name.getBytes(UTF_16LE)
       System.arraycopy(nb, 0, dir, off, nb.length)
-      w16(dir, off + 64, nb.length + 2)
+      putLe(dir, off + 64, nb.length + 2, 2)
       dir(off + 66) = typ.toByte
       dir(off + 67) = 1 // black
-      w32(dir, off + 68, NoStream) // left (degenerate right-chain BSTs)
-      w32(dir, off + 72, right)
-      w32(dir, off + 76, child)
-      w32(dir, off + 116, start)
-      w32(dir, off + 120, size)
+      putLe(dir, off + 68, NoStream, 4) // left (degenerate right-chain BSTs)
+      putLe(dir, off + 72, right, 4)
+      putLe(dir, off + 76, child, 4)
+      putLe(dir, off + 116, start, 4)
+      putLe(dir, off + 120, size, 4)
     }
     entry(0, "Root Entry", 5,
       if (miniStreamSectors > 0) miniStreamStart else EndOfChain,
@@ -440,31 +433,31 @@ object Cfb {
     val out = new java.io.ByteArrayOutputStream()
     val header = new Array[Byte](512)
     Magic.zipWithIndex.foreach { case (m, i) => header(i) = m.toByte }
-    w16(header, 24, 0x003E) // minor
-    w16(header, 26, 0x0003) // major (v3)
-    w16(header, 28, 0xFFFE) // byte order
-    w16(header, 30, 9) // sector shift
-    w16(header, 32, 6) // mini sector shift
-    w32(header, 44, 1L) // one FAT sector
-    w32(header, 48, dirStart)
-    w32(header, 56, 4096L) // mini cutoff
-    w32(header, 60, if (miniFatSectors > 0) miniFatStart else EndOfChain)
-    w32(header, 64, miniFatSectors.toLong)
-    w32(header, 68, EndOfChain) // no DIFAT chain
-    w32(header, 72, 0L)
-    w32(header, 76, 0L) // DIFAT[0] = FAT sector 0
-    (1 until 109).foreach(i => w32(header, 76 + i * 4, FreeSect))
+    putLe(header, 24, 0x003E, 2) // minor
+    putLe(header, 26, 0x0003, 2) // major (v3)
+    putLe(header, 28, 0xFFFE, 2) // byte order
+    putLe(header, 30, 9, 2) // sector shift
+    putLe(header, 32, 6, 2) // mini sector shift
+    putLe(header, 44, 1L, 4) // one FAT sector
+    putLe(header, 48, dirStart, 4)
+    putLe(header, 56, 4096L, 4) // mini cutoff
+    putLe(header, 60, if (miniFatSectors > 0) miniFatStart else EndOfChain, 4)
+    putLe(header, 64, miniFatSectors.toLong, 4)
+    putLe(header, 68, EndOfChain, 4) // no DIFAT chain
+    putLe(header, 72, 0L, 4)
+    putLe(header, 76, 0L, 4) // DIFAT[0] = FAT sector 0
+    (1 until 109).foreach(i => putLe(header, 76 + i * 4, FreeSect, 4))
     out.write(header)
     // sector 0: FAT
     val fatBytes = new Array[Byte](ss)
-    fat.zipWithIndex.foreach { case (v, i) => w32(fatBytes, i * 4, v) }
+    fat.zipWithIndex.foreach { case (v, i) => putLe(fatBytes, i * 4, v, 4) }
     out.write(fatBytes)
     // directory
     out.write(dir)
     // miniFAT
     if (miniFatSectors > 0) {
       val mfb = new Array[Byte](miniFatSectors * ss)
-      miniFat.zipWithIndex.foreach { case (v, i) => w32(mfb, i * 4, v) }
+      miniFat.zipWithIndex.foreach { case (v, i) => putLe(mfb, i * 4, v, 4) }
       out.write(mfb)
     }
     // mini stream (padded to sectors)

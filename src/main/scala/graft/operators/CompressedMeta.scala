@@ -22,15 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object CompressedMeta {
 
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | (b(o + 1) & 0xFF) << 8
-  private def le24(b: Array[Byte], o: Int): Int =
-    le16(b, o) | (b(o + 2) & 0xFF) << 16
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | (b(o + 1) & 0xFFL) << 8 |
-      (b(o + 2) & 0xFFL) << 16 | (b(o + 3) & 0xFFL) << 24
-  private def le64(b: Array[Byte], o: Int): Long =
-    le32(b, o) | le32(b, o + 4) << 32
+  import Bytes.{le16, le24, le32, le64, leBytes}
 
   /** One gzip member's inventory (RFC 1952). `isize` is the trailer's
     * decompressed-size-mod-2^32 under the SINGLE-member contract (the
@@ -227,8 +219,8 @@ object CompressedMeta {
     * BEFORE it — the same completed-prefix contract as corruption.
     */
   def gunzipMembers(bytes: Array[Byte],
-      maxOutPerMember: Int = 64 << 20,
-      maxOutTotal: Long = 256L << 20): Seq[Array[Byte]] =
+      maxOutPerMember: Int = Bytes.MaxOut,
+      maxOutTotal: Long = Bytes.MaxOutTotal): Seq[Array[Byte]] =
     walkGzipMembers(bytes, maxOutPerMember, maxOutTotal)._1
 
   /** STRICT whole-payload gunzip — the `Content-Encoding: gzip` body
@@ -242,8 +234,8 @@ object CompressedMeta {
     * Members concatenate (RFC 9110 permits multi-member gzip bodies).
     */
   def gunzipAll(bytes: Array[Byte],
-      maxOutPerMember: Int = 64 << 20,
-      maxOutTotal: Long = 256L << 20): Array[Byte] = {
+      maxOutPerMember: Int = Bytes.MaxOut,
+      maxOutTotal: Long = Bytes.MaxOutTotal): Array[Byte] = {
     if (bytes == null || bytes.length < 18) return null // header+trailer minimum
     val (members, end, clean) = walkGzipMembers(bytes, maxOutPerMember, maxOutTotal)
     allOrNullConcat(members, clean && end == bytes.length)
@@ -285,38 +277,25 @@ object CompressedMeta {
       if (!isGz || headerLen == 0) stop = true
       else {
         val dataStart = i + headerLen
-        val inf = new java.util.zip.Inflater(true)
-        inf.setInput(bytes, dataStart, bytes.length - dataStart)
-        val member = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        try {
-          while (!inf.finished() && !stop) {
-            val n = inf.inflate(buf)
-            if (n == 0 && !inf.finished()) stop = true // truncated stream
-            else {
-              member.write(buf, 0, n)
-              if (member.size() > maxOutPerMember) stop = true // bomb cap
-            }
+        val inflated = Bytes.inflate(bytes, dataStart, bytes.length - dataStart,
+          raw = true, maxOutPerMember)
+        if (inflated == null) stop = true // corrupt, truncated, or bomb cap
+        else {
+          val (data, consumed) = inflated
+          val trailerAt = dataStart + consumed
+          if (trailerAt + 8 > bytes.length) stop = true
+          else {
+            val crc = new java.util.zip.CRC32()
+            crc.update(data)
+            val okCrc = le32(bytes, trailerAt) == crc.getValue
+            val okSize = le32(bytes, trailerAt + 4) == (data.length.toLong & 0xFFFFFFFFL)
+            if (okCrc && okSize) {
+              total += data.length
+              if (total > maxOutTotal) stop = true // aggregate bomb cap
+              else { out += data; i = trailerAt + 8 }
+            } else stop = true // corrupt member: drop it and the rest
           }
-          if (!stop) {
-            val trailerAt = dataStart + inf.getBytesRead.toInt
-            if (trailerAt + 8 > bytes.length) stop = true
-            else {
-              val data = member.toByteArray
-              val crc = new java.util.zip.CRC32()
-              crc.update(data)
-              val okCrc = le32(bytes, trailerAt) == crc.getValue
-              val okSize = le32(bytes, trailerAt + 4) == (data.length.toLong & 0xFFFFFFFFL)
-              if (okCrc && okSize) {
-                total += data.length
-                if (total > maxOutTotal) stop = true // aggregate bomb cap
-                else { out += data; i = trailerAt + 8 }
-              } else stop = true // corrupt member: drop it and the rest
-            }
-          }
-        } catch {
-          case _: java.util.zip.DataFormatException => stop = true
-        } finally inf.end()
+        }
       }
     }
     (out.toSeq, i, !stop)
@@ -340,9 +319,6 @@ object CompressedMeta {
   }
 
   // --- synthetic fixtures --------------------------------------------------
-
-  private def leBytes(v: Long, n: Int): Array[Byte] =
-    (0 until n).map(k => ((v >>> (8 * k)) & 0xFF).toByte).toArray
 
   /** Wrap raw bytes as one minimal gzip member (header flags 0, raw
     * deflate, CRC32 + ISIZE trailer) — the `.warc.gz` fixtures'

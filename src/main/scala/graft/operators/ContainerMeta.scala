@@ -22,6 +22,8 @@ import org.apache.spark.sql.functions._
   */
 object ContainerMeta {
 
+  import Bytes.{be32, be64, beBytes, le16, le32, le64}
+
   /** One MP4 blob's inventory: major brand from `ftyp`, movie
     * timescale/duration from `mvhd` (both version 0 and 1 layouts),
     * track count and handler kinds from `trak`/`hdlr`, presentation
@@ -39,12 +41,6 @@ object ContainerMeta {
       has_audio: Boolean,
       width: Int,
       height: Int)
-
-  private def be32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) << 24 | (b(o + 1) & 0xFFL) << 16 |
-      (b(o + 2) & 0xFFL) << 8 | (b(o + 3) & 0xFFL)
-  private def be64(b: Array[Byte], o: Int): Long =
-    be32(b, o) << 32 | be32(b, o + 4)
 
   /** ISO-BMFF containers whose children are themselves boxes — the
     * walk recurses into exactly these; everything else is a leaf.
@@ -137,14 +133,6 @@ object ContainerMeta {
       n_pages: Long,
       granule: Long,
       dur_ms: Long)
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | (b(o + 1) & 0xFF) << 8
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | (b(o + 1) & 0xFFL) << 8 |
-      (b(o + 2) & 0xFFL) << 16 | (b(o + 3) & 0xFFL) << 24
-  private def le64(b: Array[Byte], o: Int): Long =
-    le32(b, o) | le32(b, o + 4) << 32
 
   /** Inventory one Ogg payload: page walk (magic, version 0, lacing
     * table → payload size), id-header sniff on the first page.
@@ -389,36 +377,23 @@ object ContainerMeta {
 
   // --- synthetic fixtures --------------------------------------------------
 
-  private def box(typ: String, body: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val sz = body.length + 8
-    out.write((sz >> 24) & 0xFF); out.write((sz >> 16) & 0xFF)
-    out.write((sz >> 8) & 0xFF); out.write(sz & 0xFF)
-    out.write(typ.getBytes("ISO-8859-1"), 0, 4)
-    out.write(body, 0, body.length)
-    out.toByteArray
-  }
-
-  private def beBytes32(v: Long): Array[Byte] =
-    Array(((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
-      ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-  private def beBytes64(v: Long): Array[Byte] =
-    beBytes32(v >> 32) ++ beBytes32(v & 0xFFFFFFFFL)
+  private def box(typ: String, body: Array[Byte]): Array[Byte] =
+    beBytes(body.length + 8, 4) ++ typ.getBytes("ISO-8859-1").take(4) ++ body
 
   private def mvhdBox(version: Int, timescale: Long, duration: Long): Array[Byte] = {
     val body =
       if (version == 1)
-        Array[Byte](1, 0, 0, 0) ++ beBytes64(0) ++ beBytes64(0) ++
-          beBytes32(timescale) ++ beBytes64(duration) ++ new Array[Byte](80)
+        Array[Byte](1, 0, 0, 0) ++ beBytes(0, 8) ++ beBytes(0, 8) ++
+          beBytes(timescale, 4) ++ beBytes(duration, 8) ++ new Array[Byte](80)
       else
-        Array[Byte](0, 0, 0, 0) ++ beBytes32(0) ++ beBytes32(0) ++
-          beBytes32(timescale) ++ beBytes32(duration) ++ new Array[Byte](80)
+        Array[Byte](0, 0, 0, 0) ++ beBytes(0, 4) ++ beBytes(0, 4) ++
+          beBytes(timescale, 4) ++ beBytes(duration, 4) ++ new Array[Byte](80)
     box("mvhd", body)
   }
 
   private def trakBox(kind: String, w: Int, h: Int): Array[Byte] = {
     val tkhdBody = Array[Byte](0, 0, 0, 0) ++ new Array[Byte](72) ++
-      beBytes32(w.toLong << 16) ++ beBytes32(h.toLong << 16) // 80-byte v0 body
+      beBytes(w.toLong << 16, 4) ++ beBytes(h.toLong << 16, 4) // 80-byte v0 body
     val hdlrBody = new Array[Byte](8) ++ kind.getBytes("ISO-8859-1") ++
       new Array[Byte](12)
     box("trak", box("tkhd", tkhdBody) ++
@@ -434,12 +409,12 @@ object ContainerMeta {
     */
   def syntheticMp4(seed: Long): Array[Byte] = (seed % 3).toInt match {
     case 0 =>
-      box("ftyp", "isom".getBytes ++ beBytes32(0) ++ "isomiso2".getBytes) ++
+      box("ftyp", "isom".getBytes ++ beBytes(0, 4) ++ "isomiso2".getBytes) ++
         box("moov", mvhdBox(0, 1000L, 90000L + seed) ++
           trakBox("vide", 640 + (seed % 5).toInt, 360) ++
           trakBox("soun", 0, 0))
     case 1 =>
-      box("ftyp", "mp42".getBytes ++ beBytes32(1) ++ "mp42".getBytes) ++
+      box("ftyp", "mp42".getBytes ++ beBytes(1, 4) ++ "mp42".getBytes) ++
         box("moov", mvhdBox(1, 600L, 1234567890L + seed) ++
           trakBox("soun", 0, 0))
     case _ =>
@@ -480,7 +455,7 @@ object ContainerMeta {
       // 30-byte id header: type+\"vorbis\"+version+ch+rate+3 bitrates+
       // blocksizes+framing
       val head = Array[Byte](1) ++ "vorbis".getBytes ++
-        beBytes32(0) ++ Array[Byte](ch) ++
+        beBytes(0, 4) ++ Array[Byte](ch) ++
         Array[Byte]((44100 & 0xFF).toByte, ((44100 >> 8) & 0xFF).toByte,
           ((44100 >> 16) & 0xFF).toByte, 0) ++ new Array[Byte](12) ++
         Array[Byte](0x58, 1)

@@ -37,14 +37,9 @@ import org.apache.spark.sql.DataFrame
   */
 object Doc {
 
+  import Bytes.{le16, le32, putLe}
+
   final case class DocText(stage: String, paragraphs: Seq[String])
-
-  private def u16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8)
-
-  private def u32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xFFL) | ((b(off + 1) & 0xFFL) << 8) |
-      ((b(off + 2) & 0xFFL) << 16) | ((b(off + 3) & 0xFFL) << 24)
 
   /** FIB flag bits at offset 0x0A. */
   private val FEncrypted = 0x0100
@@ -55,7 +50,7 @@ object Doc {
     * `encrypted` (not `doc`) without running the piece table.
     */
   private[operators] def fibEncrypted(wd: Array[Byte]): Boolean =
-    wd.length >= 12 && u16(wd, 0) == 0xA5EC && (u16(wd, 0x0A) & FEncrypted) != 0
+    wd.length >= 12 && le16(wd, 0) == 0xA5EC && (le16(wd, 0x0A) & FEncrypted) != 0
 
   /** Extract from an already-parsed container (the one-walk triage
     * path — [[read]] wraps it for standalone use).
@@ -63,12 +58,12 @@ object Doc {
   private[operators] def readCfb(doc: Cfb.CfbDoc, maxChars: Int = 16 << 20): DocText = {
     val wd = doc.streams.getOrElse("WordDocument", return DocText("part", Seq.empty))
     if (wd.length < 0x01AA) return DocText("fib", Seq.empty)
-    if (u16(wd, 0) != 0xA5EC) return DocText("fib", Seq.empty)
-    val flags = u16(wd, 0x0A)
+    if (le16(wd, 0) != 0xA5EC) return DocText("fib", Seq.empty)
+    val flags = le16(wd, 0x0A)
     if ((flags & FEncrypted) != 0) return DocText("encrypted", Seq.empty)
-    val ccpText = u32(wd, 0x4C)
-    val fcClx = u32(wd, 0x01A2)
-    val lcbClx = u32(wd, 0x01A6)
+    val ccpText = le32(wd, 0x4C)
+    val fcClx = le32(wd, 0x01A2)
+    val lcbClx = le32(wd, 0x01A6)
     val tableName = if ((flags & FWhichTblStm) != 0) "1Table" else "0Table"
     val table = doc.streams.getOrElse(tableName, return DocText("clx", Seq.empty))
     if (fcClx + lcbClx > table.length || lcbClx < 5) return DocText("clx", Seq.empty)
@@ -79,15 +74,15 @@ object Doc {
     val end = (fcClx + lcbClx).toInt
     while (i < end && table(i) == 0x01) {
       if (i + 3 > end) return DocText("clx", Seq.empty)
-      i += 3 + u16(table, i + 1)
+      i += 3 + le16(table, i + 1)
     }
     if (i + 5 > end || table(i) != 0x02) return DocText("clx", Seq.empty)
-    val lcbPlc = u32(table, i + 1)
+    val lcbPlc = le32(table, i + 1)
     i += 5
     if (i + lcbPlc > end || lcbPlc < 16 || (lcbPlc - 4) % 12 != 0)
       return DocText("clx", Seq.empty)
     val n = ((lcbPlc - 4) / 12).toInt
-    val cps = (0 to n).map(k => u32(table, i + k * 4))
+    val cps = (0 to n).map(k => le32(table, i + k * 4))
     val pcdOff = i + (n + 1) * 4
     if (!cps.sliding(2).forall(p => p(1) >= p(0))) return DocText("clx", Seq.empty)
 
@@ -97,7 +92,7 @@ object Doc {
       val cpStart = cps(k)
       val cpEnd = math.min(cps(k + 1), ccpText) // main document text only
       if (cpEnd > cpStart) {
-        val fcRaw = u32(table, pcdOff + k * 8 + 2)
+        val fcRaw = le32(table, pcdOff + k * 8 + 2)
         val compressed = (fcRaw & 0x40000000L) != 0
         val fc = fcRaw & 0x3FFFFFFFL
         // the span is attacker-controlled u32 arithmetic (cps and
@@ -193,9 +188,9 @@ object Doc {
   def doc(paras: Seq[String], encrypted: Boolean = false): Array[Byte] = {
     if (encrypted) {
       val fib = new Array[Byte](1472)
-      w16(fib, 0, 0xA5EC)
-      w16(fib, 2, 0x00C1)
-      w16(fib, 0x0A, FEncrypted)
+      putLe(fib, 0, 0xA5EC, 2)
+      putLe(fib, 2, 0x00C1, 2)
+      putLe(fib, 0x0A, FEncrypted, 2)
       return Cfb.cfb(Seq(("WordDocument", fib), ("0Table", new Array[Byte](64))))
     }
     // the FIRST paragraph always wraps in a HYPERLINK field whose
@@ -221,13 +216,13 @@ object Doc {
       else piece1.getBytes(java.nio.charset.StandardCharsets.UTF_16LE)
     val p2Bytes = piece2.getBytes(java.nio.charset.StandardCharsets.UTF_16LE)
     val wd = new Array[Byte](fibLen + p1Bytes.length + p2Bytes.length)
-    w16(wd, 0, 0xA5EC) // wIdent
-    w16(wd, 2, 0x00C1) // nFib: Word 97
-    w16(wd, 0x0A, 0) // flags: 0Table, not encrypted
-    w16(wd, 32, 14) // csw
-    w16(wd, 62, 22) // cslw
-    w32(wd, 0x4C, main.length.toLong) // ccpText: the MAIN range only
-    w16(wd, 152, 0x5D) // cbRgFcLcb (Word 97)
+    putLe(wd, 0, 0xA5EC, 2) // wIdent
+    putLe(wd, 2, 0x00C1, 2) // nFib: Word 97
+    putLe(wd, 0x0A, 0, 2) // flags: 0Table, not encrypted
+    putLe(wd, 32, 14, 2) // csw
+    putLe(wd, 62, 22, 2) // cslw
+    putLe(wd, 0x4C, main.length.toLong, 4) // ccpText: the MAIN range only
+    putLe(wd, 152, 0x5D, 2) // cbRgFcLcb (Word 97)
     System.arraycopy(p1Bytes, 0, wd, fibLen, p1Bytes.length)
     System.arraycopy(p2Bytes, 0, wd, fibLen + p1Bytes.length, p2Bytes.length)
 
@@ -235,25 +230,18 @@ object Doc {
     val lcbPlc = 3 * 4 + 2 * 8
     val clx = new Array[Byte](1 + 4 + lcbPlc)
     clx(0) = 0x02
-    w32(clx, 1, lcbPlc.toLong)
-    w32(clx, 5, 0L)
-    w32(clx, 9, split.toLong)
-    w32(clx, 13, text.length.toLong)
+    putLe(clx, 1, lcbPlc.toLong, 4)
+    putLe(clx, 5, 0L, 4)
+    putLe(clx, 9, split.toLong, 4)
+    putLe(clx, 13, text.length.toLong, 4)
     val fc1 =
       if (p1Compressed) (fibLen.toLong * 2) | 0x40000000L
       else fibLen.toLong
     val fc2 = (fibLen + p1Bytes.length).toLong
-    w32(clx, 17 + 2, fc1) // PCD 1: fc at +2
-    w32(clx, 25 + 2, fc2) // PCD 2
-    w32(wd, 0x01A2, 0L) // fcClx: Clx at table stream offset 0
-    w32(wd, 0x01A6, clx.length.toLong) // lcbClx
+    putLe(clx, 17 + 2, fc1, 4) // PCD 1: fc at +2
+    putLe(clx, 25 + 2, fc2, 4) // PCD 2
+    putLe(wd, 0x01A2, 0L, 4) // fcClx: Clx at table stream offset 0
+    putLe(wd, 0x01A6, clx.length.toLong, 4) // lcbClx
     Cfb.cfb(Seq(("WordDocument", wd), ("0Table", clx)))
   }
-
-  private def w16(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = (v & 0xFF).toByte; b(off + 1) = ((v >> 8) & 0xFF).toByte
-  }
-
-  private def w32(b: Array[Byte], off: Int, v: Long): Unit =
-    (0 until 4).foreach(i => b(off + i) = ((v >> (8 * i)) & 0xFF).toByte)
 }

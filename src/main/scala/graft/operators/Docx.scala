@@ -45,14 +45,6 @@ object Docx {
     */
   final case class DocxDoc(stage: String, paragraphs: Seq[String])
 
-  /** CFB (OLE compound file) magic — what an ECMA-376 ENCRYPTED
-    * package actually is on disk.
-    */
-  private val CfbMagic = Array(0xD0, 0xCF, 0x11, 0xE0, 0xA1, 0xB1, 0x1A, 0xE1)
-
-  private[operators] def isCfb(bytes: Array[Byte]): Boolean =
-    bytes.length >= 8 && (0 until 8).forall(i => (bytes(i) & 0xFF) == CfbMagic(i))
-
   /** Stage for a CFB payload hitting an OOXML reader: a parseable
     * ENCRYPTED-OOXML shell (`EncryptionInfo`+`EncryptedPackage`
     * streams) is `encrypted`; any other OLE container — a legacy
@@ -137,7 +129,7 @@ object Docx {
 
   def read(bytes: Array[Byte]): DocxDoc = {
     if (bytes == null) return DocxDoc("zip", Seq.empty)
-    if (isCfb(bytes)) return DocxDoc(cfbStage(bytes), Seq.empty)
+    if (Cfb.isCfb(bytes)) return DocxDoc(cfbStage(bytes), Seq.empty)
     val es = ZipShard.entries(bytes)
     if (es.isEmpty) return DocxDoc("zip", Seq.empty)
     readEntries(es)
@@ -268,7 +260,7 @@ object Docx {
     */
   def encryptedFixture(seed: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    CfbMagic.foreach(out.write)
+    Cfb.Magic.foreach(out.write)
     var s = seed * 6364136223846793005L + 1442695040888963407L
     (0 until 64).foreach { _ =>
       s = s * 6364136223846793005L + 1442695040888963407L

@@ -116,8 +116,8 @@ object DumpDecode {
     * pages). Junk that doesn't start "BZh1".."BZh9" yields no members.
     */
   def bz2Members(bytes: Array[Byte],
-      maxOutPerMember: Int = 64 << 20,
-      maxOutTotal: Long = 256L << 20): Seq[Array[Byte]] =
+      maxOutPerMember: Int = Bytes.MaxOut,
+      maxOutTotal: Long = Bytes.MaxOutTotal): Seq[Array[Byte]] =
     walkMembers(bytes, maxOutPerMember, maxOutTotal, bz2HeaderAt,
       in => new BZip2CompressorInputStream(in, false))._1
 
@@ -125,8 +125,8 @@ object DumpDecode {
     * (completed-prefix, like [[bz2Members]]).
     */
   def xzMembers(bytes: Array[Byte],
-      maxOutPerMember: Int = 64 << 20,
-      maxOutTotal: Long = 256L << 20): Seq[Array[Byte]] =
+      maxOutPerMember: Int = Bytes.MaxOut,
+      maxOutTotal: Long = Bytes.MaxOutTotal): Seq[Array[Byte]] =
     walkMembers(bytes, maxOutPerMember, maxOutTotal, xzHeaderAt,
       in => new XZCompressorInputStream(in, false))._1
 
@@ -142,8 +142,8 @@ object DumpDecode {
 
   /** All-or-NULL bzip2 decode of one payload (trailing junk → null). */
   def bunzipAll(bytes: Array[Byte],
-      maxOutPerMember: Int = 64 << 20,
-      maxOutTotal: Long = 256L << 20): Array[Byte] = {
+      maxOutPerMember: Int = Bytes.MaxOut,
+      maxOutTotal: Long = Bytes.MaxOutTotal): Array[Byte] = {
     if (bytes == null || bytes.length < 14) return null // smallest empty stream
     decodeAll(walkMembers(bytes, maxOutPerMember, maxOutTotal, bz2HeaderAt,
       in => new BZip2CompressorInputStream(in, false)), bytes.length)
@@ -151,8 +151,8 @@ object DumpDecode {
 
   /** All-or-NULL xz decode of one payload (trailing junk → null). */
   def unxzAll(bytes: Array[Byte],
-      maxOutPerMember: Int = 64 << 20,
-      maxOutTotal: Long = 256L << 20): Array[Byte] = {
+      maxOutPerMember: Int = Bytes.MaxOut,
+      maxOutTotal: Long = Bytes.MaxOutTotal): Array[Byte] = {
     if (bytes == null || bytes.length < 32) return null // header+footer+index minimum
     decodeAll(walkMembers(bytes, maxOutPerMember, maxOutTotal, xzHeaderAt,
       in => new XZCompressorInputStream(in, false)), bytes.length)
@@ -165,7 +165,7 @@ object DumpDecode {
     * Null on a torn/corrupt/over-budget stream or a junk offset.
     */
   def bz2MemberAt(bytes: Array[Byte], offset: Long,
-      maxOut: Int = 64 << 20): Array[Byte] = {
+      maxOut: Int = Bytes.MaxOut): Array[Byte] = {
     if (bytes == null || offset < 0 || offset > Int.MaxValue ||
       !bz2HeaderAt(bytes, offset.toInt)) return null
     val in = new ByteArrayInputStream(bytes, offset.toInt, bytes.length - offset.toInt)
@@ -203,8 +203,8 @@ object DumpDecode {
     * silently-partial bytes, while an uncompressed one is untouched.
     */
   def decompressAuto(bytes: Array[Byte],
-      maxOutPerMember: Int = 64 << 20,
-      maxOutTotal: Long = 256L << 20): Array[Byte] = {
+      maxOutPerMember: Int = Bytes.MaxOut,
+      maxOutTotal: Long = Bytes.MaxOutTotal): Array[Byte] = {
     if (bytes == null || bytes.length < 2) return bytes
     if ((bytes(0) & 0xFF) == 0x1F && (bytes(1) & 0xFF) == 0x8B)
       CompressedMeta.gunzipAll(bytes, maxOutPerMember, maxOutTotal)

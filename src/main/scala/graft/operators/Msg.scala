@@ -63,12 +63,9 @@ object Msg {
   private[graft] def lzfuDecompress(data: Array[Byte],
       maxOut: Int = 16 << 20): Option[Array[Byte]] = {
     if (data == null || data.length < 16) return None
-    def u32(off: Int): Long =
-      (data(off) & 0xFFL) | ((data(off + 1) & 0xFFL) << 8) |
-        ((data(off + 2) & 0xFFL) << 16) | ((data(off + 3) & 0xFFL) << 24)
-    val rawSize = u32(4)
+    val rawSize = Bytes.le32(data, 4)
     if (rawSize > maxOut) return None
-    u32(8) match {
+    Bytes.le32(data, 8) match {
       case 0x414C454DL => // 'MELA': stored uncompressed
         val n = math.min(rawSize, (data.length - 16).toLong).toInt
         Some(java.util.Arrays.copyOfRange(data, 16, 16 + n))
@@ -91,7 +88,7 @@ object Msg {
               i += 1
             } else {
               if (i + 2 > data.length) return None
-              val v = ((data(i) & 0xFF) << 8) | (data(i + 1) & 0xFF)
+              val v = Bytes.be16(data, i)
               i += 2
               val off = v >>> 4
               if (off == wpos) return Some(out.toByteArray) // END token
@@ -297,7 +294,7 @@ object Msg {
       }
     }
     val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Long): Unit = (0 until 4).foreach(i => out.write(((v >> (8 * i)) & 0xFF).toInt))
+    def w32(v: Long): Unit = out.write(Bytes.leBytes(v, 4))
     w32(body.size.toLong + 12) // compSize: bytes after this field
     w32(rtf.length.toLong)
     w32(0x75465A4CL) // 'LZFu'

@@ -24,6 +24,15 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
+  import Bytes.{be16, be32, beBytes, le16, le32, leBytes, putLe}
+
+  /** Pixel cap of every raster decoder ([[decodeTiff]], [[decodeGif]],
+    * [[decodeJpeg]], [[decodePng]]): a header declaring more than 2^26
+    * pixels degrades to None before any raster is allocated, so a
+    * 60-byte payload cannot claim gigabytes.
+    */
+  private val MaxPixels = 1L << 26
+
   /** A decoded media record: fixed-shape features + metadata. */
   final case class MediaFeatures(
       media_id: Long,
@@ -148,17 +157,13 @@ object Multimodal {
     */
   def decodeBmp(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
     if (bytes.length < 54 || bytes(0) != 'B' || bytes(1) != 'M') return None
-    def le32(o: Int): Int =
-      (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8) |
-        ((bytes(o + 2) & 0xFF) << 16) | ((bytes(o + 3) & 0xFF) << 24)
-    def le16(o: Int): Int = (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-    val dataOff = le32(10)
-    if (le32(14) < 40) return None // pre-BITMAPINFOHEADER variants
-    val w = le32(18)
-    val hRaw = le32(22)
+    val dataOff = le32(bytes, 10).toInt
+    if (le32(bytes, 14).toInt < 40) return None // pre-BITMAPINFOHEADER variants
+    val w = le32(bytes, 18).toInt
+    val hRaw = le32(bytes, 22).toInt
     val topDown = hRaw < 0
     val h = math.abs(hRaw)
-    if (w <= 0 || h <= 0 || le16(28) != 24 || le32(30) != 0) return None
+    if (w <= 0 || h <= 0 || le16(bytes, 28) != 24 || le32(bytes, 30) != 0) return None
     if (w.toLong * h * 3 > Int.MaxValue) return None
     val stride = ((w * 3 + 3) / 4) * 4
     if (dataOff < 54 || stride.toLong * h + dataOff > bytes.length) return None
@@ -259,24 +264,20 @@ object Multimodal {
       if (bytes(0) == 'I' && bytes(1) == 'I') true
       else if (bytes(0) == 'M' && bytes(1) == 'M') false
       else return None
-    def u16(o: Int): Int =
-      if (le) (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-      else ((bytes(o) & 0xFF) << 8) | (bytes(o + 1) & 0xFF)
-    def u32(o: Int): Long =
-      if (le) u16(o).toLong | (u16(o + 2).toLong << 16)
-      else (u16(o).toLong << 16) | u16(o + 2).toLong
-    if (u16(2) != 42) return None
-    val ifd = u32(4)
+    def short(o: Int): Int = if (le) le16(bytes, o) else be16(bytes, o)
+    def long(o: Int): Long = if (le) le32(bytes, o) else be32(bytes, o)
+    if (short(2) != 42) return None
+    val ifd = long(4)
     if (ifd < 8 || ifd + 2 > bytes.length) return None
-    val n = u16(ifd.toInt)
+    val n = short(ifd.toInt)
     if (ifd + 2 + 12L * n + 4 > bytes.length) return None
     val tags = scala.collection.mutable.Map.empty[Int, IndexedSeq[Long]]
     var e = 0
     while (e < n) {
       val off = ifd.toInt + 2 + 12 * e
-      val tag = u16(off)
-      val typ = u16(off + 2)
-      val cnt = u32(off + 4)
+      val tag = short(off)
+      val typ = short(off + 2)
+      val cnt = long(off + 4)
       val sz = typ match { case 1 => 1; case 3 => 2; case 4 => 4; case _ => 0 }
       if (sz > 0) { // unsupported value types (rationals, ascii) are skipped
         if (cnt < 0 || cnt > 65536) return None
@@ -284,7 +285,7 @@ object Multimodal {
         val base =
           if (total <= 4) off + 8L
           else {
-            val o = u32(off + 8)
+            val o = long(off + 8)
             if (o + total > bytes.length) return None
             o
           }
@@ -292,8 +293,8 @@ object Multimodal {
           val vo = (base + sz * j).toInt
           sz match {
             case 1 => (bytes(vo) & 0xFF).toLong
-            case 2 => u16(vo).toLong
-            case _ => u32(vo)
+            case 2 => short(vo).toLong
+            case _ => long(vo)
           }
         }.toIndexedSeq
       }
@@ -303,7 +304,7 @@ object Multimodal {
       tags.get(tag).flatMap(_.headOption).getOrElse(dflt)
     val w = one(256).toInt
     val h = one(257).toInt
-    if (w <= 0 || h <= 0 || w.toLong * h > (1L << 26)) return None
+    if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) return None
     val spp = one(277, 1L).toInt
     if (spp != 1 && spp != 3) return None
     val photo = one(262).toInt
@@ -374,12 +375,8 @@ object Multimodal {
         data, s * rps * w * spp, s * rps * w * spp + rows * w * spp)
     }
     val out = new java.io.ByteArrayOutputStream()
-    def p16(v: Int): Unit =
-      if (bigEndian) { out.write((v >> 8) & 0xFF); out.write(v & 0xFF) }
-      else { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-    def p32(v: Int): Unit =
-      if (bigEndian) { p16((v >>> 16) & 0xFFFF); p16(v & 0xFFFF) }
-      else { p16(v & 0xFFFF); p16((v >>> 16) & 0xFFFF) }
+    def p16(v: Int): Unit = out.write(if (bigEndian) beBytes(v, 2) else leBytes(v, 2))
+    def p32(v: Int): Unit = out.write(if (bigEndian) beBytes(v, 4) else leBytes(v, 4))
     out.write(if (bigEndian) 'M' else 'I'); out.write(if (bigEndian) 'M' else 'I')
     p16(42); // magic
     val stripOffs = strips.scanLeft(8)((acc, st) => acc + st.length)
@@ -452,9 +449,8 @@ object Multimodal {
     val sig = new String(bytes, 0, 6, "US-ASCII")
     if (sig != "GIF87a" && sig != "GIF89a") return None
     def u8(o: Int): Int = bytes(o) & 0xFF
-    def le16(o: Int): Int = u8(o) | (u8(o + 1) << 8)
     var p = 6
-    val screenW = le16(p); val screenH = le16(p + 2); p += 4
+    val screenW = le16(bytes, p); val screenH = le16(bytes, p + 2); p += 4
     val lsdFlags = u8(p); p += 3 // flags, bg index, aspect
     var globalPal: Array[Byte] = null
     if ((lsdFlags & 0x80) != 0) {
@@ -473,11 +469,11 @@ object Multimodal {
           p += 1
         case 0x2C => // image descriptor
           if (p + 10 > bytes.length) return None
-          val left = le16(p + 1); val top = le16(p + 3)
-          val w = le16(p + 5); val h = le16(p + 7)
+          val left = le16(bytes, p + 1); val top = le16(bytes, p + 3)
+          val w = le16(bytes, p + 5); val h = le16(bytes, p + 7)
           val idFlags = u8(p + 9)
           p += 10
-          if (w <= 0 || h <= 0 || w.toLong * h > (1L << 26)) return None
+          if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) return None
           // frame-local geometry only covers the full screen: an offset
           // or sub-screen frame would need background/disposal
           // composition (and would diverge from this decoder's
@@ -670,8 +666,7 @@ object Multimodal {
     val eoi = clear + 1
     val out = new java.io.ByteArrayOutputStream()
     out.write("GIF89a".getBytes("US-ASCII"))
-    def le16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-    le16(w); le16(h)
+    out.write(leBytes(w, 2)); out.write(leBytes(h, 2))
     out.write(0x80 | (minCode - 1)) // global table, 2^7 entries
     out.write(0); out.write(0)      // bg index, aspect
     var i = 0
@@ -680,7 +675,7 @@ object Multimodal {
       i += 1
     }
     out.write(0x2C) // image descriptor
-    le16(0); le16(0); le16(w); le16(h)
+    Seq(0, 0, w, h).foreach(v => out.write(leBytes(v, 2)))
     out.write(if (interlaced) 0x40 else 0x00)
     out.write(minCode)
     // pixel indices in STORED row order (interlaced: four-pass)
@@ -768,7 +763,6 @@ object Multimodal {
   def decodeJpeg(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = try {
     if (bytes.length < 4 || bytes(0) != 0xFF.toByte || bytes(1) != 0xD8.toByte) return None
     def u8(o: Int): Int = bytes(o) & 0xFF
-    def u16(o: Int): Int = (u8(o) << 8) | u8(o + 1)
 
     val quant = Array.ofDim[Int](4, 64) // zigzag order, as stored
     val quantDefined = new Array[Boolean](4)
@@ -809,7 +803,7 @@ object Multimodal {
       val marker = u8(p + 1)
       if (marker == 0xD8) { p += 2 } // stray SOI
       else {
-        val len = u16(p + 2)
+        val len = be16(bytes, p + 2)
         if (p + 2 + len > bytes.length) return None
         marker match {
           case 0xDB => // DQT
@@ -819,14 +813,15 @@ object Multimodal {
               if (tq > 3) return None
               var i = 0
               if (pq == 0) { while (i < 64) { quant(tq)(i) = u8(o + 1 + i); i += 1 }; o += 65 }
-              else { while (i < 64) { quant(tq)(i) = u16(o + 1 + 2 * i); i += 1 }; o += 129 }
+              else { while (i < 64) { quant(tq)(i) = be16(bytes, o + 1 + 2 * i); i += 1 }; o += 129 }
               quantDefined(tq) = true
             }
           case 0xC0 => // SOF0 (baseline sequential)
             if (u8(p + 4) != 8) return None // 8-bit precision only
-            h = u16(p + 5); w = u16(p + 7)
+            h = be16(bytes, p + 5); w = be16(bytes, p + 7)
             nComp = u8(p + 9)
-            if (w <= 0 || h <= 0 || (nComp != 1 && nComp != 3)) return None
+            if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels ||
+              (nComp != 1 && nComp != 3)) return None
             comps = Array.tabulate(nComp) { i =>
               val o = p + 10 + 3 * i
               Comp(u8(o), u8(o + 1) >> 4, u8(o + 1) & 15, u8(o + 2))
@@ -844,7 +839,7 @@ object Multimodal {
               huff(tc)(th) = buildHuff(bits, vals)
               o += 17 + n
             }
-          case 0xDD => restartInterval = u16(p + 4) // DRI
+          case 0xDD => restartInterval = be16(bytes, p + 4) // DRI
           case 0xDA => // SOS
             val ns = u8(p + 4)
             if (comps == null || ns != nComp) return None
@@ -1234,17 +1229,11 @@ object Multimodal {
     require(seed >= 0 && w > 0 && h > 0, "syntheticBmp: non-negative seed, positive dims")
     val stride = ((w * 3 + 3) / 4) * 4
     val out = new Array[Byte](54 + stride * h)
-    def p32(o: Int, v: Int): Unit = {
-      out(o) = (v & 0xFF).toByte; out(o + 1) = ((v >> 8) & 0xFF).toByte
-      out(o + 2) = ((v >> 16) & 0xFF).toByte; out(o + 3) = ((v >>> 24) & 0xFF).toByte
-    }
-    def p16(o: Int, v: Int): Unit = {
-      out(o) = (v & 0xFF).toByte; out(o + 1) = ((v >> 8) & 0xFF).toByte
-    }
     out(0) = 'B'; out(1) = 'M'
-    p32(2, out.length); p32(10, 54); p32(14, 40)
-    p32(18, w); p32(22, h)
-    p16(26, 1); p16(28, 24); p32(30, 0); p32(34, stride * h)
+    putLe(out, 2, out.length, 4); putLe(out, 10, 54, 4); putLe(out, 14, 40, 4)
+    putLe(out, 18, w, 4); putLe(out, 22, h, 4)
+    putLe(out, 26, 1, 2); putLe(out, 28, 24, 2)
+    putLe(out, 30, 0, 4); putLe(out, 34, stride * h, 4)
     var y = 0
     while (y < h) {
       val ro = 54 + (h - 1 - y) * stride
@@ -1384,28 +1373,25 @@ object Multimodal {
     val sig = Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A)
     if (bytes.length < 8 + 25 || !sig.indices.forall(j => (bytes(j) & 0xFF) == sig(j)))
       return None
-    def be32(o: Int): Int =
-      ((bytes(o) & 0xFF) << 24) | ((bytes(o + 1) & 0xFF) << 16) |
-        ((bytes(o + 2) & 0xFF) << 8) | (bytes(o + 3) & 0xFF)
     var w = 0; var h = 0; var colorType = -1
     var palette: Array[Byte] = null
     val idat = new java.io.ByteArrayOutputStream()
     var p = 8
     var done = false
     while (!done && p + 8 <= bytes.length) {
-      val len = be32(p)
+      val len = be32(bytes, p).toInt
       if (len < 0 || p + 12 + len.toLong > bytes.length) return None
       val ctype = new String(bytes, p + 4, 4, "US-ASCII")
       ctype match {
         case "IHDR" =>
           if (len < 13) return None
-          w = be32(p + 8); h = be32(p + 12)
+          w = be32(bytes, p + 8).toInt; h = be32(bytes, p + 12).toInt
           val bitDepth = bytes(p + 16) & 0xFF
           colorType = bytes(p + 17) & 0xFF
           val (compression, filterM, interlace) =
             (bytes(p + 18) & 0xFF, bytes(p + 19) & 0xFF, bytes(p + 20) & 0xFF)
-          if (w <= 0 || h <= 0 || bitDepth != 8 || compression != 0 ||
-            filterM != 0 || interlace != 0 ||
+          if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels || bitDepth != 8 ||
+            compression != 0 || filterM != 0 || interlace != 0 ||
             !Set(0, 2, 3, 4, 6).contains(colorType)) return None
         case "PLTE" => palette = java.util.Arrays.copyOfRange(bytes, p + 8, p + 8 + len)
         case "IDAT" => idat.write(bytes, p + 8, len)
@@ -1536,22 +1522,16 @@ object Multimodal {
     val out = new java.io.ByteArrayOutputStream()
     out.write(Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte), 0, 8)
     def chunk(ctype: String, data: Array[Byte]): Unit = {
-      def be32(v: Int): Array[Byte] = Array(
-        (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-      out.write(be32(data.length), 0, 4)
+      out.write(beBytes(data.length, 4), 0, 4)
       val tb = ctype.getBytes("US-ASCII")
       out.write(tb, 0, 4)
       out.write(data, 0, data.length)
       val crc = new java.util.zip.CRC32()
       crc.update(tb); crc.update(data)
-      out.write(be32(crc.getValue.toInt), 0, 4)
+      out.write(beBytes(crc.getValue, 4), 0, 4)
     }
-    val ihdr = new Array[Byte](13)
-    ihdr(0) = (w >>> 24).toByte; ihdr(1) = (w >>> 16).toByte
-    ihdr(2) = (w >>> 8).toByte; ihdr(3) = w.toByte
-    ihdr(4) = (h >>> 24).toByte; ihdr(5) = (h >>> 16).toByte
-    ihdr(6) = (h >>> 8).toByte; ihdr(7) = h.toByte
-    ihdr(8) = 8; ihdr(9) = 2 // bit depth 8, color type 2 (RGB)
+    // bit depth 8, color type 2 (RGB), deflate, adaptive filter, no interlace
+    val ihdr = beBytes(w, 4) ++ beBytes(h, 4) ++ Array[Byte](8, 2, 0, 0, 0)
     chunk("IHDR", ihdr)
     chunk("IDAT", deflated)
     chunk("IEND", Array.emptyByteArray)
@@ -1633,25 +1613,6 @@ object Multimodal {
       sum_c0: Long, ssq_c0: Long, zc_c0: Long,
       sum_c1: Long, ssq_c1: Long, zc_c1: Long)
 
-  /** Pure-JVM RIFF/WAVE PCM decoder — the audio analog of [[decodePpm]],
-    * no codec dependency: `RIFF <size> WAVE`, then a chunk walk for
-    * `fmt ` (must be audioFormat 1 = integer PCM; 16-bit signed or
-    * 8-bit unsigned samples) and `data` (little-endian interleaved
-    * frames). 8-bit samples normalize into the 16-bit signed space as
-    * (b − 128)·256, so every consumer sees one sample domain. Trailing
-    * partial frames and odd-size chunk padding are handled per the
-    * RIFF spec; anything malformed — wrong magic, missing/short
-    * chunks, non-PCM, unsupported depth, non-positive layout — returns
-    * None so corrupt payloads degrade to the header sniff instead of
-    * throwing mid-partition.
-    */
-  /** Little-endian readers over a byte array — the RIFF family's
-    * shared primitives. */
-  private def wavLe16(bytes: Array[Byte], o: Int): Int =
-    (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-  private def wavLe32(bytes: Array[Byte], o: Int): Int =
-    wavLe16(bytes, o) | (wavLe16(bytes, o + 2) << 16)
-
   /** The ONE RIFF/WAVE chunk walk all three WAV decoders (PCM, IMA
     * ADPCM, G.711) share: word-aligned chunk sizes, bounds-checked,
     * stopping once both `fmt ` (≥ 16 bytes) and `data` are found.
@@ -1667,7 +1628,7 @@ object Multimodal {
     var dataOff = -1; var dataLen = -1
     var i = 12
     while (i + 8 <= bytes.length && (dataOff < 0 || fmtOff < 0)) {
-      val sz = wavLe32(bytes, i + 4)
+      val sz = le32(bytes, i + 4).toInt
       if (sz < 0 || i + 8 + sz.toLong > bytes.length) return None
       if (tag(i, "fmt ") && sz >= 16) fmtOff = i + 8
       else if (tag(i, "data")) { dataOff = i + 8; dataLen = sz }
@@ -1688,38 +1649,39 @@ object Multimodal {
       dataLen: Int): (Array[Byte], Int) = {
     val fmtLen = 16 + extra.length
     val out = new Array[Byte](12 + 8 + fmtLen + 8 + dataLen)
-    def p32(o: Int, v: Int): Unit = {
-      out(o) = v.toByte; out(o + 1) = (v >> 8).toByte
-      out(o + 2) = (v >> 16).toByte; out(o + 3) = (v >>> 24).toByte
-    }
-    def p16(o: Int, v: Int): Unit = { out(o) = v.toByte; out(o + 1) = (v >> 8).toByte }
     def ptag(o: Int, s: String): Unit =
       s.zipWithIndex.foreach { case (ch, j) => out(o + j) = ch.toByte }
-    ptag(0, "RIFF"); p32(4, out.length - 8); ptag(8, "WAVE")
-    ptag(12, "fmt "); p32(16, fmtLen)
-    p16(20, fmtTag); p16(22, channels); p32(24, rate)
-    p32(28, byteRate); p16(32, blockAlign); p16(34, bits)
+    ptag(0, "RIFF"); putLe(out, 4, out.length - 8, 4); ptag(8, "WAVE")
+    ptag(12, "fmt "); putLe(out, 16, fmtLen, 4)
+    putLe(out, 20, fmtTag, 2); putLe(out, 22, channels, 2); putLe(out, 24, rate, 4)
+    putLe(out, 28, byteRate, 4); putLe(out, 32, blockAlign, 2); putLe(out, 34, bits, 2)
     System.arraycopy(extra, 0, out, 36, extra.length)
     val dataHdr = 36 + extra.length
-    ptag(dataHdr, "data"); p32(dataHdr + 4, dataLen)
+    ptag(dataHdr, "data"); putLe(out, dataHdr + 4, dataLen, 4)
     (out, dataHdr + 8)
   }
 
-  /** Little-endian int16 write — the fixtures' payload companion to
-    * [[wavScaffold]]. */
-  private def wavPut16(buf: Array[Byte], o: Int, v: Int): Unit = {
-    buf(o) = v.toByte; buf(o + 1) = (v >> 8).toByte
-  }
-
+  /** Pure-JVM RIFF/WAVE PCM decoder — the audio analog of [[decodePpm]],
+    * no codec dependency: `RIFF <size> WAVE`, then a chunk walk for
+    * `fmt ` (must be audioFormat 1 = integer PCM; 16-bit signed or
+    * 8-bit unsigned samples) and `data` (little-endian interleaved
+    * frames). 8-bit samples normalize into the 16-bit signed space as
+    * (b − 128)·256, so every consumer sees one sample domain. Trailing
+    * partial frames and odd-size chunk padding are handled per the
+    * RIFF spec; anything malformed — wrong magic, missing/short
+    * chunks, non-PCM, unsupported depth, non-positive layout — returns
+    * None so corrupt payloads degrade to the header sniff instead of
+    * throwing mid-partition.
+    */
   def decodeWav(bytes: Array[Byte]): Option[(Int, Int, Array[Short])] = {
     val (fmt, dataOff, dataLen) = riffWaveChunks(bytes) match {
       case Some(t) => t
       case None    => return None
     }
-    if (wavLe16(bytes, fmt) != 1) return None // integer PCM only
-    val channels = wavLe16(bytes, fmt + 2)
-    val rate = wavLe32(bytes, fmt + 4)
-    val bits = wavLe16(bytes, fmt + 14)
+    if (le16(bytes, fmt) != 1) return None // integer PCM only
+    val channels = le16(bytes, fmt + 2)
+    val rate = le32(bytes, fmt + 4).toInt
+    val bits = le16(bytes, fmt + 14)
     if (channels <= 0 || rate <= 0 || (bits != 16 && bits != 8)) return None
     val sampleBytes = bits / 8
     val frameBytes = channels * sampleBytes
@@ -1766,18 +1728,18 @@ object Multimodal {
       case Some(t) => t
       case None    => return None
     }
-    if (wavLe16(bytes, fmt) != 0x11) return None // IMA/DVI ADPCM only
-    val channels = wavLe16(bytes, fmt + 2)
-    val rate = wavLe32(bytes, fmt + 4)
-    val blockAlign = wavLe16(bytes, fmt + 12)
-    val bits = wavLe16(bytes, fmt + 14)
+    if (le16(bytes, fmt) != 0x11) return None // IMA/DVI ADPCM only
+    val channels = le16(bytes, fmt + 2)
+    val rate = le32(bytes, fmt + 4).toInt
+    val blockAlign = le16(bytes, fmt + 12)
+    val bits = le16(bytes, fmt + 14)
     if (channels != 1 || rate <= 0 || bits != 4 || blockAlign < 5)
       return None
     val out = scala.collection.mutable.ArrayBuffer.empty[Short]
     var bo = 0
     while (bo + 4 <= dataLen) {
       val blockLen = math.min(blockAlign, dataLen - bo)
-      var pred = wavLe16(bytes, dataOff + bo).toShort.toInt // sign-extended
+      var pred = le16(bytes, dataOff + bo).toShort.toInt // sign-extended
       var idx = bytes(dataOff + bo + 2) & 0xFF
       if (idx > 88) return None
       out += pred.toShort // the header predictor is the first sample
@@ -1821,7 +1783,7 @@ object Multimodal {
       blockAlign, 4, Array[Byte](2, 0, 65, 0) /* cbSize, samples/block */,
       blockAlign)
     val pred0 = ((seed * 37) % 256 - 128).toInt
-    wavPut16(out, base, pred0 & 0xFFFF)
+    putLe(out, base, pred0 & 0xFFFF, 2)
     out(base + 2) = (seed % 16).toByte; out(base + 3) = 0
     var j = 0
     while (j < nData) {
@@ -1871,11 +1833,11 @@ object Multimodal {
       case Some(t) => t
       case None    => return None
     }
-    if (wavLe16(bytes, fmt) != 2) return None // MS ADPCM only
-    val channels = wavLe16(bytes, fmt + 2)
-    val rate = wavLe32(bytes, fmt + 4)
-    val blockAlign = wavLe16(bytes, fmt + 12)
-    val bits = wavLe16(bytes, fmt + 14)
+    if (le16(bytes, fmt) != 2) return None // MS ADPCM only
+    val channels = le16(bytes, fmt + 2)
+    val rate = le32(bytes, fmt + 4).toInt
+    val blockAlign = le16(bytes, fmt + 12)
+    val bits = le16(bytes, fmt + 14)
     if (channels < 1 || channels > 2 || rate <= 0 || bits != 4 ||
         blockAlign < 7 * channels)
       return None
@@ -1892,10 +1854,10 @@ object Multimodal {
         val p = bytes(base + ch) & 0xFF
         if (p > 6) return None
         c1(ch) = MsCoef1(p); c2(ch) = MsCoef2(p)
-        delta(ch) = wavLe16(bytes, base + channels + 2 * ch).toShort.toInt
+        delta(ch) = le16(bytes, base + channels + 2 * ch).toShort.toInt
         if (delta(ch) <= 0) return None
-        s1(ch) = wavLe16(bytes, base + 3 * channels + 2 * ch).toShort.toInt
-        s2(ch) = wavLe16(bytes, base + 5 * channels + 2 * ch).toShort.toInt
+        s1(ch) = le16(bytes, base + 3 * channels + 2 * ch).toShort.toInt
+        s2(ch) = le16(bytes, base + 5 * channels + 2 * ch).toShort.toInt
         ch += 1
       }
       // the two header samples lead the block, OLDER first
@@ -1944,9 +1906,9 @@ object Multimodal {
       blockAlign, 4, Array[Byte](0, 0) /* cbSize 0: canonical table implied */,
       blockAlign)
     out(base) = (seed % 7).toByte
-    wavPut16(out, base + 1, (16 + (seed * 13) % 240).toInt)
-    wavPut16(out, base + 3, ((seed * 31) % 256 - 128).toInt & 0xFFFF)
-    wavPut16(out, base + 5, ((seed * 17) % 256 - 128).toInt & 0xFFFF)
+    putLe(out, base + 1, (16 + (seed * 13) % 240).toInt, 2)
+    putLe(out, base + 3, ((seed * 31) % 256 - 128).toInt & 0xFFFF, 2)
+    putLe(out, base + 5, ((seed * 17) % 256 - 128).toInt & 0xFFFF, 2)
     var j = 0
     while (j < nData) {
       val hi = ((seed + 2 * j) % 16).toInt
@@ -1998,11 +1960,11 @@ object Multimodal {
       case Some(t) => t
       case None    => return None
     }
-    val law = wavLe16(bytes, fmt)
+    val law = le16(bytes, fmt)
     if (law != 6 && law != 7) return None // A-law / μ-law only
-    val channels = wavLe16(bytes, fmt + 2)
-    val rate = wavLe32(bytes, fmt + 4)
-    val bits = wavLe16(bytes, fmt + 14)
+    val channels = le16(bytes, fmt + 2)
+    val rate = le32(bytes, fmt + 4).toInt
+    val bits = le16(bytes, fmt + 14)
     if (channels <= 0 || rate <= 0 || bits != 8) return None
     val frames = dataLen / channels // drop a trailing partial frame
     val out = new Array[Short](frames * channels)
@@ -2472,9 +2434,6 @@ object Multimodal {
     * return None — the degrade-don't-throw contract throughout.
     */
   def decodeAviMjpeg(bytes: Array[Byte]): Option[(Int, Int, Seq[Array[Byte]])] = try {
-    def le32(o: Int): Int =
-      (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8) |
-        ((bytes(o + 2) & 0xFF) << 16) | ((bytes(o + 3) & 0xFF) << 24)
     def tag(o: Int, s: String): Boolean =
       o + 4 <= bytes.length && s.zipWithIndex.forall { case (c, j) => bytes(o + j) == c.toByte }
     if (bytes.length < 12 || !tag(0, "RIFF") || !tag(8, "AVI ")) return None
@@ -2482,7 +2441,7 @@ object Multimodal {
     def walk(start: Int, end: Int): Unit = {
       var i = start
       while (i + 8 <= end) {
-        val sz = le32(i + 4)
+        val sz = le32(bytes, i + 4).toInt
         if (sz < 0 || i + 8 + sz.toLong > end) return // truncated: stop
         if (tag(i, "LIST")) walk(i + 12, i + 8 + sz)
         else if (tag(i, "00dc") || tag(i, "00db"))
@@ -2490,7 +2449,7 @@ object Multimodal {
         i += 8 + sz + (sz & 1) // RIFF chunks are word-aligned
       }
     }
-    walk(12, math.min(bytes.length, 8 + le32(4).max(0)))
+    walk(12, math.min(bytes.length, 8 + le32(bytes, 4).toInt.max(0)))
     if (chunks.isEmpty) return None
     val decoded = chunks.map(decodeJpeg)
     if (decoded.exists(_.isEmpty)) return None
@@ -2553,26 +2512,24 @@ object Multimodal {
   def syntheticAviMjpeg(seed: Long, frames: Int): Array[Byte] = {
     require(seed >= 0 && frames > 0, "syntheticAviMjpeg: non-negative seed, positive frames")
     val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Array[Byte] =
-      Array(v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >>> 24).toByte)
     def chunk(t: String, d: Array[Byte]): Array[Byte] = {
       val pad = if (d.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray
-      t.getBytes("US-ASCII") ++ le32(d.length) ++ d ++ pad
+      t.getBytes("US-ASCII") ++ leBytes(d.length, 4) ++ d ++ pad
     }
     def list(t: String, d: Array[Byte]): Array[Byte] =
-      "LIST".getBytes("US-ASCII") ++ le32(4 + d.length) ++ t.getBytes("US-ASCII") ++ d
+      "LIST".getBytes("US-ASCII") ++ leBytes(4 + d.length, 4) ++ t.getBytes("US-ASCII") ++ d
     val avih = new Array[Byte](56)
-    System.arraycopy(le32(66666), 0, avih, 0, 4)  // usec/frame (~15 fps)
-    System.arraycopy(le32(frames), 0, avih, 16, 4)
-    System.arraycopy(le32(1), 0, avih, 24, 4)     // one stream
-    System.arraycopy(le32(16), 0, avih, 32, 4)    // width
-    System.arraycopy(le32(16), 0, avih, 36, 4)    // height
+    putLe(avih, 0, 66666, 4)  // usec/frame (~15 fps)
+    putLe(avih, 16, frames, 4)
+    putLe(avih, 24, 1, 4)     // one stream
+    putLe(avih, 32, 16, 4)    // width
+    putLe(avih, 36, 16, 4)    // height
     val hdrl = list("hdrl", chunk("avih", avih))
     val movi = list("movi",
       (0 until frames).flatMap(f => chunk("00dc", syntheticJpeg(seed * 7 + f))).toArray)
     val body = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi
     out.write("RIFF".getBytes("US-ASCII"), 0, 4)
-    out.write(le32(body.length), 0, 4)
+    out.write(leBytes(body.length, 4), 0, 4)
     out.write(body, 0, body.length)
     out.toByteArray
   }
@@ -2742,7 +2699,7 @@ object Multimodal {
       dataLen)
     var i = 0
     while (i < frames * channels) {
-      wavPut16(out, base + i * 2, (((seed * 31 + i) * 97) % 65536).toInt)
+      putLe(out, base + i * 2, (((seed * 31 + i) * 97) % 65536).toInt, 2)
       i += 1
     }
     out
@@ -3083,8 +3040,7 @@ object Multimodal {
     var p = 12
     while (p + 8 <= bytes.length) {
       val tag = new String(bytes, p, 4, "US-ASCII")
-      val clen = (bytes(p + 4) & 0xFF) | ((bytes(p + 5) & 0xFF) << 8) |
-        ((bytes(p + 6) & 0xFF) << 16) | ((bytes(p + 7) & 0xFF) << 24)
+      val clen = le32(bytes, p + 4).toInt
       if (clen < 0 || p + 8 + clen.toLong > bytes.length) return None
       if (tag == "VP8L") return decodeVp8l(bytes, p + 8, clen, maxPixels)
       if (tag == "VP8 ") return None // lossy: the perceptual honest boundary
@@ -3321,14 +3277,10 @@ object Multimodal {
   /** RIFF/WEBP wrapper around one VP8L payload (chunks pad to even). */
   private def riffWebp(payload: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-      out.write((v >> 16) & 0xFF); out.write((v >>> 24) & 0xFF)
-    }
     val padded = payload.length + (payload.length & 1)
-    out.write("RIFF".getBytes("US-ASCII")); le32(4 + 8 + padded)
+    out.write("RIFF".getBytes("US-ASCII")); out.write(leBytes(4 + 8 + padded, 4))
     out.write("WEBP".getBytes("US-ASCII"))
-    out.write("VP8L".getBytes("US-ASCII")); le32(payload.length)
+    out.write("VP8L".getBytes("US-ASCII")); out.write(leBytes(payload.length, 4))
     out.write(payload, 0, payload.length)
     if ((payload.length & 1) == 1) out.write(0)
     out.toByteArray
@@ -3445,19 +3397,15 @@ object Multimodal {
     */
   def webpLossyStub(seed: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-      out.write((v >> 16) & 0xFF); out.write((v >>> 24) & 0xFF)
-    }
     val body = new Array[Byte](24)
     var s = seed
     body.indices.foreach { i =>
       s = s * 6364136223846793005L + 1442695040888963407L
       body(i) = ((s >>> 33) & 0xFF).toByte
     }
-    out.write("RIFF".getBytes("US-ASCII")); le32(4 + 8 + body.length)
+    out.write("RIFF".getBytes("US-ASCII")); out.write(leBytes(4 + 8 + body.length, 4))
     out.write("WEBP".getBytes("US-ASCII"))
-    out.write("VP8 ".getBytes("US-ASCII")); le32(body.length)
+    out.write("VP8 ".getBytes("US-ASCII")); out.write(leBytes(body.length, 4))
     out.write(body, 0, body.length)
     out.toByteArray
   }

@@ -434,7 +434,7 @@ object Pdf {
 
     def addStreamEntries(ps: PStream): Unit = {
       val dict = ps.dict
-      val data = decodeStream(ps, identity, 64 << 20) match {
+      val data = decodeStream(ps, identity, Bytes.MaxOut) match {
         case Right(d) => d
         case Left(_) => throw new Malformed("xref stream filter")
       }
@@ -609,7 +609,7 @@ object Pdf {
                 case PNum(x) if x >= 0 => x.toInt
                 case _ => throw new Malformed("junk ObjStm /First")
               }
-              val payload = decodeStream(s, resolve(_, depth), 64 << 20) match {
+              val payload = decodeStream(s, resolve(_, depth), Bytes.MaxOut) match {
                 case Right(d) => d
                 case Left(_) => throw new Malformed("ObjStm filter")
               }
@@ -696,21 +696,8 @@ object Pdf {
     * deflate stream are tolerated (writers pad) but corruption is not.
     */
   private def inflate(data: Array[Byte], maxOut: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(false)
-    inf.setInput(data)
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    try {
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && !inf.finished()) return null
-        out.write(buf, 0, n)
-        if (out.size() > maxOut) return null
-      }
-      out.toByteArray
-    } catch {
-      case _: java.util.zip.DataFormatException => null
-    } finally inf.end()
+    val inflated = Bytes.inflate(data, 0, data.length, raw = false, maxOut)
+    if (inflated == null) null else inflated._1
   }
 
   /** Undo a /Predictor over 8-bit single-component data: TIFF
@@ -971,7 +958,7 @@ object Pdf {
     }
     def code(b: Array[Byte]): Int =
       if (b.length == 1) b(0) & 0xFF
-      else ((b(0) & 0xFF) << 8) | (b(1) & 0xFF)
+      else Bytes.be16(b, 0)
     // STRICT decode: the default charset decoder substitutes U+FFFD
     // for malformed input (lone surrogates), which would smuggle a
     // guessed character into the text — report instead, degrading the
@@ -1172,7 +1159,7 @@ object Pdf {
           // simple-encoding slot
           var i = 0
           while (i + 1 < bytes.length) {
-            val code = ((bytes(i) & 0xFF) << 8) | (bytes(i + 1) & 0xFF)
+            val code = Bytes.be16(bytes, i)
             sb.append(map.getOrElse(code, "�"))
             i += 2
           }
@@ -1272,7 +1259,7 @@ object Pdf {
     * rows via [[textRows]].
     */
   def extractText(bytes: Array[Byte], maxTextLen: Int = 4 << 20,
-      maxStreamOut: Int = 64 << 20): PdfDoc = {
+      maxStreamOut: Int = Bytes.MaxOut): PdfDoc = {
     try {
       if (bytes == null || bytes.length < 16 ||
         !(bytes(0) == '%' && bytes(1) == 'P' && bytes(2) == 'D' && bytes(3) == 'F' && bytes(4) == '-'))

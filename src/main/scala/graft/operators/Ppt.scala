@@ -25,6 +25,8 @@ import org.apache.spark.sql.DataFrame
   */
 object Ppt {
 
+  import Bytes.{le16, le32}
+
   final case class PptText(stage: String, paragraphs: Seq[String])
 
   private val TextCharsAtom = 0x0FA0
@@ -32,13 +34,6 @@ object Ppt {
   private val NotesContainer = 0x03F0
   private val MainMasterContainer = 0x03F8
   private val EncryptionAtom = 0x2F14
-
-  private def u16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8)
-
-  private def u32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xFFL) | ((b(off + 1) & 0xFFL) << 8) |
-      ((b(off + 2) & 0xFFL) << 16) | ((b(off + 3) & 0xFFL) << 24)
 
   /** Walk one record run [from, to), collecting text atom payloads in
     * order; `excluded` subtrees are skipped whole. Returns false when
@@ -55,8 +50,8 @@ object Ppt {
     var i = from
     while (i + 8 <= to && out.length < maxAtoms) {
       val ver = b(i) & 0x0F
-      val typ = u16(b, i + 2)
-      val len = u32(b, i + 4)
+      val typ = le16(b, i + 2)
+      val len = le32(b, i + 4)
       val end = i + 8 + len
       if (len < 0 || end > to) return true // torn tail: completed atoms keep
       if (typ == EncryptionAtom) return false
@@ -128,11 +123,8 @@ object Ppt {
 
   // ---- fixture writer (tests + gates only) ----
 
-  private def w16(b: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    b.write(v & 0xFF); b.write((v >> 8) & 0xFF)
-  }
-  private def w32(b: java.io.ByteArrayOutputStream, v: Long): Unit =
-    (0 until 4).foreach(i => b.write(((v >> (8 * i)) & 0xFF).toInt))
+  private def w16(b: java.io.ByteArrayOutputStream, v: Int): Unit = b.write(Bytes.leBytes(v, 2))
+  private def w32(b: java.io.ByteArrayOutputStream, v: Long): Unit = b.write(Bytes.leBytes(v, 4))
 
   private def record(ver: Int, typ: Int, payload: Array[Byte]): Array[Byte] = {
     val b = new java.io.ByteArrayOutputStream()

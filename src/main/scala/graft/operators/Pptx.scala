@@ -36,7 +36,7 @@ object Pptx {
 
   def read(bytes: Array[Byte]): PptxDoc = {
     if (bytes == null) return PptxDoc("zip", Seq.empty)
-    if (Docx.isCfb(bytes)) return PptxDoc(Docx.cfbStage(bytes), Seq.empty)
+    if (Cfb.isCfb(bytes)) return PptxDoc(Docx.cfbStage(bytes), Seq.empty)
     val es = ZipShard.entries(bytes)
     if (es.isEmpty) return PptxDoc("zip", Seq.empty)
     readEntries(es)

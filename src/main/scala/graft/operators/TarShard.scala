@@ -126,7 +126,7 @@ object TarShard {
   /** Walk one shard's members (completed-prefix on torn input). */
   def entries(bytes: Array[Byte],
       maxEntries: Int = 65536,
-      maxOutTotal: Long = 256L << 20): Seq[TarEntry] = {
+      maxOutTotal: Long = Bytes.MaxOutTotal): Seq[TarEntry] = {
     if (bytes == null) return Seq.empty
     val out = Vector.newBuilder[TarEntry]
     var off = 0

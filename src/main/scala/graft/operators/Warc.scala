@@ -288,7 +288,7 @@ object Warc {
     * digests silently-partial text ([[CompressedMeta.gunzipAll]]'s
     * honesty contract).
     */
-  def dechunk(bytes: Array[Byte], maxOut: Int = 64 << 20): Array[Byte] = {
+  def dechunk(bytes: Array[Byte], maxOut: Int = Bytes.MaxOut): Array[Byte] = {
     if (bytes == null) return null
     val out = new java.io.ByteArrayOutputStream()
     var p = 0
@@ -342,24 +342,12 @@ object Warc {
     * null. Raw-deflate bodies (a known server bug) are out of contract
     * and degrade the same visible way.
     */
-  def inflateZlib(bytes: Array[Byte], maxOut: Int = 64 << 20): Array[Byte] = {
+  def inflateZlib(bytes: Array[Byte], maxOut: Int = Bytes.MaxOut): Array[Byte] = {
     if (bytes == null) return null
-    val inf = new java.util.zip.Inflater(false)
-    inf.setInput(bytes)
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    try {
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && !inf.finished()) return null // truncated/needs-dict
-        out.write(buf, 0, n)
-        if (out.size() > maxOut) return null // bomb cap
-      }
-      if (inf.getRemaining != 0) return null // trailing junk
-      out.toByteArray
-    } catch {
-      case _: java.util.zip.DataFormatException => null
-    } finally inf.end()
+    Bytes.inflate(bytes, 0, bytes.length, raw = false, maxOut) match {
+      case (out, consumed) if consumed == bytes.length => out
+      case _ => null // corrupt, truncated, over cap, or trailing junk
+    }
   }
 
   /** Decode an HTTP payload from its ON-THE-WIRE form to entity bytes:
@@ -387,7 +375,7 @@ object Warc {
     * until an environment ships the dictionary.
     */
   def decodeHttpBody(payload: Array[Byte], transferEncoding: String,
-      contentEncoding: String, maxOut: Int = 64 << 20): Array[Byte] = {
+      contentEncoding: String, maxOut: Int = Bytes.MaxOut): Array[Byte] = {
     val afterTe = transferEncoding match {
       case null      => payload
       case "chunked" => dechunk(payload, maxOut)

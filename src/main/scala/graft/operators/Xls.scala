@@ -33,6 +33,8 @@ import org.apache.spark.sql.DataFrame
   */
 object Xls {
 
+  import Bytes.{le16, le32, le64, leBytes}
+
   final case class XlsDoc(stage: String, cells: Seq[Xlsx.Cell])
 
   private val RBofT = 0x0809
@@ -68,12 +70,6 @@ object Xls {
     } catch {
       case _: Exception => java.nio.charset.StandardCharsets.ISO_8859_1
     }
-
-  private def u16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8)
-  private def u32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xFFL) | ((b(off + 1) & 0xFFL) << 8) |
-      ((b(off + 2) & 0xFFL) << 16) | ((b(off + 3) & 0xFFL) << 24)
 
   /** Cursor over the SST record's payload plus its CONTINUE spills.
     * Scalar fields read across chunk boundaries transparently;
@@ -174,8 +170,8 @@ object Xls {
     var biff5 = false
     val wb = doc.streams.get("Workbook").orElse {
       doc.streams.get("Book").map { b =>
-        if (b.length < 6 || u16(b, 0) != RBofT) return XlsDoc("biff", Seq.empty)
-        u16(b, 4) match {
+        if (b.length < 6 || le16(b, 0) != RBofT) return XlsDoc("biff", Seq.empty)
+        le16(b, 4) match {
           case 0x0500 => biff5 = true
           case 0x0600 => ()
           case _ => return XlsDoc("biff", Seq.empty)
@@ -216,15 +212,15 @@ object Xls {
     var i = 0
     var n = 0
     while (i + 4 <= wb.length && n < maxCells) {
-      val typ = u16(wb, i)
-      val len = u16(wb, i + 2)
+      val typ = le16(wb, i)
+      val len = le16(wb, i + 2)
       val end = i + 4 + len
       if (end > wb.length) i = wb.length // torn tail drops
       else {
         typ match {
           case RFilePass => return XlsDoc("encrypted", Seq.empty)
           case RBofT =>
-            if (len >= 4 && u16(wb, i + 4 + 2) == 0x0010) sheet += 1
+            if (len >= 4 && le16(wb, i + 4 + 2) == 0x0010) sheet += 1
             inSst = false
           case RSst =>
             sstChunks = Vector(java.util.Arrays.copyOfRange(wb, i + 4, end))
@@ -232,14 +228,14 @@ object Xls {
           case RContinue =>
             if (inSst) sstChunks :+= java.util.Arrays.copyOfRange(wb, i + 4, end)
           case RLabelSst if len >= 10 && sheet > 0 =>
-            pendingSst += ((sheet, u16(wb, i + 4) + 1, u16(wb, i + 6) + 1,
-              u32(wb, i + 10)))
+            pendingSst += ((sheet, le16(wb, i + 4) + 1, le16(wb, i + 6) + 1,
+              le32(wb, i + 10)))
             n += 1
             inSst = false
           case RLabel if len >= 9 && sheet > 0 =>
             // BIFF8: XLUnicodeString (cch, flags byte, chars);
             // BIFF5: cch then raw 8-bit chars in the CODEPAGE encoding
-            val cch = u16(wb, i + 10)
+            val cch = le16(wb, i + 10)
             val s: String =
               if (biff5) {
                 if (i + 12 + cch <= end) new String(wb, i + 12, cch, cp5) else null
@@ -254,37 +250,37 @@ object Xls {
                 } else null
               }
             if (s != null) {
-              raw += ((sheet, u16(wb, i + 4) + 1, u16(wb, i + 6) + 1, s))
+              raw += ((sheet, le16(wb, i + 4) + 1, le16(wb, i + 6) + 1, s))
               n += 1
             }
             inSst = false
           case RNumber if len >= 14 && sheet > 0 =>
-            val bits = u32(wb, i + 10) | (u32(wb, i + 14) << 32)
-            raw += ((sheet, u16(wb, i + 4) + 1, u16(wb, i + 6) + 1,
-              fmtNum(java.lang.Double.longBitsToDouble(bits), u16(wb, i + 8))))
+            val bits = le64(wb, i + 10)
+            raw += ((sheet, le16(wb, i + 4) + 1, le16(wb, i + 6) + 1,
+              fmtNum(java.lang.Double.longBitsToDouble(bits), le16(wb, i + 8))))
             n += 1
             inSst = false
           case RRk if len >= 10 && sheet > 0 =>
-            raw += ((sheet, u16(wb, i + 4) + 1, u16(wb, i + 6) + 1,
-              fmtNum(rkValue(u32(wb, i + 10)), u16(wb, i + 8))))
+            raw += ((sheet, le16(wb, i + 4) + 1, le16(wb, i + 6) + 1,
+              fmtNum(rkValue(le32(wb, i + 10)), le16(wb, i + 8))))
             n += 1
             inSst = false
           case RMulRk if len >= 12 && (len - 6) % 6 == 0 && sheet > 0 =>
             // a run of RK cells in one record (row, colFirst,
             // (ixfe+rk)×n, colLast) — what real writers emit for
             // numeric row spans
-            val row = u16(wb, i + 4) + 1
-            val colFirst = u16(wb, i + 6) + 1
+            val row = le16(wb, i + 4) + 1
+            val colFirst = le16(wb, i + 6) + 1
             val cnt = (len - 6) / 6
             (0 until cnt).foreach { j =>
               raw += ((sheet, row, colFirst + j,
-                fmtNum(rkValue(u32(wb, i + 8 + 6 * j + 2)), u16(wb, i + 8 + 6 * j))))
+                fmtNum(rkValue(le32(wb, i + 8 + 6 * j + 2)), le16(wb, i + 8 + 6 * j))))
               n += 1
             }
             inSst = false
           case RBoolErr if len >= 8 && sheet > 0 =>
             if ((wb(i + 4 + 7) & 0xFF) == 0) { // fError=0: a boolean
-              raw += ((sheet, u16(wb, i + 4) + 1, u16(wb, i + 6) + 1,
+              raw += ((sheet, le16(wb, i + 4) + 1, le16(wb, i + 6) + 1,
                 if (wb(i + 4 + 6) != 0) "TRUE" else "FALSE"))
               n += 1
             }
@@ -293,9 +289,9 @@ object Xls {
             // the CACHED result rides the record (§2.4.127): a plain
             // IEEE double, or the FF FF-tagged special — type 0 defers
             // to the FOLLOWING String record, 1 is a bool, 2 an error
-            val row = u16(wb, i + 4) + 1
-            val c0 = u16(wb, i + 6) + 1
-            if (u16(wb, i + 10 + 6) == 0xFFFF) {
+            val row = le16(wb, i + 4) + 1
+            val c0 = le16(wb, i + 6) + 1
+            if (le16(wb, i + 10 + 6) == 0xFFFF) {
               (wb(i + 10) & 0xFF) match {
                 case 0 => pendingFormulaStr = (sheet, row, c0) // String follows
                 case 1 =>
@@ -304,14 +300,14 @@ object Xls {
                 case _ => () // error results carry no text
               }
             } else {
-              val bits = u32(wb, i + 10) | (u32(wb, i + 14) << 32)
+              val bits = le64(wb, i + 10)
               raw += ((sheet, row, c0,
-                fmtNum(java.lang.Double.longBitsToDouble(bits), u16(wb, i + 8))))
+                fmtNum(java.lang.Double.longBitsToDouble(bits), le16(wb, i + 8))))
               n += 1
             }
             inSst = false
           case RString if len >= 3 && pendingFormulaStr != null =>
-            val cch = u16(wb, i + 4)
+            val cch = le16(wb, i + 4)
             val s: String =
               if (biff5) {
                 if (i + 6 + cch <= end) new String(wb, i + 6, cch, cp5) else null
@@ -333,18 +329,18 @@ object Xls {
             pendingFormulaStr = null
             inSst = false
           case RXf if len >= 4 =>
-            xfs += u16(wb, i + 4 + 2) // ifmt at XF payload offset 2
+            xfs += le16(wb, i + 4 + 2) // ifmt at XF payload offset 2
             inSst = false
           case RFormat if len >= 5 =>
             // BIFF8: ifmt + an XLUnicodeString (cch 2, flags, chars);
             // BIFF5: ifmt + a 1-byte cch + 8-bit chars
-            val ifmt = u16(wb, i + 4)
+            val ifmt = le16(wb, i + 4)
             if (biff5) {
               val cch = wb(i + 6) & 0xFF
               if (i + 7 + cch <= end)
                 fmtCodes(ifmt) = new String(wb, i + 7, cch, cp5)
             } else {
-              val cch = u16(wb, i + 6)
+              val cch = le16(wb, i + 6)
               val fHigh = (wb(i + 8) & 1) != 0
               val need = cch * (if (fHigh) 2 else 1)
               if (i + 9 + need <= end) {
@@ -357,10 +353,10 @@ object Xls {
             }
             inSst = false
           case RDate1904 if len >= 2 =>
-            date1904 = u16(wb, i + 4) != 0
+            date1904 = le16(wb, i + 4) != 0
             inSst = false
           case RCodepage if len >= 2 =>
-            cp5 = codepageCharset(u16(wb, i + 4))
+            cp5 = codepageCharset(le16(wb, i + 4))
             inSst = false
           case REof => inSst = false
           case _ => inSst = false
@@ -448,13 +444,9 @@ object Xls {
     b.write(payload)
     b.toByteArray
   }
-  private def le16(v: Int): Array[Byte] =
-    Array((v & 0xFF).toByte, ((v >> 8) & 0xFF).toByte)
-  private def le32(v: Long): Array[Byte] =
-    Array.tabulate(4)(i => ((v >> (8 * i)) & 0xFF).toByte)
 
   private def bof(dt: Int, vers: Int = 0x0600): Array[Byte] =
-    rec(RBofT, le16(vers) ++ le16(dt) ++ new Array[Byte](12))
+    rec(RBofT, leBytes(vers, 2) ++ leBytes(dt, 2) ++ new Array[Byte](12))
 
   /** Minimal valid BIFF8 .xls: globals substream (BOF + SST + EOF) and
     * one worksheet substream whose rows are STORED out of order,
@@ -489,7 +481,7 @@ object Xls {
       stream.write(rec(REof, Array.empty))
       return Cfb.cfb(Seq((streamName, stream.toByteArray)))
     }
-    if (biff5) stream.write(rec(RCodepage, le16(codepage)))
+    if (biff5) stream.write(rec(RCodepage, leBytes(codepage, 2)))
     // style surface (globals, before the SST): Date1904, Format
     // records for custom codes, and an XF table — XF 0 general plus
     // one XF per distinct styled format id in first-use order
@@ -499,13 +491,13 @@ object Xls {
       case (k, _) if isStyled(k) => k.drop(1).toInt
     }.distinct
     val xfOf = fmtIds.zipWithIndex.map { case (id, j) => id -> (j + 1) }.toMap
-    if (date1904) stream.write(rec(RDate1904, le16(1)))
+    if (date1904) stream.write(rec(RDate1904, leBytes(1, 2)))
     customFmts.foreach { case (id, code) =>
       if (biff5)
-        stream.write(rec(RFormat, le16(id) ++
+        stream.write(rec(RFormat, leBytes(id, 2) ++
           Array[Byte](code.length.toByte) ++ code.getBytes(cs)))
       else
-        stream.write(rec(RFormat, le16(id) ++ le16(code.length) ++
+        stream.write(rec(RFormat, leBytes(id, 2) ++ leBytes(code.length, 2) ++
           Array[Byte](0) ++
           code.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)))
     }
@@ -519,15 +511,15 @@ object Xls {
     if (sstStrings.nonEmpty) {
       // every second string writes UTF-16 (fHigh) to exercise both widths
       def strBytes(s: String, hi: Boolean): Array[Byte] =
-        le16(s.length) ++ Array[Byte](if (hi) 1 else 0) ++
+        leBytes(s.length, 2) ++ Array[Byte](if (hi) 1 else 0) ++
           (if (hi) s.getBytes(java.nio.charset.StandardCharsets.UTF_16LE)
           else s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-      val header = le32(sstStrings.length.toLong) ++ le32(sstStrings.length.toLong)
+      val header = leBytes(sstStrings.length.toLong, 4) ++ leBytes(sstStrings.length.toLong, 4)
       if (split && sstStrings.head.length >= 2) {
         // spill the FIRST string mid-characters: SST carries its header
         // + first char; CONTINUE re-states the flags byte for the rest
         val s0 = sstStrings.head
-        val part1 = header ++ le16(s0.length) ++ Array[Byte](0) ++
+        val part1 = header ++ leBytes(s0.length, 2) ++ Array[Byte](0) ++
           s0.substring(0, 1).getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
         val part2 = Array[Byte](0) ++
           s0.substring(1).getBytes(java.nio.charset.StandardCharsets.ISO_8859_1) ++
@@ -554,45 +546,44 @@ object Xls {
           d == d.toLong.toDouble && math.abs(d.toLong) < (1L << 29))
       }
       if (allSmallInts) {
-        val body = le16(rn - 1) ++ le16(0) ++
+        val body = leBytes(rn - 1, 2) ++ leBytes(0, 2) ++
           cells.flatMap { case (k, v) =>
-            le16(if (isStyled(k)) xfOf(k.drop(1).toInt) else 0) ++
-              le32((v.toDouble.toLong << 2) | 2L)
-          } ++ le16(cells.length - 1)
+            leBytes(if (isStyled(k)) xfOf(k.drop(1).toInt) else 0, 2) ++
+              leBytes((v.toDouble.toLong << 2) | 2L, 4)
+          } ++ leBytes(cells.length - 1, 2)
         stream.write(rec(RMulRk, body))
       } else cells.zipWithIndex.foreach { case ((kind, v), ci) =>
         val ixfe = if (isStyled(kind)) xfOf(kind.drop(1).toInt) else 0
-        val head = le16(rn - 1) ++ le16(ci) ++ le16(ixfe)
+        val head = leBytes(rn - 1, 2) ++ leBytes(ci, 2) ++ leBytes(ixfe, 2)
         kind match {
           case "s" =>
-            stream.write(rec(RLabelSst, head ++ le32(sstIdx(v).toLong)))
+            stream.write(rec(RLabelSst, head ++ leBytes(sstIdx(v).toLong, 4)))
           case "l" =>
             if (biff5) {
               val vb = v.getBytes(cs)
-              stream.write(rec(RLabel, head ++ le16(vb.length) ++ vb))
+              stream.write(rec(RLabel, head ++ leBytes(vb.length, 2) ++ vb))
             } else
-              stream.write(rec(RLabel, head ++ le16(v.length) ++ Array[Byte](0) ++
+              stream.write(rec(RLabel, head ++ leBytes(v.length, 2) ++ Array[Byte](0) ++
                 v.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)))
           case "f" => // formula, cached NUMERIC result inline
             val bits = java.lang.Double.doubleToLongBits(v.toDouble)
             stream.write(rec(RFormula, head ++
-              le32(bits & 0xFFFFFFFFL) ++ le32(bits >>> 32) ++
-              le16(0) ++ le32(0L) ++ le16(0))) // flags, chn, empty rgce
+              leBytes(bits, 8) ++
+              leBytes(0, 2) ++ leBytes(0L, 4) ++ leBytes(0, 2))) // flags, chn, empty rgce
           case "fs" => // formula, cached STRING result in a String record
             stream.write(rec(RFormula, head ++
               Array[Byte](0, 0, 0, 0, 0, 0, 0xFF.toByte, 0xFF.toByte) ++
-              le16(0) ++ le32(0L) ++ le16(0)))
-            stream.write(rec(RString, le16(v.length) ++ Array[Byte](0) ++
+              leBytes(0, 2) ++ leBytes(0L, 4) ++ leBytes(0, 2)))
+            stream.write(rec(RString, leBytes(v.length, 2) ++ Array[Byte](0) ++
               v.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)))
           case _ =>
             val d = v.toDouble
             val asInt = d.toLong
             if (d == asInt.toDouble && math.abs(asInt) < (1L << 29))
-              stream.write(rec(RRk, head ++ le32((asInt << 2) | 2L)))
+              stream.write(rec(RRk, head ++ leBytes((asInt << 2) | 2L, 4)))
             else {
               val bits = java.lang.Double.doubleToLongBits(d)
-              stream.write(rec(RNumber, head ++ le32(bits & 0xFFFFFFFFL) ++
-                le32(bits >>> 32)))
+              stream.write(rec(RNumber, head ++ leBytes(bits, 8)))
             }
         }
       }

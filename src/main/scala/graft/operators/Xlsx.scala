@@ -24,7 +24,7 @@ object Xlsx {
 
   def read(bytes: Array[Byte]): XlsxDoc = {
     if (bytes == null) return XlsxDoc("zip", Seq.empty)
-    if (Docx.isCfb(bytes)) return XlsxDoc(Docx.cfbStage(bytes), Seq.empty)
+    if (Cfb.isCfb(bytes)) return XlsxDoc(Docx.cfbStage(bytes), Seq.empty)
     val es = ZipShard.entries(bytes)
     if (es.isEmpty) return XlsxDoc("zip", Seq.empty)
     readEntries(es)
@@ -362,7 +362,7 @@ object Xlsx {
 
   def readGrid(bytes: Array[Byte]): XlsxGrid = {
     if (bytes == null) return XlsxGrid("zip", Seq.empty)
-    if (Docx.isCfb(bytes)) return XlsxGrid(Docx.cfbStage(bytes), Seq.empty)
+    if (Cfb.isCfb(bytes)) return XlsxGrid(Docx.cfbStage(bytes), Seq.empty)
     val es = ZipShard.entries(bytes)
     if (es.isEmpty) return XlsxGrid("zip", Seq.empty)
     gridEntries(es)
@@ -420,7 +420,7 @@ object Xlsx {
       .as[(Long, Array[Byte])]
       .map { case (id, b) =>
         if (b == null) (id, "zip", 0, null)
-        else if (Docx.isCfb(b)) (id, Docx.cfbStage(b), 0, null)
+        else if (Cfb.isCfb(b)) (id, Docx.cfbStage(b), 0, null)
         else {
           val es = ZipShard.entries(b)
           if (es.isEmpty) (id, "zip", 0, null)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.{CRC32, Deflater}
 
 import org.apache.spark.sql.DataFrame
 
@@ -37,13 +37,8 @@ object ZipShard {
     */
   final case class ZipEntry(name: String, method: Int, usize: Long, data: Array[Byte])
 
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | (b(o + 1) & 0xFF) << 8
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | (b(o + 1) & 0xFFL) << 8 |
-      (b(o + 2) & 0xFFL) << 16 | (b(o + 3) & 0xFFL) << 24
-  private def le64(b: Array[Byte], o: Int): Long =
-    le32(b, o) | le32(b, o + 4) << 32
+  import Bytes.{le16, le32, le64, leBytes}
+
   /** 4- or 8-byte LE read — the descriptor fields' width depends on
     * whether the entry declared zip64.
     */
@@ -60,8 +55,8 @@ object ZipShard {
     */
   def entries(bytes: Array[Byte],
       maxEntries: Int = 65536,
-      maxOutPerEntry: Int = 64 << 20,
-      maxOutTotal: Long = 256L << 20): Seq[ZipEntry] = {
+      maxOutPerEntry: Int = Bytes.MaxOut,
+      maxOutTotal: Long = Bytes.MaxOutTotal): Seq[ZipEntry] = {
     if (bytes == null) return Seq.empty
     val out = Vector.newBuilder[ZipEntry]
     var off = 0
@@ -124,27 +119,13 @@ object ZipShard {
               }
             case 0 => done = true // stored + descriptor: boundary unknowable in stream order
             case 8 => // deflate (raw); descriptor entries learn sizes from the inflate
-              val inf = new Inflater(true)
-              inf.setInput(bytes, dataAt, bytes.length - dataAt)
-              val bo = new ByteArrayOutputStream()
-              val buf = new Array[Byte](64 << 10)
-              var bad = false
-              try {
-                while (!inf.finished() && !bad) {
-                  val m = inf.inflate(buf)
-                  if (m > 0) {
-                    if (bo.size.toLong + m > maxOutPerEntry || total + bo.size + m > maxOutTotal) bad = true
-                    else bo.write(buf, 0, m)
-                  } else if (!inf.finished()) bad = true // needsInput mid-stream = torn
-                }
-              } catch { case _: Exception => bad = true }
-              val consumed = inf.getBytesRead
-              inf.end()
-              if (bad) done = true
+              val inflated = Bytes.inflate(bytes, dataAt, bytes.length - dataAt, raw = true,
+                math.min(maxOutPerEntry.toLong, maxOutTotal - total))
+              if (inflated == null) done = true // torn, corrupt or over budget
               else {
-                val data = bo.toByteArray
+                val (data, consumed) = inflated
                 val c = new CRC32(); c.update(data)
-                var next = dataAt + consumed.toInt
+                var next = dataAt + consumed
                 var expectCrc = crc
                 var expectUsize = usize
                 if (hasDesc) {
@@ -237,17 +218,11 @@ object ZipShard {
   def zip(members: Seq[(String, Array[Byte])], deflate: Boolean = true,
       descriptor: Boolean = false, zip64: Boolean = false): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    def w16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-    def w32(v: Long): Unit = {
-      out.write((v & 0xFF).toInt); out.write(((v >> 8) & 0xFF).toInt)
-      out.write(((v >> 16) & 0xFF).toInt); out.write(((v >> 24) & 0xFF).toInt)
-    }
+    def w16(v: Int): Unit = out.write(leBytes(v, 2))
+    def w32(v: Long): Unit = out.write(leBytes(v, 4))
     val central = new ByteArrayOutputStream()
-    def c16(v: Int): Unit = { central.write(v & 0xFF); central.write((v >> 8) & 0xFF) }
-    def c32(v: Long): Unit = {
-      central.write((v & 0xFF).toInt); central.write(((v >> 8) & 0xFF).toInt)
-      central.write(((v >> 16) & 0xFF).toInt); central.write(((v >> 24) & 0xFF).toInt)
-    }
+    def c16(v: Int): Unit = central.write(leBytes(v, 2))
+    def c32(v: Long): Unit = central.write(leBytes(v, 4))
     for ((name, data) <- members) {
       val hdrOff = out.size()
       val nb = name.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -265,16 +240,14 @@ object ZipShard {
           bo.toByteArray
         }
       val flags = if (descriptor && deflate) 0x08 else 0
-      def w64(v: Long): Unit = { w32(v & 0xFFFFFFFFL); w32((v >> 32) & 0xFFFFFFFFL) }
+      def w64(v: Long): Unit = out.write(leBytes(v, 8))
       // zip64 extra field: usize then csize, 8 bytes each (zeros under
       // a descriptor — the trailing descriptor carries the real ones)
       val extra = new ByteArrayOutputStream()
       if (zip64) {
         extra.write(0x01); extra.write(0x00); extra.write(16); extra.write(0)
-        var v = if (flags != 0) 0L else data.length.toLong
-        for (_ <- 0 until 8) { extra.write((v & 0xFF).toInt); v >>= 8 }
-        var c = if (flags != 0) 0L else body.length.toLong
-        for (_ <- 0 until 8) { extra.write((c & 0xFF).toInt); c >>= 8 }
+        extra.write(leBytes(if (flags != 0) 0L else data.length.toLong, 8))
+        extra.write(leBytes(if (flags != 0) 0L else body.length.toLong, 8))
       }
       val eb = extra.toByteArray
       w32(LocalSig); w16(if (zip64) 45 else 20); w16(flags); w16(method); w16(0); w16(0)

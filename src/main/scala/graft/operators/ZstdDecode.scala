@@ -30,6 +30,8 @@ package graft.operators
   */
 object ZstdDecode {
 
+  import Bytes.{le16, le24, le32, le64, leBytes}
+
   // --- bitstreams -----------------------------------------------------
 
   /** Backward bitstream (entropy payloads): bits are written LSB-first
@@ -60,10 +62,7 @@ object ZstdDecode {
       val base = from + (lo >> 3) // arithmetic shift: floor for lo < 0
       var w = 0L
       if (lo >= 0 && base + 8 <= to) {
-        w = (bytes(base) & 0xFFL) | (bytes(base + 1) & 0xFFL) << 8 |
-          (bytes(base + 2) & 0xFFL) << 16 | (bytes(base + 3) & 0xFFL) << 24 |
-          (bytes(base + 4) & 0xFFL) << 32 | (bytes(base + 5) & 0xFFL) << 40 |
-          (bytes(base + 6) & 0xFFL) << 48 | (bytes(base + 7) & 0xFFL) << 56
+        w = le64(bytes, base)
       } else {
         var k = 7
         while (k >= 0) {
@@ -524,12 +523,9 @@ object ZstdDecode {
     */
   def parseDict(bytes: Array[Byte]): ZstdDict = try {
     if (bytes == null) return null
-    def le32(o: Int): Long =
-      (bytes(o) & 0xFFL) | (bytes(o + 1) & 0xFFL) << 8 |
-        (bytes(o + 2) & 0xFFL) << 16 | (bytes(o + 3) & 0xFFL) << 24
-    if (bytes.length < 8 || le32(0) != 0xEC30A437L)
+    if (bytes.length < 8 || le32(bytes, 0) != 0xEC30A437L)
       return new ZstdDict(0L, null, null, null, null, null, bytes)
-    val id = le32(4)
+    val id = le32(bytes, 4)
     var p = 8
     val hufR = readHufTable(bytes, p, bytes.length)
     if (hufR == null) return null
@@ -544,7 +540,7 @@ object ZstdDecode {
     if (llR == null) return null
     p += llR._2
     if (p + 12 > bytes.length) return null
-    val rep = Array(le32(p), le32(p + 4), le32(p + 8))
+    val rep = Array(le32(bytes, p), le32(bytes, p + 4), le32(bytes, p + 8))
     p += 12
     if (rep.exists(_ <= 0L)) return null
     new ZstdDict(id, hufR._1, ofR._1, mlR._1, llR._1, rep,
@@ -566,12 +562,11 @@ object ZstdDecode {
       if ((sf & 1) == 0) { hdr = 1; rs = b0 >> 3 }
       else if (sf == 1) {
         if (from + 2 > to) return null
-        hdr = 2; rs = (b0 >> 4) | ((bytes(from + 1) & 0xFF) << 4)
+        hdr = 2; rs = le16(bytes, from) >> 4
       } else {
         if (from + 3 > to) return null
         hdr = 3
-        rs = (b0 >> 4) | ((bytes(from + 1) & 0xFF) << 4) |
-          ((bytes(from + 2) & 0xFF) << 12)
+        rs = le24(bytes, from) >> 4
       }
       if (rs > maxOut) return null
       if (ltype == 0) {
@@ -592,21 +587,18 @@ object ZstdDecode {
         case 0 | 1 =>
           if (from + 3 > to) return null
           hdr = 3
-          val h = b0 | ((bytes(from + 1) & 0xFF) << 8) | ((bytes(from + 2) & 0xFF) << 16)
+          val h = le24(bytes, from)
           rs = (h >> 4) & 0x3FF; cs = (h >> 14) & 0x3FF
           streams4 = sf == 1
         case 2 =>
           if (from + 4 > to) return null
           hdr = 4
-          val h = b0 | ((bytes(from + 1) & 0xFF) << 8) |
-            ((bytes(from + 2) & 0xFF) << 16) | ((bytes(from + 3) & 0xFF) << 24)
-          rs = (h >> 4) & 0x3FFF; cs = (h >>> 18) & 0x3FFF
+          val h = le32(bytes, from)
+          rs = ((h >> 4) & 0x3FFF).toInt; cs = ((h >> 18) & 0x3FFF).toInt
         case _ =>
           if (from + 5 > to) return null
           hdr = 5
-          val h = (b0.toLong) | ((bytes(from + 1) & 0xFFL) << 8) |
-            ((bytes(from + 2) & 0xFFL) << 16) | ((bytes(from + 3) & 0xFFL) << 24) |
-            ((bytes(from + 4) & 0xFFL) << 32)
+          val h = le32(bytes, from) | (bytes(from + 4) & 0xFFL) << 32
           rs = ((h >> 4) & 0x3FFFF).toInt; cs = ((h >> 22) & 0x3FFFF).toInt
       }
       if (rs > maxOut) return null
@@ -624,8 +616,7 @@ object ZstdDecode {
         if (!streams4) hufDecodeStream(t, bytes, p, end, rs)
         else {
           if (p + 6 > end || rs < 4) return null
-          def le16(o: Int) = (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-          val s1 = le16(p); val s2 = le16(p + 2); val s3 = le16(p + 4)
+          val s1 = le16(bytes, p); val s2 = le16(bytes, p + 2); val s3 = le16(bytes, p + 4)
           val d1 = p + 6
           val d2 = d1 + s1
           val d3 = d2 + s2
@@ -662,7 +653,7 @@ object ZstdDecode {
       nbSeq = ((c0 - 128) << 8) | (bytes(p + 1) & 0xFF); p += 2
     } else {
       if (p + 3 > to) return false
-      nbSeq = ((bytes(p + 1) & 0xFF) | ((bytes(p + 2) & 0xFF) << 8)) + 0x7F00
+      nbSeq = le16(bytes, p + 1) + 0x7F00
       p += 3
     }
     if (nbSeq == 0) {
@@ -780,12 +771,9 @@ object ZstdDecode {
     * serve any frame.
     */
   def decodeFrame(bytes: Array[Byte], off: Int,
-      maxOut: Int = 64 << 20, dict: ZstdDict = null): (Array[Byte], Int) = try {
+      maxOut: Int = Bytes.MaxOut, dict: ZstdDict = null): (Array[Byte], Int) = try {
     if (bytes == null || off + 4 > bytes.length) return null
-    def le32(o: Int): Long =
-      (bytes(o) & 0xFFL) | (bytes(o + 1) & 0xFFL) << 8 |
-        (bytes(o + 2) & 0xFFL) << 16 | (bytes(o + 3) & 0xFFL) << 24
-    if (le32(off) != 0xFD2FB528L) return null
+    if (le32(bytes, off) != 0xFD2FB528L) return null
     var p = off + 4
     if (p >= bytes.length) return null
     val fhd = bytes(p) & 0xFF; p += 1
@@ -819,9 +807,9 @@ object ZstdDecode {
       if (p + fcsLen > bytes.length) return null
       fcs = fcsLen match {
         case 1 => bytes(p) & 0xFFL
-        case 2 => ((bytes(p) & 0xFFL) | (bytes(p + 1) & 0xFFL) << 8) + 256L
-        case 4 => le32(p)
-        case _ => le32(p) | le32(p + 4) << 32
+        case 2 => le16(bytes, p) + 256L
+        case 4 => le32(bytes, p)
+        case _ => le64(bytes, p)
       }
       p += fcsLen
       // an 8-byte FCS with bit 63 set parses negative — a declared frame
@@ -842,8 +830,7 @@ object ZstdDecode {
     var last = false
     while (!last) {
       if (p + 3 > bytes.length) return null
-      val hdr = (bytes(p) & 0xFF) | ((bytes(p + 1) & 0xFF) << 8) |
-        ((bytes(p + 2) & 0xFF) << 16)
+      val hdr = le24(bytes, p)
       p += 3
       last = (hdr & 1) == 1
       val btype = (hdr >>> 1) & 3
@@ -869,7 +856,7 @@ object ZstdDecode {
     val data = out.toArray
     if (hasCk) {
       if (p + 4 > bytes.length) return null
-      val want = le32(p)
+      val want = le32(bytes, p)
       p += 4
       val got = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
         data, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
@@ -893,8 +880,8 @@ object ZstdDecode {
     * per frame and in aggregate.
     */
   def zstdMembers(bytes: Array[Byte],
-      maxOutPerFrame: Int = 64 << 20,
-      maxOutTotal: Long = 256L << 20,
+      maxOutPerFrame: Int = Bytes.MaxOut,
+      maxOutTotal: Long = Bytes.MaxOutTotal,
       dict: ZstdDict = null): Seq[Array[Byte]] =
     walkFrames(bytes, maxOutPerFrame, maxOutTotal, dict)._1
 
@@ -911,22 +898,18 @@ object ZstdDecode {
     * silently-wrong bytes for any frame that references it).
     */
   def zstdMembersAuto(bytes: Array[Byte],
-      maxOutPerFrame: Int = 64 << 20,
-      maxOutTotal: Long = 256L << 20): Seq[Array[Byte]] = {
+      maxOutPerFrame: Int = Bytes.MaxOut,
+      maxOutTotal: Long = Bytes.MaxOutTotal): Seq[Array[Byte]] = {
     if (bytes == null || bytes.length < 8) return Nil
-    def le32(o: Int): Long =
-      (bytes(o) & 0xFFL) | (bytes(o + 1) & 0xFFL) << 8 |
-        (bytes(o + 2) & 0xFFL) << 16 | (bytes(o + 3) & 0xFFL) << 24
-    if (le32(0) != 0x184D2A5DL)
+    if (le32(bytes, 0) != 0x184D2A5DL)
       return zstdMembers(bytes, maxOutPerFrame, maxOutTotal)
-    val sz = le32(4)
+    val sz = le32(bytes, 4)
     if (8 + sz > bytes.length) return Nil
     val raw = java.util.Arrays.copyOfRange(bytes, 8, (8 + sz).toInt)
     // the embedded dictionary may itself be zstd-compressed
     val dictBytes =
       if (raw.length >= 4 &&
-        ((raw(0) & 0xFFL) | (raw(1) & 0xFFL) << 8 |
-          (raw(2) & 0xFFL) << 16 | (raw(3) & 0xFFL) << 24) == 0xFD2FB528L) {
+        le32(raw, 0) == 0xFD2FB528L) {
         val r = decodeFrame(raw, 0, maxOutPerFrame)
         if (r == null) return Nil
         r._1
@@ -943,8 +926,8 @@ object ZstdDecode {
     * [[CompressedMeta.gunzipAll]]'s all-or-NULL honesty contract.
     */
   def zstdAll(bytes: Array[Byte],
-      maxOutPerFrame: Int = 64 << 20,
-      maxOutTotal: Long = 256L << 20): Array[Byte] = {
+      maxOutPerFrame: Int = Bytes.MaxOut,
+      maxOutTotal: Long = Bytes.MaxOutTotal): Array[Byte] = {
     if (bytes == null || bytes.length < 4) return null
     val (members, end, clean) = walkFrames(bytes, maxOutPerFrame, maxOutTotal)
     CompressedMeta.allOrNullConcat(members, clean && end == bytes.length)
@@ -966,9 +949,6 @@ object ZstdDecode {
     org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
       data, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
       data.length, 0L) & 0xFFFFFFFFL
-
-  private def leBytes(v: Long, n: Int): Array[Byte] =
-    (0 until n).map(k => ((v >>> (8 * k)) & 0xFF).toByte).toArray
 
   /** Single-segment frame header + FCS for `len` content bytes. */
   private def frameHead(len: Long, checksum: Boolean): Array[Byte] = {
@@ -1476,8 +1456,7 @@ object ZstdDecode {
     var total = 0L
     var stop = false
     while (!stop && i + 4 <= bytes.length) {
-      val magic = (bytes(i) & 0xFFL) | (bytes(i + 1) & 0xFFL) << 8 |
-        (bytes(i + 2) & 0xFFL) << 16 | (bytes(i + 3) & 0xFFL) << 24
+      val magic = le32(bytes, i)
       if (magic == 0xFD2FB528L) {
         val r = decodeFrame(bytes, i, maxOutPerFrame, dict)
         if (r == null) stop = true
@@ -1489,8 +1468,7 @@ object ZstdDecode {
       } else if ((magic & 0xFFFFFFF0L) == 0x184D2A50L) {
         if (i + 8 > bytes.length) stop = true
         else {
-          val sz = (bytes(i + 4) & 0xFFL) | (bytes(i + 5) & 0xFFL) << 8 |
-            (bytes(i + 6) & 0xFFL) << 16 | (bytes(i + 7) & 0xFFL) << 24
+          val sz = le32(bytes, i + 4)
           if (i + 8 + sz > bytes.length) stop = true
           else { i += (8 + sz).toInt }
         }

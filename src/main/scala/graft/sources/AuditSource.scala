@@ -23,9 +23,12 @@ import org.apache.spark.sql.functions._
   *   - **Stream:** [[streamPruned]] puts [[minDateGlob]] on the load
   *     path, so every poll skips below-min-date day directories while
   *     day directories created later still match.
-  *   - **Fallback:** [[filterByPathDate]] derives the date from
-  *     `input_file_name()` and filters. Correct, but prunes after
-  *     listing; only the row scan is saved.
+  *   - **Fallback:** [[filterByPathDate]] judges every 8-digit
+  *     directory of `input_file_name()` with the same parse check as
+  *     [[DatePrunedFileIndex]] and filters rows. Correct, but prunes
+  *     after listing; only the row scan is saved. Composed on
+  *     [[streamPruned]] it keeps exactly [[batchPruned]]'s rows, up to
+  *     [[minDateGlob]]'s documented month-length residual.
   */
 object AuditSource {
 
@@ -43,14 +46,17 @@ object AuditSource {
       .option("recursiveFileLookup", "true")
       .load(path)
 
-  /** Compatibility pruning for bare `YYYYMMDD/` trees: extract the date
-    * component from the file path; non-date paths always pass (matching
-    * `DateFileFilter.java:29-33`). Prunes AFTER listing — prefer
+  /** Compatibility pruning for `YYYYMMDD/` trees: a row survives unless
+    * a directory on its file's path is an 8-digit name that PARSES as a
+    * date (strict `yyyyMMdd`) older than `minDate` — the same per-
+    * directory rule as [[DatePrunedFileIndex]]'s walk. Names that don't
+    * parse (`00001332`, `20201490`, `notadate`) always pass, matching
+    * `DateFileFilter.java:29-33`. Prunes AFTER listing — prefer
     * [[batchPruned]] (enumeration-time skip).
     */
   def filterByPathDate(df: DataFrame, minDate: String): DataFrame = {
-    val dateInPath = regexp_extract(input_file_name(), "/([0-9]{8})/", 1)
-    df.filter(dateInPath === "" || dateInPath >= lit(minDate))
+    val dirs = regexp_extract_all(input_file_name(), lit("/([0-9]{8})(?=/)"), lit(1))
+    df.filter(forall(dirs, d => try_to_date(d, "yyyyMMdd").isNull || d >= lit(minDate)))
   }
 
   /** Glob alternation matching exactly the level-1 directory names the

@@ -134,4 +134,33 @@ class AuditSourceSpec extends SparkSpec {
       assert(batch2 == Seq("later1", "misc", "new1"))
     } finally query.stop()
   }
+
+  test("stream fallback filter keeps exactly batchPruned's rows, non-date 8-digit dirs included") {
+    val root = Files.createTempDirectory("audits_parity").toFile
+    for ((d, line) <- Seq("20210101" -> "old", "20210301" -> "new",
+        "00001332" -> "month13", "20201490" -> "month14", "notadate" -> "misc")) {
+      val dir = new java.io.File(root, d)
+      dir.mkdirs()
+      Files.writeString(new java.io.File(dir, "audit.log").toPath, line + "\n")
+    }
+    val min = "20210201"
+    val batch = AuditSource.batchPruned(spark, root.getAbsolutePath, Some(min))
+      .collect().map(_.getString(0)).sorted.toSeq
+    // 00001332 and 20201490 are below min but do not parse as dates, so
+    // the reference (and the batch walk) keeps them
+    assert(batch == Seq("misc", "month13", "month14", "new"))
+
+    // the pipeline's stream composition: listing-time glob + row filter
+    val lines = AuditSource.filterByPathDate(
+      AuditSource.streamPruned(spark, root.getAbsolutePath, min), min)
+    val query = lines.writeStream
+      .format("memory").queryName("stream_fallback_parity")
+      .outputMode("append").start()
+    try {
+      query.processAllAvailable()
+      val streamed = spark.table("stream_fallback_parity")
+        .collect().map(_.getString(0)).sorted.toSeq
+      assert(streamed == batch)
+    } finally query.stop()
+  }
 }

@@ -939,4 +939,40 @@ class MultimodalSpec extends SparkSpec {
     assert(syn.isDefined && syn.get._3.sameElements(
       Array.tabulate(8 * 6 * 3)(m => ((6L * 31 + m) % 256).toByte)))
   }
+
+  /** Bytes the calling thread allocates while `f` runs. */
+  private def allocatedBy[A](f: => A): (A, Long) = {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val before = mx.getCurrentThreadAllocatedBytes
+    val r = f
+    (r, mx.getCurrentThreadAllocatedBytes - before)
+  }
+
+  test("decodePng/decodeJpeg: a 20000x20000 header degrades to None without allocating the raster") {
+    def be(v: Int, n: Int): Array[Byte] = Array.tabulate(n)(k => (v >>> (8 * (n - 1 - k))).toByte)
+    val side = 20000
+    // PNG: signature, IHDR (8-bit gray), one tiny IDAT, IEND — CRCs unchecked
+    def chunk(t: String, d: Array[Byte]): Array[Byte] =
+      be(d.length, 4) ++ t.getBytes("US-ASCII") ++ d ++ new Array[Byte](4)
+    val png = Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte) ++
+      chunk("IHDR", be(side, 4) ++ be(side, 4) ++ Array[Byte](8, 0, 0, 0, 0)) ++
+      chunk("IDAT", Array(0x78, 0x9C, 0x03, 0x00, 0x00, 0x00, 0x00, 0x01).map(_.toByte)) ++
+      chunk("IEND", Array.emptyByteArray)
+    // JPEG: SOI, DQT (flat), SOF0 (1 component), SOS, a few scan bytes, EOI
+    def seg(marker: Int, body: Array[Byte]): Array[Byte] =
+      be(0xFF00 | marker, 2) ++ be(body.length + 2, 2) ++ body
+    val jpeg = be(0xFFD8, 2) ++
+      seg(0xDB, Array[Byte](0) ++ Array.fill[Byte](64)(1)) ++
+      seg(0xC0, Array[Byte](8) ++ be(side, 2) ++ be(side, 2) ++ Array[Byte](1, 1, 0x11, 0)) ++
+      seg(0xDA, Array[Byte](1, 1, 0, 0, 63, 0)) ++
+      Array.fill[Byte](16)(0) ++ be(0xFFD9, 2)
+    assert(png.length < 80 && jpeg.length < 140)
+    for ((name, decode, bytes) <- Seq(
+        ("png", Multimodal.decodePng _, png), ("jpeg", Multimodal.decodeJpeg _, jpeg))) {
+      val (r, allocated) = allocatedBy(decode(bytes))
+      assert(r.isEmpty, name)
+      assert(allocated < (64L << 20), s"$name allocated $allocated bytes")
+    }
+  }
 }

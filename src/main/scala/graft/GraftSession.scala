@@ -45,6 +45,21 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config(localFileSystem)
 
+  /** The session every `main` runs on (`Bench`, `Verify` and the
+    * `graft.tools` mains): `local[n]` with `n` shuffle partitions, where
+    * `n` is `SPARK_GRAFT_CPUS` (default 4), the UI off, and Spark's log
+    * level set to `logLevel`.
+    */
+  def forMain(logLevel: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = builder(shufflePartitions = cpus.toInt)
+      .master(s"local[$cpus]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** Local session for tests / single-node runs. The SQL functions are
     * guaranteed registered even when getOrCreate returns a
     * pre-existing session (where the extensions static conf is

@@ -331,15 +331,18 @@ object Dedup {
       minSpan: Int = 12,
       maxDocFreq: Int = 16
   ): DataFrame = {
-    // localCheckpoint: the anchor frame feeds the hot-set aggregation
-    // AND the self-join — un-materialized, the regex-split + k-gram
-    // hash pass over the full text ran once per consumer (guide §2.4);
-    // the checkpointed frame is three scalars per anchor position
-    val anchors = docs
+    // pinned and filled up front: the anchor frame feeds the hot-set
+    // aggregation AND the self-join — un-materialized, the regex-split
+    // + k-gram hash pass over the full text ran once per consumer
+    // (guide §2.4), and left for the first consumer to fill, the
+    // consumers' concurrent tasks queue on each block instead of
+    // splitting the pass; the pinned frame is three scalars per anchor
+    // position
+    val anchors = Guard.pin(docs
       .select(col(idCol).as("id"), graft.functions.GraftFunctions
         .ngramHashes(col(textCol), k, StrHashMult, StrHashMod).as("shs"))
-      .select(col("id"), posexplode(col("shs")).as(Seq("pos", "sh")))
-      .localCheckpoint()
+      .select(col("id"), posexplode(col("shs")).as(Seq("pos", "sh"))))
+    anchors.count(): Unit
     val hot = anchors
       .groupBy(col("sh"))
       .agg(countDistinct(col("id")).as("df"))
@@ -582,10 +585,10 @@ object Dedup {
     * of its own label and its neighbors' labels; converges in
     * O(component diameter) rounds — near-dup clusters are shallow, so
     * 2-4 rounds in practice. Each round is one join + one aggregation on
-    * (edge, label) pairs; lineage is truncated per round
-    * (`localCheckpoint`; swap for `checkpoint` on a cluster) so plans
-    * don't grow unboundedly. The driver loop only compares counts —
-    * no row data ever reaches the driver.
+    * (edge, label) pairs; lineage is truncated per round ([[Guard.pin]])
+    * so plans don't grow unboundedly, and each round's predecessor is
+    * unpinned once the round has filled. The driver loop only compares
+    * counts — no row data ever reaches the driver.
     */
   def nearDupClusters(
       docs: DataFrame,
@@ -596,42 +599,41 @@ object Dedup {
   ): DataFrame = {
     val pairs = jaccardPairs(docs, idCol, textCol, n, threshold)
       .select(col("id_a"), col("id_b"))
-    val edges = pairs
+    val edges = Guard.pin(pairs
       .union(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .toDF("u", "v")
-      .localCheckpoint()
+      .toDF("u", "v"))
 
     // Propagate min-labels over the near-dup subgraph ONLY: at crawl
     // scale the overwhelming majority of documents touch no near-dup
     // edge, so iterating over |V(edges)| instead of |docs| shrinks
     // every iteration's join from corpus-sized to dup-graph-sized.
     // Isolated docs rejoin as their own singleton cluster at the end.
-    var labels = edges.select(col("u").as("id")).distinct()
-      .select(col("id"), col("id").as("cluster"))
-      .localCheckpoint()
-    // The checkpointed label frame is a LogicalRDD — size statistics
-    // erased, so Catalyst would sort-merge-join every round against it
-    // (2 Exchanges + 2 Sorts per join, as in Graph's loops). The frame
-    // is |V(dup subgraph)|-bounded; hint the broadcast while the ACTUAL
-    // vertex count (a cheap count over the already-materialized
-    // checkpoint) stays under the cap, shuffle-join past it — results
-    // identical either way.
+    var labels = Guard.pin(edges.select(col("u").as("id")).distinct()
+      .select(col("id"), col("id").as("cluster")))
+    // The pinned label frame's size estimate is its derivation's (a
+    // product over joins), not its rows, so Catalyst would
+    // sort-merge-join every round against it (2 Exchanges + 2 Sorts
+    // per join, as in Graph's loops). The frame is |V(dup
+    // subgraph)|-bounded; hint the broadcast while the ACTUAL vertex
+    // count (the action that fills the pinned frame) stays under the
+    // cap, shuffle-join past it — results identical either way.
     val bc = Guard.broadcastIfSmall(labels.count())
     var changed = 1L
     while (changed > 0) {
       // carry the old label through the aggregation so convergence is
       // read off the same materialized result — no second join/count job
-      val next = edges
+      val next = Guard.pin(edges
         .join(bc(labels), edges("v") === labels("id"))
         .groupBy(col("u")).agg(min(col("cluster")).as("nb_min"))
         .join(bc(labels), col("u") === labels("id"))
         .select(col("id"),
           least(col("cluster"), col("nb_min")).as("cluster"),
-          (col("nb_min") < col("cluster")).as("moved"))
-        .localCheckpoint()
+          (col("nb_min") < col("cluster")).as("moved")))
       changed = next.filter(col("moved")).count()
-      labels = next.select(col("id"), col("cluster")) // next is checkpointed
+      Guard.unpin(labels)
+      labels = next.select(col("id"), col("cluster"))
     }
+    Guard.unpin(edges)
     docs.select(col(idCol).as("id"))
       .join(bc(labels.withColumnRenamed("id", "lid")), col("id") === col("lid"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))

@@ -204,7 +204,7 @@ object Frontier {
     val lookup = delayFrame
       .groupBy(col("domain").as("__d"))
       .agg(max(col("delay_ms").cast("long")).as("__delay"))
-    val (side, _, _) = Guard.guardedSide(lookup, maxBroadcastDomains, keepPersisted = false)
+    val (side, _) = Guard.guardedSide(lookup, maxBroadcastDomains, keepPinned = false)
     val joined = frontier
       .join(side, frontier(hostCol) === col("__d"), "left")
       .drop("__d")

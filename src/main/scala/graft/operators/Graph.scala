@@ -50,7 +50,7 @@ object Graph {
     */
   /** One integer-PageRank round from a PRE-JOINED `(src, dst, w, __out)`
     * adjacency (see [[adjWithDeg]] — adj ⋈ deg is loop-invariant, so
-    * the callers hoist and persist it once instead of re-joining every
+    * the callers hoist and pin it once instead of re-joining every
     * round). `bc` is the caller's [[Guard.broadcastIfSmall]] decision
     * applied to every |nodes|-bounded side.
     */
@@ -79,7 +79,7 @@ object Graph {
     lit(150000L) + coalesce(in, lit(0L))
 
   /** The loop-invariant adjacency ⋈ out-degree frame every PageRank
-    * round consumes — computed and persisted ONCE per run (guide §2.4:
+    * round consumes — computed and pinned ONCE per run (guide §2.4:
     * don't rebuild an invariant join inside an iteration).
     */
   private def adjWithDeg(adjP: DataFrame): DataFrame =
@@ -92,23 +92,6 @@ object Graph {
     adj.select(col("src").as("node"))
       .unionByName(adj.select(col("dst").as("node")))
       .distinct()
-
-  /** Persist + materialize an iteration frame, then REBASE its logical
-    * plan onto the materialized RDD. The persist alone reuses the DATA,
-    * but each round's logical plan would still embed every prior round
-    * — analysis cost and plan/explain strings grow per iteration and
-    * OOM the driver ~30 rounds deep (AQE logs the full explain string
-    * on every plan update). The RDD rebase makes every round's plan
-    * constant-size; recompute on cache eviction falls back to RDD
-    * lineage (swap for `localCheckpoint(true)` on clusters where
-    * eviction cascades matter). Returns (persistedHandle, rebasedFrame)
-    * — unpersist the handle once the next round is pinned.
-    */
-  private def pin(df: DataFrame): (DataFrame, DataFrame) = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    p.count(): Unit
-    (p, df.sparkSession.createDataFrame(p.rdd, p.schema))
-  }
 
   /** INTEGER-exact PageRank in micro-units over a collapsed adjacency
     * `(src, dst, w)`: ranks start at 10^6; every step is integer
@@ -123,14 +106,12 @@ object Graph {
     * lift the multiplications to DECIMAL(38,0) as tCloseness does.
     *
     * Iteration lineage is CUT per round: each iteration's rank frame
-    * persists (it is |domains|-bounded — the whole point of collapsing
-    * first) and its predecessor unpersists once the child is pinned,
-    * exactly the [[Vocab.mergedDict]] cache discipline — without it,
-    * iteration k's plan embeds all k−1 prior rounds and analysis +
-    * recompute cost grow superlinearly past ~10 iterations. The
-    * RETURNED frame stays persisted; the caller owns its unpersist
-    * (gates route it through scratch parquet and release before
-    * returning, the mergedDict contract).
+    * is pinned ([[Guard.pin]]; it is |domains|-bounded — the whole
+    * point of collapsing first) and its predecessor unpinned once the
+    * child has materialized — without it, iteration k's plan embeds all
+    * k−1 prior rounds and analysis + recompute cost grow superlinearly
+    * past ~10 iterations. The returned frame is pinned and
+    * materialized.
     */
   /** Below this many fixed iterations the rank chain stays LAZY and
     * pins once at the end: each PageRank round consumes its predecessor
@@ -138,40 +119,45 @@ object Graph {
     * plan evaluates every round exactly once and its depth is k·O(1) —
     * per-round pins only pay off when k is large enough for plan
     * analysis to matter (the documented ~10-round knee). Saves k−1
-    * persist+count driver actions per run on the short-loop gates.
+    * pin+count driver actions per run on the short-loop gates.
     */
   private val PinFreeIters = 4
 
   def pageRankFromAdj(adj: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "Graph.pageRankFromAdj: at least one iteration")
-    val adjP = adj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    adjP.count(): Unit
-    val nodes = nodesOf(adjP).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val adjP = Guard.pin(adj)
+    val nodes = Guard.pin(nodesOf(adjP))
     val bc = Guard.broadcastIfSmall(nodes.count())
-    val adjDeg = adjWithDeg(adjP).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (iters <= PinFreeIters) {
-      var r = nodes.withColumn("rank_micro", lit(1000000L))
-      var i = 0
-      while (i < iters) { r = rankStep(adjDeg, nodes, r, bc); i += 1 }
-      val (outP, _) = pin(r)
-      adjP.unpersist(); nodes.unpersist(); adjDeg.unpersist()
-      return outP
-    }
-    var (rP, rCut) = pin(nodes.withColumn("rank_micro", lit(1000000L)))
-    var i = 0
-    while (i < iters) {
-      val (nP, nCut) = pin(rankStep(adjDeg, nodes, rCut, bc))
-      rP.unpersist()
-      rP = nP; rCut = nCut
-      i += 1
-    }
-    adjP.unpersist(); nodes.unpersist(); adjDeg.unpersist()
-    rP
+    val adjDeg = Guard.pin(adjWithDeg(adjP))
+    val ranks =
+      if (iters <= PinFreeIters) {
+        var r = nodes.withColumn("rank_micro", lit(1000000L))
+        (1 to iters).foreach(_ => r = rankStep(adjDeg, nodes, r, bc))
+        filled(r)
+      } else {
+        var r = Guard.pin(nodes.withColumn("rank_micro", lit(1000000L)))
+        (1 to iters).foreach { _ =>
+          val next = filled(rankStep(adjDeg, nodes, r, bc))
+          Guard.unpin(r)
+          r = next
+        }
+        r
+      }
+    Guard.unpin(adjP); Guard.unpin(nodes); Guard.unpin(adjDeg)
+    ranks
+  }
+
+  /** [[Guard.pin]] plus the first action, for a frame whose inputs are
+    * unpinned right after.
+    */
+  private def filled(df: DataFrame): DataFrame = {
+    val p = Guard.pin(df)
+    p.count(): Unit
+    p
   }
 
   /** [[pageRankFromAdj]] over a raw edge list (collapses first). Kept
-    * as the one-call form the fixed-iteration gates use; same
-    * caller-unpersists contract on the returned frame.
+    * as the one-call form the fixed-iteration gates use.
     */
   def pageRankInt(
       edges: DataFrame,
@@ -188,43 +174,37 @@ object Graph {
     * neighbors' (string order — matching SQL MIN), converging in
     * O(component diameter) rounds; each round is one join + partial
     * aggregation over the |domains|²-bounded symmetrized edge set,
-    * with the [[pin]] discipline keeping every round's plan
+    * with a [[Guard.pin]] per round keeping every round's plan
     * constant-size. Returns (node, component) with components labeled
-    * by their lexicographically smallest member; the returned frame is
-    * persisted — caller unpersists ([[Vocab.mergedDict]] contract).
+    * by their lexicographically smallest member, pinned.
     */
   def connectedComponents(adj: DataFrame): DataFrame = {
-    val edges = adj.select(col("src").as("u"), col("dst").as("v"))
+    val edges = Guard.pin(adj.select(col("src").as("u"), col("dst").as("v"))
       .unionByName(adj.select(col("dst").as("u"), col("src").as("v")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.count(): Unit
-    var (lP, lCut) = pin(
+      .distinct())
+    var labels = Guard.pin(
       nodesOf(adj).select(col("node"), col("node").as("component")))
-    val bc = Guard.broadcastIfSmall(lP.count())
+    val bc = Guard.broadcastIfSmall(labels.count())
     var changed = 1L
     while (changed > 0) {
       // ONE action per round (the pageRankConverged discipline): the
-      // moved-count sum both materializes the persisted frame and reads
-      // off the convergence scalar — no second pass over the cache
-      val stepped = edges
-        .join(bc(lCut.select(col("node").as("v"), col("component").as("__c"))), "v")
+      // moved-count sum both fills the pinned frame and reads off the
+      // convergence scalar — no second pass over it
+      val stepped = Guard.pin(edges
+        .join(bc(labels.select(col("node").as("v"), col("component").as("__c"))), "v")
         .groupBy(col("u").as("node")).agg(min(col("__c")).as("__nb"))
-        .join(bc(lCut), "node")
+        .join(bc(labels), "node")
         .select(col("node"),
           least(col("component"), col("__nb")).as("component"),
-          (col("__nb") < col("component")).as("__moved"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          (col("__nb") < col("component")).as("__moved")))
       changed = stepped
         .agg(coalesce(sum(col("__moved").cast("long")), lit(0L)))
         .first().getLong(0)
-      val nCut = adj.sparkSession.createDataFrame(stepped.rdd, stepped.schema)
-      lP.unpersist()
-      lP = stepped; lCut = nCut.select(col("node"), col("component"))
+      Guard.unpin(labels)
+      labels = stepped.select(col("node"), col("component"))
     }
-    val (outP, _) = pin(lCut)
-    lP.unpersist(); edges.unpersist()
-    outP
+    Guard.unpin(edges)
+    labels
   }
 
   /** INTEGER-exact HITS (Kleinberg 1999) in micro-units over a
@@ -252,8 +232,7 @@ object Graph {
     * frame, each round's (node, auth, hub) frame pins and drops its
     * predecessor so lineage stays flat. The per-round max rides a
     * broadcast crossJoin inside the plan — no extra driver action.
-    * Returned frame stays persisted; caller unpersists
-    * ([[Vocab.mergedDict]] contract).
+    * The returned frame is pinned and materialized.
     */
   /** Max-renormalize a raw `(node, __v)` score frame back to
     * [0, 10^6] over the full node set (absent nodes score 0) — the
@@ -297,33 +276,30 @@ object Graph {
 
   def hitsInt(adj: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "Graph.hitsInt: at least one iteration")
-    val adjP = adj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    adjP.count(): Unit
-    val nodes = nodesOf(adjP).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val adjP = Guard.pin(adj)
+    val nodes = Guard.pin(nodesOf(adjP))
     val bc = Guard.broadcastIfSmall(nodes.count())
-    var (sP, sCut) = pin(nodes
+    var s = Guard.pin(nodes
       .withColumn("auth_micro", lit(1000000L))
       .withColumn("hub_micro", lit(1000000L)))
-    var i = 0
-    while (i < iters) {
+    (1 to iters).foreach { _ =>
       // pin the round's authorities before deriving hubs from them:
       // auth feeds BOTH the hub update and the round's output join, and
       // unpinned it would recompute (adjacency scan + broadcast agg)
       // once per consumer — measured 3-4x per-round wall on the probe
-      val (auth, hubOf) = hitsStep(adjP, nodes, sCut, bc)
-      val (aP, aCut) = pin(auth)
-      val (nP, nCut) = pin(aCut.join(bc(hubOf(aCut)), "node"))
-      aP.unpersist(); sP.unpersist()
-      sP = nP; sCut = nCut
-      i += 1
+      val (auth, hubOf) = hitsStep(adjP, nodes, s, bc)
+      val a = Guard.pin(auth)
+      val next = filled(a.join(bc(hubOf(a)), "node"))
+      Guard.unpin(a); Guard.unpin(s)
+      s = next
     }
-    adjP.unpersist(); nodes.unpersist()
-    sP
+    Guard.unpin(adjP); Guard.unpin(nodes)
+    s
   }
 
   /** Result of a convergence-looped rank computation: the final rank
-    * frame (persisted — caller unpersists), the number of iterations
-    * actually executed, and the last step's max per-node rank change.
+    * frame (pinned), the number of iterations actually executed, and
+    * the last step's max per-node rank change.
     */
   final case class RankConvergence(ranks: DataFrame, itersRun: Int, lastDeltaMicro: Long)
 
@@ -334,12 +310,13 @@ object Graph {
     * capped at `maxIters` as the backstop for graphs whose integer map
     * oscillates. This is how real PageRank runs (20–50 rounds), which
     * is exactly the regime where unbounded lineage kills the naive
-    * loop — here every round persists its |domains|-bounded rank frame
-    * and drops its predecessor, so per-iteration cost is flat.
+    * loop — here every round pins its |domains|-bounded rank frame and
+    * drops its predecessor, so per-iteration cost is flat.
     *
-    * The per-round delta is ONE scalar aggregation over the two cached
-    * |domains|-bounded rank frames — a bounded driver action per
-    * iteration (decision-table discipline), not a corpus action.
+    * The per-round delta is ONE scalar aggregation over the round's
+    * pinned |domains|-bounded frame — a bounded driver action per
+    * iteration (decision-table discipline), not a corpus action, and
+    * the action that fills the frame.
     */
   def pageRankConverged(
       adj: DataFrame,
@@ -348,9 +325,9 @@ object Graph {
   ): RankConvergence = {
     require(maxIters >= 1, "Graph.pageRankConverged: at least one iteration")
     require(tolMicro >= 0, "Graph.pageRankConverged: non-negative tolerance")
-    val adjP = adj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val adjP = Guard.pin(adj)
     if (adjP.isEmpty) {
-      adjP.unpersist()
+      Guard.unpin(adjP)
       // derive the empty frame from the adjacency so the node column
       // keeps its real type (string, long, ...) — a hardcoded-string
       // schema would differ from the non-empty path's on typed ids
@@ -358,48 +335,39 @@ object Graph {
         nodesOf(adj).withColumn("rank_micro", lit(1000000L)).limit(0),
         0, 0L)
     }
-    val nodes = nodesOf(adjP).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nodes = Guard.pin(nodesOf(adjP))
     val bc = Guard.broadcastIfSmall(nodes.count())
-    val adjDeg = adjWithDeg(adjP).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var (rP, rCut) = pin(nodes.withColumn("rank_micro", lit(1000000L)))
+    val adjDeg = Guard.pin(adjWithDeg(adjP))
+    var r = Guard.pin(nodes.withColumn("rank_micro", lit(1000000L)))
     var i = 0
     var delta = Long.MaxValue
     while (i < maxIters && delta > tolMicro) {
       // ONE action per round: the step result carries its predecessor
-      // rank, so the max-|Δ| aggregation both materializes the persisted
-      // frame and reads off the convergence scalar — no separate count.
+      // rank, so the max-|Δ| aggregation both fills the pinned frame
+      // and reads off the convergence scalar — no separate count.
       // The step drives from the rank frame ITSELF (it carries exactly
       // the node set every round), so the previous rank rides the same
       // left join that attaches the contributions — one broadcast build
-      // per round fewer than stepping from `nodes` and re-joining rCut
-      // for __prev (guide §2.4).
-      val stepped = rCut
+      // per round fewer than stepping from `nodes` and re-joining the
+      // ranks for __prev (guide §2.4).
+      val stepped = Guard.pin(r
         .select(col("node"), col("rank_micro").as("__prev"))
-        .join(bc(rankContrib(adjDeg, rCut, bc)), Seq("node"), "left")
-        .select(col("node"), rankOf(col("__in")).as("rank_micro"), col("__prev"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .join(bc(rankContrib(adjDeg, r, bc)), Seq("node"), "left")
+        .select(col("node"), rankOf(col("__in")).as("rank_micro"), col("__prev")))
       delta = stepped
         .agg(max(abs(col("rank_micro") - col("__prev"))))
         .first().getLong(0)
-      val nCut = adj.sparkSession
-        .createDataFrame(stepped.rdd, stepped.schema)
-        .select(col("node"), col("rank_micro"))
-      rP.unpersist()
-      rP = stepped; rCut = nCut
+      Guard.unpin(r)
+      r = stepped.select(col("node"), col("rank_micro"))
       i += 1
     }
-    adjP.unpersist(); nodes.unpersist(); adjDeg.unpersist()
-    // one final pin projects the carried __prev away so the returned
-    // handle is a clean (node, rank_micro) frame the caller unpersists
-    val (outP, _) = pin(rP.select(col("node"), col("rank_micro")))
-    rP.unpersist()
-    RankConvergence(outP, i, delta)
+    Guard.unpin(adjP); Guard.unpin(nodes); Guard.unpin(adjDeg)
+    RankConvergence(r, i, delta)
   }
 
   /** Result of a convergence-looped HITS run: the final
-    * (node, auth_micro, hub_micro) frame (persisted — caller
-    * unpersists), iterations executed, and the last round's max
-    * per-node HUB change.
+    * (node, auth_micro, hub_micro) frame (pinned), iterations executed,
+    * and the last round's max per-node HUB change.
     */
   final case class HitsConvergence(scores: DataFrame, itersRun: Int, lastDeltaMicro: Long)
 
@@ -414,51 +382,45 @@ object Graph {
     * (auth, hub) pair — the hub fixed point IS the pair's fixed
     * point; a one-sided tolerance keeps the criterion one scalar.
     *
-    * Same lineage discipline as the sibling: each round persists its
+    * Same lineage discipline as the sibling: each round pins its
     * |domains|-bounded frame and drops its predecessor; the delta is
     * ONE bounded aggregation per round, never a corpus action.
     */
   def hitsConverged(adj: DataFrame, maxIters: Int, tolMicro: Long): HitsConvergence = {
     require(maxIters >= 1, "Graph.hitsConverged: at least one iteration")
     require(tolMicro >= 0, "Graph.hitsConverged: non-negative tolerance")
-    val adjP = adj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val adjP = Guard.pin(adj)
     if (adjP.isEmpty) {
-      adjP.unpersist()
+      Guard.unpin(adjP)
       return HitsConvergence(
         nodesOf(adj)
           .withColumn("auth_micro", lit(1000000L))
           .withColumn("hub_micro", lit(1000000L)).limit(0),
         0, 0L)
     }
-    val nodes = nodesOf(adjP).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nodes = Guard.pin(nodesOf(adjP))
     val bc = Guard.broadcastIfSmall(nodes.count())
-    var (sP, sCut) = pin(nodes
+    var s = Guard.pin(nodes
       .withColumn("auth_micro", lit(1000000L))
       .withColumn("hub_micro", lit(1000000L)))
     var i = 0
     var delta = Long.MaxValue
     while (i < maxIters && delta > tolMicro) {
-      val (auth, hubOf) = hitsStep(adjP, nodes, sCut, bc)
-      val (aP, aCut) = pin(auth) // round output feeds hub AND the join
+      val (auth, hubOf) = hitsStep(adjP, nodes, s, bc)
+      val a = Guard.pin(auth) // round output feeds hub AND the join
       // ONE action per round: the step result carries the previous hub,
-      // so the max-|Δ| aggregation both materializes the frame and
+      // so the max-|Δ| aggregation both fills the pinned frame and
       // reads off the convergence scalar
-      val stepped = aCut.join(bc(hubOf(aCut)), "node")
-        .join(bc(sCut.select(col("node"), col("hub_micro").as("__prev"))), "node")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val stepped = Guard.pin(a.join(bc(hubOf(a)), "node")
+        .join(bc(s.select(col("node"), col("hub_micro").as("__prev"))), "node"))
       delta = stepped
         .agg(max(abs(col("hub_micro") - col("__prev"))))
         .first().getLong(0)
-      val nCut = adj.sparkSession
-        .createDataFrame(stepped.rdd, stepped.schema)
-        .select(col("node"), col("auth_micro"), col("hub_micro"))
-      aP.unpersist(); sP.unpersist()
-      sP = stepped; sCut = nCut
+      Guard.unpin(a); Guard.unpin(s)
+      s = stepped.select(col("node"), col("auth_micro"), col("hub_micro"))
       i += 1
     }
-    adjP.unpersist(); nodes.unpersist()
-    val (outP, _) = pin(sP.select(col("node"), col("auth_micro"), col("hub_micro")))
-    sP.unpersist()
-    HitsConvergence(outP, i, delta)
+    Guard.unpin(adjP); Guard.unpin(nodes)
+    HitsConvergence(s, i, delta)
   }
 }

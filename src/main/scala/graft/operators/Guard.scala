@@ -1,14 +1,48 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.storage.StorageLevel
 
-/** The count-guarded broadcast, ONE definition for every operator that
-  * decides "count it, then broadcast if small, else shuffle": the
-  * profile audits, the frontier/robots lookup joins, and the iteration
-  * loops of [[Graph]] and [[Dedup.nearDupClusters]].
+/** The one materialization mechanism ([[pin]]/[[unpin]]) and the
+  * row-guarded broadcast ([[guardedSide]]): the profile audits, the
+  * frontier/robots lookup joins, the iteration loops of [[Graph]],
+  * [[Vocab]] and [[Dedup.nearDupClusters]], and the gates that reuse a
+  * frame across consumers all materialize here and nowhere else.
   */
-private[operators] object Guard {
+private[graft] object Guard {
+
+  /** Materialize `df` once and cut its lineage: a LAZY local checkpoint
+    * at MEMORY_AND_DISK. The first action that reads the frame fills
+    * its blocks (so a loop whose convergence scalar is that action pays
+    * one action per round); every later reader scans the blocks. The
+    * plan is a constant-size `LogicalRDD` whose size estimate is capped
+    * ([[ColumnBridge.capSizeEstimate]]), so a k-round loop plans round k
+    * as cheaply as round 1.
+    *
+    * A frame that several consumers of ONE query read is filled first
+    * (`pin(df)` then `count()`): left to the query, the consumers'
+    * concurrent tasks queue on each block instead of sharing the work.
+    *
+    * Lifetime: free an intermediate with [[unpin]] once its successor
+    * has had ITS first action — a dropped local checkpoint cannot be
+    * recomputed. A pinned frame an operator returns carries no release
+    * duty: Spark's ContextCleaner frees its blocks once it is
+    * unreachable.
+    */
+  def pin(df: DataFrame): DataFrame = ColumnBridge.capSizeEstimate(
+    df.localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK))
+
+  /** Free now the blocks of every pinned frame `df` reads directly (the
+    * `LogicalRDD` leaves of its plan); a frame with none is a no-op.
+    */
+  def unpin(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false): Unit
+      case _ =>
+    }
 
   /** Past this many rows a lookup table stops riding a broadcast
     * (≈ tens of MB of driver memory at 2^20 rows) and the join
@@ -32,48 +66,37 @@ private[operators] object Guard {
   def broadcastIfSmall(n: Long): DataFrame => DataFrame =
     if (n <= MaxLoopBroadcastRows) broadcast else identity
 
-  /** Count-guarded join side for a "small by construction" frame:
-    * persist and count it once; when it holds at most `maxRows`,
-    * collect it to a driver-local relation — the identical driver
-    * footprint a `broadcast` would pay anyway when shipping the table,
-    * and the frame's derivation drops out of the consumer's plan — and
-    * broadcast that, leaving NOTHING persisted behind. Returns
-    * (side, row count, release). Past the guard, the behavior depends
-    * on who can release a cache:
+  /** Guarded join side for a "small by construction" frame: collect at
+    * most `maxRows + 1` of its rows in ONE query; when it holds at most
+    * `maxRows`, they become a driver-local relation — the identical
+    * driver footprint a `broadcast` would pay anyway when shipping the
+    * table, and the frame's derivation drops out of the consumer's plan
+    * — broadcast as the side, with NOTHING materialized behind. Returns
+    * (side, whether it is that local broadcast). Past the guard:
     *
-    *   - `keepPersisted = true` (callers that MATERIALIZE before
-    *     returning, e.g. Profile.tCloseness): return the persisted
-    *     frame for a shuffle join — the over-threshold case is exactly
-    *     when the input aggregation is largest, so discarding the
-    *     materialization would double-scan the corpus — and release it
-    *     via the returned thunk after materializing.
-    *   - `keepPersisted = false` (callers returning a LAZY plan, e.g.
-    *     kAnonymity, the frontier/robots joins): unpersist immediately
-    *     and return the lazy frame. The recompute of a bounded
-    *     derivation is the accepted price of a leak-free contract —
-    *     Spark's CacheManager holds caches until an explicit
-    *     unpersist, so a plan-lifetime persist from a lazy-returning
-    *     operator would accumulate with no owner to release it.
+    *   - `keepPinned = true` (callers that MATERIALIZE before
+    *     returning, e.g. Profile.tCloseness): return the frame pinned
+    *     and filled for a shuffle join (its derivation runs a second
+    *     time for that, the price of a one-query small path). The
+    *     caller unpins it once its own result has materialized.
+    *   - `keepPinned = false` (callers returning a LAZY plan, e.g.
+    *     kAnonymity, the frontier/robots joins): return the lazy frame;
+    *     a long-lived session keeps no audit residue.
     */
   def guardedSide(
       small: DataFrame,
       maxRows: Long,
-      keepPersisted: Boolean
-  ): (DataFrame, Long, () => Unit) = {
-    val persisted = small.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n =
-      try persisted.count()
-      catch { case t: Throwable => persisted.unpersist(); throw t }
-    if (n <= maxRows) {
-      val local = broadcast(small.sparkSession.createDataFrame(
-        persisted.collectAsList(), small.schema))
-      persisted.unpersist()
-      (local, n, () => ())
-    } else if (keepPersisted) {
-      (persisted, n, () => { persisted.unpersist(): Unit })
+      keepPinned: Boolean
+  ): (DataFrame, Boolean) = {
+    val rows = small.limit(math.min(maxRows + 1, Int.MaxValue.toLong).toInt).collectAsList()
+    if (rows.size <= maxRows) {
+      (broadcast(small.sparkSession.createDataFrame(rows, small.schema)), true)
+    } else if (keepPinned) {
+      val pinned = pin(small)
+      pinned.count(): Unit
+      (pinned, false)
     } else {
-      persisted.unpersist()
-      (small, n, () => ())
+      (small, false)
     }
   }
 }

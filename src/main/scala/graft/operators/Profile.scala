@@ -80,12 +80,13 @@ object Profile {
     // QI cardinality is CALLER-controlled (a near-unique attribute or a
     // too-fine bucket makes the "small by construction" claim false), and
     // a force-broadcast of a huge group table OOMs the driver instead of
-    // degrading. guardedSide counts once and only broadcasts under the
-    // threshold, leaving nothing persisted behind; past the guard the
-    // join degrades to a shuffle (keepPersisted=false: this audit
-    // returns a lazy plan, so nothing may stay cached without an owner).
-    val (side, _, _) = Guard.guardedSide(
-      renameKeys(groups, quasiIds), maxBroadcastGroups, keepPersisted = false)
+    // degrading. guardedSide collects at most one row past the
+    // threshold and only broadcasts under it, leaving nothing
+    // materialized behind; past the guard the
+    // join degrades to a shuffle (keepPinned=false: this audit returns
+    // a lazy plan, so it leaves nothing materialized behind).
+    val (side, _) = Guard.guardedSide(
+      renameKeys(groups, quasiIds), maxBroadcastGroups, keepPinned = false)
     // NULL-SAFE join: groupBy already treats NULL as a QI value (its own
     // group), but a plain equi-join would silently DROP every NULL-QI row
     // from the audit — a privacy gate failing open for exactly the rows
@@ -147,8 +148,8 @@ object Profile {
       val g = withQi
         .groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as(s"__k$i"))
-      val (side, _, _) =
-        Guard.guardedSide(renameKeys(g, keys), maxBroadcastGroups, keepPersisted = false)
+      val (side, _) =
+        Guard.guardedSide(renameKeys(g, keys), maxBroadcastGroups, keepPinned = false)
       // null-safe: a NULL quasi-identifier value is a group like any
       // other — an equi-join would drop those rows from the remedy
       acc.join(side, nullSafeCond(keys))
@@ -259,8 +260,8 @@ object Profile {
     val groups = df
       .groupBy(quasiIds.map(col): _*)
       .agg(countDistinct(col(sensitiveCol)).as("l_distinct"))
-    val (side, _, _) = Guard.guardedSide(
-      renameKeys(groups, quasiIds), maxBroadcastGroups, keepPersisted = false)
+    val (side, _) = Guard.guardedSide(
+      renameKeys(groups, quasiIds), maxBroadcastGroups, keepPinned = false)
     // null-safe join-back, as kAnonymity: NULL-QI rows stay in the audit
     // (countDistinct ignores NULL sensitive values — a group whose only
     // sensitive "values" are NULL reports l_distinct = 0 and fails
@@ -302,9 +303,8 @@ object Profile {
     * broadcast, then a QI-keyed rollup of the already tiny (QI, v)
     * frame. The corpus is scanned once and never shuffled by the group
     * key. The guarded-small path returns a fully materialized local
-    * decision table and leaves nothing cached; past `maxBroadcastGroups`
-    * QI combinations the returned (persisted) table is the caller's to
-    * unpersist.
+    * decision table and leaves nothing pinned; past `maxBroadcastGroups`
+    * QI combinations the table comes back pinned ([[Guard.pin]]).
     */
   def tCloseness(
       df: DataFrame,
@@ -318,80 +318,76 @@ object Profile {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     // (QI, v) counts — the only corpus-sized aggregation (partial-agg
     // shuffle); everything after operates on this already-small frame.
-    val gv = df
+    val gv = Guard.pin(df
       .groupBy(qi :+ col(sensitiveCol).as("__v"): _*)
-      .agg(count(lit(1)).as("__c_gv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // over-guard guardedSide persists survive until the decision table
-    // below has materialized (both return branches do), then release
-    // here with gv — zero residue either way
-    var sideReleases: List[() => Unit] = Nil
-    try {
-      // N: one scalar off the cached gv — rides the plan as a literal,
-      // no crossJoin of a one-row frame needed. sum() over ZERO rows is
-      // NULL: an empty audit input yields an empty decision table, not
-      // a driver NPE.
-      val nRow = gv.agg(sum(col("__c_gv"))).first()
-      if (nRow.isNullAt(0))
-        return gv.filter(lit(false)).select(qi ++ Seq(
-          lit(0L).as("n_group"), lit(0L).as("tvd_num"),
-          lit(0L).as("tvd_pm"), lit(false).as("keep")): _*)
-      val n = nRow.getLong(0)
-      val nd = lit(n).cast(d38)
-      val groupSizes = gv.groupBy(qi: _*).agg(sum(col("__c_gv")).as("n_group"))
-      val marginals =
-        gv.groupBy(col("__v").as("__mv")).agg(sum(col("__c_gv")).as("__c_v"))
-      // register each release the moment its guardedSide returns — if
-      // the SECOND call throws mid-materialization, the first's
-      // over-guard persist must still release in the finally
-      val (gsSide, nQi, relGs) = Guard.guardedSide(
-        renameKeys(groupSizes, quasiIds), maxBroadcastGroups, keepPersisted = true)
-      sideReleases = relGs :: sideReleases
-      val (mSide, _, relM) =
-        Guard.guardedSide(marginals, maxBroadcastGroups, keepPersisted = true)
-      sideReleases = relM :: sideReleases
-      val out = gv
-        .join(mSide, col("__v") <=> col("__mv"))
-        .join(gsSide, nullSafeCond(quasiIds))
-        .groupBy(qi: _*)
-        .agg(
-          first(col("n_group")).as("n_group"),
-          sum(abs(col("__c_gv").cast(d38) * nd -
-            col("__c_v").cast(d38) * col("n_group").cast(d38)))
-            .as("__present_num"),
-          sum(col("__c_v")).as("__present_v"))
-        // sensitive values with no row in this group each contribute
-        // |0 − c_v·n_g| = c_v·n_g; summed: (N − Σ_present c_v)·n_g
-        .withColumn("__tvd_d",
-          col("__present_num") +
-            (nd - col("__present_v").cast(d38)) * col("n_group").cast(d38))
-        // exact integral division (`div` truncates; a decimal `/` would
-        // round at its result scale and can flip a floor at a boundary)
-        .withColumn("tvd_pm", expr(
-          s"(CAST(1000 AS DECIMAL(38,0)) * __tvd_d) div " +
-            s"(CAST(2 AS DECIMAL(38,0)) * CAST(n_group AS DECIMAL(38,0)) * " +
-            s"CAST(${n}L AS DECIMAL(38,0)))"))
-        .withColumn("keep",
-          lit(1000).cast(d38) * col("__tvd_d") <=
-            lit(2L * tPerMille).cast(d38) * col("n_group").cast(d38) * nd)
-        // try_cast + coalesce ACTUALLY saturates: a plain non-ANSI
-        // Decimal→Long overflow cast yields NULL, not Long.MaxValue
-        .select(qi ++ Seq(col("n_group"),
-          coalesce(expr("try_cast(__tvd_d AS BIGINT)"), lit(Long.MaxValue))
-            .as("tvd_num"),
-          col("tvd_pm"), col("keep")): _*)
-      if (nQi <= maxBroadcastGroups) {
-        // decision table bounded by the guard: localize it (same driver
-        // footprint the group-size broadcast already paid) so the
-        // corpus-sized gv cache can drop with ZERO residue
-        df.sparkSession.createDataFrame(out.collectAsList(), out.schema)
-      } else {
-        // QI cardinality past the guard: materialize through a persist
-        // the caller owns (documented above), then release gv
-        val p = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      }
-    } finally { gv.unpersist(); sideReleases.foreach(_.apply()) }
+      .agg(count(lit(1)).as("__c_gv")))
+    // N: one scalar off the pinned gv — rides the plan as a literal,
+    // no crossJoin of a one-row frame needed. sum() over ZERO rows is
+    // NULL: an empty audit input yields an empty decision table, not a
+    // driver NPE.
+    val nRow = gv.agg(sum(col("__c_gv"))).first()
+    if (nRow.isNullAt(0)) {
+      val empty = localized(gv.filter(lit(false)).select(qi ++ Seq(
+        lit(0L).as("n_group"), lit(0L).as("tvd_num"),
+        lit(0L).as("tvd_pm"), lit(false).as("keep")): _*))
+      Guard.unpin(gv)
+      return empty
+    }
+    val n = nRow.getLong(0)
+    val nd = lit(n).cast(d38)
+    val groupSizes = gv.groupBy(qi: _*).agg(sum(col("__c_gv")).as("n_group"))
+    val marginals =
+      gv.groupBy(col("__v").as("__mv")).agg(sum(col("__c_gv")).as("__c_v"))
+    val (gsSide, gsLocal) = Guard.guardedSide(
+      renameKeys(groupSizes, quasiIds), maxBroadcastGroups, keepPinned = true)
+    val (mSide, _) = Guard.guardedSide(marginals, maxBroadcastGroups, keepPinned = true)
+    val out = gv
+      .join(mSide, col("__v") <=> col("__mv"))
+      .join(gsSide, nullSafeCond(quasiIds))
+      .groupBy(qi: _*)
+      .agg(
+        first(col("n_group")).as("n_group"),
+        sum(abs(col("__c_gv").cast(d38) * nd -
+          col("__c_v").cast(d38) * col("n_group").cast(d38)))
+          .as("__present_num"),
+        sum(col("__c_v")).as("__present_v"))
+      // sensitive values with no row in this group each contribute
+      // |0 − c_v·n_g| = c_v·n_g; summed: (N − Σ_present c_v)·n_g
+      .withColumn("__tvd_d",
+        col("__present_num") +
+          (nd - col("__present_v").cast(d38)) * col("n_group").cast(d38))
+      // exact integral division (`div` truncates; a decimal `/` would
+      // round at its result scale and can flip a floor at a boundary)
+      .withColumn("tvd_pm", expr(
+        s"(CAST(1000 AS DECIMAL(38,0)) * __tvd_d) div " +
+          s"(CAST(2 AS DECIMAL(38,0)) * CAST(n_group AS DECIMAL(38,0)) * " +
+          s"CAST(${n}L AS DECIMAL(38,0)))"))
+      .withColumn("keep",
+        lit(1000).cast(d38) * col("__tvd_d") <=
+          lit(2L * tPerMille).cast(d38) * col("n_group").cast(d38) * nd)
+      // try_cast + coalesce ACTUALLY saturates: a plain non-ANSI
+      // Decimal→Long overflow cast yields NULL, not Long.MaxValue
+      .select(qi ++ Seq(col("n_group"),
+        coalesce(expr("try_cast(__tvd_d AS BIGINT)"), lit(Long.MaxValue))
+          .as("tvd_num"),
+        col("tvd_pm"), col("keep")): _*)
+    val table = if (gsLocal) {
+      // decision table bounded by the guard: localize it (same driver
+      // footprint the group-size broadcast already paid) so the
+      // corpus-sized gv can drop with ZERO residue
+      localized(out)
+    } else {
+      // QI cardinality past the guard: the table stays pinned; its
+      // first action fills it before gv and the sides are freed below
+      val p = Guard.pin(out)
+      p.count()
+      p
+    }
+    // `out` reads gv and any over-guard side: free them all, ZERO residue
+    Guard.unpin(out)
+    table
   }
+
+  private def localized(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
 }

@@ -677,7 +677,7 @@ object Robots {
         regexUdf(col("path")).as("__re"),
         // "most octets" = UTF-8 bytes, matching allowedColumnExact
         expr("octet_length(path)").as("__len"))
-    val (side, _, _) = Guard.guardedSide(effective, maxBroadcastRules, keepPersisted = false)
+    val (side, _) = Guard.guardedSide(effective, maxBroadcastRules, keepPinned = false)
     val passthrough = urls.columns.filterNot(_ == idCol)
     urls
       .join(side,
@@ -744,7 +744,7 @@ object Robots {
         when(col("rule") === "disallow", effectivePrefix(col("path")))
           .when(!col("path").contains("*") && !col("path").endsWith("$"),
             col("path")).as("__prefix"))
-    val (side, _, _) = Guard.guardedSide(effective, maxBroadcastRules, keepPersisted = false)
+    val (side, _) = Guard.guardedSide(effective, maxBroadcastRules, keepPinned = false)
     val exactHit = regexp_like(col(pathCol), col("__re"))
     val consHit = col("__prefix").isNotNull &&
       col(pathCol).startsWith(col("__prefix"))
@@ -816,7 +816,7 @@ object Robots {
     // collect to a driver-local relation and ride a broadcast — the
     // group-selection window drops out of the OUTPUT plan; past it the
     // lazy frame shuffle-joins on the domain
-    val (side, _, _) = Guard.guardedSide(effective, maxBroadcastRules, keepPersisted = false)
+    val (side, _) = Guard.guardedSide(effective, maxBroadcastRules, keepPinned = false)
     // the rating collapses the join fan-out by idCol ALONE (the unique
     // key is the group — grouping by every passthrough column would
     // silently merge fully-duplicate rows and break on non-orderable

@@ -80,9 +80,13 @@ object Sessionize {
       )
 
   /** The reference pipeline verbatim: key = reqUser, denied = result != 1,
-    * weight = event_count (`AggregateDeniedCounts.java:8-13`).
+    * weight = event_count (`AggregateDeniedCounts.java:8-13`). The gap
+    * must be positive: Spark's `session_window` silently yields no
+    * sessions for a zero or negative gap, and Flink's
+    * `EventTimeSessionWindows` rejects one.
     */
-  def auditDeniedCounts(audits: DataFrame, gapSeconds: Long): DataFrame =
+  def auditDeniedCounts(audits: DataFrame, gapSeconds: Long): DataFrame = {
+    require(gapSeconds > 0, s"session.duration must be positive, got: $gapSeconds")
     deniedCounts(
       audits,
       timeCol = "evtTime",
@@ -91,6 +95,7 @@ object Sessionize {
       denied = col("result") =!= 1,
       weight = col("event_count")
     )
+  }
 
   /** F2 of the reference: the stdout/Kafka string projection
     * (`App.java:69-74`), epoch millis for the window bounds.

@@ -125,32 +125,27 @@ object Vocab {
     * one dictionary-sized partial-agg shuffle) regardless of corpus
     * size — the property that makes BPE training viable at 100 TB.
     *
-    * OWNERSHIP: the returned frame is PERSISTED (that is the whole
-    * point — downstream consumers must not re-trigger the corpus word
-    * count), and the CALLER owns the unpersist: materialize the
-    * consuming result, then `dict.unpersist()` — the pattern the
-    * q_bpe_* gates and the ScaleProbe entries follow. Dropping the
-    * reference without unpersisting leaks one vocabulary-sized cached
-    * frame per call for the session's lifetime.
+    * For `iters` ≥ 1 the returned frame is pinned ([[Guard.pin]]) and
+    * materialized: downstream consumers never re-trigger the corpus
+    * word count, and its blocks are freed once it is unreachable.
     */
   def mergedDict(docs: DataFrame, textCol: String, iters: Int): DataFrame = {
     var dict = symbols(docs, textCol)
     if (iters <= 0) return dict
-    // Materialize the dictionary once per iteration: without the
-    // persist, Spark's lazy lineage re-runs the corpus-sized word-count
-    // shuffle for EVERY pairStats/applyMerge/encode use downstream —
-    // measured 12x superlinear at a x16 corpus. The persisted frame is
+    // Pin the dictionary once per iteration: without it, Spark's lazy
+    // lineage re-runs the corpus-sized word-count shuffle for EVERY
+    // pairStats/applyMerge/encode use downstream — measured 12x
+    // superlinear at a x16 corpus. The pinned frame is
     // vocabulary-sized (the whole point of BPE-on-Spark), so the
-    // count() that pins it is a bounded dictionary action, not a
-    // corpus action; each iteration's parent unpersists once its child
-    // is pinned.
-    dict = dict.persist()
-    dict.count(): Unit
+    // count() that fills it is a bounded dictionary action, not a
+    // corpus action; each iteration's parent is unpinned once its
+    // child has filled.
+    dict = Guard.pin(dict)
     var i = 0
     while (i < iters) {
-      val next = applyMerge(dict, topMerge(pairStats(dict))).persist()
+      val next = Guard.pin(applyMerge(dict, topMerge(pairStats(dict))))
       next.count(): Unit
-      dict.unpersist()
+      Guard.unpin(dict)
       dict = next
       i += 1
     }
@@ -162,28 +157,27 @@ object Vocab {
     * training iteration merged. Shipping the rules is what lets an
     * external tokenizer re-apply the exact training segmentation to
     * NEW text; the (subword, id) table alone cannot segment unseen
-    * words. Same training loop as [[mergedDict]] (persist-per-
-    * iteration, corpus scanned once); each rule is one bounded 1-row
+    * words. Same training loop as [[mergedDict]] (pin-per-iteration,
+    * corpus scanned once); each rule is one bounded 1-row
     * driver read per iteration — decision-table discipline.
     */
   def mergeRules(docs: DataFrame, textCol: String, iters: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    var dict = symbols(docs, textCol).persist()
-    dict.count(): Unit
+    var dict = Guard.pin(symbols(docs, textCol))
     val rules = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
     var i = 0
     while (i < iters) {
       val m = topMerge(pairStats(dict))
       val r = m.select(col("left_sym"), col("right_sym")).head()
       rules += (((i + 1).toLong, r.getString(0), r.getString(1)))
-      val next = applyMerge(dict, m).persist()
+      val next = Guard.pin(applyMerge(dict, m))
       next.count(): Unit
-      dict.unpersist()
+      Guard.unpin(dict)
       dict = next
       i += 1
     }
-    dict.unpersist()
+    Guard.unpin(dict)
     rules.toSeq.toDF("merge_rank", "left_sym", "right_sym")
   }
 
@@ -427,7 +421,7 @@ object Vocab {
   ): DataFrame = {
     val ids = subwordIdsWithAlphabet(dict).withColumnRenamed("sym", "__sym")
     // vocabulary-sized action (the dictionary is already materialized
-    // under mergedDict's persist): ids must stay below the byte page
+    // under mergedDict's pin): ids must stay below the byte page
     val nSyms = ids.count()
     require(nSyms < ByteIdBase,
       s"Vocab.encodeIdsBytes: $nSyms subword ids collide with the byte page at $ByteIdBase")

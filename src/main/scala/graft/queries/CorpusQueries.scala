@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Clustering, Dedup, Graph, Normalize, Profile, Quantize, Retrieval, Sampling, TextAnalysis, Train}
+import graft.operators.{Clustering, Dedup, Graph, Guard, Normalize, Profile, Quantize, Retrieval, Sampling, TextAnalysis, Train}
 
 /** Round-4 corpus-curation and embedding-clustering queries: character
   * entropy screens, cross-document boilerplate detection, unigram-LM
@@ -1444,13 +1444,13 @@ object CorpusQueries {
             floor(x.cast("double") * grid + lit(0.5)).cast("double") / grid)
             .as("embedding"))
         val cents = qe.orderBy(col("vec_id")).limit(16)
-        // residuals are CHECKPOINTED once: they feed the seed
+        // residuals are PINNED and filled once: they feed the seed
         // codebooks, the Lloyd update AND the search-side code
         // assignment — un-materialized, the coarse assignment over the
         // raw corpus ran three times (guide §2.4: one corpus pass per
         // artifact, not per consumer)
-        val res = Quantize.residuals(qe, cents, "vec_id", "embedding")
-          .localCheckpoint()
+        val res = Guard.pin(Quantize.residuals(qe, cents, "vec_id", "embedding"))
+        res.count()
         // trained codebooks are PERSISTED then read back — the
         // deployment shape (train once, search many), and it keeps the
         // search plan from re-running the training lineage at each of
@@ -2620,21 +2620,22 @@ object CorpusQueries {
       "q_ppl_buckets_hist",
       (spark, dir) => {
         val docs = Q.t(spark, dir, "documents")
-        // localCheckpoint: the rated frame feeds THREE sinks (the
-        // histogram under the cumulative window, the per-lang totals,
-        // and the final assignment join) — un-materialized, the whole
+        // pinned: the rated frame feeds THREE sinks (the histogram
+        // under the cumulative window, the per-lang totals, and the
+        // final assignment join) — un-materialized, the whole
         // surprisal chain (two agg shuffles plus the 16384-entry
         // LnTable literal in every copy of its projections) ran three
         // times and tripled the plan/task-binary size (guide §2.4;
-        // §3.3's plan-truncation note). The checkpointed frame is
+        // §3.3's plan-truncation note). The pinned frame is
         // (doc_id, lang, rate_q) — three scalars per doc.
-        val rated = TextAnalysis.unigramSurprisal(docs, "doc_id", "text")
+        val rated = Guard.pin(TextAnalysis.unigramSurprisal(docs, "doc_id", "text")
           .withColumn("rate_q",
             floor(col("nll_tab") / col("n_tokens").cast("double") * lit(1048576.0))
               .cast("long"))
           .join(docs.select(col("doc_id"), col("lang")), col("id") === col("doc_id"))
-          .select(col("doc_id"), col("lang"), col("rate_q"))
-          .localCheckpoint()
+          .select(col("doc_id"), col("lang"), col("rate_q")))
+        // filled before the three sinks race for its blocks
+        rated.count()
         val hist = rated.groupBy(col("lang"), col("rate_q"))
           .agg(count(lit(1)).as("n"))
         val wc = org.apache.spark.sql.expressions.Window
@@ -3984,10 +3985,7 @@ object CorpusQueries {
           frontier, Nil, defaultDelayMs = 500L, workers = 8,
           priorityCol = Some("priority"))
         Q.requireMaxShuffles(out, 2)
-        val scratch = Q.scratch("frontpri")
-        out.write.mode("overwrite").parquet(scratch)
-        ranks.unpersist()
-        spark.read.parquet(scratch)
+        out
       },
       Some(
         s"""WITH $DomainRankCtes,
@@ -5235,16 +5233,8 @@ object CorpusQueries {
     Q(
       "q_pagerank_domains",
       (spark, dir) => {
-        // pageRankInt's iteration loop persists each round's
-        // |domains|-bounded rank frame (lineage cut); land the result
-        // in scratch so the final persist releases before the gate
-        // returns — the mergedDict caller-unpersists contract
-        val r = Graph.pageRankInt(graphEdges(Q.t(spark, dir, "documents")),
+        Graph.pageRankInt(graphEdges(Q.t(spark, dir, "documents")),
           "src", "dst", iters = 2)
-        val scratch = Q.scratch("prdom")
-        r.write.mode("overwrite").parquet(scratch)
-        r.unpersist()
-        spark.read.parquet(scratch)
       },
       Some(
         s"""WITH $DomainRankCtes
@@ -5266,13 +5256,9 @@ object CorpusQueries {
     Q(
       "q_hits_domains",
       (spark, dir) => {
-        val r = Graph.hitsInt(
+        Graph.hitsInt(
           Graph.collapseEdges(graphEdges(Q.t(spark, dir, "documents")), "src", "dst"),
           iters = 2)
-        val scratch = Q.scratch("hitsdom")
-        r.write.mode("overwrite").parquet(scratch)
-        r.unpersist()
-        spark.read.parquet(scratch)
       },
       Some(
         s"""WITH ${domainGraphCtes(GraphEdgesSql, "")},
@@ -5287,8 +5273,8 @@ object CorpusQueries {
     // PageRank run TO CONVERGENCE — real rank jobs iterate 10-50
     // rounds, exactly the regime where the naive loop's unbounded
     // lineage kills analysis and recompute cost. pageRankConverged
-    // persists each round's |domains|-bounded rank frame and drops its
-    // predecessor (the mergedDict cache discipline), stopping on an
+    // pins each round's |domains|-bounded rank frame and drops its
+    // predecessor (the mergedDict discipline), stopping on an
     // INTEGER criterion: floor-divided integer shares reach an exact
     // fixed point, so tol=0 terminates deterministically (11-13 rounds
     // on this graph; maxIters=32 is the oscillation backstop). The
@@ -5303,12 +5289,8 @@ object CorpusQueries {
         val res = Graph.pageRankConverged(
           Graph.collapseEdges(graphEdges(Q.t(spark, dir, "documents")), "src", "dst"),
           maxIters = 32, tolMicro = 0L)
-        val out = res.ranks.select(col("node"), col("rank_micro"),
+        res.ranks.select(col("node"), col("rank_micro"),
           lit(res.itersRun.toLong).as("iters_run"))
-        val scratch = Q.scratch("prconv")
-        out.write.mode("overwrite").parquet(scratch)
-        res.ranks.unpersist()
-        spark.read.parquet(scratch)
       },
       Some(
         s"""WITH RECURSIVE ${domainGraphCtes(GraphEdgesSql, "")},
@@ -5355,7 +5337,7 @@ object CorpusQueries {
     // production rule is a tolerance sized to the score's consumer
     // (frontier PRIORITIZATION needs ordering stability, not micro
     // exactness; 2.5% stops at round 16 here). 64 rounds caps
-    // adversarial dynamics. Each round persists its
+    // adversarial dynamics. Each round pins its
     // |domains|-bounded frame and drops its predecessor; the delta is
     // ONE bounded aggregation per round. The oracle runs the SAME loop
     // as a recursive CTE — ONE reference to the iteration state (the
@@ -5369,12 +5351,8 @@ object CorpusQueries {
         val res = Graph.hitsConverged(
           Graph.collapseEdges(graphEdges(Q.t(spark, dir, "documents")), "src", "dst"),
           maxIters = 64, tolMicro = 25000L)
-        val out = res.scores.select(col("node"), col("auth_micro"),
+        res.scores.select(col("node"), col("auth_micro"),
           col("hub_micro"), lit(res.itersRun.toLong).as("iters_run"))
-        val scratch = Q.scratch("hitsconv")
-        out.write.mode("overwrite").parquet(scratch)
-        res.scores.unpersist()
-        spark.read.parquet(scratch)
       },
       Some(
         s"""WITH RECURSIVE ${domainGraphCtes(GraphEdgesSql, "")},
@@ -5447,13 +5425,12 @@ object CorpusQueries {
       "q_pagerank_drift",
       (spark, dir) => {
         val docs = Q.t(spark, dir, "documents")
-        // the base half collapses ONCE (persisted) — both the merged
+        // the base half collapses ONCE (pinned) — both the merged
         // re-rank and the stale rank consume the same materialization;
         // a lazy frame would re-scan + re-shuffle the history exactly
         // in the gate whose point is "history is never rescanned"
-        val adjBase = Graph.collapseEdges(
-          graphEdges(docs.filter(col("doc_id") % 2 === 0)), "src", "dst")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val adjBase = Guard.pin(Graph.collapseEdges(
+          graphEdges(docs.filter(col("doc_id") % 2 === 0)), "src", "dst"))
         val adjDelta = Graph.collapseEdges(
           graphEdgesShifted(docs.filter(col("doc_id") % 2 =!= 0)), "src", "dst")
         // materialize the shared base half BEFORE forking so neither
@@ -5476,9 +5453,11 @@ object CorpusQueries {
             })
             (fF.get(), fS.get())
           } finally pool.shutdown()
+        // both rank frames are filled: the shared base half is done
+        Guard.unpin(adjBase)
         val wAll = org.apache.spark.sql.expressions.Window
           .partitionBy().rowsBetween(Long.MinValue, Long.MaxValue)
-        val out = fresh
+        fresh
           .join(stale.select(col("node"), col("rank_micro").as("stale_micro")),
             Seq("node"), "left")
           // a node the stale model never saw carries the initial prior
@@ -5490,10 +5469,6 @@ object CorpusQueries {
           .withColumn("refresh", col("drift_pm") >= 8L)
           .select(col("node"), col("rank_micro"), col("stale_micro"),
             col("drift_pm"), col("refresh"))
-        val scratch = Q.scratch("prdrift")
-        out.write.mode("overwrite").parquet(scratch)
-        fresh.unpersist(); stale.unpersist(); adjBase.unpersist()
-        spark.read.parquet(scratch)
       },
       Some {
         val baseEdges =
@@ -5537,9 +5512,8 @@ object CorpusQueries {
     // two window functions over the |domains|-sized rank frame — zero
     // corpus-side collect, so the quota step scales past
     // driver-memory domain counts); the corpus pays quotaSample's one
-    // domain-keyed window. The quota lands in scratch so the rank
-    // loop's persist releases before the gate returns. The oracle
-    // recomputes rank → apportionment → selection end to end.
+    // domain-keyed window. The oracle recomputes rank → apportionment
+    // → selection end to end.
     Q(
       "q_authority_sample",
       (spark, dir) => {
@@ -5549,12 +5523,9 @@ object CorpusQueries {
           ranks.withColumnRenamed("node", "domain"), "domain", "rank_micro", 100L)
         // the two-window apportionment shape, typed-asserted
         Q.requireWindow(quotaDf)
-        val scratch = Q.scratch("authq")
-        quotaDf.write.mode("overwrite").parquet(scratch)
-        ranks.unpersist()
         Sampling.quotaSample(
           docs.select(col("doc_id"), graphDomainOf(col("doc_id")).as("domain")),
-          "domain", "doc_id", spark.read.parquet(scratch))
+          "domain", "doc_id", quotaDf)
       },
       Some {
         val pm = s"(doc_id % ${Sampling.P} + ${Sampling.P}) % ${Sampling.P}"
@@ -5646,12 +5617,8 @@ object CorpusQueries {
       "q_domain_components",
       (spark, dir) => {
         val docs = Q.t(spark, dir, "documents").filter(col("doc_id") % 15 < 8)
-        val cc = Graph.connectedComponents(
+        Graph.connectedComponents(
           Graph.collapseEdges(graphEdges(docs), "src", "dst"))
-        val scratch = Q.scratch("domcc")
-        cc.write.mode("overwrite").parquet(scratch)
-        cc.unpersist()
-        spark.read.parquet(scratch)
       },
       Some {
         val edgesSql =
@@ -6148,11 +6115,7 @@ object CorpusQueries {
         val edges = links.select(
           expr("parse_url(src_uri, 'HOST')").as("src"),
           expr("parse_url(href, 'HOST')").as("dst"))
-        val r = Graph.pageRankInt(edges, "src", "dst", iters = 2)
-        val scratch = Q.scratch("watrank")
-        r.write.mode("overwrite").parquet(scratch)
-        r.unpersist()
-        spark.read.parquet(scratch)
+        Graph.pageRankInt(edges, "src", "dst", iters = 2)
       },
       Some {
         val edgesSql =
@@ -6252,11 +6215,7 @@ object CorpusQueries {
         val edges = links.select(
           expr("parse_url(target_uri, 'HOST')").as("src"),
           expr("parse_url(href, 'HOST')").as("dst"))
-        val r = Graph.pageRankInt(edges, "src", "dst", iters = 2)
-        val scratch = Q.scratch("htmlrank")
-        r.write.mode("overwrite").parquet(scratch)
-        r.unpersist()
-        spark.read.parquet(scratch)
+        Graph.pageRankInt(edges, "src", "dst", iters = 2)
       },
       Some {
         val edgesSql =
@@ -6399,14 +6358,10 @@ object CorpusQueries {
           frontier, delayFrame, defaultDelayMs = 500L, workers = 8)
         val budget = ranks.select(col("node").as("host"),
           col("rank_micro"), expr("1L + rank_micro div 300000").as("budget"))
-        val out = sched.join(budget, Seq("host"))
+        sched.join(budget, Seq("host"))
           .filter(col("slot") < col("budget"))
           .select(col("canon"), col("host"), col("slot"), col("fetch_at_ms"),
             col("worker"), col("rank_micro"), col("budget"))
-        val scratch = Q.scratch("frontauth")
-        out.write.mode("overwrite").parquet(scratch)
-        ranks.unpersist()
-        spark.read.parquet(scratch)
       },
       Some {
         val edgesSql =

@@ -556,11 +556,7 @@ object DumpQueries {
               XmlDump.wikiLinks(pg.text).map(dst => (pg.title, dst)))
           }
           .toDF("src", "dst")
-        val r = graft.operators.Graph.pageRankInt(pages, "src", "dst", iters = 2)
-        val scratch = Q.scratch("wikirank")
-        r.write.mode("overwrite").parquet(scratch)
-        r.unpersist()
-        spark.read.parquet(scratch)
+        graft.operators.Graph.pageRankInt(pages, "src", "dst", iters = 2)
       },
       Some {
         val edgesSql =

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Decontaminate, Dedup, Multimodal, Profile, Quantize, Sampling, Similarity, TextAnalysis}
+import graft.operators.{Decontaminate, Dedup, Guard, Multimodal, Profile, Quantize, Sampling, Similarity, TextAnalysis}
 
 /** North-star LLM-data-pipeline operators (BASELINE.json `north_star`)
   * over the `documents` / `embeddings` tables: dedup (exact, Jaccard,
@@ -3621,18 +3621,18 @@ object NorthStarQueries {
       (spark, dir) => {
         val docs = Q.t(spark, dir, "documents")
         val bench = docs.filter(col("doc_id") < 20)
-        // localCheckpoint both reused stages: `quality` feeds the
+        // pin and fill both reused stages: `quality` feeds the
         // exact-dedup lineage AND its own attribution join; `exact`
-        // feeds the near-dup chain three ways plus its attribution
-        // join — un-materialized, the regex-heavy quality metrics
-        // re-ran once per consumer (guide §2.4)
-        val quality = docs.filter(
+        // feeds the near-dup chain three ways plus its attribution join
+        // — un-materialized, the regex-heavy quality metrics re-ran once
+        // per consumer (guide §2.4)
+        val quality = Guard.pin(docs.filter(
           TextAnalysis.langId(col("text")) === col("lang") &&
             TextAnalysis.tokenCount(col("text")).between(8, 4096) &&
-            TextAnalysis.qualityScore(col("text")) >= 0.5)
-          .localCheckpoint()
-        val exact = Dedup.dropExactDuplicates(quality, "doc_id", "text")
-          .localCheckpoint()
+            TextAnalysis.qualityScore(col("text")) >= 0.5))
+        quality.count()
+        val exact = Guard.pin(Dedup.dropExactDuplicates(quality, "doc_id", "text"))
+        exact.count()
         val canon = Dedup.dropNearDupClusterMembers(exact, "doc_id", "text", n = 3, threshold = 0.4)
         val clean = Decontaminate.dropContaminated(canon, bench, "doc_id", "text", n = 5)
         Profile.dropReasons(docs, "doc_id", Seq(

@@ -286,11 +286,10 @@ object TokenizerQueries {
     * exchange reuse within each action, and an explicit columnar cache
     * measured as a wash at both 4 and 32 cores (r20 micro: 5.27 vs
     * 5.44 s at 4 cores, 5.67 vs 5.22 s at 32) while adding a
-    * session-lifetime cache block per gate. Caller releases the
-    * dictionary via the returned thunk once its result materializes.
+    * session-lifetime cache block per gate.
     */
   private def packedLineage(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, () => Unit) = {
+      : (DataFrame, DataFrame) = {
     val docs = Q.t(spark, dir, "documents")
     val dict = Vocab.mergedDict(docs, "text", iters = 2)
     val ids = Vocab.encodeIds(docs, "doc_id", "text", dict)
@@ -310,8 +309,7 @@ object TokenizerQueries {
     // (the one-row range/lang aggregate and the bins frame), so this
     // also halves how often the heavy stream lineage runs per gate:
     // before, bins + the gate's stream join evaluated it three times.
-    (stream, packBinsFullFrom(perDocIdCounts(docs, dict)),
-      () => { dict.unpersist(): Unit })
+    (stream, packBinsFullFrom(perDocIdCounts(docs, dict)))
   }
 
   /** The cheap per-doc frame `(doc_id, __n, lang)` described above —
@@ -507,9 +505,9 @@ object TokenizerQueries {
     // The merge decision itself: argmax pair with a lexicographic
     // tie-break — the symbol pair the next BPE merge would join.
     // Plans TakeOrderedAndProject (per-partition top-1). Stays OFF the
-    // persisted mergedDict loop deliberately: the dictionary is
-    // consumed exactly once here, so the single-scan lineage is already
-    // optimal and a persist would only add cache traffic.
+    // pinned mergedDict loop deliberately: the dictionary is consumed
+    // exactly once here, so the single-scan lineage is already optimal
+    // and a pin would only add block traffic.
     Q(
       "q_bpe_merge",
       (spark, dir) =>
@@ -528,20 +526,15 @@ object TokenizerQueries {
     // token's symbol sequence (non-regex replace on a US-joined
     // symbol string — greedy left-to-right in both engines) and
     // recount pairs. Pins the iterate-without-corpus-rescan design:
-    // the gate runs THROUGH mergedDict's persisted loop, so the corpus
-    // word count materializes exactly once (the unpersisted lineage
+    // the gate runs THROUGH mergedDict's pinned loop, so the corpus
+    // word count materializes exactly once (the unpinned lineage
     // re-ran it for every dictionary use — a 2-4x redundancy this
-    // routing kills); the result lands in scratch so the dict can be
-    // unpersisted before the gate returns.
+    // routing kills).
     Q(
       "q_bpe_iter2",
       (spark, dir) => {
         val dict = Vocab.mergedDict(Q.t(spark, dir, "documents"), "text", iters = 1)
-        val out = Vocab.pairStats(dict)
-        val scratch = Q.scratch("bpeiter2")
-        out.write.mode("overwrite").parquet(scratch)
-        dict.unpersist()
-        spark.read.parquet(scratch)
+        Vocab.pairStats(dict)
       },
       Some(
         s"""$BpeCtes, pc AS (
@@ -623,19 +616,13 @@ object TokenizerQueries {
     // explode and one per-doc aggregation; the trained dictionary
     // (vocabulary-sized) joins in by broadcast, keyed on the surface
     // form rebuilt from the merged symbols (concatenation is
-    // merge-invariant). Pure integer counts — bit-exact. The result
-    // lands in scratch so the persisted dict can be unpersisted before
-    // the gate returns (mergedDict's caller-owns-unpersist contract).
+    // merge-invariant). Pure integer counts — bit-exact.
     Q(
       "q_bpe_encode",
       (spark, dir) => {
         val docs = Q.t(spark, dir, "documents")
         val dict = Vocab.mergedDict(docs, "text", iters = 2)
-        val out = Vocab.encode(docs, "doc_id", "text", dict)
-        val scratch = Q.scratch("bpeenc")
-        out.write.mode("overwrite").parquet(scratch)
-        dict.unpersist()
-        spark.read.parquet(scratch)
+        Vocab.encode(docs, "doc_id", "text", dict)
       },
       Some(
         s"""$Dict2Ctes, lk AS (
@@ -671,10 +658,7 @@ object TokenizerQueries {
         // the dictionary-side lookup must ride a broadcast — the corpus
         // never shuffles for the id join (typed-node gate assert)
         Q.requireBroadcastJoin(out)
-        val scratch = Q.scratch("bpeids")
-        out.write.mode("overwrite").parquet(scratch)
-        dict.unpersist()
-        spark.read.parquet(scratch)
+        out
       },
       Some(
         s"""$IdCtes
@@ -696,17 +680,14 @@ object TokenizerQueries {
     Q(
       "q_pack_ids",
       (spark, dir) => {
-        val (stream, bins, release) = packedLineage(spark, dir)
+        val (stream, bins) = packedLineage(spark, dir)
         // seq_pos is arithmetic off the doc-level bins frame — the
         // former (lang, bin)-keyed row_number window re-shuffled and
         // re-sorted every token to recover it (guide §2.4)
         val out = stream.join(bins, "doc_id")
           .select(col("lang"), col("bin"), seqPosArith, col("token_id"))
         Q.requireBroadcastJoin(out)
-        val scratch = Q.scratch("packids")
-        out.write.mode("overwrite").parquet(scratch)
-        release()
-        spark.read.parquet(scratch)
+        out
       },
       Some(
         s"""$IdCtes, e AS (
@@ -744,7 +725,7 @@ object TokenizerQueries {
     Q(
       "q_pack_boundaries",
       (spark, dir) => {
-        val (stream, bins, release) = packedLineage(spark, dir)
+        val (stream, bins) = packedLineage(spark, dir)
         // whole-doc binning makes the boundary map a PROJECTION of the
         // doc-level bins frame: start = doc_off + 1, end = doc_off +
         // __n, n_ids = __n — the token stream is never joined, never
@@ -757,10 +738,7 @@ object TokenizerQueries {
             (col("doc_off") + col("__n")).as("end_pos"),
             col("__n").as("n_ids"))
         Q.requireBroadcastJoin(out)
-        val scratch = Q.scratch("packbounds")
-        out.write.mode("overwrite").parquet(scratch)
-        release()
-        spark.read.parquet(scratch)
+        out
       },
       Some(
         s"""$IdCtes, e AS (
@@ -800,7 +778,7 @@ object TokenizerQueries {
     Q(
       "q_pack_blob",
       (spark, dir) => {
-        val (stream, bins, release) = packedLineage(spark, dir)
+        val (stream, bins) = packedLineage(spark, dir)
         // arithmetic seq_pos (see q_pack_ids): the blob's one remaining
         // token-sized shuffle is the (lang, bin) collect_list
         // aggregation itself — the pre-sorting window Exchange + Sort
@@ -818,10 +796,7 @@ object TokenizerQueries {
                 x => x("h")),
               "").as("blob_hex"))
         Q.requireBroadcastJoin(out)
-        val scratch = Q.scratch("packblob")
-        out.write.mode("overwrite").parquet(scratch)
-        release()
-        spark.read.parquet(scratch)
+        out
       },
       Some(
         s"""$IdCtes, e AS (
@@ -863,7 +838,7 @@ object TokenizerQueries {
         val docs = Q.t(spark, dir, "documents")
         val dict = Vocab.mergedDict(docs, "text", iters = 2)
         val enc = Vocab.encode(docs, "doc_id", "text", dict)
-        val out = enc
+        enc
           .join(docs.select(col("doc_id"), col("lang")), "doc_id")
           .groupBy(col("lang"))
           .agg(
@@ -872,10 +847,6 @@ object TokenizerQueries {
             sum(col("n_oov")).as("n_oov"))
           .withColumn("fertility",
             col("n_subwords").cast("double") / col("n_words").cast("double"))
-        val scratch = Q.scratch("fert")
-        out.write.mode("overwrite").parquet(scratch)
-        dict.unpersist()
-        spark.read.parquet(scratch)
       },
       Some(
         s"""$Dict2Ctes, lk AS (
@@ -927,11 +898,7 @@ object TokenizerQueries {
       "q_vocab_export",
       (spark, dir) => {
         val dict = Vocab.mergedDict(Q.t(spark, dir, "documents"), "text", iters = 2)
-        val out = Vocab.subwordIds(dict)
-        val scratch = Q.scratch("vocabexp")
-        out.write.mode("overwrite").parquet(scratch)
-        dict.unpersist()
-        spark.read.parquet(scratch)
+        Vocab.subwordIds(dict)
       },
       Some(
         s"""$IdCtes
@@ -964,7 +931,6 @@ object TokenizerQueries {
         Q.requireBroadcastJoin(out)
         val scratch = Q.scratch("idsexp")
         out.write.mode("overwrite").partitionBy("shard").parquet(scratch)
-        dict.unpersist()
         val back = spark.read.parquet(scratch)
         val one = back.filter(col("shard") === 3)
         val plan = one.queryExecution.executedPlan.toString
@@ -1078,10 +1044,7 @@ object TokenizerQueries {
         val dict = Vocab.mergedDict(docs.filter(col("doc_id") % 2 === 0), "text", iters = 2)
         val out = Vocab.encodeIdsFallback(docs, "doc_id", "text", dict)
         Q.requireBroadcastJoin(out)
-        val scratch = Q.scratch("bpeoov")
-        out.write.mode("overwrite").parquet(scratch)
-        dict.unpersist()
-        spark.read.parquet(scratch)
+        out
       },
       Some(
         s"""${idCtesFrom("(SELECT text FROM documents WHERE doc_id % 2 = 0)", withAlphabet = true)},
@@ -1166,12 +1129,8 @@ object TokenizerQueries {
       (spark, dir) => {
         val docs = Q.t(spark, dir, "documents")
         val dict = Vocab.mergedDict(docs, "text", iters = 2)
-        val out = Vocab.decodeIds(
+        Vocab.decodeIds(
           Vocab.encodeIds(docs, "doc_id", "text", dict), "doc_id", dict)
-        val scratch = Q.scratch("idsrt")
-        out.write.mode("overwrite").parquet(scratch)
-        dict.unpersist()
-        spark.read.parquet(scratch)
       },
       Some(
         """SELECT doc_id, regexp_replace(text, '\s+', '', 'g') AS text_nospace
@@ -1197,12 +1156,8 @@ object TokenizerQueries {
         val suffixed = docs.select(col("doc_id"),
           concat(col("text"), lit(" zzé😀🚀x𝄞 😺")).as("text"))
         val dict = Vocab.mergedDict(docs, "text", iters = 2)
-        val out = Vocab.decodeIdsBytes(
+        Vocab.decodeIdsBytes(
           Vocab.encodeIdsBytes(suffixed, "doc_id", "text", dict), "doc_id", dict)
-        val scratch = Q.scratch("idsbytes")
-        out.write.mode("overwrite").parquet(scratch)
-        dict.unpersist()
-        spark.read.parquet(scratch)
       },
       Some(
         """SELECT doc_id,

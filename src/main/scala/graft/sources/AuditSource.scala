@@ -1,5 +1,10 @@
 package graft.sources
 
+import java.time.LocalDate
+import java.time.format.DateTimeFormatter
+
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,6 +37,21 @@ import org.apache.spark.sql.functions._
   */
 object AuditSource {
 
+  /** `audit.min_date` read as the reference reads it
+    * (`DateFileFilter.java:15`): strict BASIC_ISO_DATE, eight digits
+    * naming a real calendar date. Anything else fails fast — compared
+    * as a string, a malformed min keeps or prunes date directories by
+    * character order (`20210301` kept for `2021-06-15`, as '0' > '-').
+    * The one check behind [[batchPruned]], [[minDateGlob]] and
+    * [[filterByPathDate]].
+    */
+  private[graft] def checkedMinDate(minDate: String): String = {
+    require(minDate.matches("[0-9]{8}") &&
+      Try(LocalDate.parse(minDate, DateTimeFormatter.BASIC_ISO_DATE)).isSuccess,
+      s"audit.min_date must be BASIC_ISO_DATE (YYYYMMDD), got: $minDate")
+    minDate
+  }
+
   /** Streaming text source over a directory tree. */
   def stream(spark: SparkSession, path: String): DataFrame =
     spark.readStream
@@ -56,7 +76,8 @@ object AuditSource {
     */
   def filterByPathDate(df: DataFrame, minDate: String): DataFrame = {
     val dirs = regexp_extract_all(input_file_name(), lit("/([0-9]{8})(?=/)"), lit(1))
-    df.filter(forall(dirs, d => try_to_date(d, "yyyyMMdd").isNull || d >= lit(minDate)))
+    val min = lit(checkedMinDate(minDate))
+    df.filter(forall(dirs, d => try_to_date(d, "yyyyMMdd").isNull || d >= min))
   }
 
   /** Glob alternation matching exactly the level-1 directory names the
@@ -88,8 +109,7 @@ object AuditSource {
     * non-dates ABOVE the min (`99999999`) pass both either way.
     */
   private[graft] def minDateGlob(minDate: String): String = {
-    require(minDate.matches("[0-9]{8}"),
-      s"audit.min_date must be BASIC_ISO_DATE (YYYYMMDD), got: $minDate")
+    checkedMinDate(minDate)
     val ge = minDate +: (0 until 8).collect {
       case i if minDate(i) < '9' =>
         minDate.take(i) + s"[${(minDate(i) + 1).toChar}-9]" + "[0-9]" * (7 - i)
@@ -139,6 +159,7 @@ object AuditSource {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.text.TextFileFormat
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    minDate.foreach(checkedMinDate)
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val index = new DatePrunedFileIndex(spark, new org.apache.hadoop.fs.Path(path), minDate)
     val relation = HadoopFsRelation(

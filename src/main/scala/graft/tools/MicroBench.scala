@@ -10,12 +10,7 @@ object MicroBench {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 5
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(shufflePartitions = cpus.toInt)
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain("ERROR")
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sfDir).count() // warm
     val times = (1 to reps).map { _ =>

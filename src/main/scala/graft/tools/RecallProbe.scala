@@ -12,11 +12,7 @@ import graft.operators.Quantize
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder(shufflePartitions = 8)
-      .master("local[8]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain("ERROR")
     val emb = spark.read.parquet(
       args.headOption.getOrElse("/root/testdata/sf0.001") + "/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 8)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Guard, Similarity}
 
 /** Scale-behavior probe: times the bucket-candidate operators on 1x/2x/
   * 4x/8x self-replications of the fixture corpus (ids shifted per copy so
@@ -43,12 +43,7 @@ object ScaleProbe {
       opPrefixes.forall(_.exists(label.startsWith))
     def probe(label: String)(body: => Long): Unit =
       if (selected(label)) time(label)(body)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder(shufflePartitions = cpus.toInt)
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain("ERROR")
     import spark.implicits._
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -404,7 +399,7 @@ object ScaleProbe {
       probe(s"bpe_encode x$k") {
         val dict = graft.operators.Vocab.mergedDict(d, "text", iters = 2)
         val n = graft.operators.Vocab.encode(d, "doc_id", "text", dict).count()
-        dict.unpersist()
+        Guard.unpin(dict)
         n
       }
       // token-id emission: the dictionary-side lookup (surface form x
@@ -413,7 +408,7 @@ object ScaleProbe {
       probe(s"bpe_ids x$k") {
         val dict = graft.operators.Vocab.mergedDict(d, "text", iters = 2)
         val n = graft.operators.Vocab.encodeIds(d, "doc_id", "text", dict).count()
-        dict.unpersist()
+        Guard.unpin(dict)
         n
       }
       // per-cluster cap: broadcast-argmin assignment (zero corpus
@@ -492,7 +487,7 @@ object ScaleProbe {
         val n = graft.operators.Vocab.decodeIds(
           graft.operators.Vocab.encodeIds(d, "doc_id", "text", dict),
           "doc_id", dict).count()
-        dict.unpersist()
+        Guard.unpin(dict)
         n
       }
       // leakage-safe split: both sides of the shingle anti-join grow
@@ -556,9 +551,9 @@ object ScaleProbe {
         val edges = d.select(graphDomain(col("doc_id")).as("src"),
           graphDomain(col("doc_id") + 2).as("dst"))
         val r = graft.operators.Graph.pageRankInt(edges, "src", "dst", iters = 2)
-        val n = r.count(); r.unpersist(); n
+        val n = r.count(); Guard.unpin(r); n
       }
-      // convergence-looped PageRank: per-iteration persist cuts the
+      // convergence-looped PageRank: a per-iteration pin cuts the
       // lineage, so 10+ rounds on the collapsed frame stay flat in the
       // edge count — wall must track the one collapse shuffle
       probe(s"pagerank_converged x$k") {
@@ -567,7 +562,7 @@ object ScaleProbe {
         val res = graft.operators.Graph.pageRankConverged(
           graft.operators.Graph.collapseEdges(edges, "src", "dst"),
           maxIters = 32, tolMicro = 0L)
-        val n = res.ranks.count(); res.ranks.unpersist(); n
+        val n = res.ranks.count(); Guard.unpin(res.ranks); n
       }
       // connected components: corpus collapses to the adjacency in one
       // shuffle; min-label rounds run on the collapsed frame — wall
@@ -577,7 +572,7 @@ object ScaleProbe {
           .select(graphDomain(col("doc_id")).as("src"), graphDomain(col("doc_id") + 2).as("dst"))
         val cc = graft.operators.Graph.connectedComponents(
           graft.operators.Graph.collapseEdges(edges, "src", "dst"))
-        val n = cc.count(); cc.unpersist(); n
+        val n = cc.count(); Guard.unpin(cc); n
       }
       // HITS: same collapse-bound shape as the pagerank probes — the
       // corpus collapses to the weighted adjacency once; both update
@@ -587,7 +582,7 @@ object ScaleProbe {
           graphDomain(col("doc_id") + 2).as("dst"))
         val h = graft.operators.Graph.hitsInt(
           graft.operators.Graph.collapseEdges(edges, "src", "dst"), iters = 4)
-        val n = h.count(); h.unpersist(); n
+        val n = h.count(); Guard.unpin(h); n
       }
       // Count-Min build: one corpus scan with constant per-token
       // fan-out into the d·w-cell table — wall must track the scan;

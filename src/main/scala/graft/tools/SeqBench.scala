@@ -11,12 +11,7 @@ object SeqBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(',').toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(shufflePartitions = cpus.toInt)
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain("ERROR")
     spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().count()
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)

@@ -9,11 +9,7 @@ import graft.GraftSession
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.builder(shufflePartitions = 8)
-      .master("local[8]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain("WARN")
 
     val e = graft.SparkEntry.entry(spark)
     println(s"ENTRY rows=${e.count()}")

@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Column ⇄ Expression bridge.
+/** Column ⇄ Expression bridge, and the other `private[sql]` access
+  * graft needs (a checkpoint's size estimate, [[capSizeEstimate]]).
   *
   * Spark 4 hides the classic Column↔Expression converters behind
   * `private[sql]`; libraries that ship native Catalyst expressions (the
@@ -27,4 +29,22 @@ object ColumnBridge {
       info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
+
+  /** `df`, a local checkpoint (a `LogicalRDD`), with its size estimate
+    * capped at Long.MaxValue bytes and rows — the estimate Spark gives a
+    * frame it knows nothing about. A checkpoint inherits the estimate of
+    * the plan it materialized, and a join's estimate is the product of
+    * its sides', so a loop that checkpoints each round from the last
+    * compounds it: ~16 HITS rounds in, multiplying the BigInt estimates
+    * stalled query planning for minutes. (`Dataset.ofRows` is
+    * `private[sql]`.)
+    */
+  def capSizeEstimate(df: DataFrame): DataFrame = df.queryExecution.logical match {
+    case r: LogicalRDD if r.stats.sizeInBytes > Long.MaxValue =>
+      val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val cap = BigInt(Long.MaxValue)
+      val stats = r.stats.copy(sizeInBytes = cap, rowCount = r.stats.rowCount.map(_.min(cap)))
+      Dataset.ofRows(spark, r.copy()(spark, Some(stats), Some(r.constraints)))
+    case _ => df
+  }
 }

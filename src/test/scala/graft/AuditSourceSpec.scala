@@ -163,4 +163,25 @@ class AuditSourceSpec extends SparkSpec {
       assert(streamed == batch)
     } finally query.stop()
   }
+
+  test("a min date that is not a strict BASIC_ISO_DATE fails fast on every path") {
+    val root = Files.createTempDirectory("audits_baddate").toFile
+    for (d <- Seq("20210301", "20210801")) {
+      val dir = new java.io.File(root, d)
+      dir.mkdirs()
+      Files.writeString(new java.io.File(dir, "audit.log").toPath, d + "\n")
+    }
+    val path = root.getAbsolutePath
+    // dashed ISO (a string compare kept 20210301 for it, as '0' > '-'),
+    // month 13, Feb 30, and an offset suffix BASIC_ISO_DATE would accept
+    for (bad <- Seq("2021-06-15", "20211340", "20210230", "20210615+0100")) {
+      intercept[IllegalArgumentException](AuditSource.batchPruned(spark, path, Some(bad)))
+      intercept[IllegalArgumentException](AuditSource.minDateGlob(bad))
+      intercept[IllegalArgumentException](
+        AuditSource.filterByPathDate(AuditSource.batch(spark, path), bad))
+    }
+    // a real date still prunes as before
+    assert(AuditSource.batchPruned(spark, path, Some("20210615"))
+      .collect().map(_.getString(0)).toSeq == Seq("20210801"))
+  }
 }

@@ -303,7 +303,7 @@ class CorpusStatsSpec extends SparkSpec {
     val strict = graft.operators.Profile.tCloseness(df, Seq("g"), "s", tPerMille = 400L)
       .collect().map(_.getAs[Boolean]("keep"))
     assert(strict.forall(_ == false))
-    // the guarded-small path localizes the decision table and unpersists
+    // the guarded-small path localizes the decision table and unpins
     // everything — a long-lived session accumulates NO cache from audits
     val after = spark2.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty, s"leaked persisted RDDs: ${after -- before}")
@@ -314,19 +314,19 @@ class CorpusStatsSpec extends SparkSpec {
     val before = spark2.sparkContext.getPersistentRDDs.keySet
     val df = (1L to 40L).map(i => (s"g${i % 8}", s"v${i % 3}")).toDF("g", "s")
     // force every guardedSide past the threshold: the group tables take
-    // the persisted-shuffle-join path instead of localize+broadcast
+    // the pinned-shuffle-join path instead of localize+broadcast
     val over = graft.operators.Profile.tCloseness(df, Seq("g"), "s",
       tPerMille = 500L, maxBroadcastGroups = 1L)
     val overRows = over.collect().map(r =>
       r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
-    over.unpersist() // over-guard output persist is documented caller-owned
+    graft.operators.Guard.unpin(over) // the over-guard table comes back pinned
     val under = graft.operators.Profile.tCloseness(df, Seq("g"), "s", tPerMille = 500L)
       .collect().map(r =>
         r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4))).toMap
     assert(overRows == under, s"guard regime changed the decisions: $overRows vs $under")
-    // tCloseness materializes before returning, so its finally releases
-    // the guarded sides even in the over-guard regime (only the
-    // documented caller-owned output persist remained, released above)
+    // tCloseness materializes before returning, so it unpins the
+    // guarded sides even in the over-guard regime (only the pinned
+    // output remained, unpinned above)
     val after = spark2.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty, s"leaked persisted RDDs: ${after -- before}")
 
@@ -336,8 +336,8 @@ class CorpusStatsSpec extends SparkSpec {
     val kaRef = graft.operators.Profile.kAnonymity(df, Seq("g"), k = 5L).collect()
     assert(kaRows.map(_.toSeq).toSet == kaRef.map(_.toSeq).toSet)
     // lazy-returning audits must leak NOTHING even past the guard
-    // (keepPersisted=false: the shuffle side recomputes rather than
-    // sitting in the cache with no owner to release it)
+    // (keepPinned=false: the shuffle side recomputes rather than
+    // staying pinned with no owner to release it)
     val afterKa = spark2.sparkContext.getPersistentRDDs.keySet
     assert((afterKa -- before).isEmpty, s"kAnonymity leaked: ${afterKa -- before}")
     val ld = graft.operators.Profile.lDiversity(df, Seq("g"), "s", l = 2L,

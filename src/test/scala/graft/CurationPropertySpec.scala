@@ -282,7 +282,7 @@ class CurationPropertySpec extends SparkSpec {
         .as[(String, Long)].collect().map(_.swap).toMap
       val ids = graft.operators.Vocab.encodeIds(docs, "doc_id", "text", dict)
         .as[(Long, Long, Long)].collect()
-      dict.unpersist()
+      graft.operators.Guard.unpin(dict)
       val rebuilt = ids.groupBy(_._1).view.mapValues(
         _.sortBy(_._2).map(t => symOf(t._3)).mkString).toMap
       rows.foreach { case (id, text) =>

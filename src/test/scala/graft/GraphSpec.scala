@@ -19,7 +19,7 @@ class GraphSpec extends SparkSpec {
       .toDF("src", "dst")
     val rdf = graft.operators.Graph.pageRankInt(edges, "src", "dst", iters = 2)
     val r = rdf.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-    rdf.unpersist()
+    graft.operators.Guard.unpin(rdf)
     assert(r == Map("A" -> 1361250L, "B" -> 575000L, "C" -> 1063750L), r.toString)
   }
 
@@ -28,7 +28,7 @@ class GraphSpec extends SparkSpec {
     val multi = Seq(("A", "B"), ("A", "B"), ("A", "C")).toDF("src", "dst")
     val rdf = graft.operators.Graph.pageRankInt(multi, "src", "dst", iters = 1)
     val r = rdf.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-    rdf.unpersist()
+    graft.operators.Guard.unpin(rdf)
     val share = (1000000L * 850000L) / (3L * 1000000L) // 283333
     assert(r("B") == 150000L + 2 * share && r("C") == 150000L + share, r.toString)
     // dangling nodes (B, C emit nothing) still appear with teleport-only
@@ -44,7 +44,7 @@ class GraphSpec extends SparkSpec {
     val cc = graft.operators.Graph.connectedComponents(
       graft.operators.Graph.collapseEdges(edges, "src", "dst"))
     val got = cc.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    cc.unpersist()
+    graft.operators.Guard.unpin(cc)
     assert(got == Map(
       "A" -> "A", "B" -> "A", "C" -> "A", "D" -> "A",
       "X" -> "X", "Y" -> "X"), got.toString)
@@ -67,7 +67,7 @@ class GraphSpec extends SparkSpec {
     val got = hdf.collect()
       .map(r => r.getAs[String]("node") ->
         ((r.getAs[Long]("auth_micro"), r.getAs[Long]("hub_micro")))).toMap
-    hdf.unpersist()
+    graft.operators.Guard.unpin(hdf)
     assert(got == Map(
       "A" -> ((199999L, 1000000L)),
       "B" -> ((600000L, 625000L)),
@@ -81,7 +81,7 @@ class GraphSpec extends SparkSpec {
     val got = hdf.collect()
       .map(r => r.getAs[String]("node") ->
         ((r.getAs[Long]("auth_micro"), r.getAs[Long]("hub_micro")))).toMap
-    hdf.unpersist()
+    graft.operators.Guard.unpin(hdf)
     assert(got == Map("A" -> ((0L, 1000000L)), "B" -> ((1000000L, 0L))), got.toString)
     // duplicate edges weight the endorsement: A->B x2 vs C->B x1 makes
     // A the stronger hub by exactly the weight ratio
@@ -90,7 +90,7 @@ class GraphSpec extends SparkSpec {
       graft.operators.Graph.collapseEdges(multi, "src", "dst"), iters = 1)
     val g2 = h2.collect()
       .map(r => r.getAs[String]("node") -> r.getAs[Long]("hub_micro")).toMap
-    h2.unpersist()
+    graft.operators.Guard.unpin(h2)
     assert(g2("A") == 1000000L && g2("C") == 500000L, g2.toString)
   }
 
@@ -104,7 +104,7 @@ class GraphSpec extends SparkSpec {
     val got = hdf.collect()
       .map(r => r.getAs[String]("node") ->
         ((r.getAs[Long]("auth_micro"), r.getAs[Long]("hub_micro")))).toMap
-    hdf.unpersist()
+    graft.operators.Guard.unpin(hdf)
     assert(got == Map("A" -> ((0L, 1000000L)), "B" -> ((1000000L, 0L))), got.toString)
   }
 
@@ -117,24 +117,24 @@ class GraphSpec extends SparkSpec {
       .map(r => r.getAs[String]("node") ->
         ((r.getAs[Long]("auth_micro"), r.getAs[Long]("hub_micro")))).toMap
     val got = m(res.scores)
-    res.scores.unpersist()
+    graft.operators.Guard.unpin(res.scores)
     // the converged run IS the unrolled run at itersRun rounds
     val unrolled = graft.operators.Graph.hitsInt(adj, res.itersRun)
     val want = m(unrolled)
-    unrolled.unpersist()
+    graft.operators.Guard.unpin(unrolled)
     assert(got == want, s"itersRun=${res.itersRun}")
     assert(res.itersRun >= 1 && res.itersRun < 64)
     // hub fixed point: one more round reproduces the identical pair
     assert(res.lastDeltaMicro == 0L)
     val next = graft.operators.Graph.hitsInt(adj, res.itersRun + 1)
     val wantNext = m(next)
-    next.unpersist()
+    graft.operators.Guard.unpin(next)
     assert(wantNext == want, "fixed pair must repeat")
     // the cap is a backstop: maxIters 1 equals hitsInt(1)
     val capped = graft.operators.Graph.hitsConverged(adj, maxIters = 1, tolMicro = 0L)
     val one = graft.operators.Graph.hitsInt(adj, 1)
     assert(m(capped.scores) == m(one) && capped.itersRun == 1)
-    capped.scores.unpersist(); one.unpersist()
+    graft.operators.Guard.unpin(capped.scores); graft.operators.Guard.unpin(one)
     // empty adjacency: empty frame, zero iterations
     val empty = graft.operators.Graph.hitsConverged(
       adj.filter(col("w") < 0L), maxIters = 4, tolMicro = 0L)
@@ -170,7 +170,7 @@ class GraphSpec extends SparkSpec {
     // more rounds past the fixed point must not move any rank
     val again = graft.operators.Graph.pageRankFromAdj(adj, iters = res.itersRun + 5)
     val ranks2 = again.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-    again.unpersist(); res.ranks.unpersist()
+    graft.operators.Guard.unpin(again); graft.operators.Guard.unpin(res.ranks)
     assert(ranks == ranks2, s"post-convergence iterations moved ranks: $ranks vs $ranks2")
   }
 
@@ -183,7 +183,7 @@ class GraphSpec extends SparkSpec {
     // capped run equals the fixed-iteration loop at the same count
     val two = graft.operators.Graph.pageRankFromAdj(adj, iters = 2)
     assert(capped.ranks.collect().map(_.toSeq).toSet == two.collect().map(_.toSeq).toSet)
-    capped.ranks.unpersist(); two.unpersist()
+    graft.operators.Guard.unpin(capped.ranks); graft.operators.Guard.unpin(two)
 
     val empty = Seq.empty[(String, String)].toDF("src", "dst")
     val res = graft.operators.Graph.pageRankConverged(

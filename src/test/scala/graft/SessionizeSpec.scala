@@ -49,6 +49,16 @@ class SessionizeSpec extends SparkSpec with TableDrivenPropertyChecks {
     assert(wdyson.getAs[Timestamp]("session_end") == ts("2022-09-26 10:30:00"))
   }
 
+  test("a zero or negative session gap fails fast instead of yielding no sessions") {
+    // Spark's session_window returns zero rows for such a gap; the
+    // reference's Flink EventTimeSessionWindows rejects it
+    for (gap <- Seq(0L, -5L)) {
+      val e = intercept[IllegalArgumentException](
+        Sessionize.auditDeniedCounts(fourEvents, gapSeconds = gap))
+      assert(e.getMessage.contains("session.duration"), e.getMessage)
+    }
+  }
+
   test("all-allowed sessions are suppressed (HAVING != 0)") {
     val allAllowed = Seq(
       ("alice", "cm_hive", 1, 5, ts("2022-09-26 10:00:00")),

@@ -84,7 +84,7 @@ class VocabSpec extends SparkSpec {
     val other = Seq((9L, "aab xyz qq")).toDF("doc_id", "text")
     val got = Vocab.encode(other, "doc_id", "text", dict)
       .as[(Long, Long, Long, Long)].collect().toSeq
-    dict.unpersist()
+    graft.operators.Guard.unpin(dict)
     assert(got == Seq((9L, 3L, 1L + 3L + 2L, 2L)))
   }
 
@@ -94,7 +94,7 @@ class VocabSpec extends SparkSpec {
     // dict symbols after 2 merges: aa→[aa], b→[b], aab→[aab]
     val ids = Vocab.subwordIds(dict)
       .as[(String, Long)].collect().toMap
-    dict.unpersist()
+    graft.operators.Guard.unpin(dict)
     assert(ids == Map("aa" -> 1L, "aab" -> 2L, "b" -> 3L))
     assert(!ids.values.exists(_ == 0L), "id 0 is reserved for <eos>")
   }
@@ -105,7 +105,7 @@ class VocabSpec extends SparkSpec {
     // ids: aa=1, aab=2, b=3 → doc1 "aa aa b" = [1,1,3]; doc2 "aab" = [2]
     val got = Vocab.encodeIds(docs, "doc_id", "text", dict)
       .as[(Long, Long, Long)].collect().toSet
-    dict.unpersist()
+    graft.operators.Guard.unpin(dict)
     assert(got == Set(
       (1L, 1L, 1L), (1L, 2L, 1L), (1L, 3L, 3L),
       (2L, 1L, 2L)))
@@ -138,7 +138,7 @@ class VocabSpec extends SparkSpec {
     assert(symToId.keySet == Set("a", "b", "aa", "ab"))
     val got = Vocab.encodeIdsFallback(docs, "doc_id", "text", dict)
       .orderBy("pos").as[(Long, Long, Long)].collect().toSeq
-    dict.unpersist()
+    graft.operators.Guard.unpin(dict)
     val idsOnly = got.map(_._3)
     // "aa" in-vocab -> [aa]; "ba" OOV -> chars b, a; "ax" OOV -> a only
     // (x is outside the training alphabet and drops)
@@ -153,7 +153,7 @@ class VocabSpec extends SparkSpec {
     val got = Vocab
       .decodeIds(Vocab.encodeIds(docs, "doc_id", "text", dict), "doc_id", dict)
       .as[(Long, String)].collect().toMap
-    dict.unpersist()
+    graft.operators.Guard.unpin(dict)
     assert(got == Map(1L -> "aaaab", 2L -> "aab", 3L -> "baab"))
   }
 
@@ -163,7 +163,7 @@ class VocabSpec extends SparkSpec {
     val got = Vocab
       .decodeIds(Vocab.encodeIds(docs, "doc_id", "text", dict), "doc_id", dict)
       .as[(Long, String)].collect().toMap
-    dict.unpersist()
+    graft.operators.Guard.unpin(dict)
     assert(got == Map(1L -> "ab"))
   }
 
@@ -265,7 +265,7 @@ class VocabSpec extends SparkSpec {
     assert(tid.exists(_ >= Vocab.ByteIdBase) && tid.exists(_ < Vocab.ByteIdBase))
     val got = Vocab.decodeIdsBytes(ids, "doc_id", dict)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    dict.unpersist()
+    graft.operators.Guard.unpin(dict)
     assert(got == Map(
       1L -> "aa😀🚀ab",
       2L -> "𝄞clefbacafé",
@@ -279,7 +279,7 @@ class VocabSpec extends SparkSpec {
     val docs = Seq((7L, "aa 😀 ab")).toDF("doc_id", "text")
     val pos = Vocab.encodeIdsBytes(docs, "doc_id", "text", dict)
       .orderBy("pos").select("pos").collect().map(_.getLong(0)).toSeq
-    dict.unpersist()
+    graft.operators.Guard.unpin(dict)
     assert(pos == (1L to pos.length.toLong), pos.toString)
     // "aa"(1-2 syms) + 😀(4 bytes) + "ab"(syms) — the byte run sits between
     assert(pos.length >= 6)
@@ -365,7 +365,7 @@ class VocabSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     val cheap = graft.queries.TokenizerQueries.perDocIdCounts(docs, dict)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    dict.unpersist()
+    graft.operators.Guard.unpin(dict)
     assert(cheap == fromStream, s"cheap=$cheap stream=$fromStream")
     // the whitespace-only doc is exactly its <eos>
     assert(cheap.exists(t => t._1 == 2L && t._2 == 1L))

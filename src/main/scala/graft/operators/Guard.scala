@@ -37,10 +37,13 @@ private[graft] object Guard {
 
   /** Free now the blocks of every pinned frame `df` reads directly (the
     * `LogicalRDD` leaves of its plan); a frame with none is a no-op.
+    * Frees through [[ColumnBridge.freeBlocks]]: `RDD.unpersist` would log
+    * a WARN per call that a local checkpoint cannot be recomputed, which
+    * is the contract above.
     */
   def unpin(df: DataFrame): Unit =
     df.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false): Unit
+      case r: LogicalRDD => ColumnBridge.freeBlocks(r.rdd, blocking = false)
       case _ =>
     }
 

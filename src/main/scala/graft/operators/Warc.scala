@@ -248,17 +248,10 @@ object Warc {
 
   /** [[parseHttp]] on BYTES: the header block of an HTTP/1.x message
     * is ASCII by grammar (decoded as ISO-8859-1 — byte-lossless), and
-    * the payload stays raw bytes for the charset-aware text layer.
-    */
-  def parseHttpBytes(body: Array[Byte]): Option[(Int, String, String, Array[Byte])] =
-    parseHttpBytesFull(body).map { case (h, raw) =>
-      (h.status, h.contentType, h.charset, raw)
-    }
-
-  /** [[parseHttpBytes]] with the FULL head ([[HttpHead]]) — the input
-    * of the on-the-wire decode chain ([[decodeHttpBody]]): the raw
-    * payload bytes here are the message AS TRANSFERRED, still chunked
-    * and/or content-coded.
+    * the payload stays raw bytes for the charset-aware text layer. The
+    * FULL head ([[HttpHead]]) feeds the on-the-wire decode chain
+    * ([[decodeHttpBody]]): the raw payload bytes here are the message
+    * AS TRANSFERRED, still chunked and/or content-coded.
     */
   def parseHttpBytesFull(body: Array[Byte]): Option[(HttpHead, Array[Byte])] = {
     if (body == null || body.length < 5 ||

@@ -150,6 +150,13 @@ object CorpusQueries {
     */
   private lazy val DsirScreenCtes: String = dsirScreenCtesFrom("doc_id % 2 = 0", "")
 
+  /** The link-graph gates' archives per key: 8 WAT metadata records
+    * (q_wat_links, q_wat_graph, q_frontier_authority) and 8 HTML
+    * response records (q_html_links, q_html_graph, q_html_frontier).
+    */
+  private val watArchive: Long => Array[Byte] = graft.operators.Warc.syntheticWat(_, 8)
+  private val htmlArchive: Long => Array[Byte] = graft.operators.Warc.syntheticWarcHtml(_, 8)
+
   /** The closed-form domain link graph + two unrolled integer-PageRank
     * iterations, shared by q_pagerank_domains (the observation) and
     * q_authority_sample (the selection) so the rank arithmetic cannot
@@ -3012,14 +3019,12 @@ object CorpusQueries {
     Q(
       "q_script_detect",
       (spark, dir) => {
-        val mk = udf((k: Long) =>
+        val mk = (k: Long) =>
           "ab" * (k % 3).toInt +
             (0x4e00 + k).toChar.toString * (k % 5).toInt +
             "7" * (k % 4).toInt +
-            "!" * (k % 2).toInt)
-        val out = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("id"))
-          .withColumn("text", mk(col("id")))
+            "!" * (k % 2).toInt
+        val out = Q.fixture(Q.nationKeys(spark, dir, "id"), "id", "text")(mk)
           .select(
             col("id"),
             length(col("text")).as("n_chars"),
@@ -3454,8 +3459,7 @@ object CorpusQueries {
     Q(
       "q_redirect_resolve",
       (spark, dir) => {
-        val led = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("k"))
+        val led = Q.nationKeys(spark, dir, "k")
           .select(col("k"), explode(expr("sequence(0, 6)")).as("j"))
           .withColumn("a", col("k") % 6)
           .withColumn("url",
@@ -3552,9 +3556,7 @@ object CorpusQueries {
     Q(
       "q_robots_redirect",
       (spark, dir) => {
-        val nat = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("k"),
-            (col("n_nationkey") % 4).as("b"))
+        val nat = Q.nationKeys(spark, dir, "k").withColumn("b", col("k") % 4)
         val dom = concat(lit("d"), col("k"), lit(".example"))
         val robotsUrl = concat(lit("http://"), dom, lit("/robots.txt"))
         val altUrl = concat(lit("http://alt"), col("k"), lit(".example/robots.txt"))
@@ -3668,9 +3670,7 @@ object CorpusQueries {
     Q(
       "q_sitemap_frontier",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val sitemap = udf((k: Long) => {
+        val sitemap = (k: Long) => {
           def m(i: Long) = (k + i) % 5
           s"""<?xml version="1.0"?><urlset>
              |<url><loc>http://site${m(0)}.example/s/0/$k</loc></url>
@@ -3680,14 +3680,15 @@ object CorpusQueries {
              |<url><loc>ftp://site${m(4)}.example/s/4/$k</loc></url>
              |<url><loc>http://site${m(0)}.example/s/0/$k</loc></url>
              |</urlset>""".stripMargin
-        })
+        }
         val rules = graft.operators.Robots.effectiveRules(
           (0 until 5).flatMap(mm =>
             graft.operators.Robots.parseRobots(s"site$mm.example",
               "User-agent: *\nDisallow: /a1\n")),
           "graftbot")
         val locs = graft.operators.Robots.sitemapUrls(
-          blobs.withColumn("xml", sitemap(col("media_id"))), "media_id", "xml")
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "xml")(sitemap),
+          "media_id", "xml")
         val out = locs
           .withColumn("canon",
             graft.functions.GraftFunctions.urlCanon(col("loc")))
@@ -3795,15 +3796,14 @@ object CorpusQueries {
     Q(
       "q_sitemap_index",
       (spark, dir) => {
-        val nat = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("k"),
-            (col("n_nationkey") % 3).as("c"))
+        val nat = Q.nationKeys(spark, dir, "k")
+        val c = col("k") % 3
         val robots = nat.select(
           concat(lit("d"), col("k"), lit(".example")).as("domain"),
           concat(lit("User-agent: *\nDisallow: /a1\nSitemap: http://d"),
             col("k"),
-            when(col("c") === 0, lit(".example/idx.xml.gz\n"))
-              .when(col("c") === 1, lit(".example/sm.xml\n"))
+            when(c === 0, lit(".example/idx.xml.gz\n"))
+              .when(c === 1, lit(".example/sm.xml\n"))
               .otherwise(lit(".example/bad.xml.gz\n"))).as("txt"))
         val pointers = graft.operators.Robots.sitemapPointers(robots, "domain", "txt")
         // the deterministic "fetch": every domain's five possible
@@ -4030,8 +4030,7 @@ object CorpusQueries {
       "q_crawl_cycle",
       (spark, dir) => {
         import spark.implicits._
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
+        val blobs = Q.nationKeys(spark, dir, "media_id")
         def robotsTxt(m: Int): String =
           "User-agent: *\nDisallow: /a1\nDisallow: /a2/*/x$\n" +
             (if (m < 4) s"Crawl-delay: 0.${m + 1}\n" else "")
@@ -4045,16 +4044,16 @@ object CorpusQueries {
         val ruleRows = graft.operators.Robots.rules(robotsDf, "domain", "txt")
         val delayFrame = graft.operators.Robots.effectiveDelayFrame(
           graft.operators.Robots.crawlDelays(robotsDf, "domain", "txt"), "graftbot")
-        val warc = udf((k: Long) => graft.operators.Warc.syntheticWarcCrawl(k, 8))
+        val warc = (k: Long) => graft.operators.Warc.syntheticWarcCrawl(k, 8)
         val crawled = graft.operators.Warc.httpResponses(
           graft.operators.Warc.records(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(blobs, "media_id", "payload")(warc),
             "media_id", "payload"))
           .filter(col("status") === 200 && col("content_type") === "text/html")
           .withColumn("canon",
             graft.functions.GraftFunctions.urlCanon(col("target_uri")))
           .select(col("canon"))
-        val sitemap = udf((k: Long) => {
+        val sitemap = (k: Long) => {
           def m(i: Long) = (k + i) % 5
           s"""<?xml version="1.0"?><urlset>
              |<url><loc>http://site${m(0)}.example/s/0/$k</loc></url>
@@ -4063,9 +4062,9 @@ object CorpusQueries {
              |<url><loc>http://site${m(3)}.example/a1/$k</loc></url>
              |<url><loc>ftp://site${m(4)}.example/s/4/$k</loc></url>
              |</urlset>""".stripMargin
-        })
+        }
         val seeded = graft.operators.Robots.sitemapUrls(
-          blobs.withColumn("xml", sitemap(col("media_id"))), "media_id", "xml")
+          Q.fixture(blobs, "media_id", "xml")(sitemap), "media_id", "xml")
           .withColumn("canon",
             graft.functions.GraftFunctions.urlCanon(col("loc")))
           .select(col("canon"))
@@ -4157,8 +4156,7 @@ object CorpusQueries {
     Q(
       "q_revisit_schedule",
       (spark, dir) => {
-        val hist = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("n"))
+        val hist = Q.nationKeys(spark, dir, "n")
           .select(col("n"), explode(sequence(lit(0), lit(5))).as("i"))
           .select(
             concat(lit("http://r"), col("n"), lit(".example/p")).as("canon"),
@@ -4380,12 +4378,10 @@ object CorpusQueries {
     Q(
       "q_refresh_archive",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warc = udf((k: Long) => graft.operators.Warc.syntheticWarcRefresh(k, 6))
+        val warc = (k: Long) => graft.operators.Warc.syntheticWarcRefresh(k, 6)
         val ledger = graft.operators.Warc.httpValidators(
           graft.operators.Warc.recordsBinary(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(warc),
             "media_id", "payload"))
         val out = graft.operators.Changelog.conditionalFetchPlan(
           ledger, "target_uri", "rec_idx", "etag", "last_modified")
@@ -5745,12 +5741,10 @@ object CorpusQueries {
     Q(
       "q_warc_records",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warc = udf((k: Long) => graft.operators.Warc.syntheticWarc(
-          k, 3, if (k % 5 == 0) 1 else Int.MaxValue))
+        val warc = (k: Long) => graft.operators.Warc.syntheticWarc(
+          k, 3, if (k % 5 == 0) 1 else Int.MaxValue)
         val out = graft.operators.Warc.records(
-          blobs.withColumn("payload", warc(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(warc),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -5787,19 +5781,16 @@ object CorpusQueries {
     Q(
       "q_warcgz_records",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warcgz = udf((k: Long) => {
+        val warcgz = (k: Long) => {
           val full = graft.operators.Warc.syntheticWarc(k, 3)
           val cut1 = full.length / 3; val cut2 = 2 * full.length / 3
           def member(a: Int, b: Int): Array[Byte] =
             graft.operators.Multimodal.syntheticGzipText(
               new String(java.util.Arrays.copyOfRange(full, a, b), "UTF-8"))
           member(0, cut1) ++ member(cut1, cut2) ++ member(cut2, full.length)
-        })
+        }
         val out = graft.operators.Warc.records(
-          blobs
-            .withColumn("payload", warcgz(col("media_id")))
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(warcgz)
             .select(col("media_id"),
               org.apache.spark.sql.functions.encode(
                 graft.functions.GraftFunctions.gunzip(col("payload")), "UTF-8")
@@ -5840,12 +5831,10 @@ object CorpusQueries {
     Q(
       "q_warc_http",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warc = udf((k: Long) => graft.operators.Warc.syntheticWarcHttp(k, 6))
+        val warc = (k: Long) => graft.operators.Warc.syntheticWarcHttp(k, 6)
         val out = graft.operators.Warc.httpResponses(
           graft.operators.Warc.records(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(warc),
             "media_id", "payload"))
           .withColumn("keep",
             col("status") === 200 && col("content_type") === "text/html")
@@ -5869,12 +5858,10 @@ object CorpusQueries {
     Q(
       "q_warc_gz",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warc = udf((k: Long) => graft.operators.Warc.syntheticWarcGz(k, 6))
+        val warc = (k: Long) => graft.operators.Warc.syntheticWarcGz(k, 6)
         val out = graft.operators.Warc.httpResponses(
           graft.operators.Warc.recordsGz(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(warc),
             "media_id", "payload"))
           .withColumn("keep",
             col("status") === 200 && col("content_type") === "text/html")
@@ -5899,12 +5886,10 @@ object CorpusQueries {
     Q(
       "q_warc_zst",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warc = udf((k: Long) => graft.operators.Warc.syntheticWarcZst(k, 6))
+        val warc = (k: Long) => graft.operators.Warc.syntheticWarcZst(k, 6)
         val out = graft.operators.Warc.httpResponses(
           graft.operators.Warc.recordsZst(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(warc),
             "media_id", "payload"))
           .withColumn("keep",
             col("status") === 200 && col("content_type") === "text/html")
@@ -5931,7 +5916,7 @@ object CorpusQueries {
       "q_zstd_decode",
       (spark, dir) => {
         import spark.implicits._
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val seqF = graft.operators.ZstdDecode.zstdFrameSequences(
             s"w${k % 7}x ".getBytes("US-ASCII"), (5 + k % 4).toInt,
             s"end$k".getBytes("US-ASCII"), checksum = true)
@@ -5945,10 +5930,8 @@ object CorpusQueries {
           val entF = graft.operators.ZstdDecode.zstdFrameEntropy(
             (2 + k % 11).toInt, (3 + k % 15).toInt, checksum = true)
           seqF ++ hufF ++ entF
-        })
-        val out = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-          .withColumn("payload", mk(col("media_id")))
+        }
+        val out = Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk)
           .select(col("media_id"), col("payload"))
           .as[(Long, Array[Byte])]
           .flatMap { case (id, p) =>
@@ -5982,12 +5965,11 @@ object CorpusQueries {
     Q(
       "q_wet_text",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val wet = udf((k: Long) => graft.operators.Warc.syntheticWet(k, 6))
+        val blobs = Q.nationKeys(spark, dir, "media_id")
+        val wet = (k: Long) => graft.operators.Warc.syntheticWet(k, 6)
         val out = graft.operators.Warc.wetTexts(
           graft.operators.Warc.records(
-            blobs.withColumn("payload", wet(col("media_id"))),
+            Q.fixture(blobs, "media_id", "payload")(wet),
             "media_id", "payload"))
         Q.requireNoShuffle(out)
         out
@@ -6015,13 +5997,11 @@ object CorpusQueries {
     Q(
       "q_wet_pipeline",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val wet = udf((k: Long) =>
-          graft.operators.Warc.syntheticWet(k, 8, withArms = true))
+        val wet = (k: Long) =>
+          graft.operators.Warc.syntheticWet(k, 8, withArms = true)
         val texts = graft.operators.Warc.wetTexts(
           graft.operators.Warc.records(
-            blobs.withColumn("payload", wet(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(wet),
             "media_id", "payload"))
         val out = graft.operators.Dedup.dropExactDuplicates(
           texts
@@ -6068,12 +6048,9 @@ object CorpusQueries {
     Q(
       "q_wat_links",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val wat = udf((k: Long) => graft.operators.Warc.syntheticWat(k, 8))
         val out = graft.operators.Warc.watLinks(
           graft.operators.Warc.records(
-            blobs.withColumn("payload", wat(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(watArchive),
             "media_id", "payload"))
         Q.requireNoShuffle(out)
         out
@@ -6105,12 +6082,9 @@ object CorpusQueries {
     Q(
       "q_wat_graph",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val wat = udf((k: Long) => graft.operators.Warc.syntheticWat(k, 8))
         val links = graft.operators.Warc.watLinks(
           graft.operators.Warc.records(
-            blobs.withColumn("payload", wat(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(watArchive),
             "media_id", "payload"))
         val edges = links.select(
           expr("parse_url(src_uri, 'HOST')").as("src"),
@@ -6151,12 +6125,9 @@ object CorpusQueries {
     Q(
       "q_html_links",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warc = udf((k: Long) => graft.operators.Warc.syntheticWarcHtml(k, 8))
         val texts = graft.operators.Warc.httpTexts(
           graft.operators.Warc.recordsBinary(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(htmlArchive),
             "media_id", "payload"))
           .select(col("media_id"), col("rec_idx"), col("target_uri"), col("text"))
         val out = graft.operators.Html.outlinks(texts, "target_uri", "text")
@@ -6203,12 +6174,9 @@ object CorpusQueries {
     Q(
       "q_html_graph",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warc = udf((k: Long) => graft.operators.Warc.syntheticWarcHtml(k, 8))
         val texts = graft.operators.Warc.httpTexts(
           graft.operators.Warc.recordsBinary(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(htmlArchive),
             "media_id", "payload"))
           .select(col("media_id"), col("rec_idx"), col("target_uri"), col("text"))
         val links = graft.operators.Html.outlinks(texts, "target_uri", "text")
@@ -6249,12 +6217,9 @@ object CorpusQueries {
     Q(
       "q_html_frontier",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warc = udf((k: Long) => graft.operators.Warc.syntheticWarcHtml(k, 8))
         val texts = graft.operators.Warc.httpTexts(
           graft.operators.Warc.recordsBinary(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(htmlArchive),
             "media_id", "payload"))
           .select(col("media_id"), col("rec_idx"), col("target_uri"), col("text"))
         val crawled = texts.select(
@@ -6331,21 +6296,17 @@ object CorpusQueries {
         // the n%5==0 blob subset makes the link graph ASYMMETRIC (all
         // seeds share residue 0, so in-link mass skews across hosts) —
         // differentiated ranks are the point: budgets must DIFFER
-        val blobs = Q.t(spark, dir, "nation")
-          .filter(col("n_nationkey") % 5 === 0)
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val wat = udf((k: Long) => graft.operators.Warc.syntheticWat(k, 8))
+        val blobs = Q.nationKeys(spark, dir, "media_id").filter(col("media_id") % 5 === 0)
         val links = graft.operators.Warc.watLinks(
           graft.operators.Warc.records(
-            blobs.withColumn("payload", wat(col("media_id"))),
+            Q.fixture(blobs, "media_id", "payload")(watArchive),
             "media_id", "payload"))
         val ranks = Graph.pageRankInt(
           links.select(expr("parse_url(src_uri, 'HOST')").as("src"),
             expr("parse_url(href, 'HOST')").as("dst")),
           "src", "dst", iters = 2)
-        val frontier = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("k"),
-            explode(expr("sequence(0, 5)")).as("i"))
+        val frontier = Q.nationKeys(spark, dir, "k")
+          .select(col("k"), explode(expr("sequence(0, 5)")).as("i"))
           .select(
             concat(lit("site"), (col("k") + col("i")) % 5,
               lit(".example")).as("host"),
@@ -6418,17 +6379,15 @@ object CorpusQueries {
       "q_zstd_dict",
       (spark, dir) => {
         import spark.implicits._
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           import graft.operators.ZstdDecode._
           val dictContent = s"Dk$k word ".getBytes("US-ASCII")
           dictFrame(dictContent) ++
             zstdFrameDictSeq(dictContent, (4 + k % 3).toInt,
               s"tail$k".getBytes("US-ASCII"), checksum = true) ++
             zstdFrameRaw(s"plain$k".getBytes("US-ASCII"), checksum = true)
-        })
-        val out = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-          .withColumn("payload", mk(col("media_id")))
+        }
+        val out = Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk)
           .select(col("media_id"), col("payload"))
           .as[(Long, Array[Byte])]
           .flatMap { case (id, p) =>
@@ -6475,12 +6434,10 @@ object CorpusQueries {
     Q(
       "q_warc_charset",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warc = udf((k: Long) => graft.operators.Warc.syntheticWarcCharsets(k))
+        val warc = (k: Long) => graft.operators.Warc.syntheticWarcCharsets(k)
         val out = graft.operators.Warc.httpTexts(
           graft.operators.Warc.recordsBinary(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(warc),
             "media_id", "payload"))
         Q.requireNoShuffle(out)
         out
@@ -6550,12 +6507,10 @@ object CorpusQueries {
     Q(
       "q_warc_encoding",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warc = udf((k: Long) => graft.operators.Warc.syntheticWarcEncodings(k))
+        val warc = (k: Long) => graft.operators.Warc.syntheticWarcEncodings(k)
         val out = graft.operators.Warc.httpTexts(
           graft.operators.Warc.recordsBinary(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(warc),
             "media_id", "payload"))
         Q.requireNoShuffle(out)
         out
@@ -6606,8 +6561,6 @@ object CorpusQueries {
     Q(
       "q_crawl_pipeline",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
         // the archive interleaves revisit/request records the way real
         // Common-Crawl files do — the response screen must hold its
         // output EXACTLY (same oracle) with them present; the ledger
@@ -6617,9 +6570,9 @@ object CorpusQueries {
         // → httpTexts) de-frames and inflates them, so the oracle hash
         // is UNCHANGED from the plain-body fixture: transfer and
         // content codings must be invisible to everything downstream
-        val warc = udf((k: Long) =>
+        val warc = (k: Long) =>
           graft.operators.Warc.syntheticWarcCrawl(k, 8,
-            withNonResponses = true, withEncodings = true))
+            withNonResponses = true, withEncodings = true)
         // admission is the EXACT RFC 9309 matcher (wildcards honored);
         // the wildcard disallow below matches NO fixture path, so the
         // admitted set is what a correct reading of the rules gives —
@@ -6634,7 +6587,7 @@ object CorpusQueries {
         val rulesCons = graft.operators.Robots.effectiveRules(parsed, "graftbot")
         val http = graft.operators.Warc.httpTexts(
           graft.operators.Warc.recordsBinary(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(warc),
             "media_id", "payload"))
           .filter(col("status") === 200 && col("content_type") === "text/html")
         val canoned = http
@@ -6712,10 +6665,8 @@ object CorpusQueries {
     Q(
       "q_crawl_ledger",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warc = udf((k: Long) =>
-          graft.operators.Warc.syntheticWarcCrawl(k, 8, withNonResponses = true))
+        val warc = (k: Long) =>
+          graft.operators.Warc.syntheticWarcCrawl(k, 8, withNonResponses = true)
         val robotsTxt = "User-agent: *\nDisallow: /a1\n"
         val rules = graft.operators.Robots.effectiveRules(
           (0 until 5).flatMap(m =>
@@ -6726,7 +6677,7 @@ object CorpusQueries {
           .orderBy(col("media_id").asc, col("rec_idx").asc)
         val out = graft.operators.Warc.httpLedger(
           graft.operators.Warc.records(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(warc),
             "media_id", "payload"))
           .withColumn("canon",
             graft.functions.GraftFunctions.urlCanon(col("target_uri")))
@@ -6807,12 +6758,10 @@ object CorpusQueries {
     Q(
       "q_crawl_ledger_wire",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val warc = udf((k: Long) =>
+        val warc = (k: Long) =>
           graft.operators.Warc.syntheticWarcCrawl(k, 8,
             withNonResponses = true, withEncodings = true,
-            badEncodingEvery = 3))
+            badEncodingEvery = 3)
         val robotsTxt = "User-agent: *\nDisallow: /a1\n"
         val rules = graft.operators.Robots.effectiveRules(
           (0 until 5).flatMap(m =>
@@ -6823,7 +6772,7 @@ object CorpusQueries {
           .orderBy(col("media_id").asc, col("rec_idx").asc)
         val out = graft.operators.Warc.httpLedgerBytes(
           graft.operators.Warc.recordsBinary(
-            blobs.withColumn("payload", warc(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(warc),
             "media_id", "payload"))
           .withColumn("canon",
             graft.functions.GraftFunctions.urlCanon(col("target_uri")))

@@ -49,6 +49,46 @@ object DumpQueries {
       else Seq.empty)
   }
 
+  /** The 13-arm office grid q_office_triage and q_office_pipeline
+    * share, keyed k % 13: the routing the triage pins and the
+    * accounting the pipeline pins read the same payloads.
+    */
+  private def officeGrid(k: Long): Array[Byte] = (k % 13) match {
+    case 0 => graft.operators.Docx.docx(Seq(Seq(s"word doc $k")))
+    case 1 => graft.operators.Pptx.pptx(Seq(Seq(s"slide $k")))
+    case 2 => graft.operators.Odt.odt(Seq(s"odt doc $k"))
+    case 3 => s"{\\rtf1\\ansi legacy $k\\par tail $k}".getBytes("ISO-8859-1")
+    case 4 => graft.operators.Xlsx.xlsxGrid(Seq(
+      (1, Seq(("s", s"cell $k"), ("n", s"$k"))),
+      (2, Seq(("is", s"note $k")))))
+    case 5 => graft.operators.Cfb.encryptedOoxmlFixture(k)
+    case 6 => s"legacy junk $k".getBytes("UTF-8")
+    case 7 => graft.operators.Doc.doc(Seq(s"legacy word $k", s"body $k"))
+    case 8 => graft.operators.Odt.ods(Seq(Seq(s"sheet cell $k", "2")))
+    case 9 => graft.operators.Odt.odp(Seq(Seq(s"deck $k")))
+    case 10 => graft.operators.Ppt.ppt(Seq(Seq(s"old deck $k", s"pt $k")))
+    case 11 => graft.operators.Xls.xls(Seq(
+      (1, Seq(("s", s"sheet97 $k"), ("n", "7")))))
+    case _ => graft.operators.Msg.msg(s"Re: topic $k", s"sender $k",
+      s"hello body $k", Seq("alice", "bob"),
+      // the attachment is ROUTING-TRANSPARENT here: routedText's
+      // msg row (kind/units/text) must not change — only the
+      // pipeline's corpusRows surface opens it
+      attachFiles = Seq((s"rep$k.docx",
+        graft.operators.Docx.docx(Seq(Seq(s"attach $k"))))))
+  }
+
+  /** One CDXJ line of the q_cdx_* fixtures: capture `i` of site `k`. */
+  private def cdxLine(k: Long, i: Int, extra: String): String =
+    s"""com,site$k)/p$i 2026010$i {"url": "http://site$k.com/p$i", """ +
+      s""""filename": "crawl-$k.warc.gz"$extra}"""
+
+  /** Site `k`'s three 200 text/html captures, which q_cdx_index parses
+    * and q_cdx_lookup joins against.
+    */
+  private def cdxCaptures(k: Long): Seq[String] = (0 until 3).map(i => cdxLine(k, i,
+    s""", "offset": "${i * 1000}", "length": "800", "status": "200", "mime": "text/html""""))
+
   val all: Seq[Q] = Seq(
 
     // The bzip2 MULTISTREAM ingest — Wikipedia's dump layout:
@@ -64,15 +104,13 @@ object DumpQueries {
       "q_bz2_decode",
       (spark, dir) => {
         import spark.implicits._
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val m0 = (s"w${k % 7}x " * (5 + k % 4).toInt + s"end$k").getBytes("US-ASCII")
           val m2 = ("abacad" * (3 + (k % 3)).toInt).getBytes("US-ASCII")
           DumpDecode.bz2Member(m0) ++ DumpDecode.bz2Member(Array.emptyByteArray) ++
             DumpDecode.bz2Member(m2)
-        })
-        val out = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-          .withColumn("payload", mk(col("media_id")))
+        }
+        val out = Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk)
           .as[(Long, Array[Byte])]
           .flatMap { case (id, p) =>
             DumpDecode.bz2Members(p).zipWithIndex.map {
@@ -106,16 +144,14 @@ object DumpQueries {
       "q_xz_decode",
       (spark, dir) => {
         import spark.implicits._
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val m0 = (s"w${k % 7}x " * (5 + k % 4).toInt + s"end$k").getBytes("US-ASCII")
           val m1 = ("abacad" * (3 + (k % 3)).toInt).getBytes("US-ASCII")
           val s1 = DumpDecode.xzMember(m1)
           DumpDecode.xzMember(m0) ++
             (if (k % 2 == 0) s1 else s1.take(s1.length / 2))
-        })
-        val out = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-          .withColumn("payload", mk(col("media_id")))
+        }
+        val out = Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk)
           .as[(Long, Array[Byte])]
           .flatMap { case (id, p) =>
             DumpDecode.xzMembers(p).zipWithIndex.map {
@@ -147,7 +183,7 @@ object DumpQueries {
     Q(
       "q_tar_entries",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val n = (2 + k % 3).toInt
           val files = Seq((s"shard$k/", "5", Array.emptyByteArray)) ++
             (0 until n).flatMap { i =>
@@ -159,11 +195,9 @@ object DumpQueries {
               Seq((s"shard$k/" + "L" * 95 + "/x.json", "0", "{}".getBytes("US-ASCII")))
             else Seq.empty)
           TarShard.tar(files)
-        })
+        }
         val out = TarShard.entryRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -201,12 +235,10 @@ object DumpQueries {
     Q(
       "q_tar_samples",
       (spark, dir) => {
-        val mk = udf((k: Long) =>
-          TarShard.tar(shardSampleMembers(k).map { case (n, d) => (n, "0", d) }))
+        val mk = (k: Long) =>
+          TarShard.tar(shardSampleMembers(k).map { case (n, d) => (n, "0", d) })
         val out = TarShard.sampleRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
           .withColumn("content", col("data").cast("string"))
           .drop("data")
@@ -226,7 +258,7 @@ object DumpQueries {
       "q_tar_compressed",
       (spark, dir) => {
         import spark.implicits._
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val tarBytes = TarShard.tar(shardSampleMembers(k).map { case (n, d) => (n, "0", d) })
           k % 4 match {
             case 0 => tarBytes
@@ -234,10 +266,8 @@ object DumpQueries {
             case 2 => graft.operators.ZstdDecode.zstdFrameRaw(tarBytes, checksum = true)
             case _ => DumpDecode.bz2Member(tarBytes)
           }
-        })
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-          .withColumn("payload", mk(col("media_id")))
+        }
+        val blobs = Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk)
           .as[(Long, Array[Byte])]
           .map { case (id, p) => (id, DumpDecode.decompressAuto(p)) }
           .toDF("media_id", "payload")
@@ -262,13 +292,11 @@ object DumpQueries {
     Q(
       "q_zip_entries",
       (spark, dir) => {
-        val mk = udf((k: Long) => ZipShard.zip(
+        val mk = (k: Long) => ZipShard.zip(
           shardSampleMembers(k), deflate = k % 2 == 0, descriptor = k % 4 == 0,
-          zip64 = k % 3 == 0))
+          zip64 = k % 3 == 0)
         val out = ZipShard.entryRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -303,12 +331,10 @@ object DumpQueries {
     Q(
       "q_zip_samples",
       (spark, dir) => {
-        val mk = udf((k: Long) =>
-          ZipShard.zip(shardSampleMembers(k), deflate = true, descriptor = true))
+        val mk = (k: Long) =>
+          ZipShard.zip(shardSampleMembers(k), deflate = true, descriptor = true)
         val out = ZipShard.sampleRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
           .withColumn("content", col("data").cast("string"))
           .drop("data")
@@ -327,7 +353,7 @@ object DumpQueries {
       "q_tar_pipeline",
       (spark, dir) => {
         import spark.implicits._
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val n = (2 + k % 2).toInt
           TarShard.tar((0 until n).flatMap { i =>
             Seq(
@@ -335,10 +361,8 @@ object DumpQueries {
                 Multimodal.syntheticBmp(k * 7 + i, (3 + (k + i) % 4).toInt, (2 + (k + 2 * i) % 3).toInt)),
               (f"$i%06d.txt", "0", ("tok " * (2 + i) + "end").getBytes("US-ASCII")))
           })
-        })
-        val shards = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-          .withColumn("payload", mk(col("media_id")))
+        }
+        val shards = Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk)
         val out = shards
           .as[(Long, Array[Byte])]
           .flatMap { case (id, p) =>
@@ -380,7 +404,7 @@ object DumpQueries {
     Q(
       "q_wiki_pages",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           "<mediawiki xml:lang=\"en\">\n" +
             XmlDump.pageXml(k * 10, 0, s"Page $k", None, s"Body [[Topic ${k % 5}]] of $k") +
             XmlDump.pageXml(k * 10 + 1, 0, s"Redir $k", Some(s"Page $k"), s"#REDIRECT [[Page $k]]") +
@@ -388,11 +412,9 @@ object DumpQueries {
             (if (k % 4 == 0) XmlDump.pageXml(k * 10 + 3, 0, s"A&B <$k>", None, s"e&e $k") else "") +
             (if (k % 3 == 0) "  <page>\n    <title>Torn</title>\n    <ns>0</ns>" else "") +
             "</mediawiki>"
-        })
+        }
         val out = XmlDump.pageRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("xml", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "xml")(mk),
           "media_id", "xml")
         Q.requireNoShuffle(out)
         out
@@ -432,14 +454,12 @@ object DumpQueries {
     Q(
       "q_wiki_text",
       (spark, dir) => {
-        val strip = udf((k: Long) => XmlDump.stripWikitext(
+        val strip = (k: Long) => XmlDump.stripWikitext(
           s"== Heading $k ==\n'''Bold''' text {{tmpl|x=$k}}with [[Link $k|label $k]] " +
             s"and [[Plain$k]], see <ref name=a>junk</ref>[https://e.com/$k ext $k] rest " +
             s"{| tbl |} &amp; <b>tail</b>$k" +
-            (if (k % 2 == 1) s"\npix [[File:p$k.jpg|thumb|a [[l]] cap]] done" else "")))
-        val out = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-          .withColumn("plain", strip(col("media_id")))
+            (if (k % 2 == 1) s"\npix [[File:p$k.jpg|thumb|a [[l]] cap]] done" else ""))
+        val out = Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "plain")(strip)
         Q.requireNoShuffle(out)
         out
       },
@@ -465,7 +485,7 @@ object DumpQueries {
       "q_wiki_pipeline",
       (spark, dir) => {
         import spark.implicits._
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val header = "<mediawiki xml:lang=\"en\">\n  <siteinfo>\n    <sitename>Fixture</sitename>\n  </siteinfo>\n"
           val batch1 =
             XmlDump.pageXml(k * 10, 0, s"Page $k",
@@ -480,10 +500,8 @@ object DumpQueries {
           DumpDecode.bz2Member(header.getBytes("UTF-8")) ++
             DumpDecode.bz2Member(batch1.getBytes("UTF-8")) ++
             DumpDecode.bz2Member(batch2.getBytes("UTF-8"))
-        })
-        val pages = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-          .withColumn("payload", mk(col("media_id")))
+        }
+        val pages = Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk)
           .as[(Long, Array[Byte])]
           .flatMap { case (id, p) =>
             DumpDecode.bz2Members(p)
@@ -542,14 +560,12 @@ object DumpQueries {
       "q_wiki_graph",
       (spark, dir) => {
         import spark.implicits._
-        val mk = udf((k: Long) =>
+        val mk = (k: Long) =>
           XmlDump.pageXml(k * 10, 0, s"Page ${k % 5}", None,
             s"Intro [[Page ${(k + 1) % 5}]] mid [[Page ${(k + 2) % 5}|alias]] " +
               s"see [[Page_${(k + 3) % 5}#History]] also [[page ${(k + 4) % 5}]] " +
-              "[[File:x.jpg|thumb|cap]][[Category:Z]] tail"))
-        val pages = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-          .withColumn("xml", mk(col("media_id")))
+              "[[File:x.jpg|thumb|cap]][[Category:Z]] tail")
+        val pages = Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "xml")(mk)
           .as[(Long, String)]
           .flatMap { case (_, xml) =>
             XmlDump.pages(xml).flatMap(pg =>
@@ -579,7 +595,7 @@ object DumpQueries {
     Q(
       "q_feed_discovery",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val n = (2 + k % 2).toInt
           val items = (0 until n).map { i =>
             if (k % 2 == 0)
@@ -592,11 +608,10 @@ object DumpQueries {
           val torn = if (k % 3 == 0) (if (k % 2 == 0) "\n<item><title>torn" else "\n<entry><title>torn") else ""
           if (k % 2 == 0) s"""<?xml version="1.0"?><rss><channel>$items$torn</channel></rss>"""
           else s"""<?xml version="1.0"?><feed><link rel="self" href="http://d$k.example/feed"/>$items$torn</feed>"""
-        })
+        }
         val out = graft.operators.Feeds.itemRows(
-          Q.t(spark, dir, "nation")
-            .select(concat(lit("d"), col("n_nationkey"), lit(".example")).as("domain"),
-              mk(col("n_nationkey").cast("long")).as("xml")),
+          Q.fixture(Q.nationKeys(spark, dir, "k"), "k", "xml")(mk)
+            .select(concat(lit("d"), col("k"), lit(".example")).as("domain"), col("xml")),
           "domain", "xml")
         Q.requireNoShuffle(out)
         out
@@ -625,9 +640,9 @@ object DumpQueries {
     Q(
       "q_dump_delta",
       (spark, dir) => {
-        val gen0 = udf((k: Long) =>
-          (0 until 4).map(i => XmlDump.pageXml(k * 100 + i, 0, s"P $k-$i", None, s"t$i of $k")).mkString)
-        val gen1 = udf((k: Long) =>
+        val gen0 = (k: Long) =>
+          (0 until 4).map(i => XmlDump.pageXml(k * 100 + i, 0, s"P $k-$i", None, s"t$i of $k")).mkString
+        val gen1 = (k: Long) =>
           XmlDump.pageXml(k * 100 + 1, 0, s"P $k-1", None, s"t1 v2 of $k",
             revId = (k * 100 + 1) * 1000 + 7) +
             XmlDump.pageXml(k * 100 + 4, 0, s"P $k-4", None, s"t4 of $k") +
@@ -641,11 +656,10 @@ object DumpQueries {
             (if (k % 4 == 1)
               s"  <page>\n    <title>NoId $k</title>\n    <ns>0</ns>\n" +
                 s"    <revision>\n      <id>5</id>\n      <text>anon $k</text>\n    </revision>\n  </page>\n"
-            else ""))
-        val keys = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        def rows(mk: org.apache.spark.sql.expressions.UserDefinedFunction) =
-          XmlDump.pageRows(keys.withColumn("xml", mk(col("media_id"))), "media_id", "xml")
+            else "")
+        val keys = Q.nationKeys(spark, dir, "media_id")
+        def rows(mk: Long => String) =
+          XmlDump.pageRows(Q.fixture(keys, "media_id", "xml")(mk), "media_id", "xml")
             .drop("media_id", "page_idx", "ns", "redirect")
         val out = XmlDump.mergeDumps(rows(gen0), rows(gen1))
           .select(col("page_id"), col("rev_id"), col("title"), col("verdict"))
@@ -679,17 +693,16 @@ object DumpQueries {
     Q(
       "q_feed_frontier",
       (spark, dir) => {
-        val mk = udf((k: Long) =>
+        val mk = (k: Long) =>
           s"""<?xml version="1.0"?><rss><channel>""" +
             s"<item><link>http://site${k % 5}.example/p/${k}a</link></item>" +
             s"<item><link>http://site${k % 5}.example/p/${k}b</link></item>" +
             s"<item><link>http://site${(k + 1) % 5}.example/x/$k</link></item>" +
-            "</channel></rss>")
-        val keys = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("k"))
+            "</channel></rss>"
+        val keys = Q.nationKeys(spark, dir, "k")
         val feeds = graft.operators.Feeds.itemRows(
-          keys.select(concat(lit("site"), col("k") % 5, lit(".example")).as("domain"),
-            mk(col("k")).as("xml")),
+          Q.fixture(keys, "k", "xml")(mk)
+            .select(concat(lit("site"), col("k") % 5, lit(".example")).as("domain"), col("xml")),
           "domain", "xml")
         val crawled = keys.filter(col("k") % 3 === 0)
           .select(concat(lit("http://site"), col("k") % 5, lit(".example/p/"),
@@ -751,8 +764,7 @@ object DumpQueries {
       "q_dump_index",
       (spark, dir) => {
         import spark.implicits._
-        val out = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("k"))
+        val out = Q.nationKeys(spark, dir, "k")
           .as[Long]
           .flatMap { k =>
             val header = DumpDecode.bz2Member("<mediawiki>\n".getBytes("UTF-8"))
@@ -813,7 +825,7 @@ object DumpQueries {
     Q(
       "q_html_noindex",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val meta = (k % 5) match {
             case 0 => ""
             case 1 => "<meta name=\"robots\" content=\"noindex\">"
@@ -833,12 +845,10 @@ object DumpQueries {
             s"WARC-Target-URI: http://s$k.example/page\r\n" +
             s"Content-Length: ${body.getBytes("UTF-8").length}\r\n" +
             s"\r\n$body\r\n\r\n").getBytes("UTF-8")
-        })
+        }
         val ind = graft.operators.Warc.httpIndexability(
           graft.operators.Warc.recordsBinary(
-            Q.t(spark, dir, "nation")
-              .select(col("n_nationkey").cast("long").as("media_id"))
-              .withColumn("payload", mk(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
             "media_id", "payload"))
         val mask = col("x_mask").bitwiseOR(
           graft.functions.GraftFunctions.htmlMetaRobots(col("text")))
@@ -884,7 +894,7 @@ object DumpQueries {
       (spark, dir) => {
         import spark.implicits._
         val budget = 30L
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val n = (3 + k % 3).toInt
           TarShard.tar((0 until n).flatMap { i =>
             Seq(
@@ -892,10 +902,8 @@ object DumpQueries {
                 Multimodal.syntheticBmp(k * 7 + i, (3 + (k + i) % 4).toInt, (2 + (k + 2 * i) % 3).toInt)),
               (f"$i%06d.txt", "0", ("tok " * (2 + i) + "end").getBytes("US-ASCII")))
           })
-        })
-        val out = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-          .withColumn("payload", mk(col("media_id")))
+        }
+        val out = Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk)
           .as[(Long, Array[Byte])]
           .flatMap { case (id, p) =>
             var cum = 0L
@@ -958,13 +966,12 @@ object DumpQueries {
       "q_corpus_union",
       (spark, dir) => {
         import spark.implicits._
-        val keys = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
+        val keys = Q.nationKeys(spark, dir, "media_id")
 
-        val dumpXml = udf((k: Long) => DumpDecode.bz2Member(
+        val dumpXml = (k: Long) => DumpDecode.bz2Member(
           XmlDump.pageXml(k * 10, 0, s"D $k", None,
-            if (k % 2 == 0) s"common ${k % 4}" else s"'''dump''' only $k").getBytes("UTF-8")))
-        val dump = keys.withColumn("payload", dumpXml(col("media_id")))
+            if (k % 2 == 0) s"common ${k % 4}" else s"'''dump''' only $k").getBytes("UTF-8"))
+        val dump = Q.fixture(keys, "media_id", "payload")(dumpXml)
           .as[(Long, Array[Byte])]
           .flatMap { case (id, p) =>
             DumpDecode.bz2Members(p)
@@ -974,107 +981,107 @@ object DumpQueries {
           .toDF("media_id", "text")
           .withColumn("source", lit("dump"))
 
-        val warcMk = udf((k: Long) => {
+        val warcMk = (k: Long) => {
           val payload = if (k % 5 == 0) s"common ${k % 4}" else s"crawl only $k"
           val body = "HTTP/1.1 200 OK\r\nContent-Type: text/plain; charset=utf-8\r\n\r\n" + payload
           (s"WARC/1.0\r\nWARC-Type: response\r\n" +
             s"WARC-Target-URI: http://c$k.example/p\r\n" +
             s"Content-Length: ${body.getBytes("UTF-8").length}\r\n" +
             s"\r\n$body\r\n\r\n").getBytes("UTF-8")
-        })
+        }
         val crawl = graft.operators.Warc.httpTexts(
           graft.operators.Warc.recordsBinary(
-            keys.withColumn("payload", warcMk(col("media_id"))), "media_id", "payload"))
+            Q.fixture(keys, "media_id", "payload")(warcMk), "media_id", "payload"))
           .filter(col("status") === 200)
           .select(col("media_id"), col("text"))
           .withColumn("source", lit("crawl"))
 
-        val pdfMk = udf((k: Long) => graft.operators.Pdf.pdf(Seq(graft.operators.Pdf.Page(
+        val pdfMk = (k: Long) => graft.operators.Pdf.pdf(Seq(graft.operators.Pdf.Page(
           graft.operators.Pdf.contentOps(Seq(
-            if (k % 7 == 0) s"common ${k % 4}" else s"pdf only $k"))))))
+            if (k % 7 == 0) s"common ${k % 4}" else s"pdf only $k")))))
         val pdfSrc = graft.operators.Pdf.textRows(
-          keys.withColumn("payload", pdfMk(col("media_id"))), "media_id", "payload")
+          Q.fixture(keys, "media_id", "payload")(pdfMk), "media_id", "payload")
           .filter(col("stage") === "ok")
           .select(col("media_id"), col("text"))
           .withColumn("source", lit("pdf"))
 
-        val docxMk = udf((k: Long) => graft.operators.Docx.docx(Seq(Seq(
-          if (k % 13 == 0) s"common ${k % 4}" else s"docx only $k"))))
+        val docxMk = (k: Long) => graft.operators.Docx.docx(Seq(Seq(
+          if (k % 13 == 0) s"common ${k % 4}" else s"docx only $k")))
         val docxSrc = graft.operators.Docx.textRows(
-          keys.withColumn("payload", docxMk(col("media_id"))), "media_id", "payload")
+          Q.fixture(keys, "media_id", "payload")(docxMk), "media_id", "payload")
           .filter(col("stage") === "ok")
           .select(col("media_id"), col("text"))
           .withColumn("source", lit("docx"))
 
-        val docMk = udf((k: Long) => graft.operators.Doc.doc(Seq(
-          if (k % 23 == 0) s"common ${k % 4}" else s"doc only $k")))
+        val docMk = (k: Long) => graft.operators.Doc.doc(Seq(
+          if (k % 23 == 0) s"common ${k % 4}" else s"doc only $k"))
         val docSrc = graft.operators.Doc.textRows(
-          keys.withColumn("payload", docMk(col("media_id"))), "media_id", "payload")
+          Q.fixture(keys, "media_id", "payload")(docMk), "media_id", "payload")
           .filter(col("stage") === "ok")
           .select(col("media_id"), col("text"))
           .withColumn("source", lit("doc"))
 
-        val pptxMk = udf((k: Long) => graft.operators.Pptx.pptx(Seq(Seq(
-          if (k % 19 == 0) s"common ${k % 4}" else s"pptx only $k"))))
+        val pptxMk = (k: Long) => graft.operators.Pptx.pptx(Seq(Seq(
+          if (k % 19 == 0) s"common ${k % 4}" else s"pptx only $k")))
         val pptxSrc = graft.operators.Pptx.textRows(
-          keys.withColumn("payload", pptxMk(col("media_id"))), "media_id", "payload")
+          Q.fixture(keys, "media_id", "payload")(pptxMk), "media_id", "payload")
           .filter(col("stage") === "ok")
           .select(col("media_id"), col("text"))
           .withColumn("source", lit("pptx"))
 
-        val pptMk = udf((k: Long) => graft.operators.Ppt.ppt(Seq(Seq(
-          if (k % 29 == 0) s"common ${k % 4}" else s"ppt only $k"))))
+        val pptMk = (k: Long) => graft.operators.Ppt.ppt(Seq(Seq(
+          if (k % 29 == 0) s"common ${k % 4}" else s"ppt only $k")))
         val pptSrc = graft.operators.Ppt.textRows(
-          keys.withColumn("payload", pptMk(col("media_id"))), "media_id", "payload")
+          Q.fixture(keys, "media_id", "payload")(pptMk), "media_id", "payload")
           .filter(col("stage") === "ok")
           .select(col("media_id"), col("text"))
           .withColumn("source", lit("ppt"))
 
-        val xlsMk = udf((k: Long) => graft.operators.Xls.xls(Seq((1, Seq(
-          ("s", if (k % 31 == 0) s"common ${k % 4}" else s"xls only $k"))))))
+        val xlsMk = (k: Long) => graft.operators.Xls.xls(Seq((1, Seq(
+          ("s", if (k % 31 == 0) s"common ${k % 4}" else s"xls only $k")))))
         val xlsSrc = graft.operators.Xls.textRows(
-          keys.withColumn("payload", xlsMk(col("media_id"))), "media_id", "payload")
+          Q.fixture(keys, "media_id", "payload")(xlsMk), "media_id", "payload")
           .filter(col("stage") === "ok")
           .select(col("media_id"), col("text"))
           .withColumn("source", lit("xls"))
 
-        val msgMk = udf((k: Long) => graft.operators.Msg.msg(null, s"s$k",
-          if (k % 37 == 0) s"common ${k % 4}" else s"msg only $k", Seq("r")))
+        val msgMk = (k: Long) => graft.operators.Msg.msg(null, s"s$k",
+          if (k % 37 == 0) s"common ${k % 4}" else s"msg only $k", Seq("r"))
         val msgSrc = graft.operators.Msg.textRows(
-          keys.withColumn("payload", msgMk(col("media_id"))), "media_id", "payload")
+          Q.fixture(keys, "media_id", "payload")(msgMk), "media_id", "payload")
           .filter(col("stage") === "ok")
           .select(col("media_id"), col("text"))
           .withColumn("source", lit("msg"))
 
-        val epubMk = udf((k: Long) => graft.operators.Epub.epub(Seq(
-          ("c0.xhtml", if (k % 9 == 0) s"common ${k % 4}" else s"epub only $k"))))
+        val epubMk = (k: Long) => graft.operators.Epub.epub(Seq(
+          ("c0.xhtml", if (k % 9 == 0) s"common ${k % 4}" else s"epub only $k")))
         val epubSrc = graft.operators.Epub.chapterRows(
-          keys.withColumn("payload", epubMk(col("media_id"))), "media_id", "payload")
+          Q.fixture(keys, "media_id", "payload")(epubMk), "media_id", "payload")
           .select(col("media_id"), col("xhtml").as("text")) // fixture chapters are bare text
           .withColumn("source", lit("epub"))
 
-        val latexMk = udf((k: Long) => graft.operators.CompressedMeta.gzipMember(
+        val latexMk = (k: Long) => graft.operators.CompressedMeta.gzipMember(
           graft.operators.TarShard.tar(Seq((s"p$k/main.tex", "0",
-            (if (k % 17 == 0) s"common ${k % 4}" else s"latex only $k").getBytes("UTF-8"))))))
+            (if (k % 17 == 0) s"common ${k % 4}" else s"latex only $k").getBytes("UTF-8")))))
         val latexSrc = graft.operators.Latex.texRows(
-          keys.withColumn("payload", latexMk(col("media_id"))), "media_id", "payload")
+          Q.fixture(keys, "media_id", "payload")(latexMk), "media_id", "payload")
           .select(col("media_id"), col("text"))
           .withColumn("source", lit("latex"))
 
-        val avroMk = udf((k: Long) => graft.operators.Avro.ocf(
+        val avroMk = (k: Long) => graft.operators.Avro.ocf(
           """{"type":"record","name":"D","fields":[{"name":"text","type":"string"}]}""",
           Seq(Seq(graft.operators.Avro.AVStr(
-            if (k % 11 == 0) s"common ${k % 4}" else s"avro only $k"))), seed = k))
+            if (k % 11 == 0) s"common ${k % 4}" else s"avro only $k"))), seed = k)
         val avroSrc = graft.operators.Avro.recordRows(
-          keys.withColumn("payload", avroMk(col("media_id"))), "media_id", "payload")
+          Q.fixture(keys, "media_id", "payload")(avroMk), "media_id", "payload")
           .filter(col("field") === "text")
           .select(col("media_id"), col("value").as("text"))
           .withColumn("source", lit("avro"))
 
-        val tarMk = udf((k: Long) => TarShard.tar(Seq((f"$k%06d.txt", "0",
-          (if (k % 3 == 0) s"common ${k % 4}" else s"shard only $k").getBytes("UTF-8")))))
+        val tarMk = (k: Long) => TarShard.tar(Seq((f"$k%06d.txt", "0",
+          (if (k % 3 == 0) s"common ${k % 4}" else s"shard only $k").getBytes("UTF-8"))))
         val shard = TarShard.sampleRows(
-          keys.withColumn("payload", tarMk(col("media_id"))), "media_id", "payload")
+          Q.fixture(keys, "media_id", "payload")(tarMk), "media_id", "payload")
           .filter(col("ext") === "txt")
           .select(col("media_id"), col("data").cast("string").as("text"))
           .withColumn("source", lit("shard"))
@@ -1196,7 +1203,7 @@ object DumpQueries {
     Q(
       "q_warc_revisit",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           def rec(wType: String, uri: String, digest: String, refers: String, body: String) = {
             val d = if (digest == null) "" else s"WARC-Payload-Digest: $digest\r\n"
             val r = if (refers == null) "" else s"WARC-Refers-To-Target-URI: $refers\r\n"
@@ -1213,12 +1220,10 @@ object DumpQueries {
             // a silent drop
             (if (k % 3 == 0) rec("revisit", s"http://r$k.example/nodigest", null, null, "") else "")
           (round1 + round2).getBytes("UTF-8")
-        })
+        }
         val out = graft.operators.Warc.resolveRevisits(
           graft.operators.Warc.records(
-            Q.t(spark, dir, "nation")
-              .select(col("n_nationkey").cast("long").as("media_id"))
-              .withColumn("payload", mk(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
             "media_id", "payload"))
         Q.requireMaxShuffles(out, 3)
         out
@@ -1268,7 +1273,7 @@ object DumpQueries {
           """{"type":"record","name":"R","fields":[
             |{"name":"id","type":"long"},{"name":"name","type":"string"},
             |{"name":"ok","type":"boolean"},{"name":"tag","type":"bytes"}]}""".stripMargin
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val n = (3 + k % 3).toInt
           val recs = (0 until n).map(i => Seq(
             graft.operators.Avro.AVLong(k * 100 + i),
@@ -1282,11 +1287,9 @@ object DumpQueries {
             c(c.length - 3) = (c(c.length - 3) ^ 0x55).toByte
             c
           } else blob
-        })
+        }
         val out = graft.operators.Avro.recordRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1325,7 +1328,7 @@ object DumpQueries {
           """{"type":"record","name":"R","fields":[{"name":"id","type":"long"}]}"""
         val unionSchema =
           """{"type":"record","name":"R","fields":[{"name":"u","type":["null","string"]}]}"""
-        val mk = udf((k: Long) => (k % 4) match {
+        val mk = (k: Long) => (k % 4) match {
           case 0 => graft.operators.Avro.ocf(okSchema,
             (0 until 3).map(i => Seq(graft.operators.Avro.AVLong(k + i))), seed = k)
           case 1 => graft.operators.Avro.ocf(okSchema,
@@ -1333,11 +1336,9 @@ object DumpQueries {
             codec = "snappy", seed = k)
           case 2 => graft.operators.Avro.ocf(unionSchema, Seq.empty, seed = k)
           case _ => s"junk $k".getBytes("UTF-8")
-        })
+        }
         val out = graft.operators.Avro.docRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1362,18 +1363,16 @@ object DumpQueries {
     Q(
       "q_epub_text",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val n = (2 + k % 2).toInt
           val chapters = (0 until n).map(i =>
             (s"ch$i.xhtml",
               s"<html><body><h1>Ch $i</h1><p>prose $k $i words here</p></body></html>"))
           graft.operators.Epub.epub(chapters,
             missing = if (k % 4 == 0) Set("ch1.xhtml") else Set.empty)
-        })
+        }
         val out = graft.operators.Epub.chapterRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
           .select(col("media_id"), col("chapter_idx"), col("href"),
             TextAnalysis.stripHtml(col("xhtml")).as("text"),
@@ -1405,7 +1404,7 @@ object DumpQueries {
     Q(
       "q_latex_text",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           if (k % 5 == 0) s"junk $k".getBytes("UTF-8")
           else {
             val tex = s"\\documentclass[11pt]{article}\n" +
@@ -1418,11 +1417,9 @@ object DumpQueries {
               (s"p$k/main.tex", "0", tex.getBytes("UTF-8")),
               (s"p$k/refs.bib", "0", s"@article{r$k}".getBytes("UTF-8")))))
           }
-        })
+        }
         val out = graft.operators.Latex.texRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1451,17 +1448,15 @@ object DumpQueries {
     Q(
       "q_docx_text",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 4) match {
+        val mk = (k: Long) => (k % 4) match {
           case 2 => graft.operators.Cfb.encryptedOoxmlFixture(k)
           case 3 => s"junk $k".getBytes("UTF-8")
           case _ => graft.operators.Docx.docx(
             Seq(Seq("Doc ", s"$k intro"), Seq(s"a\tb $k")) ++
               (if (k % 2 == 0) Seq(Seq.empty) else Seq.empty))
-        })
+        }
         val out = graft.operators.Docx.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1494,17 +1489,15 @@ object DumpQueries {
     Q(
       "q_odt_text",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 4) match {
+        val mk = (k: Long) => (k % 4) match {
           case 2 => graft.operators.Odt.odt(Seq(s"secret $k"), encrypted = true)
           case 3 => s"junk odt $k".getBytes("UTF-8")
           case _ => graft.operators.Odt.odt(
             Seq(s"Doc $k body") ++
               (if (k % 2 == 0) Seq(s"second $k") else Seq.empty))
-        })
+        }
         val out = graft.operators.Odt.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1537,17 +1530,15 @@ object DumpQueries {
     Q(
       "q_pptx_text",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 4) match {
+        val mk = (k: Long) => (k % 4) match {
           case 2 => graft.operators.Cfb.encryptedOoxmlFixture(k)
           case 3 => s"junk deck $k".getBytes("UTF-8")
           case _ => graft.operators.Pptx.pptx(
             Seq(Seq(s"Deck $k", s"point $k")) ++
               (if (k % 2 == 0) Seq(Seq(s"End $k")) else Seq.empty))
-        })
+        }
         val out = graft.operators.Pptx.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1582,34 +1573,8 @@ object DumpQueries {
     Q(
       "q_office_triage",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 13) match {
-          case 0 => graft.operators.Docx.docx(Seq(Seq(s"word doc $k")))
-          case 1 => graft.operators.Pptx.pptx(Seq(Seq(s"slide $k")))
-          case 2 => graft.operators.Odt.odt(Seq(s"odt doc $k"))
-          case 3 => s"{\\rtf1\\ansi legacy $k\\par tail $k}".getBytes("ISO-8859-1")
-          case 4 => graft.operators.Xlsx.xlsxGrid(Seq(
-            (1, Seq(("s", s"cell $k"), ("n", s"$k"))),
-            (2, Seq(("is", s"note $k")))))
-          case 5 => graft.operators.Cfb.encryptedOoxmlFixture(k)
-          case 6 => s"legacy junk $k".getBytes("UTF-8")
-          case 7 => graft.operators.Doc.doc(Seq(s"legacy word $k", s"body $k"))
-          case 8 => graft.operators.Odt.ods(Seq(Seq(s"sheet cell $k", "2")))
-          case 9 => graft.operators.Odt.odp(Seq(Seq(s"deck $k")))
-          case 10 => graft.operators.Ppt.ppt(Seq(Seq(s"old deck $k", s"pt $k")))
-          case 11 => graft.operators.Xls.xls(Seq(
-            (1, Seq(("s", s"sheet97 $k"), ("n", "7")))))
-          case _ => graft.operators.Msg.msg(s"Re: topic $k", s"sender $k",
-            s"hello body $k", Seq("alice", "bob"),
-            // the attachment is ROUTING-TRANSPARENT here: routedText's
-            // msg row (kind/units/text) must not change — only the
-            // pipeline's corpusRows surface opens it
-            attachFiles = Seq((s"rep$k.docx",
-              graft.operators.Docx.docx(Seq(Seq(s"attach $k"))))))
-        })
         val out = graft.operators.Office.routedText(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(officeGrid),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1650,9 +1615,9 @@ object DumpQueries {
     // two-token pptx AND odp arms REJECT at the 3-token floor while
     // the xls arm sits exactly ON it — the screen provably decides in
     // both directions), and the per-kind rollup pays the pipeline's
-    // ONE shuffle. The fixture grid is q_office_triage's k%13 grid
-    // VERBATIM, so the routing the triage pins and the accounting this
-    // gate pins can never drift; the oracle re-derives docs/admitted/
+    // ONE shuffle. The fixture is q_office_triage's k%13 grid
+    // ([[officeGrid]]), so the routing the triage pins and the
+    // accounting this gate pins can never drift; the oracle re-derives docs/admitted/
     // token totals per kind. Round 20: the stream rides corpusRows,
     // so the msg arm's docx ATTACHMENT joins the admission rollup on
     // the same container walk (2 tokens — the screen rejects it,
@@ -1660,34 +1625,8 @@ object DumpQueries {
     Q(
       "q_office_pipeline",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 13) match {
-          case 0 => graft.operators.Docx.docx(Seq(Seq(s"word doc $k")))
-          case 1 => graft.operators.Pptx.pptx(Seq(Seq(s"slide $k")))
-          case 2 => graft.operators.Odt.odt(Seq(s"odt doc $k"))
-          case 3 => s"{\\rtf1\\ansi legacy $k\\par tail $k}".getBytes("ISO-8859-1")
-          case 4 => graft.operators.Xlsx.xlsxGrid(Seq(
-            (1, Seq(("s", s"cell $k"), ("n", s"$k"))),
-            (2, Seq(("is", s"note $k")))))
-          case 5 => graft.operators.Cfb.encryptedOoxmlFixture(k)
-          case 6 => s"legacy junk $k".getBytes("UTF-8")
-          case 7 => graft.operators.Doc.doc(Seq(s"legacy word $k", s"body $k"))
-          case 8 => graft.operators.Odt.ods(Seq(Seq(s"sheet cell $k", "2")))
-          case 9 => graft.operators.Odt.odp(Seq(Seq(s"deck $k")))
-          case 10 => graft.operators.Ppt.ppt(Seq(Seq(s"old deck $k", s"pt $k")))
-          case 11 => graft.operators.Xls.xls(Seq(
-            (1, Seq(("s", s"sheet97 $k"), ("n", "7")))))
-          case _ => graft.operators.Msg.msg(s"Re: topic $k", s"sender $k",
-            s"hello body $k", Seq("alice", "bob"),
-            // the attachment is ROUTING-TRANSPARENT here: routedText's
-            // msg row (kind/units/text) must not change — only the
-            // pipeline's corpusRows surface opens it
-            attachFiles = Seq((s"rep$k.docx",
-              graft.operators.Docx.docx(Seq(Seq(s"attach $k"))))))
-        })
         val routed = graft.operators.Office.corpusRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(officeGrid),
           "media_id", "payload")
         val out = routed
           .withColumn("n_tokens",
@@ -1736,16 +1675,14 @@ object DumpQueries {
     Q(
       "q_xlsx_strings",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 4) match {
+        val mk = (k: Long) => (k % 4) match {
           case 3 => s"junk sheet $k".getBytes("UTF-8")
           case 0 => graft.operators.Xlsx.xlsx(Seq.empty, withSharedStrings = false)
           case _ => graft.operators.Xlsx.xlsx(
             Seq(s"Header $k", s"quarterly note $k", s"total $k"))
-        })
+        }
         val out = graft.operators.Xlsx.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1776,17 +1713,15 @@ object DumpQueries {
     Q(
       "q_xlsx_cells",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 3) match {
+        val mk = (k: Long) => (k % 3) match {
           case 2 => s"junk grid $k".getBytes("UTF-8")
           case _ => graft.operators.Xlsx.xlsxGrid(Seq(
             (1, Seq(("s", s"Name $k"), ("s", "Qty"))),
             (2, Seq(("is", s"widget $k"), ("n", s"${k * 2}"))),
             (3, Seq(("n", "3.5"), ("s", s"Name $k")))))
-        })
+        }
         val out = graft.operators.Xlsx.cellRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1824,7 +1759,7 @@ object DumpQueries {
     Q(
       "q_xlsx_dates",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 2) match {
+        val mk = (k: Long) => (k % 2) match {
           case 0 => graft.operators.Xlsx.xlsxGrid(Seq(
             (1, Seq(("s", "Date"), ("f14", s"${40000 + k}"), ("f164", s"${40100 + k}"))),
             (2, Seq(("f20", "0.5"), ("f22", s"${40000 + k}.75"), ("n", s"${40000 + k}"))),
@@ -1833,11 +1768,9 @@ object DumpQueries {
           case _ => graft.operators.Xlsx.xlsxGrid(Seq(
             (1, Seq(("f14", s"${30000 + k}"), ("n", "7.5")))),
             date1904 = true)
-        })
+        }
         val out = graft.operators.Xlsx.cellRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1881,7 +1814,7 @@ object DumpQueries {
     Q(
       "q_xls_dates",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 2) match {
+        val mk = (k: Long) => (k % 2) match {
           case 0 => graft.operators.Xls.xls(Seq(
             (1, Seq(("s", s"Dates $k"), ("f14", s"${40000 + k}"))),
             (2, Seq(("f20", "0.5"), ("f22", s"${40000 + k}.75"), ("f164", s"${40100 + k}"))),
@@ -1890,11 +1823,9 @@ object DumpQueries {
           case _ => graft.operators.Xls.xls(
             Seq((1, Seq(("f14", s"${30000 + k}"), ("n", "9")))),
             date1904 = true)
-        })
+        }
         val out = graft.operators.Xls.cellRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1936,7 +1867,7 @@ object DumpQueries {
     Q(
       "q_xls_biff5",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 3) match {
+        val mk = (k: Long) => (k % 3) match {
           case 0 => graft.operators.Xls.xls(Seq(
             (1, Seq(("l", s"alte tabelle $k"), ("n", s"$k"))),
             (2, Seq(("l", "café"), ("n", "2.5")))),
@@ -1946,11 +1877,9 @@ object DumpQueries {
             biff5 = true, codepage = 1251)
           case _ => graft.operators.Cfb.cfb(Seq(("Book",
             Array[Byte](0x09, 0x00, 0x04, 0x00, 0x00, 0x00, 0x10, 0x00))))
-        })
+        }
         val out = graft.operators.Xls.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1981,17 +1910,15 @@ object DumpQueries {
     Q(
       "q_doc_text",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 4) match {
+        val mk = (k: Long) => (k % 4) match {
           case 2 => graft.operators.Doc.doc(Seq(s"secret $k"), encrypted = true)
           case 3 => graft.operators.Docx.encryptedFixture(k) // junk OLE
           case _ => graft.operators.Doc.doc(
             Seq(s"Legacy doc $k", s"body\ttext $k") ++
               (if (k % 2 == 0) Seq(s"third $k") else Seq.empty))
-        })
+        }
         val out = graft.operators.Doc.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2022,16 +1949,14 @@ object DumpQueries {
     Q(
       "q_odp_text",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 3) match {
+        val mk = (k: Long) => (k % 3) match {
           case 2 => s"junk deck $k".getBytes("UTF-8")
           case _ => graft.operators.Odt.odp(
             Seq(Seq(s"Deck $k", s"point $k")) ++
               (if (k % 2 == 0) Seq(Seq(s"End $k")) else Seq.empty))
-        })
+        }
         val out = graft.operators.Odt.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2059,16 +1984,14 @@ object DumpQueries {
     Q(
       "q_ods_text",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 3) match {
+        val mk = (k: Long) => (k % 3) match {
           case 2 => s"junk sheet $k".getBytes("UTF-8")
           case 1 => graft.operators.Odt.ods(Seq(Seq(s"only $k", "1")))
           case _ => graft.operators.Odt.ods(Seq(
             Seq(s"Name $k", "Qty"), Seq(s"widget $k", s"${k * 2}")))
-        })
+        }
         val out = graft.operators.Odt.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2098,17 +2021,15 @@ object DumpQueries {
     Q(
       "q_ppt_text",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 4) match {
+        val mk = (k: Long) => (k % 4) match {
           case 2 => graft.operators.Ppt.ppt(Seq(Seq(s"locked $k")), encrypted = true)
           case 3 => graft.operators.Docx.encryptedFixture(k) // junk OLE
           case _ => graft.operators.Ppt.ppt(
             Seq(Seq(s"Deck $k", s"point $k")) ++
               (if (k % 2 == 0) Seq(Seq(s"End $k")) else Seq.empty))
-        })
+        }
         val out = graft.operators.Ppt.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2140,7 +2061,7 @@ object DumpQueries {
     Q(
       "q_xls_cells",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 3) match {
+        val mk = (k: Long) => (k % 3) match {
           case 2 => s"junk workbook $k".getBytes("UTF-8")
           case m => graft.operators.Xls.xls(Seq(
             (1, Seq(("s", s"Name $k"), ("s", "Qty"))),
@@ -2151,11 +2072,9 @@ object DumpQueries {
             // formula cells: cached string + cached numeric results
             (5, Seq(("fs", s"calc $k"), ("f", "2.5")))),
             split = m == 0)
-        })
+        }
         val out = graft.operators.Xls.cellRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2195,7 +2114,7 @@ object DumpQueries {
     Q(
       "q_msg_text",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 5) match {
+        val mk = (k: Long) => (k % 5) match {
           case 2 => graft.operators.Cfb.encryptedOoxmlFixture(k)
           case 3 => graft.operators.Docx.encryptedFixture(k) // junk OLE
           case 4 => graft.operators.Msg.msg(s"Memo $k", s"rita $k", null,
@@ -2206,11 +2125,9 @@ object DumpQueries {
           case _ => graft.operators.Msg.msg(s"Re: topic $k", s"sender $k",
             s"hello body $k\nsecond line $k", Seq("alice", "bob"),
             attachments = 1)
-        })
+        }
         val out = graft.operators.Msg.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2256,7 +2173,7 @@ object DumpQueries {
     Q(
       "q_msg_html",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 4) match {
+        val mk = (k: Long) => (k % 4) match {
           case 0 => graft.operators.Msg.msg(s"H $k", s"s $k", s"plain wins $k",
             Seq.empty,
             htmlBody = s"<html><body><p>HTML MUST NOT WIN $k</p></body></html>",
@@ -2270,11 +2187,9 @@ object DumpQueries {
           case _ => graft.operators.Msg.msg(s"H $k", s"s $k", null, Seq.empty,
             htmlBody = "<html><body><div><img src=\"x.png\"/></div></body></html>",
             rtfBody = s"{\\rtf1\\ansi past empty html $k}")
-        })
+        }
         val out = graft.operators.Msg.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2314,7 +2229,7 @@ object DumpQueries {
     Q(
       "q_msg_attachments",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 3) match {
+        val mk = (k: Long) => (k % 3) match {
           case 0 => graft.operators.Msg.msg(s"Re: docs $k", s"s $k", s"see files $k",
             Seq("alice"), attachments = 1,
             attachFiles = Seq(
@@ -2326,11 +2241,9 @@ object DumpQueries {
             Seq.empty,
             attachMsg = Some((s"nested subj $k", s"nested body $k")))
           case _ => s"not a message $k".getBytes("UTF-8")
-        })
+        }
         val out = graft.operators.Office.attachmentRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2367,7 +2280,7 @@ object DumpQueries {
     Q(
       "q_rtf_text",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 3) match {
+        val mk = (k: Long) => (k % 3) match {
           case 0 =>
             (s"{\\rtf1\\ansi{\\b Title $k}\\par body $k \\emdash\\'e9 x\\uc0\\u960 .}")
               .getBytes("ISO-8859-1")
@@ -2375,11 +2288,9 @@ object DumpQueries {
             (s"{\\rtf1\\ansi{\\fonttbl{\\f0 POISON FONT;}}{\\info{\\title POISON $k}}" +
               s"plain $k\\par tail $k}").getBytes("ISO-8859-1")
           case _ => s"junk rtf $k".getBytes("UTF-8")
-        })
+        }
         val out = graft.operators.Rtf.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2405,22 +2316,13 @@ object DumpQueries {
     Q(
       "q_cdx_index",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
-          def line(i: Int, extra: String) =
-            s"""com,site$k)/p$i 2026010$i {"url": "http://site$k.com/p$i", """ +
-              s""""filename": "crawl-$k.warc.gz"$extra}"""
-          ((0 until 3).map(i => line(i,
-            s""", "offset": "${i * 1000}", "length": "800", "status": "200", "mime": "text/html"""")) ++
-            Seq(
-              line(3, """, "offset": "50000", "length": "800", "status": "404", "mime": "text/html""""),
-              line(4, """, "offset": "60000", "length": "800", "status": "200", "mime": "image/png""""),
-              s"garbage line $k with no json",
-              line(5, ""))).mkString("\n")
-        })
+        val mk = (k: Long) => (cdxCaptures(k) ++ Seq(
+          cdxLine(k, 3, """, "offset": "50000", "length": "800", "status": "404", "mime": "text/html""""),
+          cdxLine(k, 4, """, "offset": "60000", "length": "800", "status": "200", "mime": "image/png""""),
+          s"garbage line $k with no json",
+          cdxLine(k, 5, ""))).mkString("\n")
         val out = graft.operators.Cdx.indexRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("text", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "text")(mk),
           "media_id", "text")
         Q.requireNoShuffle(out)
         out
@@ -2454,7 +2356,7 @@ object DumpQueries {
     Q(
       "q_cdx_plan",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           def line(i: Int, off: Long, status: Int, mime: String) =
             s"""com,site$k)/p$i 2026010$i {"url": "http://site$k.com/p$i", """ +
               s""""filename": "crawl-$k.warc.gz", "offset": "$off", "length": "800", """ +
@@ -2464,11 +2366,9 @@ object DumpQueries {
             Seq(
               line(6, 50000L, 404, "text/html"),
               line(7, 60000L, 200, "image/png"))).mkString("\n")
-        })
+        }
         val idx = graft.operators.Cdx.indexRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("text", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "text")(mk),
           "media_id", "text")
         val out = graft.operators.Cdx.fetchPlan(
           idx.filter(col("status") === 200 && col("mime") === "text/html"),
@@ -2501,21 +2401,11 @@ object DumpQueries {
     Q(
       "q_cdx_lookup",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
-          def line(i: Int, extra: String) =
-            s"""com,site$k)/p$i 2026010$i {"url": "http://site$k.com/p$i", """ +
-              s""""filename": "crawl-$k.warc.gz"$extra}"""
-          (0 until 3).map(i => line(i,
-            s""", "offset": "${i * 1000}", "length": "800", "status": "200", "mime": "text/html""""))
-            .mkString("\n")
-        })
+        val mk = (k: Long) => cdxCaptures(k).mkString("\n")
         val idx = graft.operators.Cdx.indexRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("text", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "text")(mk),
           "media_id", "text")
-        val wanted = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("k"))
+        val wanted = Q.nationKeys(spark, dir, "k")
           .select(explode(array(
             concat(lit("http://www.site"), col("k"), lit(".com/p0")),
             concat(lit("HTTP://SITE"), col("k"), lit(".COM:80/P1")),
@@ -2556,7 +2446,7 @@ object DumpQueries {
       "q_cdx_fetch",
       (spark, dir) => {
         import spark.implicits._
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val out = new java.io.ByteArrayOutputStream()
           val entries = Vector.newBuilder[(Int, Long, Long, Int)]
           (0 until 6).foreach { i =>
@@ -2581,10 +2471,8 @@ object DumpQueries {
               s""""status": "$status", "mime": "text/html"}"""
           }.mkString("\n")
           (blob, idxText)
-        })
-        val base = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-          .withColumn("fx", mk(col("media_id")))
+        }
+        val base = Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "fx")(mk)
           .select(col("media_id"), col("fx._1").as("payload"), col("fx._2").as("idx_text"))
         val idx = graft.operators.Cdx.indexRows(
           base.select("media_id", "idx_text"), "media_id", "idx_text")
@@ -2623,7 +2511,7 @@ object DumpQueries {
     Q(
       "q_mbox_messages",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           def m(i: Int, headers: String, body: String) =
             s"From a$k@x.example Thu Jan  1 00:00:00 2026\n" +
               s"From: A$k <a$k@x.example>\nMessage-ID: <m$k-$i@x>\n$headers\n\n$body\n"
@@ -2645,11 +2533,9 @@ object DumpQueries {
               m(4, s"Subject: HtmlOnly $k\nContent-Type: text/html; charset=utf-8",
                 s"<p>only html $k</p>")
             else "")
-        })
+        }
         val out = graft.operators.Mbox.messageRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("mbox", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "mbox")(mk),
           "media_id", "mbox")
         Q.requireNoShuffle(out)
         out
@@ -2686,7 +2572,7 @@ object DumpQueries {
     Q(
       "q_notebook_cells",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val outs = (0 until (k % 3).toInt)
             .map(_ => """{"output_type": "stream"}""").mkString(",")
           val lang = if (k % 2 == 0) "python" else "scala"
@@ -2696,11 +2582,9 @@ object DumpQueries {
             s"""{"cell_type": "code", "source": "print($k)", "outputs": [$outs]}""" +
             (if (k % 4 == 0) s""",{"cell_type": "raw", "source": "r $k"}""" else "") +
             "]}"
-        })
+        }
         val out = graft.operators.Notebook.cellRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("json", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "json")(mk),
           "media_id", "json")
         Q.requireNoShuffle(out)
         out
@@ -2728,7 +2612,7 @@ object DumpQueries {
     Q(
       "q_notebook_stages",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 4) match {
+        val mk = (k: Long) => (k % 4) match {
           case 0 =>
             s"""{"nbformat": 4, "metadata": {"kernelspec": {"language": "python"}},""" +
               s""" "cells": [{"cell_type": "code", "source": "x = $k"},""" +
@@ -2738,11 +2622,9 @@ object DumpQueries {
             s"""{"nbformat": 3, "metadata": {"language_info": {"name": "r"}},""" +
               """ "worksheets": [{"cells": []}]}"""
           case _ => s"""{"nbformat": 4, "metadata": {}}"""
-        })
+        }
         val out = graft.operators.Notebook.docRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("json", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "json")(mk),
           "media_id", "json")
         Q.requireNoShuffle(out)
         out
@@ -2771,7 +2653,7 @@ object DumpQueries {
     Q(
       "q_license_detect",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 9) match {
+        val mk = (k: Long) => (k % 9) match {
           case 0 => s"// SPDX-License-Identifier: MIT\ndef f$k(): pass"
           case 1 => s"/* SPDX-License-Identifier: Apache-2.0 */\nint main$k;"
           case 2 => "// SPDX-License-Identifier: BSD-3-Clause\n" +
@@ -2782,11 +2664,9 @@ object DumpQueries {
           case 6 => s"// Redistribution and use in source and binary forms $k"
           case 7 => s"This program is free software: GNU General Public License v3 $k"
           case _ => "plain code $k\n" + "pad\n" * 2000 + "// SPDX-License-Identifier: MIT"
-        })
+        }
         val out = graft.operators.License.licenseRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("doc_id"))
-            .withColumn("text", mk(col("doc_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "doc_id"), "doc_id", "text")(mk),
           "doc_id", "text")
         Q.requireNoShuffle(out)
         out
@@ -2813,16 +2693,14 @@ object DumpQueries {
     Q(
       "q_license_mix",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 4) match {
+        val mk = (k: Long) => (k % 4) match {
           case 0 => s"// SPDX-License-Identifier: MIT\ncode $k"
           case 1 => s"# Licensed under the Apache License, Version 2.0 $k"
           case 2 => s"GNU General Public License applies $k"
           case _ => s"no license here $k"
-        })
+        }
         val lic = graft.operators.License.licenseRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("doc_id"))
-            .withColumn("text", mk(col("doc_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "doc_id"), "doc_id", "text")(mk),
           "doc_id", "text")
           .withColumn("license", coalesce(col("license"), lit("none")))
         val out = graft.operators.Sampling.capPerGroup(lic, "license", "doc_id", n = 3)
@@ -2862,17 +2740,15 @@ object DumpQueries {
     Q(
       "q_main_content",
       (spark, dir) => {
-        val mk = udf((k: Long) =>
+        val mk = (k: Long) =>
           s"<html><head><title>Site $k</title></head><body>" +
             s"""<nav><a href="/">Home</a> <a href="/a">About</a> <a href="/c">Contact $k</a></nav>""" +
             s"<article><p>${"alpha " * (8 + (k % 3)).toInt}end $k</p>" +
             s"""<p>${"beta " * 8}<a href="/x">link $k</a> tail</p></article>""" +
             s"""<aside>${(0 until 8).map(i => s"""<a href="/$i">ad$i promo $k</a>""").mkString(" ")}</aside>""" +
-            s"<footer>Copyright $k</footer></body></html>")
+            s"<footer>Copyright $k</footer></body></html>"
         val out = graft.operators.Html.blockRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("html", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "html")(mk),
           "media_id", "html")
         Q.requireNoShuffle(out)
         out
@@ -2916,7 +2792,7 @@ object DumpQueries {
     Q(
       "q_main_pipeline",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val html = s"<html><body><nav><a href=\"/\">Home</a> <a href=\"/a\">About $k</a></nav>" +
             s"<p>${"alpha " * (8 + (k % 3)).toInt}end $k</p>" +
             s"""<p>${"beta " * 8}<a href="/x">link $k</a> tail</p>""" +
@@ -2926,13 +2802,11 @@ object DumpQueries {
             s"WARC-Target-URI: http://m$k.example/p\r\n" +
             s"Content-Length: ${body.getBytes("UTF-8").length}\r\n" +
             s"\r\n$body\r\n\r\n").getBytes("UTF-8")
-        })
+        }
         val main = udf((h: String) => graft.operators.Html.mainContent(h))
         val out = graft.operators.Warc.httpTexts(
           graft.operators.Warc.recordsBinary(
-            Q.t(spark, dir, "nation")
-              .select(col("n_nationkey").cast("long").as("media_id"))
-              .withColumn("payload", mk(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
             "media_id", "payload"))
           .filter(col("status") === 200)
           .withColumn("main_text", main(col("text")))
@@ -2962,7 +2836,7 @@ object DumpQueries {
     Q(
       "q_html_markdown",
       (spark, dir) => {
-        val mk = udf((k: Long) =>
+        val mk = (k: Long) =>
           s"<html><head><title>Chrome $k</title></head><body>" +
             s"<h1>Title $k</h1>" +
             s"<p>intro <b>bold</b> $k</p>" +
@@ -2972,11 +2846,9 @@ object DumpQueries {
             s"<pre>code($k)</pre>" +
             s"<table><tr><th>A</th><th>B</th></tr><tr><td>x $k</td><td>1</td></tr></table>" +
             s"""<p>see <a href="http://x$k.example/">link $k</a> end</p>""" +
-            "</body></html>")
+            "</body></html>"
         val out = graft.operators.Html.markdownRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("html", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "html")(mk),
           "media_id", "html")
         Q.requireNoShuffle(out)
         out
@@ -3009,18 +2881,16 @@ object DumpQueries {
     Q(
       "q_markdown_sections",
       (spark, dir) => {
-        val mk = udf((k: Long) =>
+        val mk = (k: Long) =>
           s"<h1>Guide $k</h1><p>welcome $k</p>" +
             s"<h2>Setup</h2><p>step $k</p>" +
             s"<h3>Deep</h3><p>detail $k</p>" +
             s"<h2>Use</h2>" + // body-less: extends the next path
             s"<h3>Run</h3><p>go $k</p>" +
-            (if (k % 2 == 0) s"<h1>Extra</h1><p>more $k</p>" else ""))
+            (if (k % 2 == 0) s"<h1>Extra</h1><p>more $k</p>" else "")
         val out = graft.operators.Html.markdownSectionRows(
           graft.operators.Html.markdownRows(
-            Q.t(spark, dir, "nation")
-              .select(col("n_nationkey").cast("long").as("media_id"))
-              .withColumn("html", mk(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "html")(mk),
             "media_id", "html"),
           "media_id", "markdown")
         Q.requireNoShuffle(out)
@@ -3055,17 +2925,15 @@ object DumpQueries {
     Q(
       "q_sections_budget",
       (spark, dir) => {
-        val mk = udf((k: Long) =>
+        val mk = (k: Long) =>
           s"# Guide $k\n" +
             "alpha beta gamma\ndelta epsilon\n" +
             s"| h1 | h2 |\n| a $k | b |\n" +
             "omega psi\n" +
             s"## Fence $k\n" +
-            s"```\nx y z $k\n```\npost fence")
+            s"```\nx y z $k\n```\npost fence"
         val out = graft.operators.Html.markdownSectionRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("markdown", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "markdown")(mk),
           "media_id", "markdown", maxTokens = 6)
           .select(col("media_id"), col("section_idx"), col("path"),
             TextAnalysis.tokenCount(col("text")).as("n_tokens"), col("text"))
@@ -3103,7 +2971,7 @@ object DumpQueries {
     Q(
       "q_markdown_pipeline",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val html = s"<html><body><nav><a href=\"/\">Home</a> <a href=\"/a\">About $k</a></nav>" +
             s"<h1>Title $k</h1>" +
             s"<p>${"alpha " * (8 + (k % 3)).toInt}end $k</p>" +
@@ -3114,13 +2982,11 @@ object DumpQueries {
             s"WARC-Target-URI: http://m$k.example/p\r\n" +
             s"Content-Length: ${body.getBytes("UTF-8").length}\r\n" +
             s"\r\n$body\r\n\r\n").getBytes("UTF-8")
-        })
+        }
         val md = udf((h: String) => graft.operators.Html.markdown(h, minWords = 8))
         val out = graft.operators.Warc.httpTexts(
           graft.operators.Warc.recordsBinary(
-            Q.t(spark, dir, "nation")
-              .select(col("n_nationkey").cast("long").as("media_id"))
-              .withColumn("payload", mk(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
             "media_id", "payload"))
           .filter(col("status") === 200)
           .withColumn("markdown", md(col("text")))
@@ -3149,7 +3015,7 @@ object DumpQueries {
     Q(
       "q_sections_pipeline",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val html = s"<html><body><nav><a href=\"/\">Home</a> <a href=\"/a\">About</a></nav>" +
             s"<h1>Guide $k</h1><p>${"alpha " * 8}intro $k</p>" +
             s"<h2>Setup</h2><p>${"beta " * 8}step $k</p>" +
@@ -3159,13 +3025,11 @@ object DumpQueries {
             s"WARC-Target-URI: http://s$k.example/g\r\n" +
             s"Content-Length: ${body.getBytes("UTF-8").length}\r\n" +
             s"\r\n$body\r\n\r\n").getBytes("UTF-8")
-        })
+        }
         val md = udf((h: String) => graft.operators.Html.markdown(h, minWords = 8))
         val pages = graft.operators.Warc.httpTexts(
           graft.operators.Warc.recordsBinary(
-            Q.t(spark, dir, "nation")
-              .select(col("n_nationkey").cast("long").as("media_id"))
-              .withColumn("payload", mk(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
             "media_id", "payload"))
           .filter(col("status") === 200)
           .withColumn("markdown", md(col("text")))
@@ -3201,18 +3065,16 @@ object DumpQueries {
     Q(
       "q_html_anchors",
       (spark, dir) => {
-        val mk = udf((k: Long) =>
+        val mk = (k: Long) =>
           s"""<html><head><base href="http://h$k.example/d/"></head><body>""" +
             s"""<a href="p1">plain $k</a>""" +
             s"""<A HREF="http://x$k.example/abs">nested <b>bold</b>  $k</A>""" +
             s"""<a href="p2"><img src="i.png"></a>""" +
             s"""<a name="n">skip me</a><a href="#frag">skip too</a>""" +
-            s"""<a href="p3">A &amp; B $k</a></body></html>""")
-        val pages = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
+            s"""<a href="p3">A &amp; B $k</a></body></html>"""
+        val pages = Q.fixture(Q.nationKeys(spark, dir, "media_id")
           .withColumn("page_url", concat(lit("http://h"), col("media_id"),
-            lit(".example/index.html")))
-          .withColumn("html", mk(col("media_id")))
+            lit(".example/index.html"))), "media_id", "html")(mk)
         val out = graft.operators.Html.anchors(pages, "page_url", "html")
         Q.requireNoShuffle(out)
         out
@@ -3251,14 +3113,13 @@ object DumpQueries {
     Q(
       "q_anchor_corpus",
       (spark, dir) => {
-        val mk = udf((k: Long) =>
+        val mk = (k: Long) =>
           s"""<html><body><a href="http://hub.example/">${Seq("the hub", "hub site", "the hub")((k % 3).toInt)}</a>""" +
             s"""<a href="http://p$k.example/">page $k label</a>""" +
-            s"""<a href="http://hub.example/"><img src="i.png"></a></body></html>""")
-        val pages = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-          .withColumn("page_url", concat(lit("http://h"), col("media_id"), lit(".example/")))
-          .withColumn("html", mk(col("media_id")))
+            s"""<a href="http://hub.example/"><img src="i.png"></a></body></html>"""
+        val pages = Q.fixture(Q.nationKeys(spark, dir, "media_id")
+          .withColumn("page_url", concat(lit("http://h"), col("media_id"), lit(".example/"))),
+          "media_id", "html")(mk)
         val anchors = graft.operators.Html.anchors(pages, "page_url", "html")
           .filter(col("anchor") =!= "")
         val byLabel = anchors.groupBy(col("href"), col("anchor"))

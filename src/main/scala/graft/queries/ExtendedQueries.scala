@@ -613,10 +613,7 @@ object ExtendedQueries {
         val ev = Q.events(spark, dir)
         val cols = Seq("user_id", "event_type", "value")
         val fast = graft.operators.Profile.columnsFast(ev, cols)
-        val plan = fast.queryExecution.executedPlan.toString
-        val scans = plan.linesIterator.count(_.contains("Scan parquet"))
-        require(scans == 1,
-          s"columnsFast must profile all columns in ONE scan, found $scans:\n$plan")
+        Q.requireFileScans(fast, 1) // all columns profiled in ONE scan
         val exact = graft.operators.Profile.columns(ev, cols)
           .select(col("column"), col("n_distinct").as("n_exact"))
         fast.join(exact, Seq("column"))
@@ -937,10 +934,8 @@ object ExtendedQueries {
         val thinned = Sampling.sampleByHash(ev, "event_id", keepBuckets = 10)
         val out = Sampling.capPerGroup(thinned, "grp", "event_id", n = 20)
         Q.requireMapSideGroupLimit(out, cap = 20)
-        val plan = out.queryExecution.executedPlan.toString
-        require(
-          plan.linesIterator.exists(l => l.contains("DataFilters") && l.contains("pmod")),
-          s"expected the sampleByHash pre-thin to evaluate at the scan:\n$plan")
+        // the sampleByHash pre-thin evaluates at the scan
+        Q.requireDataFilter[org.apache.spark.sql.catalyst.expressions.Pmod](out)
         out
       },
       Some {
@@ -980,12 +975,7 @@ object ExtendedQueries {
         Sampling.deterministicShuffle(docs, "doc_id", shards = 8)
           .write.mode("overwrite").partitionBy("shard").parquet(scratch)
         val back = spark.read.parquet(scratch)
-        val one = back.filter(col("shard") === 3)
-        val plan = one.queryExecution.executedPlan.toString
-        require(
-          plan.linesIterator.exists(l =>
-            l.contains("PartitionFilters") && l.contains("shard")),
-          s"expected a shard-selective read to prune at the file index:\n$plan")
+        Q.requirePartitionFilter(back.filter(col("shard") === 3), "shard")
         back.select(col("doc_id"), col("shard").cast("long").as("shard"),
           col("rank"))
       },
@@ -1022,12 +1012,7 @@ object ExtendedQueries {
         Sampling.deterministicShuffle(mixed, "copy_id", shards = 8)
           .write.mode("overwrite").partitionBy("shard").parquet(scratch)
         val back = spark.read.parquet(scratch)
-        val plan = back.filter(col("shard") === 3)
-          .queryExecution.executedPlan.toString
-        require(
-          plan.linesIterator.exists(l =>
-            l.contains("PartitionFilters") && l.contains("shard")),
-          s"expected a shard-selective read to prune at the file index:\n$plan")
+        Q.requirePartitionFilter(back.filter(col("shard") === 3), "shard")
         back.select(col("doc_id"), col("lang"), col("epoch"), col("copy_id"),
           col("shard").cast("long").as("shard"), col("rank"))
       },
@@ -1077,12 +1062,7 @@ object ExtendedQueries {
         val scratch = Q.scratch("budgetexp")
         packed.write.mode("overwrite").partitionBy("shard").parquet(scratch)
         val back = spark.read.parquet(scratch)
-        val plan = back.filter(col("shard") === 3)
-          .queryExecution.executedPlan.toString
-        require(
-          plan.linesIterator.exists(l =>
-            l.contains("PartitionFilters") && l.contains("shard")),
-          s"expected a shard-selective read to prune at the file index:\n$plan")
+        Q.requirePartitionFilter(back.filter(col("shard") === 3), "shard")
         back.select(col("doc_id"), col("n_chars"), col("cum_tokens"),
           col("shard").cast("long").as("shard"), col("bin"))
       },
@@ -1569,12 +1549,8 @@ object ExtendedQueries {
         require(nAfter < nBefore,
           s"compaction must shrink the file count ($nBefore -> $nAfter)")
         val back = spark.read.parquet(scratch)
-        val pruned = back.filter(col("lang") === "en")
-        val plan = pruned.queryExecution.executedPlan.toString
-        require(
-          plan.linesIterator.exists(l =>
-            l.contains("PartitionFilters") && l.contains("lang")),
-          s"expected the compacted layout to keep pruning lang-selective reads:\n$plan")
+        // the compacted layout keeps pruning lang-selective reads
+        Q.requirePartitionFilter(back.filter(col("lang") === "en"), "lang")
         back.select(col("doc_id"), col("lang"), col("n_chars"))
       },
       Some("SELECT doc_id, lang, n_chars FROM documents")

@@ -18,6 +18,22 @@ import graft.operators.{Decontaminate, Dedup, Guard, Multimodal, Profile, Quanti
   */
 object NorthStarQueries {
 
+  /** q_image_decode's and q_image_resize's fixture: an 8x6 PPM per key. */
+  private val ppm8x6: Long => Array[Byte] = Multimodal.syntheticPpm(_, 8, 6)
+
+  /** q_audio_screen's and q_media_ledger's WAV per key: every 7th
+    * truncated mid-header, every 5th silenced past the 44-byte header,
+    * the rest the formula clip.
+    */
+  private def screenedWav(k: Long): Array[Byte] = {
+    val b = Multimodal.syntheticWav(k, 1 + (k % 2).toInt, 8000, 96)
+    if (k % 7 == 3) java.util.Arrays.copyOf(b, 20)
+    else {
+      if (k % 5 == 0) java.util.Arrays.fill(b, 44, b.length, 0.toByte)
+      b
+    }
+  }
+
   /** Tokens, mirrored exactly in DuckDB as regexp_split_to_array. */
   private val SqlToks = "regexp_split_to_array(text, '\\s+')"
 
@@ -1034,11 +1050,7 @@ object NorthStarQueries {
         val out = Similarity.ivfTopKIndexed(
           indexed, emb.filter(col("vec_id") < 8), cents,
           "vec_id", "embedding", k = 5, nProbe = 4)
-        val plan = out.queryExecution.executedPlan.toString
-        require(
-          plan.linesIterator.exists(l =>
-            l.contains("PartitionFilters") && l.contains("dynamicpruning")),
-          s"expected dynamic partition pruning on the centroid_id layout:\n$plan")
+        Q.requireDynamicPruning(out) // on the centroid_id layout
         out
       },
       Some {
@@ -1099,11 +1111,7 @@ object NorthStarQueries {
         val out = Similarity.ivfTopKIndexed(
           indexed, emb.filter(col("vec_id") < 8), cents,
           "vec_id", "embedding", k = 5, nProbe = 4)
-        val plan = out.queryExecution.executedPlan.toString
-        require(
-          plan.linesIterator.exists(l =>
-            l.contains("PartitionFilters") && l.contains("dynamicpruning")),
-          s"expected dynamic partition pruning on the appended centroid_id layout:\n$plan")
+        Q.requireDynamicPruning(out) // on the appended centroid_id layout
         out
       },
       Some {
@@ -1234,11 +1242,7 @@ object NorthStarQueries {
         val out = Similarity.ivfTopKIndexed(
           spark.read.parquet(path), emb.filter(col("vec_id") < 8), cents,
           "vec_id", "embedding", k = 5, nProbe = 4)
-        val plan = out.queryExecution.executedPlan.toString
-        require(
-          plan.linesIterator.exists(l =>
-            l.contains("PartitionFilters") && l.contains("dynamicpruning")),
-          s"expected dynamic partition pruning to survive the maintenance chain:\n$plan")
+        Q.requireDynamicPruning(out) // survives the maintenance chain
         out
       },
       Some {
@@ -1325,10 +1329,7 @@ object NorthStarQueries {
 
         val out = spark.read.parquet(path).filter(col("lang") =!= "de")
           .select(col("doc_id"), col("lang"))
-        val plan = out.queryExecution.executedPlan.toString
-        require(plan.linesIterator.exists(l =>
-          l.contains("PartitionFilters") && l.contains("lang")),
-          s"expected partition pruning to survive maintenance:\n$plan")
+        Q.requirePartitionFilter(out, "lang") // pruning survives maintenance
         out
       },
       Some(
@@ -1704,11 +1705,8 @@ object NorthStarQueries {
     Q(
       "q_image_decode",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val ppm = udf((k: Long) => Multimodal.syntheticPpm(k, 8, 6))
         Multimodal.decodeImages(
-          blobs.withColumn("payload", ppm(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(ppm8x6),
           "media_id", "payload")
       },
       Some(
@@ -1769,12 +1767,10 @@ object NorthStarQueries {
     Q(
       "q_image_decode_tiff",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val tif = udf((k: Long) => Multimodal.syntheticTiff(
-          k, 8, 6, gray = k % 2 == 1, packBits = k % 2 == 1, bigEndian = k % 2 == 1))
+        val tif = (k: Long) => Multimodal.syntheticTiff(
+          k, 8, 6, gray = k % 2 == 1, packBits = k % 2 == 1, bigEndian = k % 2 == 1)
         val out = Multimodal.decodeImages(
-          blobs.withColumn("payload", tif(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(tif),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -1837,11 +1833,9 @@ object NorthStarQueries {
     Q(
       "q_image_decode_bmp",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val bmp = udf((k: Long) => Multimodal.syntheticBmp(k, 6, 5))
+        val bmp = (k: Long) => Multimodal.syntheticBmp(k, 6, 5)
         Multimodal.decodeImages(
-          blobs.withColumn("payload", bmp(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(bmp),
           "media_id", "payload")
       },
       Some(
@@ -1902,11 +1896,9 @@ object NorthStarQueries {
     Q(
       "q_image_decode_jpeg",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val jpg = udf((k: Long) => Multimodal.syntheticJpeg(k))
+        val jpg = (k: Long) => Multimodal.syntheticJpeg(k)
         val out = Multimodal.decodeImages(
-          blobs.withColumn("payload", jpg(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(jpg),
           "media_id", "payload")
         out
       },
@@ -1961,11 +1953,9 @@ object NorthStarQueries {
     Q(
       "q_image_decode_png",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val png = udf((k: Long) => Multimodal.syntheticPng(k, 8, 6))
+        val png = (k: Long) => Multimodal.syntheticPng(k, 8, 6)
         Multimodal.decodeImages(
-          blobs.withColumn("payload", png(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(png),
           "media_id", "payload")
       },
       Some(
@@ -2023,11 +2013,9 @@ object NorthStarQueries {
     Q(
       "q_image_decode_webp",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val webp = udf((k: Long) => Multimodal.syntheticWebp(k, 8, 6))
+        val webp = (k: Long) => Multimodal.syntheticWebp(k, 8, 6)
         val out = Multimodal.decodeImages(
-          blobs.withColumn("payload", webp(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(webp),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2090,11 +2078,9 @@ object NorthStarQueries {
     Q(
       "q_image_decode_gif",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val gif = udf((k: Long) => Multimodal.syntheticGif(k, 16, 16))
+        val gif = (k: Long) => Multimodal.syntheticGif(k, 16, 16)
         val out = Multimodal.decodeImages(
-          blobs.withColumn("payload", gif(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(gif),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2155,11 +2141,8 @@ object NorthStarQueries {
     Q(
       "q_image_resize",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val ppm = udf((k: Long) => Multimodal.syntheticPpm(k, 8, 6))
         val out = Multimodal.decodeImagesResized(
-          blobs.withColumn("payload", ppm(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(ppm8x6),
           "media_id", "payload", factor = 2)
         Q.requireNoShuffle(out)
         out
@@ -2227,12 +2210,10 @@ object NorthStarQueries {
     Q(
       "q_audio_decode_wav",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val wav = udf((k: Long) =>
-          Multimodal.syntheticWav(k, 1 + (k % 2).toInt, 8000, 96))
+        val wav = (k: Long) =>
+          Multimodal.syntheticWav(k, 1 + (k % 2).toInt, 8000, 96)
         val out = Multimodal.decodeAudio(
-          blobs.withColumn("payload", wav(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(wav),
           "media_id", "payload")
         Q.requireNoShuffle(out) // decode is map-only end to end
         out
@@ -2284,11 +2265,9 @@ object NorthStarQueries {
     Q(
       "q_audio_decode_ima",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val ima = udf((k: Long) => Multimodal.syntheticWavIma(k))
+        val ima = (k: Long) => Multimodal.syntheticWavIma(k)
         val out = Multimodal.decodeAudio(
-          blobs.withColumn("payload", ima(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(ima),
           "media_id", "payload")
         Q.requireNoShuffle(out) // decode is map-only end to end
         out
@@ -2356,11 +2335,9 @@ object NorthStarQueries {
     Q(
       "q_audio_decode_ms",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val wav = udf((k: Long) => Multimodal.syntheticWavMs(k))
+        val wav = (k: Long) => Multimodal.syntheticWavMs(k)
         val out = Multimodal.decodeAudio(
-          blobs.withColumn("payload", wav(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(wav),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2438,11 +2415,10 @@ object NorthStarQueries {
     Q(
       "q_audio_decode_flac",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val flac = udf((k: Long) => Multimodal.syntheticFlac(k))
+        val blobs = Q.nationKeys(spark, dir, "media_id")
+        val flac = (k: Long) => Multimodal.syntheticFlac(k)
         val out = Multimodal.decodeAudio(
-          blobs.withColumn("payload", flac(col("media_id"))),
+          Q.fixture(blobs, "media_id", "payload")(flac),
           "media_id", "payload")
         Q.requireNoShuffle(out) // decode is map-only end to end
         out
@@ -2491,11 +2467,9 @@ object NorthStarQueries {
     Q(
       "q_audio_inventory",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val mk = udf((k: Long) => graft.operators.AudioMeta.syntheticMpeg(k))
+        val mk = (k: Long) => graft.operators.AudioMeta.syntheticMpeg(k)
         val out = graft.operators.AudioMeta.audioInventory(
-          blobs.withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out) // inventory is map-only end to end
         out
@@ -2552,11 +2526,9 @@ object NorthStarQueries {
     Q(
       "q_mp4_inventory",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val mk = udf((k: Long) => graft.operators.ContainerMeta.syntheticMp4(k))
+        val mk = (k: Long) => graft.operators.ContainerMeta.syntheticMp4(k)
         val out = graft.operators.ContainerMeta.mp4Inventories(
-          blobs.withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2598,11 +2570,9 @@ object NorthStarQueries {
     Q(
       "q_ogg_inventory",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val mk = udf((k: Long) => graft.operators.ContainerMeta.syntheticOgg(k))
+        val mk = (k: Long) => graft.operators.ContainerMeta.syntheticOgg(k)
         val out = graft.operators.ContainerMeta.oggInventories(
-          blobs.withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2645,11 +2615,9 @@ object NorthStarQueries {
     Q(
       "q_mkv_inventory",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val mk = udf((k: Long) => graft.operators.ContainerMeta.syntheticMkv(k))
+        val mk = (k: Long) => graft.operators.ContainerMeta.syntheticMkv(k)
         val out = graft.operators.ContainerMeta.mkvInventories(
-          blobs.withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2699,11 +2667,9 @@ object NorthStarQueries {
     Q(
       "q_gzip_inventory",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val mk = udf((k: Long) => graft.operators.CompressedMeta.syntheticGzip(k))
+        val mk = (k: Long) => graft.operators.CompressedMeta.syntheticGzip(k)
         val out = graft.operators.CompressedMeta.gzipInventories(
-          blobs.withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2741,11 +2707,9 @@ object NorthStarQueries {
     Q(
       "q_zstd_inventory",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val mk = udf((k: Long) => graft.operators.CompressedMeta.syntheticZstd(k))
+        val mk = (k: Long) => graft.operators.CompressedMeta.syntheticZstd(k)
         val out = graft.operators.CompressedMeta.zstdInventories(
-          blobs.withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -2789,9 +2753,8 @@ object NorthStarQueries {
     Q(
       "q_media_triage",
       (spark, dir) => {
-        val keys = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val mk = udf((k: Long) => (k % 4) match {
+        val keys = Q.nationKeys(spark, dir, "media_id")
+        val mk = (k: Long) => (k % 4) match {
           case 0 => graft.operators.ContainerMeta.syntheticMp4(k / 4)
           case 1 => graft.operators.ContainerMeta.syntheticOgg(k / 4)
           case 2 => graft.operators.ContainerMeta.syntheticMkv(k / 4)
@@ -2800,8 +2763,8 @@ object NorthStarQueries {
             case 1 => Multimodal.webpLossyStub(k / 4)
             case _ => s"junk media ${k / 4}".getBytes("UTF-8")
           }
-        })
-        val blobs = keys.withColumn("payload", mk(col("media_id")))
+        }
+        val blobs = Q.fixture(keys, "media_id", "payload")(mk)
         val cm = graft.operators.ContainerMeta
         val mp4 = cm.mp4Inventories(
           blobs.filter(col("media_id") % 4 === 0), "media_id", "payload")
@@ -2895,12 +2858,10 @@ object NorthStarQueries {
     Q(
       "q_audio_decode_g711",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val g711 = udf((k: Long) => Multimodal.syntheticWavG711(
-          k, if (k % 2 == 0) 7 else 6, 1 + (k % 2).toInt, 96))
+        val g711 = (k: Long) => Multimodal.syntheticWavG711(
+          k, if (k % 2 == 0) 7 else 6, 1 + (k % 2).toInt, 96)
         val out = Multimodal.decodeAudio(
-          blobs.withColumn("payload", g711(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(g711),
           "media_id", "payload")
         Q.requireNoShuffle(out) // decode is map-only end to end
         out
@@ -2967,18 +2928,8 @@ object NorthStarQueries {
     Q(
       "q_audio_screen",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val wav = udf((k: Long) => {
-          val b = Multimodal.syntheticWav(k, 1 + (k % 2).toInt, 8000, 96)
-          if (k % 7 == 3) java.util.Arrays.copyOf(b, 20) // truncated mid-header
-          else {
-            if (k % 5 == 0) java.util.Arrays.fill(b, 44, b.length, 0.toByte)
-            b
-          }
-        })
         val out = Multimodal.decodeAudio(
-            blobs.withColumn("payload", wav(col("media_id"))),
+            Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(screenedWav),
             "media_id", "payload")
           .select(
             col("media_id"), col("format"),
@@ -3033,14 +2984,12 @@ object NorthStarQueries {
     Q(
       "q_video_decode_y4m",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val y4m = udf((k: Long) => {
+        val y4m = (k: Long) => {
           val b = Multimodal.syntheticY4m(k, 6, 4, 3)
           if (k % 9 == 4) java.util.Arrays.copyOf(b, b.length - 10) else b
-        })
+        }
         val out = Multimodal.decodeVideos(
-          blobs.withColumn("payload", y4m(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(y4m),
           "media_id", "payload")
         Q.requireNoShuffle(out) // decode is map-only end to end
         out
@@ -3078,14 +3027,12 @@ object NorthStarQueries {
     Q(
       "q_video_decode_mjpeg",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val avi = udf((k: Long) => {
+        val avi = (k: Long) => {
           val b = Multimodal.syntheticAviMjpeg(k, 3)
           if (k % 8 == 5) java.util.Arrays.copyOf(b, b.length - 40) else b
-        })
+        }
         val out = Multimodal.decodeVideosMjpeg(
-          blobs.withColumn("payload", avi(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(avi),
           "media_id", "payload")
         Q.requireNoShuffle(out) // decode is map-only end to end
         out
@@ -3122,9 +3069,7 @@ object NorthStarQueries {
     Q(
       "q_video_screen",
       (spark, dir) => {
-        val blobs = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
-        val y4m = udf((k: Long) => {
+        val y4m = (k: Long) => {
           val b = Multimodal.syntheticY4m(k, 6, 4, 3)
           if (k % 6 == 0) {
             // zero frame 1's luma plane: header, then frame blocks of
@@ -3134,9 +3079,9 @@ object NorthStarQueries {
             java.util.Arrays.fill(b, off, off + 24, 0.toByte)
           }
           b
-        })
+        }
         val frames = Multimodal.decodeVideos(
-          blobs.withColumn("payload", y4m(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(y4m),
           "media_id", "payload")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("media_id")).orderBy(col("frame_no").asc)
@@ -3183,35 +3128,26 @@ object NorthStarQueries {
     Q(
       "q_media_ledger",
       (spark, dir) => {
-        val keys = Q.t(spark, dir, "nation")
-          .select(col("n_nationkey").cast("long").as("media_id"))
+        val keys = Q.nationKeys(spark, dir, "media_id")
         // images: every 5th payload corrupt
-        val ppm = udf((k: Long) => {
+        val ppm = (k: Long) => {
           val b = Multimodal.syntheticPpm(k, 8, 6)
           if (k % 5 == 2) java.util.Arrays.copyOf(b, 9) else b
-        })
+        }
         val img = Multimodal.decodeImages(
-            keys.withColumn("payload", ppm(col("media_id"))), "media_id", "payload")
+            Q.fixture(keys, "media_id", "payload")(ppm), "media_id", "payload")
           .select(lit("image").as("modality"), col("media_id"),
             when(col("n_pixels") === 0L, "corrupt").otherwise("keep").as("reason"))
         // audio: every 7th truncated, every 5th silenced
-        val wav = udf((k: Long) => {
-          val b = Multimodal.syntheticWav(k, 1 + (k % 2).toInt, 8000, 96)
-          if (k % 7 == 3) java.util.Arrays.copyOf(b, 20)
-          else {
-            if (k % 5 == 0) java.util.Arrays.fill(b, 44, b.length, 0.toByte)
-            b
-          }
-        })
         val aud = Multimodal.decodeAudio(
-            keys.withColumn("payload", wav(col("media_id"))), "media_id", "payload")
+            Q.fixture(keys, "media_id", "payload")(screenedWav), "media_id", "payload")
           .select(lit("audio").as("modality"), col("media_id"),
             when(col("format") =!= "wav", "corrupt")
               .when(col("ssq_c0") === 0L, "silent")
               .otherwise("keep").as("reason"))
         // video: every 9th truncated (zero rows), every 6th has a
         // black frame — undecodable media surface via the left join
-        val y4m = udf((k: Long) => {
+        val y4m = (k: Long) => {
           val b = Multimodal.syntheticY4m(k, 6, 4, 3)
           if (k % 9 == 4) java.util.Arrays.copyOf(b, b.length - 10)
           else {
@@ -3222,9 +3158,9 @@ object NorthStarQueries {
             }
             b
           }
-        })
+        }
         val vidFrames = Multimodal.decodeVideos(
-            keys.withColumn("payload", y4m(col("media_id"))), "media_id", "payload")
+            Q.fixture(keys, "media_id", "payload")(y4m), "media_id", "payload")
           .groupBy(col("media_id"))
           .agg(sum(when(col("sum_y") === 0L, 1L).otherwise(0L)).as("n_black"))
         val vid = keys

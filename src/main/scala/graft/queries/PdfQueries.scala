@@ -29,7 +29,7 @@ object PdfQueries {
     Q(
       "q_pdf_text",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val page1 = ("BT /F1 12 Tf 72 720 Td " + Pdf.lit(s"Doc $k — café €") +
             " Tj 0 -14 Td [" + Pdf.lit(s"A$k") + " -250 " + Pdf.lit("B") +
             " -50 " + Pdf.lit("C") + "] TJ 0 -14 Td " + Pdf.hexLit(s"hex $k") +
@@ -52,11 +52,9 @@ object PdfQueries {
             encrypted = k % 11 != 0 && k % 7 == 0)
           if (k % 11 == 0) java.util.Arrays.copyOfRange(bytes, 0, bytes.length / 2)
           else bytes
-        })
+        }
         val out = Pdf.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -95,7 +93,7 @@ object PdfQueries {
     Q(
       "q_pdf_decrypt",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 6) match {
+        val mk = (k: Long) => (k % 6) match {
           case 4 => Pdf.encryptedPdf(Seq(Seq(s"locked $k")), "aes256",
             userPwd = "hunter2")
           case 5 => s"junk pdf $k".getBytes("UTF-8")
@@ -103,11 +101,9 @@ object PdfQueries {
             val mode = Seq("rc40", "rc4128", "aes128", "aes256")(m.toInt)
             Pdf.encryptedPdf(Seq(
               Seq(s"open doc $k", s"line two $k"), Seq(s"page two $k")), mode)
-        })
+        }
         val out = Pdf.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -139,17 +135,15 @@ object PdfQueries {
     Q(
       "q_pdf_xref_stream",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val pages = Seq(
             Pdf.Page(Pdf.contentOps(Seq(s"Doc $k modern", s"line ${k % 4}"))),
             Pdf.Page(Pdf.contentOps(Seq(s"it’s $k"), "StandardEncoding"), "StandardEncoding"))
           Pdf.pdfXrefStream(pages, flate = true,
             predictor = k % 2 == 0, objStm = k % 3 == 0)
-        })
+        }
         val out = Pdf.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -173,18 +167,16 @@ object PdfQueries {
     Q(
       "q_pdf_differences",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val ops = s"BT /F1 12 Tf 72 720 Td (doc $k \\310\\311\\312\\313) Tj ET"
             .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
           val diffs =
             if (k % 5 == 0) Seq((200, "nosuchglyph"))
             else Seq((200, "Euro"), (201, "uni0142"), (202, "quotedblleft"), (203, "seven"))
           Pdf.pdf(Seq(Pdf.Page(ops, differences = diffs)))
-        })
+        }
         val out = Pdf.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -211,7 +203,7 @@ object PdfQueries {
     Q(
       "q_pdf_cid",
       (spark, dir) => {
-        val mk = udf((k: Long) => (k % 4) match {
+        val mk = (k: Long) => (k % 4) match {
           case 0 =>
             val t = s"日本 $k"
             Pdf.pdf(Seq(Pdf.Page(
@@ -228,11 +220,9 @@ object PdfQueries {
               toUnicode = Some(Pdf.toUnicodeCMap(Seq(0x41 -> "A"))))))
           case _ =>
             Pdf.pdf(Seq(Pdf.Page(Pdf.cidContentOps(Seq(Seq(0x41))), cid = true)))
-        })
+        }
         val out = Pdf.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -260,17 +250,15 @@ object PdfQueries {
     Q(
       "q_pdf_info",
       (spark, dir) => {
-        val mk = udf((k: Long) => Pdf.pdf(
+        val mk = (k: Long) => Pdf.pdf(
           Seq(Pdf.Page(Pdf.contentOps(Seq(s"body $k")))),
           info =
             if (k % 7 == 0) None
             else if (k % 2 == 0) Some((s"π — $k", s"“$k”"))
             else Some((s"Tít — $k", s"“$k”")),
-          infoUtf16 = k % 2 == 0))
+          infoUtf16 = k % 2 == 0)
         val out = Pdf.infoRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out
@@ -297,7 +285,7 @@ object PdfQueries {
     Q(
       "q_pdf_update",
       (spark, dir) => {
-        val mk = udf((k: Long) => {
+        val mk = (k: Long) => {
           val base = Pdf.pdf(Seq(Pdf.Page(Pdf.contentOps(Seq(s"v1 of $k")))))
           // the writer's layout pins page 1's content stream at obj 4
           if (k % 2 == 0)
@@ -308,11 +296,9 @@ object PdfQueries {
             Pdf.pdfUpdate(once, 4,
               Pdf.streamBody(Pdf.contentOps(Seq(s"v3 of $k")), flate = true))
           } else base
-        })
+        }
         val out = Pdf.textRows(
-          Q.t(spark, dir, "nation")
-            .select(col("n_nationkey").cast("long").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(Q.nationKeys(spark, dir, "media_id"), "media_id", "payload")(mk),
           "media_id", "payload")
         Q.requireNoShuffle(out)
         out

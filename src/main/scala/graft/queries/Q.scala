@@ -1,6 +1,11 @@
 package graft.queries
 
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, IsNotNull}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -47,6 +52,22 @@ object Q {
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
   }
 
+  /** The decoder gates' key source: the nation table's 25 keys as one
+    * BIGINT column named `key`. Gate and oracle enumerate the same keys
+    * (`CAST(n_nationkey AS BIGINT)` on the DuckDB side).
+    */
+  def nationKeys(spark: SparkSession, dir: String, key: String): DataFrame =
+    t(spark, dir, "nation").select(col("n_nationkey").cast("long").as(key))
+
+  /** Fixture frame: `keys` plus a column `value` holding `f(key)`, which
+    * the executor computes per row from the BIGINT column `key`. The
+    * one way a gate or probe turns keys into synthetic input rows; the
+    * byte writers `f` calls stay in their operator objects, next to the
+    * decoders they share format code with.
+    */
+  def fixture[T: TypeTag](keys: DataFrame, key: String, value: String)(f: Long => T): DataFrame =
+    keys.withColumn(value, udf(f).apply(col(key)))
+
   /** Exact decimal sum cast back to double.
     *
     * Cross-engine float discipline: double sums depend on reduction order,
@@ -56,11 +77,6 @@ object Q {
     * columns carry ≤2 fractional digits, so DECIMAL(18,4) is lossless.
     */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 4))).cast("double")
-
-  /** Exact decimal conditional sum (cast to double). */
-  def dsumWhen(cond: Column, c: Column): Column =
-    sum(when(cond, c.cast(DecimalType(18, 4)))
-      .otherwise(lit(0).cast(DecimalType(18, 4)))).cast("double")
 
   /** Order-independent average: exact decimal sum / count, divided as
     * doubles (single deterministic division in both engines).
@@ -131,13 +147,6 @@ object Q {
     if (fs.exists(path)) { fs.delete(path, true): Unit }
   }
 
-  /** Every physical node of the frame's executed plan, with AQE's
-    * wrapper unwrapped (AdaptiveSparkPlanExec is a leaf to `collect` —
-    * its current plan hangs off a field, not `children`). Gates assert
-    * scale-critical plan facts against TYPED nodes from this list
-    * instead of substring-matching `toString` output, whose shape is
-    * not a stable API across Spark versions.
-    */
   /** Recursive plan walk shared by [[planNodes]] and the subtree scans
     * of individual gate assertions: after execution AQE folds subtrees
     * into materialized query stages whose plan hangs off a field
@@ -155,8 +164,61 @@ object Q {
     })
   }
 
+  /** Every physical node of the frame's executed plan, with AQE's
+    * wrapper unwrapped (AdaptiveSparkPlanExec is a leaf to `collect` —
+    * its current plan hangs off a field, not `children`). Gates assert
+    * scale-critical plan facts against TYPED nodes from this list
+    * instead of substring-matching `toString` output, whose shape is
+    * not a stable API across Spark versions.
+    */
   def planNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] =
     walkPlan(df.queryExecution.executedPlan)
+
+  private def fileScans(df: DataFrame): Seq[FileSourceScanExec] =
+    planNodes(df).collect { case s: FileSourceScanExec => s }
+
+  /** Gate assertion: a file scan prunes at the file index on partition
+    * column `column` — a partition filter on it other than the
+    * `isnotnull` Spark adds to every such filter set.
+    */
+  def requirePartitionFilter(df: DataFrame, column: String): Unit = {
+    val hit = fileScans(df).exists(_.partitionFilters.exists(f =>
+      !f.isInstanceOf[IsNotNull] && f.references.exists(_.name == column)))
+    require(hit,
+      s"expected a partition filter on `$column` at the file scan:\n" +
+        df.queryExecution.executedPlan)
+  }
+
+  /** Gate assertion: a file scan carries a dynamic partition-pruning
+    * filter — the join's other side selects the partitions it lists.
+    */
+  def requireDynamicPruning(df: DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.DynamicPruning
+    val hit = fileScans(df).exists(_.partitionFilters.exists(
+      _.exists(_.isInstanceOf[DynamicPruning])))
+    require(hit,
+      s"expected dynamic partition pruning at a file scan:\n" +
+        df.queryExecution.executedPlan)
+  }
+
+  /** Gate assertion: a file scan's data filters contain an `E` node —
+    * the predicate evaluates at the scan, below any exchange.
+    */
+  def requireDataFilter[E <: Expression](df: DataFrame)(implicit e: ClassTag[E]): Unit = {
+    val hit = fileScans(df).exists(_.dataFilters.exists(_.exists(e.runtimeClass.isInstance)))
+    require(hit,
+      s"expected a ${e.runtimeClass.getSimpleName} data filter at the file scan:\n" +
+        df.queryExecution.executedPlan)
+  }
+
+  /** Gate assertion: the plan reads its input through exactly `n` file
+    * scans.
+    */
+  def requireFileScans(df: DataFrame, n: Int): Unit = {
+    val found = fileScans(df).size
+    require(found == n,
+      s"expected $n file scan(s), found $found:\n${df.queryExecution.executedPlan}")
+  }
 
   /** Gate assertion: a map-side (Partial-mode) WindowGroupLimit with
     * exactly this cap sits in the plan — each map task forwards at most

@@ -234,12 +234,7 @@ object SessionQueries {
         val df = spark.read.parquet(scratch)
           .filter(col("dt") >= lit(20240115))
           .select(col("event_id"), col("ts"), col("user_id"))
-        val plan = df.queryExecution.executedPlan.toString
-        require(
-          plan.linesIterator.exists(l =>
-            l.contains("PartitionFilters") && l.contains("dt") &&
-              l.contains("20240115")),
-          s"expected a dt partition filter at the scan:\n$plan")
+        Q.requirePartitionFilter(df, "dt")
         df
       },
       Some(

@@ -456,8 +456,7 @@ object TokenizerQueries {
 
   /** The Spark-side unigram fixture corpus (the oracle's `uwd`). */
   private def unigramDocs(spark: SparkSession, dir: String): DataFrame =
-    Q.t(spark, dir, "nation")
-      .select(col("n_nationkey").cast("long").as("k"))
+    Q.nationKeys(spark, dir, "k")
       .select(concat(lit("ab abc "),
         when(col("k") % 2 === 0, "ab").otherwise("cb"), lit(" b")).as("text"))
 
@@ -465,8 +464,7 @@ object TokenizerQueries {
     * document identity the bag-of-text fixture drops.
     */
   private def unigramDocsKeyed(spark: SparkSession, dir: String): DataFrame =
-    Q.t(spark, dir, "nation")
-      .select(col("n_nationkey").cast("long").as("doc_id"))
+    Q.nationKeys(spark, dir, "doc_id")
       .withColumn("text", concat(lit("ab abc "),
         when(col("doc_id") % 2 === 0, "ab").otherwise("cb"), lit(" b")))
 
@@ -932,12 +930,7 @@ object TokenizerQueries {
         val scratch = Q.scratch("idsexp")
         out.write.mode("overwrite").partitionBy("shard").parquet(scratch)
         val back = spark.read.parquet(scratch)
-        val one = back.filter(col("shard") === 3)
-        val plan = one.queryExecution.executedPlan.toString
-        require(
-          plan.linesIterator.exists(l =>
-            l.contains("PartitionFilters") && l.contains("shard")),
-          s"expected a shard-selective read to prune at the file index:\n$plan")
+        Q.requirePartitionFilter(back.filter(col("shard") === 3), "shard")
         back.select(col("doc_id"), col("pos"), col("token_id"),
           col("shard").cast("long").as("shard"))
       },

@@ -32,8 +32,7 @@ import org.apache.spark.sql.functions._
   *     directory of `input_file_name()` with the same parse check as
   *     [[DatePrunedFileIndex]] and filters rows. Correct, but prunes
   *     after listing; only the row scan is saved. Composed on
-  *     [[streamPruned]] it keeps exactly [[batchPruned]]'s rows, up to
-  *     [[minDateGlob]]'s documented month-length residual.
+  *     [[streamPruned]] it keeps exactly [[batchPruned]]'s rows.
   */
 object AuditSource {
 
@@ -80,9 +79,9 @@ object AuditSource {
     df.filter(forall(dirs, d => try_to_date(d, "yyyyMMdd").isNull || d >= min))
   }
 
-  /** Glob alternation matching exactly the level-1 directory names the
-    * min-date rule keeps, so a file source can prune at LISTING time
-    * without freezing the directory set:
+  /** Glob alternation matching the level-1 directory names the min-date
+    * rule keeps (and the month-length superset below), so a file source
+    * can prune at LISTING time without freezing the directory set:
     *
     *   - 8-digit names `>= minDate` lexicographically — one branch per
     *     digit position (the standard prefix-range decomposition), so
@@ -100,13 +99,17 @@ object AuditSource {
     * 01–12 or whose day is not 01–31 cannot parse, so `DateFileFilter`
     * keeps them regardless of the min — six keep-branches below
     * enumerate exactly those shapes (`00001332`, `20241490`, …).
-    * Residual documented divergence: day-vs-month-length and leap
-    * rules are not glob-expressible (`20210230` fails STRICT parse and
-    * the reference keeps it, but this glob prunes it when below min) —
-    * [[batchPruned]]/[[DatePrunedFileIndex]] run the real parse and
-    * have full parity. Every parseable date compares identically
-    * (lexicographic == chronological for BASIC_ISO_DATE), and 8-digit
-    * non-dates ABOVE the min (`99999999`) pass both either way.
+    *
+    * Month length and leap years are not glob-expressible, so for the
+    * names invalid only by them (`20210230`, `20200431`, `20190229`)
+    * the glob keeps a SUPERSET: every 8-digit name with day 29–31 of
+    * February or day 31 of April, June, September or November. The
+    * real dates in that superset (`20200229`) are left to
+    * [[filterByPathDate]], which runs the strict parse; composed on
+    * [[streamPruned]] it keeps exactly [[batchPruned]]'s rows. Every
+    * other parseable date compares identically (lexicographic ==
+    * chronological for BASIC_ISO_DATE), and 8-digit non-dates ABOVE
+    * the min (`99999999`) pass either way.
     */
   private[graft] def minDateGlob(minDate: String): String = {
     checkedMinDate(minDate)
@@ -123,8 +126,10 @@ object AuditSource {
       d * 6 + "00",
       d * 6 + "3[2-9]",
       d * 6 + "[4-9]" + d)
+    // the superset around month-length non-dates: Feb 29-31, 31st of a 30-day month
+    val monthLength = Seq(d * 4 + "0229", d * 4 + "023[01]", d * 4 + "0[469]31", d * 4 + "1131")
     val nonDate = (1 to 7).map("?" * _) ++ Seq("*[^0-9]*", d * 9 + "*")
-    (ge ++ nonParse ++ nonDate).mkString("{", ",", "}")
+    (ge ++ nonParse ++ monthLength ++ nonDate).mkString("{", ",", "}")
   }
 
   /** Streaming source with ENUMERATION-time date pruning for bare
@@ -134,8 +139,9 @@ object AuditSource {
     * surviving days appearing later still match. This is the streaming
     * twin of [[batchPruned]] (the reference prunes during every poll,
     * `DateFileFilter.java:19-38` wired at `App.java:39-41`); the glob
-    * prunes the day level, and [[filterByPathDate]] composes on top when
-    * date dirs can also appear deeper in the tree.
+    * prunes the day level, and [[filterByPathDate]] composed on top
+    * drops the real dates in the glob's month-length superset and date
+    * dirs deeper in the tree.
     */
   def streamPruned(spark: SparkSession, path: String, minDate: String): DataFrame =
     stream(spark, s"${path.stripSuffix("/")}/${minDateGlob(minDate)}")

@@ -163,8 +163,8 @@ object AuditSessionPipeline {
     spark.sparkContext.setLogLevel("WARN")
     // min-date pruning happens at LISTING time on every poll (the glob
     // skips dead day dirs, matching the reference's per-poll
-    // DateFileFilter); the row filter composes on top only for date
-    // dirs nested deeper than the day level.
+    // DateFileFilter); the row filter on top drops the real dates the
+    // glob's month-length superset keeps and date dirs nested deeper.
     val lines = config.minDate match {
       case Some(d) =>
         AuditSource.filterByPathDate(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftSession
 import graft.operators.{Dedup, Guard, Similarity}
+import graft.queries.Q
 
 /** Scale-behavior probe: times the bucket-candidate operators on 1x/2x/
   * 4x/8x self-replications of the fixture corpus (ids shifted per copy so
@@ -54,6 +55,7 @@ object ScaleProbe {
 
     copies.foreach { k =>
       val d = replicate(docs, "doc_id", k)
+      val media = d.select(col("doc_id").as("media_id")) // the decoder probes' keys
       val e = replicate(emb, "vec_id", k)
       probe(s"minhash_lsh x$k") {
         Dedup.minhashLshPairs(d, "doc_id", "text").count()
@@ -521,11 +523,10 @@ object ScaleProbe {
       // WAV decode is map-only: payload synthesis + parse + moments,
       // no shuffle — wall must track the row count exactly
       probe(s"audio_decode x$k") {
-        val wav = udf((id: Long) =>
-          graft.operators.Multimodal.syntheticWav(id % 97, 1 + (id % 2).toInt, 8000, 96))
+        val wav = (id: Long) =>
+          graft.operators.Multimodal.syntheticWav(id % 97, 1 + (id % 2).toInt, 8000, 96)
         graft.operators.Multimodal.decodeAudio(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", wav(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(wav),
           "media_id", "payload").filter(col("ssq_c0") > 0).count()
       }
       // stump training: the value histogram is replication-invariant
@@ -641,38 +642,33 @@ object ScaleProbe {
       // map-only — wall must track the blob count (each doc row
       // becomes one 6-record gz archive)
       probe(s"warc_gz x$k") {
-        val warc = org.apache.spark.sql.functions.udf(
-          (id: Long) => graft.operators.Warc.syntheticWarcGz(id % 97, 6))
+        val warc = (id: Long) => graft.operators.Warc.syntheticWarcGz(id % 97, 6)
         graft.operators.Warc.recordsGz(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", warc(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(warc),
           "media_id", "payload").count()
       }
       // .warc.zst ingest: frame split + full RFC 8878 decode + WARC
       // parse, all map-only — wall must track the blob count exactly
       // like the gz twin (each doc row becomes one 6-record archive)
       probe(s"warc_zst x$k") {
-        val warc = org.apache.spark.sql.functions.udf(
-          (id: Long) => graft.operators.Warc.syntheticWarcZst(id % 97, 6))
+        val warc = (id: Long) => graft.operators.Warc.syntheticWarcZst(id % 97, 6)
         graft.operators.Warc.recordsZst(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", warc(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(warc),
           "media_id", "payload").count()
       }
       // dump ingest: multistream bz2 split + page extraction +
       // wikitext strip, all map-only — wall must track the blob count
       // (each doc row becomes one 2-member dump with 3 pages)
       probe(s"dump_pipeline x$k") {
-        val mk = udf((id: Long) => {
+        val mk = (id: Long) => {
           val s = id % 97
           graft.operators.DumpDecode.bz2Member("<mediawiki>\n".getBytes("UTF-8")) ++
             graft.operators.DumpDecode.bz2Member((0 until 3).map(i =>
               graft.operators.XmlDump.pageXml(s * 10 + i, 0, s"Page $s-$i", None,
                 s"'''B''' [[T $s|t]] body {{x|$i}} of $s <ref>c</ref> tail $i"))
               .mkString.getBytes("UTF-8"))
-        })
-        d.select(col("doc_id").as("media_id"))
-          .withColumn("payload", mk(col("media_id")))
+        }
+        Q.fixture(media, "media_id", "payload")(mk)
           .as[(Long, Array[Byte])]
           .flatMap { case (id, p) =>
             graft.operators.DumpDecode.bz2Members(p)
@@ -684,18 +680,17 @@ object ScaleProbe {
       // tar/zip shard sample assembly: the whole group-by-stem lives
       // inside the per-blob walk — wall must track the blob count
       probe(s"shard_samples x$k") {
-        val tarMk = udf((id: Long) => graft.operators.TarShard.tar((0 until 4).flatMap(i =>
+        val tarMk = (id: Long) => graft.operators.TarShard.tar((0 until 4).flatMap(i =>
           Seq((f"${id % 97}%06d_$i.txt", "0", s"cap $id $i".getBytes("UTF-8")),
-            (f"${id % 97}%06d_$i.cls", "0", "1".getBytes("UTF-8"))))))
-        val zipMk = udf((id: Long) => graft.operators.ZipShard.zip((0 until 4).flatMap(i =>
+            (f"${id % 97}%06d_$i.cls", "0", "1".getBytes("UTF-8")))))
+        val zipMk = (id: Long) => graft.operators.ZipShard.zip((0 until 4).flatMap(i =>
           Seq((f"${id % 97}%06d_$i.txt", s"cap $id $i".getBytes("UTF-8")),
-            (f"${id % 97}%06d_$i.cls", "1".getBytes("UTF-8")))), descriptor = true))
-        val half = d.select(col("doc_id").as("media_id"))
+            (f"${id % 97}%06d_$i.cls", "1".getBytes("UTF-8")))), descriptor = true)
         graft.operators.TarShard.sampleRows(
-          half.filter(col("media_id") % 2 === 0).withColumn("payload", tarMk(col("media_id"))),
+          Q.fixture(media.filter(col("media_id") % 2 === 0), "media_id", "payload")(tarMk),
           "media_id", "payload")
           .unionByName(graft.operators.ZipShard.sampleRows(
-            half.filter(col("media_id") % 2 === 1).withColumn("payload", zipMk(col("media_id"))),
+            Q.fixture(media.filter(col("media_id") % 2 === 1), "media_id", "payload")(zipMk),
             "media_id", "payload"))
           .count()
       }
@@ -703,7 +698,7 @@ object ScaleProbe {
       // + content-stream text walk, all map-only — wall must track the
       // blob count (each doc row becomes one 2-page modern-layout PDF)
       probe(s"pdf_text x$k") {
-        val mk = udf((id: Long) => {
+        val mk = (id: Long) => {
           val s = id % 97
           graft.operators.Pdf.pdfXrefStream(Seq(
             graft.operators.Pdf.Page(graft.operators.Pdf.contentOps(
@@ -711,10 +706,9 @@ object ScaleProbe {
             graft.operators.Pdf.Page(graft.operators.Pdf.contentOps(
               Seq(s"page two of $s")))),
             predictor = true, objStm = true)
-        })
+        }
         graft.operators.Pdf.textRows(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload")
           .filter(col("stage") === "ok").count()
       }
@@ -722,46 +716,43 @@ object ScaleProbe {
       // all map-only — wall must track the blob count (each doc row
       // becomes one 3-chapter book)
       probe(s"epub_chapters x$k") {
-        val mk = udf((id: Long) => {
+        val mk = (id: Long) => {
           val s = id % 97
           graft.operators.Epub.epub((0 until 3).map(i =>
             (s"ch$i.xhtml", s"<html><body><p>book $s chapter $i prose</p></body></html>")))
-        })
+        }
         graft.operators.Epub.chapterRows(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload").count()
       }
       // docx walk: zip members + the w:p/w:t paragraph scan, all
       // map-only — wall must track the blob count (each doc row
       // becomes one 3-paragraph document)
       probe(s"docx_text x$k") {
-        val mk = udf((id: Long) => {
+        val mk = (id: Long) => {
           val s = id % 97
           graft.operators.Docx.docx(Seq(
             Seq(s"Doc $s intro paragraph"),
             Seq(s"middle $s with a\ttab"),
             Seq(s"closing words $s")))
-        })
+        }
         graft.operators.Docx.textRows(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload")
           .filter(col("stage") === "ok").count()
       }
       // latex strip: gunzip + tar walk + the bounded macro scan, all
       // map-only — wall must track the blob count
       probe(s"latex_text x$k") {
-        val mk = udf((id: Long) => {
+        val mk = (id: Long) => {
           val s = id % 97
           graft.operators.CompressedMeta.gzipMember(graft.operators.TarShard.tar(Seq(
             (s"p$s/main.tex", "0",
               (s"\\section{Intro $s}\nprose $$x_$s$$ and \\cite{r$s} more\n" +
                 s"\\begin{equation}e\\end{equation} tail $s").getBytes("UTF-8")))))
-        })
+        }
         graft.operators.Latex.texRows(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload")
           .filter(col("text").isNotNull).count()
       }
@@ -769,10 +760,9 @@ object ScaleProbe {
       // map-only — wall must track the blob count (each doc row one
       // 16x8 normal-coded image)
       probe(s"webp_decode x$k") {
-        val mk = udf((id: Long) => graft.operators.Multimodal.syntheticWebp(id % 97, 16, 8))
+        val mk = (id: Long) => graft.operators.Multimodal.syntheticWebp(id % 97, 16, 8)
         graft.operators.Multimodal.decodeImages(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload")
           .filter(col("format") === "webp").count()
       }
@@ -783,7 +773,7 @@ object ScaleProbe {
           lit("</h1><ul><li>a</li><li>b</li></ul><p>body <b>text</b> "),
           col("media_id"), lit("</p><pre>c()</pre>"))
         graft.operators.Html.markdownRows(
-          d.select(col("doc_id").as("media_id")).withColumn("html", html),
+          media.withColumn("html", html),
           "media_id", "html")
           .filter(col("markdown").isNotNull).count()
       }
@@ -791,16 +781,15 @@ object ScaleProbe {
       // pptx/odt/rtf/xlsx mixed by key), map-only — wall must track
       // the blob count
       probe(s"office_triage x$k") {
-        val mk = udf((id: Long) => ((id % 5) match {
+        val mk = (id: Long) => ((id % 5) match {
           case 0 => graft.operators.Docx.docx(Seq(Seq(s"word doc ${id % 97}")))
           case 1 => graft.operators.Pptx.pptx(Seq(Seq(s"slide ${id % 97}")))
           case 2 => graft.operators.Odt.odt(Seq(s"odt doc ${id % 97}"))
           case 3 => s"{\\rtf1\\ansi legacy ${id % 97}\\par t}".getBytes("ISO-8859-1")
           case _ => graft.operators.Xlsx.xlsx(Seq(s"cell ${id % 97}"))
-        }))
+        })
         graft.operators.Office.routedText(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload")
           .filter(col("text").isNotNull).count()
       }
@@ -808,13 +797,12 @@ object ScaleProbe {
       // cp1252 and one UTF-16 piece per doc), map-only — wall must
       // track the blob count
       probe(s"doc_text x$k") {
-        val mk = udf((id: Long) => {
+        val mk = (id: Long) => {
           val s = id % 97
           graft.operators.Doc.doc(Seq(s"Legacy doc $s", s"body text $s words"))
-        })
+        }
         graft.operators.Doc.textRows(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload")
           .filter(col("stage") === "ok").count()
       }
@@ -822,69 +810,64 @@ object ScaleProbe {
       // per-object RC4 + the text walk, map-only — the per-document
       // cost an encrypted dump pays at 100 TB
       probe(s"pdf_decrypt x$k") {
-        val mk = udf((id: Long) => {
+        val mk = (id: Long) => {
           val s = id % 97
           graft.operators.Pdf.encryptedPdf(
             Seq(Seq(s"open doc $s", s"line $s more words")), "rc4128")
-        })
+        }
         graft.operators.Pdf.textRows(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload")
           .filter(col("stage") === "ok").count()
       }
       // xlsx sheet grid: worksheet row/cell walk + shared-string
       // resolve, map-only — wall must track the blob count
       probe(s"xlsx_cells x$k") {
-        val mk = udf((id: Long) => {
+        val mk = (id: Long) => {
           val s = id % 97
           graft.operators.Xlsx.xlsxGrid(Seq(
             (1, Seq(("s", s"Name $s"), ("n", s"$s"))),
             (2, Seq(("is", s"widget $s"), ("n", "3.5")))))
-        })
+        }
         graft.operators.Xlsx.cellRows(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload").count()
       }
       // legacy .xls: CFB walk + BIFF8 record run + SST resolve,
       // map-only — wall must track the blob count
       probe(s"xls_cells x$k") {
-        val mk = udf((id: Long) => {
+        val mk = (id: Long) => {
           val s = id % 97
           graft.operators.Xls.xls(Seq(
             (1, Seq(("s", s"Name $s"), ("n", s"$s"))),
             (2, Seq(("l", s"widget $s"), ("n", "3.5")))), split = id % 3 == 0)
-        })
+        }
         graft.operators.Xls.cellRows(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload").count()
       }
       // legacy .ppt: CFB walk + record-atom tree descent, map-only —
       // wall must track the blob count
       probe(s"ppt_text x$k") {
-        val mk = udf((id: Long) => {
+        val mk = (id: Long) => {
           val s = id % 97
           graft.operators.Ppt.ppt(Seq(Seq(s"deck $s title", s"point $s")))
-        })
+        }
         graft.operators.Ppt.textRows(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload")
           .filter(col("stage") === "ok").count()
       }
       // outlook .msg: CFB tree walk + property-stream decode, map-only
       // — wall must track the blob count
       probe(s"msg_text x$k") {
-        val mk = udf((id: Long) => {
+        val mk = (id: Long) => {
           val s = id % 97
           graft.operators.Msg.msg(s"Re: topic $s", s"sender $s",
             s"hello body $s words", Seq("alice", "bob"))
-        })
+        }
         graft.operators.Msg.textRows(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload")
           .filter(col("stage") === "ok").count()
       }
@@ -894,17 +877,16 @@ object ScaleProbe {
       probe(s"avro_records x$k") {
         val schema =
           """{"type":"record","name":"R","fields":[{"name":"id","type":"long"},{"name":"s","type":"string"}]}"""
-        val mk = udf((id: Long) => {
+        val mk = (id: Long) => {
           val s = id % 97
           graft.operators.Avro.ocf(schema,
             (0 until 6).map(i => Seq(
               graft.operators.Avro.AVLong(s * 10 + i),
               graft.operators.Avro.AVStr(s"row $s $i"))),
             codec = "deflate", blockSize = 3, seed = s)
-        })
+        }
         graft.operators.Avro.recordRows(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload").count()
       }
       // URL canonicalization is a map-only codegen expression — wall
@@ -918,11 +900,10 @@ object ScaleProbe {
       // media inventory (ID3v2 + MPEG frame walk) is map-only header
       // arithmetic — wall must track the row count
       probe(s"media_inventory x$k") {
-        val mk = udf((id: Long) =>
-          graft.operators.AudioMeta.syntheticMpeg(id % 97))
+        val mk = (id: Long) =>
+          graft.operators.AudioMeta.syntheticMpeg(id % 97)
         graft.operators.AudioMeta.audioInventory(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", mk(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(mk),
           "media_id", "payload").filter(col("n_frames") >= 0).count()
       }
       // crawl flagship chain: WARC walk → HTTP screen → URL canon →
@@ -930,16 +911,15 @@ object ScaleProbe {
       // canon-keyed dedup exchange is the only shuffle — wall must
       // track the blob count
       probe(s"crawl_pipeline x$k") {
-        val warc = udf((id: Long) =>
-          graft.operators.Warc.syntheticWarcCrawl(id % 97, 4))
+        val warc = (id: Long) =>
+          graft.operators.Warc.syntheticWarcCrawl(id % 97, 4)
         val rules = graft.operators.Robots.effectiveRules(
           (0 until 5).flatMap(m => graft.operators.Robots.parseRobots(
             s"site$m.example", "User-agent: *\nDisallow: /a1\n")),
           "graftbot")
         val http = graft.operators.Warc.httpResponses(
           graft.operators.Warc.records(
-            d.select(col("doc_id").as("media_id"))
-              .withColumn("payload", warc(col("media_id"))),
+            Q.fixture(media, "media_id", "payload")(warc),
             "media_id", "payload"))
           .filter(col("status") === 200 && col("content_type") === "text/html")
         val canoned = http
@@ -967,31 +947,28 @@ object ScaleProbe {
       // compressed image decode (baseline JPEG: Huffman + IDCT per
       // 16x16 payload) is map-only — wall must track the row count
       probe(s"jpeg_decode x$k") {
-        val jpg = udf((id: Long) =>
-          graft.operators.Multimodal.syntheticJpeg(id % 97))
+        val jpg = (id: Long) =>
+          graft.operators.Multimodal.syntheticJpeg(id % 97)
         graft.operators.Multimodal.decodeImages(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", jpg(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(jpg),
           "media_id", "payload").filter(col("n_pixels") > 0).count()
       }
       // GIF decode (LZW dictionary walk per 16x16 payload) is map-only
       // like the sibling codecs — wall must track the row count
       probe(s"gif_decode x$k") {
-        val gif = udf((id: Long) =>
-          graft.operators.Multimodal.syntheticGif(id % 97, 16, 16))
+        val gif = (id: Long) =>
+          graft.operators.Multimodal.syntheticGif(id % 97, 16, 16)
         graft.operators.Multimodal.decodeImages(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", gif(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(gif),
           "media_id", "payload").filter(col("n_pixels") > 0).count()
       }
       // video decode is a map-only flatMap: one synthetic 3-frame Y4M
       // per doc row — wall must track the row count, output 3x rows
       probe(s"video_decode x$k") {
-        val y4m = udf((id: Long) =>
-          graft.operators.Multimodal.syntheticY4m(id % 97, 6, 4, 3))
+        val y4m = (id: Long) =>
+          graft.operators.Multimodal.syntheticY4m(id % 97, 6, 4, 3)
         graft.operators.Multimodal.decodeVideos(
-          d.select(col("doc_id").as("media_id"))
-            .withColumn("payload", y4m(col("media_id"))),
+          Q.fixture(media, "media_id", "payload")(y4m),
           "media_id", "payload").filter(col("ssq_y") >= 0).count()
       }
       // pack-chain binning under the WORST skew: every document forced

@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Column ⇄ Expression bridge, and the other `private[sql]` access
-  * graft needs (a checkpoint's size estimate, [[capSizeEstimate]]).
+/** Column ⇄ Expression bridge, and the other `private[sql]`/`private[spark]`
+  * access graft needs (a checkpoint's size estimate, [[capSizeEstimate]];
+  * freeing its blocks, [[freeBlocks]]).
   *
   * Spark 4 hides the classic Column↔Expression converters behind
   * `private[sql]`; libraries that ship native Catalyst expressions (the
@@ -47,4 +48,12 @@ object ColumnBridge {
       Dataset.ofRows(spark, r.copy()(spark, Some(stats), Some(r.constraints)))
     case _ => df
   }
+
+  /** Drop `rdd`'s cached blocks (`SparkContext.unpersistRDD`, which is
+    * `private[spark]`). `RDD.unpersist` does the same but first logs a
+    * WARN for every locally checkpointed RDD — one line per
+    * `Guard.unpin`, which frees such checkpoints by design.
+    */
+  def freeBlocks(rdd: org.apache.spark.rdd.RDD[_], blocking: Boolean): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking)
 }

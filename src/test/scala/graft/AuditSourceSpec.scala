@@ -95,11 +95,15 @@ class AuditSourceSpec extends SparkSpec {
       "notadate", "abc", "2024031", "202403157", "dt=20240101", "a20240101",
       // below min but NOT parseable as dates -> DateFileFilter keeps them,
       // and so do the nonParse branches (month 00/13-99, day 00/32-99)
-      "00000000", "00001332", "20231490", "20230100", "20230132")
-    val pruned = Seq("20240314", "20240101", "19991231",
-      // residual documented divergence: day invalid only BY MONTH LENGTH
-      // (needs a real parse; the glob prunes it below min)
-      "20230230")
+      "00000000", "00001332", "20231490", "20230100", "20230132",
+      // below min and invalid only BY MONTH LENGTH: the reference keeps
+      // them, and so does the glob's superset (Feb 29-31, 31st of a
+      // 30-day month) — with the real date 20200229, which the row
+      // filter then drops
+      "20230230", "20230231", "20200431", "20230631", "20230931", "20231131",
+      "20190229", "20200229")
+    val pruned = Seq("20240314", "20240101", "19991231", "20230228", "20230131",
+      "20230430", "20231031")
     kept.foreach(n => assert(p.matches(n), s"expected glob to keep $n"))
     pruned.foreach(n => assert(!p.matches(n), s"expected glob to prune $n"))
   }
@@ -138,7 +142,11 @@ class AuditSourceSpec extends SparkSpec {
   test("stream fallback filter keeps exactly batchPruned's rows, non-date 8-digit dirs included") {
     val root = Files.createTempDirectory("audits_parity").toFile
     for ((d, line) <- Seq("20210101" -> "old", "20210301" -> "new",
-        "00001332" -> "month13", "20201490" -> "month14", "notadate" -> "misc")) {
+        "00001332" -> "month13", "20201490" -> "month14", "notadate" -> "misc",
+        // invalid only by month length (kept by the reference) around a
+        // real leap day below min (dropped)
+        "20210230" -> "feb30", "20200431" -> "apr31", "20190229" -> "feb29",
+        "20200229" -> "leapday")) {
       val dir = new java.io.File(root, d)
       dir.mkdirs()
       Files.writeString(new java.io.File(dir, "audit.log").toPath, line + "\n")
@@ -146,9 +154,10 @@ class AuditSourceSpec extends SparkSpec {
     val min = "20210201"
     val batch = AuditSource.batchPruned(spark, root.getAbsolutePath, Some(min))
       .collect().map(_.getString(0)).sorted.toSeq
-    // 00001332 and 20201490 are below min but do not parse as dates, so
-    // the reference (and the batch walk) keeps them
-    assert(batch == Seq("misc", "month13", "month14", "new"))
+    // 00001332, 20201490, 20200431 and 20190229 are below min but do not
+    // parse as dates, so the reference (and the batch walk) keeps them;
+    // 20210230 is above min either way
+    assert(batch == Seq("apr31", "feb29", "feb30", "misc", "month13", "month14", "new"))
 
     // the pipeline's stream composition: listing-time glob + row filter
     val lines = AuditSource.filterByPathDate(

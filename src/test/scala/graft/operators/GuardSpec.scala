@@ -46,6 +46,39 @@ class GuardSpec extends SparkSpec {
     assert(cachedPartitions(rdd) == 0)
   }
 
+  test("unpin logs nothing; RDD.unpersist on the same checkpoint logs Spark's WARN") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("unpin-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage): Unit
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    def filled() = {
+      val p = Guard.pin(spark.range(0, 100, 1, 2).toDF("v"))
+      assert(p.count() == 100L)
+      p
+    }
+    def warned = lines.asScala.count(_.contains("was locally checkpointed"))
+    try {
+      val p = filled()
+      Guard.unpin(p)
+      assert(!spark.sparkContext.getPersistentRDDs.contains(rddOf(p).id))
+      assert(warned == 0, lines.asScala.mkString("\n"))
+      // the capture sees the line when Spark's own unpersist emits it
+      rddOf(filled()).unpersist()
+      assert(warned == 1, lines.asScala.mkString("\n"))
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+  }
+
   test("a 30-round pinned loop keeps a constant-size plan and size estimate") {
     val (last, left) = residue {
       var cur = Guard.pin(spark.range(0, 100, 1, 2).toDF("v"))

@@ -4,6 +4,8 @@ import java.net.URI
 import java.nio.file.{FileSystems, Files}
 import java.nio.file.attribute.PosixFilePermission
 
+import scala.annotation.unused
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
@@ -75,6 +77,7 @@ class GraftRawLocalFs(conf: Configuration)
 
 /** `FileContext` API, as Hadoop's `LocalFs`: `.crc` sidecars over
   * [[GraftRawLocalFs]]. `AbstractFileSystem.get` instantiates it through
-  * this (URI, Configuration) constructor.
+  * this (URI, Configuration) constructor, reflectively, so `uri` is
+  * required though unread.
   */
-class GraftLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new GraftRawLocalFs(conf))
+class GraftLocalFs(@unused uri: URI, conf: Configuration) extends ChecksumFs(new GraftRawLocalFs(conf))

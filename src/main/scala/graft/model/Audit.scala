@@ -1,46 +1,15 @@
 package graft.model
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.types._
 
-/** Typed input record of the audit pipeline.
+/** Input record of the audit pipeline.
   *
   * Mirrors the reference's input schema — all 23 fields of
-  * `Audit.java:14-37` in WillDyson/flink-audit-sessions-example — as an
-  * idiomatic Scala case class with a companion Spark `StructType`.
-  *
-  * Numeric fields are boxed (`Option`-free `java.lang.Integer` is avoided;
-  * we use `Option[Int]`) so that a malformed / partially-populated JSON
-  * record can round-trip through Spark's PERMISSIVE `from_json` without
-  * inventing zeros.
+  * `Audit.java:14-37` in WillDyson/flink-audit-sessions-example — as a
+  * Spark `StructType`. Every field is nullable, so a malformed or
+  * partially-populated JSON record round-trips through Spark's
+  * PERMISSIVE `from_json` without inventing zeros.
   */
-final case class Audit(
-    repoType: Option[Int],
-    repo: Option[String],
-    reqUser: Option[String],
-    evtTime: Option[Timestamp],
-    action: Option[String],
-    access: Option[String],
-    resource: Option[String],
-    resType: Option[String],
-    result: Option[Int],
-    agent: Option[String],
-    policy: Option[Int],
-    policy_version: Option[Int],
-    enforcer: Option[String],
-    cliIP: Option[String],
-    reqData: Option[String],
-    agentHost: Option[String],
-    logType: Option[String],
-    id: Option[String],
-    seq_num: Option[Int],
-    event_count: Option[Int],
-    event_dur_ms: Option[Int],
-    tags: Option[Seq[String]],
-    cluster_name: Option[String]
-)
-
 object Audit {
 
   /** JSON timestamp pattern used by the reference's Jackson binding

@@ -36,7 +36,7 @@ import org.apache.spark.sql.DataFrame
   */
 object Avro {
 
-  import LenientJson.{J, JArr, JObj, JParse, JStr}
+  import LenientJson.{JArr, JObj, JParse, JStr}
 
   private val ScalarTypes =
     Set("long", "int", "string", "bytes", "boolean", "double", "float", "null")

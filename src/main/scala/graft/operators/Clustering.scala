@@ -203,7 +203,6 @@ object Clustering {
     */
   def updateStepAtScale(
       vecs: DataFrame,
-      idCol: String,
       vecCol: String,
       centroids: DataFrame
   ): DataFrame =

@@ -61,13 +61,6 @@ object Dedup {
       .groupBy(sha2(normalizeText(col(textCol)), 256).as("digest"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
 
-  /** Keep one row per distinct NORMALIZED text (first by id). */
-  def dropNormalizedDuplicates(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val canon = normalizedGroups(docs, idCol, textCol)
-      .select(col("canonical_id").as(idCol))
-    docs.join(canon, Seq(idCol), "left_semi")
-  }
-
   /** The 32-byte BINARY digest of a text column — the join/index key
     * incremental dedup stores and shuffles. `sha2` alone returns
     * 64-char hex (2× the bytes); unhex packs it back to the raw 32.
@@ -442,7 +435,7 @@ object Dedup {
     */
   val StrHashMult = 131L
   val StrHashMod = 1000000007L
-  def strHash(c: Column): Column =
+  private[graft] def strHash(c: Column): Column =
     graft.functions.GraftFunctions.polyHash(c, StrHashMult, StrHashMod)
 
   /** Higher-order-function formulation of [[strHash]] (slow path, kept
@@ -642,7 +635,7 @@ object Dedup {
   /** Materialized near-dup dedup: keep each cluster's canonical
     * (smallest-id) document — the end-to-end "dedup the corpus" step a
     * training pipeline actually ships. Cluster-exact (transitively
-    * closed), unlike the greedy [[dropNearDuplicates]].
+    * closed): a chain a~b~c keeps only a.
     */
   def dropNearDupClusterMembers(
       docs: DataFrame,
@@ -685,22 +678,6 @@ object Dedup {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .select(col("cluster"), col("id"), col(qualityCol))
-  }
-
-  /** Greedy near-dup removal: drop every doc that is the larger-id side
-    * of a qualifying pair (keeps the smallest id of each pair; the
-    * cluster-exact variant is `nearDupClusters` + keep cluster == id).
-    */
-  def dropNearDuplicates(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      threshold: Double
-  ): DataFrame = {
-    val dupIds = jaccardPairs(docs, idCol, textCol, n, threshold)
-      .select(col("id_b").as(idCol)).distinct()
-    docs.join(dupIds, Seq(idCol), "left_anti")
   }
 
   // -------------------------------------------------------------- minhash

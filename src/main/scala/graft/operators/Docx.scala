@@ -163,20 +163,6 @@ object Docx {
       .toDF(idCol, "stage", "n_paragraphs", "text")
   }
 
-  /** One row per PARAGRAPH of each ok document: (media_id, para_idx,
-    * text). Map-only.
-    */
-  def paragraphRows(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(df(idCol).cast("long"), df(binCol))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, b) =>
-        read(b).paragraphs.zipWithIndex.map { case (p, i) => (id, i, p) }
-      }
-      .toDF(idCol, "para_idx", "text")
-  }
-
   // ---- fixture writer (tests + gates only) ----
 
   private def xmlEscape(s: String): String =

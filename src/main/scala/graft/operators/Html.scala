@@ -25,25 +25,6 @@ import graft.functions.GraftFunctions
   */
 object Html {
 
-  /** `<a href>` ANCHOR pairs of one document: (raw href, the anchor's
-    * visible text — nested markup stripped, entities decoded,
-    * whitespace collapsed, capped). Anchor text is the label the WEB
-    * gives a page — the signal retrieval corpora and query-document
-    * pairs are built from — and it lives BETWEEN tags, so this rides
-    * [[GraftMath.scanHtmlFull]]'s event view of the SAME hardened
-    * scanner the link and meta extractors use (comments and
-    * script/style bodies can't fake an anchor, quoted `>` can't end a
-    * tag early, single-quoted/unquoted hrefs parse, `</abbr>` is not
-    * `</a>`). Href-less and fragment-only anchors skipped; a new `<a>`
-    * implicitly closes the previous (the browser rule — anchors never
-    * nest); a torn anchor at end of input is discarded (completed-
-    * prefix); empty text (image links) survives as "" — the href still
-    * carries graph signal.
-    */
-  def anchorPairs(html: String, maxAnchors: Int = 10000,
-      maxTextLen: Int = 512): Seq[(String, String)] =
-    graft.functions.GraftMath.htmlAnchorPairs(html, maxAnchors, maxTextLen)
-
   /** One row PER ANCHOR of each page: every column of `pages` except
     * `htmlCol`, plus the base-resolved canonical `href` and its
     * `anchor` text — [[outlinks]]' shape with the label attached.

@@ -121,7 +121,7 @@ object Latex {
             else if (Character.isLetter(c2)) {
               var j = i + 1
               while (j < n && Character.isLetter(s.charAt(j))) j += 1
-              var name = s.substring(i + 1, j)
+              val name = s.substring(i + 1, j)
               if (j < n && s.charAt(j) == '*') { j += 1 } // starred forms
               if (name == "begin") {
                 val (env0, after) = if (j < n && s.charAt(j) == '{') braceGroup(s, j) else ("", j)

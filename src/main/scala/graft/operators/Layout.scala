@@ -37,24 +37,14 @@ object Layout {
     * y at bit 2i+1. Monotone along the Z-curve; the result is a plain
     * LongType (negative when bit 31 of y is set — still a total order
     * per unsigned comparison is NOT preserved then, so keep inputs
-    * below 2^31 when the sign matters for range partitioning).
+    * below 2^31 when the sign matters for range partitioning). To
+    * cluster a table, `repartitionByRange` and `sortWithinPartitions`
+    * by it: each partition then covers a compact z-range ⇒ compact
+    * ranges of both source columns, which file-skipping statistics
+    * (min/max) exploit on either predicate.
     */
   def zValue(x: Column, y: Column): Column =
     part1by1(x).bitwiseOR(shiftleft(part1by1(y), 1))
-
-  /** Cluster a DataFrame for multi-dimensional pruning: range-partition
-    * and sort by the interleaved z-value. `numPartitions` sizes output
-    * files; each partition covers a compact z-range ⇒ compact ranges of
-    * both source columns, which file-skipping statistics (min/max) then
-    * exploit on either predicate.
-    */
-  def zOrderBy(df: DataFrame, x: Column, y: Column, numPartitions: Int): DataFrame = {
-    val z = Iterator.iterate("__z")(_ + "_").dropWhile(df.columns.contains).next()
-    df.withColumn(z, zValue(x, y))
-      .repartitionByRange(numPartitions, col(z))
-      .sortWithinPartitions(col(z))
-      .drop(z)
-  }
 
   /** Small-file compaction planning: assign each file of a partitioned
     * table to a rewrite group of ~`targetBytes`, preserving sort order
@@ -200,8 +190,8 @@ object Layout {
 
   /** What [[maintainTable]] did, per partition value: which partitions
     * were rewritten, which came out fully emptied by the purge (their
-    * directories are removed — closing the dynamic-overwrite gap where
-    * a no-survivor partition keeps stale files), and which were left
+    * directories are removed, as [[graft.operators.Similarity
+    * .purgeFromIndex]] removes an emptied cell), and which were left
     * byte-untouched.
     */
   final case class MaintenanceReport(

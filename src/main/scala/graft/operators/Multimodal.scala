@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column handling: image/audio/video payloads as opaque
@@ -1556,43 +1556,6 @@ object Multimodal {
       ).as(Seq("frame_no", "frame_sample"))
     )
   }
-
-  /** Rebalance skewed blob sizes so each task sees ~targetBytes of
-    * payload (pre-shuffle for the decode stage when inputs are skewed).
-    *
-    * The partition count comes from metadata, never a data scan: pass
-    * `totalBytes` when the pipeline knows it (ingest accounting, a
-    * manifest), else it falls back to Catalyst's plan-statistics size —
-    * file-footer metadata for file-backed inputs. An earlier version
-    * summed `length(payload)` with an extra job, which doubles the read
-    * at 100 TB; an estimate is exactly as good here, because the target
-    * is a task-sizing heuristic, not an exact quota.
-    */
-  def rebalanceBySize(
-      df: DataFrame,
-      payloadCol: String,
-      targetBytes: Long,
-      totalBytes: Option[Long] = None
-  ): DataFrame = {
-    val bytes = totalBytes.getOrElse(
-      df.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong)
-    // Catalyst reports Long.MaxValue for unknown-stats plans (post-join,
-    // non-file-backed); with a small targetBytes the quotient can exceed
-    // Int range and `.toInt` would wrap to an arbitrary count. Unknown
-    // stats carry no sizing signal at all, so keep the input partitioning;
-    // otherwise clamp to a sane ceiling before narrowing.
-    if (bytes == Long.MaxValue && totalBytes.isEmpty) df
-    else {
-      val parts = math.min(math.max(1L, bytes / targetBytes), MaxRebalanceParts.toLong).toInt
-      df.repartition(parts)
-    }
-  }
-
-  /** Ceiling for [[rebalanceBySize]]'s computed partition count — far above
-    * any real cluster's useful task count, far below Int overflow.
-    */
-  val MaxRebalanceParts: Int = 1 << 20
 
   /** A REAL decoded audio clip: format/layout metadata plus per-channel
     * integer moments (mean/RMS derive as sum/n and ssq/n) and

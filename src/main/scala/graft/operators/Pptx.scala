@@ -58,25 +58,6 @@ object Pptx {
     else PptxDoc("ok", slides)
   }
 
-  /** One row per SLIDE of each deck: (media_id, slide_no, name, text,
-    * n_paragraphs) with `text` the slide's paragraphs joined by
-    * NEWLINE. Degraded decks emit nothing here — [[textRows]] carries
-    * their countable stage (the Epub chapterRows/docRows split).
-    * Map-only.
-    */
-  def slideRows(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(df(idCol).cast("long"), df(binCol))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, b) =>
-        read(b).slides.map { case (no, name, ps) =>
-          (id, no, name, ps.mkString("\n"), ps.length)
-        }
-      }
-      .toDF(idCol, "slide_no", "name", "text", "n_paragraphs")
-  }
-
   /** One row per deck: (media_id, stage, n_slides, text) with `text`
     * all slides' paragraphs joined by NEWLINE in slide order (NULL on
     * degrade, countable). Map-only.

@@ -35,12 +35,6 @@ object Quantize {
     )
   }
 
-  /** Dequantize back to doubles (lossy inverse, for spec round-trip
-    * error bounds): v ≈ q · scale.
-    */
-  def fromInt8(qvecCol: String, scaleCol: String): Column =
-    transform(col(qvecCol), q => q.cast("double") * col(scaleCol))
-
   // ------------------------------------------------- product quantization
 
   /** Product-quantization codebooks: split the `dim`-dimensional space
@@ -141,7 +135,6 @@ object Quantize {
     */
   def pqUpdateStep(
       vecs: DataFrame,
-      idCol: String,
       vecCol: String,
       codebooks: DataFrame,
       dim: Int,
@@ -211,7 +204,7 @@ object Quantize {
       .select(col("sub"), col("code"),
         transform(col("centroid"), v => v.cast("double")).as("centroid"))
     (1 to iters).foldLeft(seed) { (cb, _) =>
-      pqCodebooksFromUpdate(pqUpdateStep(vecs, idCol, vecCol, cb, dim, subspaces), cb)
+      pqCodebooksFromUpdate(pqUpdateStep(vecs, vecCol, cb, dim, subspaces), cb)
     }
   }
 

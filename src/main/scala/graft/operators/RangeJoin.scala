@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
 object RangeJoin {
 
   /** Naive twin (kept for the equivalence spec + broadcastable cases). */
-  def pointInIntervalNaive(
+  private[graft] def pointInIntervalNaive(
       points: DataFrame,
       intervals: DataFrame,
       pointCol: String,

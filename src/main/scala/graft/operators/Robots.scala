@@ -162,7 +162,7 @@ object Robots {
     * MAX — the polite reading. Domains with no directive are absent —
     * the scheduler's default applies.
     */
-  def effectiveDelays(parsed: Seq[(String, String, Long)], agent: String): Seq[(String, Long)] = {
+  private[graft] def effectiveDelays(parsed: Seq[(String, String, Long)], agent: String): Seq[(String, Long)] = {
     val me = agent.toLowerCase(java.util.Locale.ROOT)
     parsed.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (d, rows) =>
       val mine = rows.filter(_._2 == me)

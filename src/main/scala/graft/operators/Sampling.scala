@@ -680,15 +680,19 @@ object Sampling {
     if (k >= 1 && k <= TextAnalysis.LnTableSize) TextAnalysis.LnTable((k - 1).toInt)
     else StrictMath.log(k.toDouble)
 
-  /** [[dsirModelArray]] CENTERED at the raw/target mixture: each delta
-    * carries the per-token corpus constant `ln(Tr) − ln(Tt)` (totals
-    * summed from the model's own bucket counts — no extra scan), so
-    * the scored rate reads as a true log-likelihood ratio and 0 is the
-    * meaningful neutral point: positive = more target-like than the
-    * average raw token mix. The constant itself stays a shared-table
+  /** Collect a [[dsirBucketModel]] into the dense per-bucket delta
+    * array [[dsirScore]] consumes, CENTERED at the raw/target mixture.
+    * Decision-table-sized by contract (`buckets` entries) — the one
+    * bounded driver materialization, the same shape as a quota table
+    * riding a closure. Each delta carries the per-token corpus
+    * constant `ln(Tr) − ln(Tt)` (totals summed from the model's own
+    * bucket counts — no extra scan), so the scored rate reads as a
+    * true log-likelihood ratio and 0 is the meaningful neutral point:
+    * positive = more target-like than the average raw token mix. The constant itself stays a shared-table
     * read via the same count-scaling trick (totals div `totalScale`;
     * the ln-scale shift cancels between the two terms), so the whole
-    * screen remains bit-exact cross-engine.
+    * screen remains bit-exact cross-engine. Buckets unseen in training
+    * keep the bare constant (add-one smoothing of two zero counts).
     */
   def dsirModelArrayCentered(
       model: DataFrame,
@@ -707,22 +711,8 @@ object Sampling {
     out
   }
 
-  /** Collect a [[dsirBucketModel]] into the dense per-bucket delta
-    * array [[dsirScore]] consumes. Decision-table-sized by contract
-    * (`buckets` entries) — the one bounded driver materialization, the
-    * same shape as a quota table riding a closure. Buckets unseen in
-    * training keep delta 0 (= add-one smoothing of two zero counts).
-    */
-  def dsirModelArray(model: DataFrame, buckets: Int): Array[Double] = {
-    val out = new Array[Double](buckets)
-    model.select(col("__b").cast("int"), col("__delta").cast("double"))
-      .collect()
-      .foreach(r => out(r.getInt(0)) = r.getDouble(1))
-    out
-  }
-
   /** Map-side DSIR rating of a text column against a FITTED model
-    * (the dense delta array from [[dsirModelArray]]): the summed
+    * (the dense delta array from [[dsirModelArrayCentered]]): the summed
     * per-token bucket deltas, folded in token order — a pure
     * projection, no shuffle, streaming-safe (a stream screen is this
     * column in a `withColumn` on `readStream`). Divide by the token

@@ -35,7 +35,7 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  private[graft] def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Exact top-k neighbors for each query vector.
     *
@@ -270,12 +270,11 @@ object Similarity {
     * At 100 TB this is the index lifecycle primitive: the nightly new
     * batch costs one broadcast argmax over the delta plus one
     * partitioned write — the existing corpus is never read or shuffled.
-    * Compaction of small appended files (e.g. [[graft.operators
-    * .Multimodal.rebalanceBySize]]-style sizing, or a per-cell
-    * rewrite) and centroid re-training are separate, coarser-cadence
-    * jobs; drift between frozen centroids and new data shows up as
-    * recall decay in [[ivfProbeSweep]]'s regression numbers, which is
-    * the signal to retrain.
+    * Compaction of small appended files ([[graft.operators.Layout
+    * .compactDir]], a per-cell rewrite) and centroid re-training are
+    * separate, coarser-cadence jobs; drift between frozen centroids and
+    * new data shows up as recall decay in [[ivfProbeSweep]]'s
+    * regression numbers, which is the signal to retrain.
     */
   def appendToIndex(
       delta: DataFrame,
@@ -294,26 +293,21 @@ object Similarity {
     * [[appendToIndex]] in the index lifecycle (append / purge /
     * compact / retrain).
     *
-    * Plan: one semi-join finds the affected cells, one anti-join drops
-    * the deleted rows; survivors land in a sibling staging dir first
-    * (Spark refuses to overwrite a path it is reading), then a second
-    * job re-writes them `partitionBy(centroid_id)` with
-    * `partitionOverwriteMode=dynamic`, which replaces exactly the
-    * partitions present in the written data. Work ∝ affected cells,
-    * not index size — the partition-pruned delete a real table format
-    * implements with deletion vectors + compaction.
-    *
-    * Bounds (documented, not silent): `deletes` is broadcast — the
-    * GDPR/takedown batch shape; drop the hint for pathological delete
-    * volumes. A cell whose EVERY row is deleted produces no survivor
-    * rows, so dynamic overwrite cannot touch it and its stale files
-    * remain — guard reads with [[withPurgePending]] until the next
-    * [[graft.operators.Layout.compactDir]] / [[graft.operators.Layout
-    * .maintainTable]] / full rewrite of that cell (the deletion-vector
-    * discipline). q_purge_index plants
-    * deletes with surviving cell-mates, REQUIREs untouched cells kept
-    * their files, and hash-checks the purged index against a rebuild
-    * from the filtered corpus.
+    * Plan: one semi-join collects the affected cells (at most one value
+    * per cell — metadata-scale, like a listing); a partition-pruned read
+    * of those cells anti-joins the deleted rows; survivors land in a
+    * sibling staging dir first (Spark refuses to overwrite a path it is
+    * reading), then a second job re-writes them
+    * `partitionBy(centroid_id)` with `partitionOverwriteMode=dynamic`,
+    * which replaces exactly the partitions present in the written data.
+    * An affected cell with no survivor rows is absent from that data,
+    * so the overwrite cannot reach it: its directory is removed once
+    * the survivors are written. Work ∝ affected cells, not index size —
+    * the partition-pruned delete a real table format implements with
+    * deletion vectors + compaction. `deletes` is broadcast — the
+    * GDPR/takedown batch shape. q_purge_index REQUIREs untouched cells
+    * kept their files, and hash-checks the purged index against a
+    * rebuild from the filtered corpus.
     */
   def purgeFromIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -323,10 +317,12 @@ object Similarity {
   ): Unit = {
     import org.apache.hadoop.fs.Path
     val index = spark.read.parquet(path)
-    val affected = index.join(broadcast(deletes), Seq(idCol), "left_semi")
-      .select(col("centroid_id")).distinct()
+    def cells(df: DataFrame): Set[String] =
+      df.select(col("centroid_id").cast("string")).distinct()
+        .collect().map(_.getString(0)).toSet
+    val affected = cells(index.join(broadcast(deletes), Seq(idCol), "left_semi"))
     val survivors = index
-      .join(broadcast(affected), Seq("centroid_id"), "left_semi")
+      .filter(col("centroid_id").cast("string").isin(affected.toSeq: _*))
       .join(broadcast(deletes), Seq(idCol), "left_anti")
 
     val dir = new Path(path)
@@ -337,28 +333,15 @@ object Similarity {
     val tmp = new Path(dir.getParent, s"purge_tmp_${dir.getName}")
     fs.delete(tmp, true)
     survivors.write.mode("overwrite").parquet(tmp.toString)
-    spark.read.parquet(tmp.toString)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("centroid_id").parquet(path)
+    val staged = spark.read.parquet(tmp.toString)
+    val kept = cells(staged)
+    if (kept.nonEmpty)
+      staged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("centroid_id").parquet(path)
+    (affected -- kept).foreach(v => fs.delete(new Path(dir, s"centroid_id=$v"), true))
     fs.delete(tmp, true)
   }
-
-  /** Read-side guard for the purge→compaction window — the
-    * deletion-vector discipline as a composable function: re-apply a
-    * PENDING delete list to any read of the index. [[purgeFromIndex]]
-    * cannot touch a cell whose every row was deleted (dynamic overwrite
-    * only replaces partitions present in the written data), so that
-    * cell's stale files keep serving deleted rows until the next
-    * compaction or full rewrite (e.g.
-    * [[graft.operators.Layout.maintainTable]], which removes emptied
-    * cells outright). Until then, wrap reads in this guard. One
-    * broadcast anti-join on the id — the takedown-batch shape; after
-    * the rewrite it is a no-op and can be dropped. Generic over any
-    * id-keyed table, not just IVF layouts.
-    */
-  def withPurgePending(df: DataFrame, deletes: DataFrame, idCol: String): DataFrame =
-    df.join(broadcast(deletes.select(col(idCol))), Seq(idCol), "left_anti")
 
   /** SemDeDup-style semantic deduplication: assign every vector to a
     * coarse centroid cell (broadcast argmax fold — zero corpus

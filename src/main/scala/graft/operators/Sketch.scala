@@ -170,21 +170,12 @@ object Sketch {
   /** Linear-counting switchover for a 2^bits-bucket sketch: 2.5·m. */
   def hllLcBoundFor(bits: Int): Long = 5L * (1L << bits) / 2L
 
-  /** Build the register set over a text column's whitespace tokens:
-    * ONE corpus scan — each token projects to its (bucket, rank) pair
-    * map-side, then one partial-agg shuffle folds the MAX into the
-    * ≤ m-row register table. Duplicate tokens are absorbed by the MAX
-    * (no distinct pass). Returns (bucket, register); absent buckets
-    * are empty (register 0).
-    */
   /** The (bucket, __rho) projection both register builders share —
-    * XXH64 of a token in `__t`: low 6 bits index the bucket
+    * XXH64 of a token in `__t`: the low `bits` bits index the bucket
     * (sign-safe under two's complement), the next 32 are the rank
     * field; one hash chain so solo and grouped sketches can never
     * drift.
     */
-  private def hllBucketRho: Seq[Column] = hllBucketRhoFor(6)
-
   private def hllBucketRhoFor(bits: Int): Seq[Column] = {
     val h = xxhash64(col("__t"))
     val v = shiftrightunsigned(h, bits).bitwiseAND(lit(4294967295L))
@@ -194,6 +185,13 @@ object Sketch {
       rho.cast("long").as("__rho"))
   }
 
+  /** Build the register set over a text column's whitespace tokens:
+    * ONE corpus scan — each token projects to its (bucket, rank) pair
+    * map-side, then one partial-agg shuffle folds the MAX into the
+    * ≤ m-row register table. Duplicate tokens are absorbed by the MAX
+    * (no distinct pass). Returns (bucket, register); absent buckets
+    * are empty (register 0).
+    */
   def hllRegisters(docs: DataFrame, textCol: String): DataFrame =
     hllRegistersP(docs, textCol, 6)
 
@@ -304,33 +302,6 @@ object Sketch {
             (lit(TextAnalysis.LnTable((m - 1).toInt)) -
               TextAnalysis.lnInt(col("n_zero")))))
           .otherwise(col("est_raw")))
-  }
-
-  /** [[hllEstimateBy]] with an explicit group UNIVERSE — the left-join
-    * the GROUP-BY caveat demands, wrapped so composed gates can't
-    * forget it: a group whose documents all tokenized to nothing never
-    * reaches the sketch (the group key rides the tokens, and there are
-    * none), so its row is absent from the register frame. `universe`
-    * carries one `group` column (deduped here); absent groups fill
-    * with the EMPTY-SKETCH row — the exact values [[hllEstimate]]
-    * returns on an empty frame (n_present 0, n_zero m, s_sum m·2^33,
-    * the floored raw quotient, method linear, est 0) — so downstream
-    * code cannot tell a filled zero from a computed one.
-    */
-  def hllEstimateByComplete(registers: DataFrame, universe: DataFrame): DataFrame = {
-    val m = HllBuckets.toLong
-    val k = HllFieldBits + 1
-    val emptySum = m * (1L << k)
-    universe.select(col("group")).distinct()
-      .join(hllEstimateBy(registers), Seq("group"), "left")
-      .select(
-        col("group"),
-        coalesce(col("n_present"), lit(0L)).as("n_present"),
-        coalesce(col("n_zero"), lit(m)).as("n_zero"),
-        coalesce(col("s_sum"), lit(emptySum)).as("s_sum"),
-        coalesce(col("est_raw"), lit(HllAlphaNum / emptySum)).as("est_raw"),
-        coalesce(col("method"), lit("linear")).as("method"),
-        coalesce(col("est"), lit(0L)).as("est"))
   }
 
   // --- KMV (k-minimum-values / bottom-k theta) ---------------------------

@@ -215,19 +215,6 @@ object TextAnalysis {
       .otherwise(lit(1.0) - size(array_distinct(grams)).cast("double") / total.cast("double"))
   }
 
-  /** Keep documents under both repetition thresholds — the composed
-    * curation filter. One scan, no shuffle.
-    */
-  def repetitionFilter(
-      df: DataFrame,
-      textCol: String,
-      maxDupTokFrac: Double,
-      maxDupNgramFrac: Double,
-      n: Int = 3
-  ): DataFrame =
-    df.filter(dupTokenFrac(col(textCol)) <= maxDupTokFrac &&
-      dupNgramFrac(col(textCol), n) <= maxDupNgramFrac)
-
   /** Redact email-like and simple phone-like spans — the PII scrub
     * pass a corpus pipeline runs before anything ships. Patterns stay
     * within the regex subset Java and RE2 interpret identically
@@ -401,26 +388,15 @@ object TextAnalysis {
         aggregate(col("cs"), lit(0.0), (acc, x) => acc + x("c")).as("nll2_tab"))
   }
 
-  /** Corpus-unigram negative log-likelihood per document — the
-    * perplexity-proxy quality score (documents whose tokens are globally
-    * rare score high). nll = Σ_tokens −ln(count(term)/N) computed as
-    * Σ over the doc's distinct terms of tf·ln(N/count); avg_nll divides
-    * by the doc's token count (one deterministic division).
-    *
-    * Plan: two partial-aggregated shuffles (per-doc term counts, corpus
-    * term counts), a term-keyed join, then a per-doc fold over terms in
-    * sorted order so the double sum is engine-exact (same discipline as
-    * [[Clustering.updateStep]]). The corpus total N arrives by broadcast
-    * scalar — no driver action.
-    */
-  /** The fully-PINNED per-doc surprisal components:
-    * (id, n_tokens, nll_tab) with nll_tab = Σ_terms tf·lnInt(count(term)),
+  /** Corpus-unigram surprisal per document (a perplexity proxy: docs
+    * whose tokens are globally rare score high) as fully-PINNED
+    * components: (id, n_tokens, nll_tab) with nll_tab = Σ_terms tf·lnInt(count(term)),
     * folded in term order. Every ln reads the shared integer table, so
     * both columns are bit-exact across engines for ANY fixture — no
     * runtime log anywhere (the cross-engine ln-drift surface is zero;
     * see the LnTable notes on [[lnInt]]). The full score derives as
-    * nll = n_tokens·ln(NN) − nll_tab with NN = Σ n_tokens — which is
-    * what [[unigramNll]] does; gates should compare THESE columns.
+    * nll = n_tokens·ln(NN) − nll_tab with NN = Σ n_tokens (its one
+    * runtime ln stays with the consumer); gates compare THESE columns.
     */
   def unigramSurprisal(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val tf = docs
@@ -439,21 +415,6 @@ object TextAnalysis {
       .select(
         col("id"), col("n_tokens"),
         aggregate(col("cs"), lit(0.0), (acc, x) => acc + x("c")).as("nll_tab"))
-  }
-
-  def unigramNll(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val parts = unigramSurprisal(docs, idCol, textCol)
-    // corpus total NN = Σ per-doc token counts; its single runtime
-    // ln(NN) lives HERE, in the user-facing derivation, not in the
-    // pinned gate columns ([[unigramSurprisal]])
-    val total = parts.select(sum(col("n_tokens")).as("__nn"))
-    parts
-      .crossJoin(broadcast(total))
-      .select(
-        col("id"), col("n_tokens"),
-        (col("n_tokens").cast("double") * log(col("__nn").cast("double")) -
-          col("nll_tab")).as("nll"))
-      .withColumn("avg_nll", col("nll") / col("n_tokens").cast("double"))
   }
 
   /** Okapi BM25 document scores for a fixed query-term set — the

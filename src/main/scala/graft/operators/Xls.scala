@@ -445,7 +445,7 @@ object Xls {
     b.toByteArray
   }
 
-  private def bof(dt: Int, vers: Int = 0x0600): Array[Byte] =
+  private def bof(dt: Int, vers: Int): Array[Byte] =
     rec(RBofT, leBytes(vers, 2) ++ leBytes(dt, 2) ++ new Array[Byte](12))
 
   /** Minimal valid BIFF8 .xls: globals substream (BOF + SST + EOF) and

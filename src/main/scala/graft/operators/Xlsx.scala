@@ -370,7 +370,7 @@ object Xlsx {
 
   /** One row per grid CELL: (media_id, sheet_no, row_no, col_no,
     * value), row-major per sheet. Degraded documents emit nothing here
-    * ([[textRows]]/[[gridTextRows]] carry the countable stage).
+    * ([[textRows]] carries the countable stage).
     * Map-only.
     */
   def cellRows(df: DataFrame, idCol: String, binCol: String): DataFrame = {
@@ -408,29 +408,6 @@ object Xlsx {
       lastKey = (c.sheet, c.row)
     }
     ("ok", g.cells.length, sb.toString)
-  }
-
-  /** One row per document: (media_id, stage, n_cells, text) over the
-    * GRID view — [[gridText]]'s shape contract. Map-only.
-    */
-  def gridTextRows(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(df(idCol).cast("long"), df(binCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, b) =>
-        if (b == null) (id, "zip", 0, null)
-        else if (Cfb.isCfb(b)) (id, Docx.cfbStage(b), 0, null)
-        else {
-          val es = ZipShard.entries(b)
-          if (es.isEmpty) (id, "zip", 0, null)
-          else {
-            val (stage, nc, text) = gridText(es)
-            (id, stage, nc, text)
-          }
-        }
-      }
-      .toDF(idCol, "stage", "n_cells", "text")
   }
 
   /** One row per document: (media_id, stage, n_strings, text) — the

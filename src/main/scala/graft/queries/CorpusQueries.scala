@@ -697,7 +697,7 @@ object CorpusQueries {
     // surprisal components (n_tokens, nll_tab = Σ tf·lnInt(n)) — every
     // ln is a table read, so the entry survives fixture regeneration
     // with no runtime-log drift; the full score derives downstream as
-    // nll = n_tokens·ln(ΣNN) − nll_tab (unigramNll does exactly this).
+    // nll = n_tokens·ln(ΣNN) − nll_tab.
     Q(
       "q_unigram_nll",
       (spark, dir) =>
@@ -973,7 +973,7 @@ object CorpusQueries {
           transform(col("embedding"), x =>
             floor(x.cast("double") * grid + lit(0.5)).cast("double") / grid)
             .as("embedding"))
-        Clustering.updateStepAtScale(vecs, "vec_id", "embedding",
+        Clustering.updateStepAtScale(vecs, "embedding",
           Clustering.initialCentroids(vecs, "vec_id", "embedding", KClusters))
       },
       Some(
@@ -1293,7 +1293,7 @@ object CorpusQueries {
           transform(col("embedding"), x =>
             floor(x.cast("double") * grid + lit(0.5)).cast("double") / grid)
             .as("embedding"))
-        Quantize.pqUpdateStep(emb, "vec_id", "embedding",
+        Quantize.pqUpdateStep(emb, "embedding",
           Quantize.pqCodebooks(emb, "vec_id", "embedding",
             dim = 64, subspaces = 8, nCodes = 16),
           dim = 64, subspaces = 8)

@@ -1709,7 +1709,7 @@ object DumpQueries {
     // references (r attributes are authoritative) and mixes all three
     // cell forms; the reader emits row-major (row, col) regardless of
     // storage order. Junk payloads emit nothing (their countable stage
-    // rides gridTextRows). Map-only.
+    // rides Xlsx.textRows). Map-only.
     Q(
       "q_xlsx_cells",
       (spark, dir) => {

@@ -1304,7 +1304,7 @@ object ExtendedQueries {
     ),
 
     // Z-order (Morton) clustering values — the multi-dimensional
-    // layout key (Layout.zOrderBy range-partitions and sorts by it);
+    // layout key (a table range-partitioned and sorted by it);
     // the gate pins every interleaved value.
     Q(
       "q_zorder",

@@ -1150,8 +1150,8 @@ object NorthStarQueries {
 
     // The index lifecycle's DELETE: purge a takedown batch (five
     // non-centroid ids — their cells always retain at least the
-    // centroid's own row, so no cell empties out and the documented
-    // dynamic-overwrite empty-cell bound is not in play)
+    // centroid's own row, so every affected cell is rewritten and none
+    // is removed)
     // from the persisted IVF layout via dynamic partition overwrite —
     // only cells containing deleted ids are rewritten. The REQUIREs pin
     // the partition-pruned-delete claim structurally: at least one cell

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Pdf
 
 /** PDF ingest gates: the pure-JVM text extractor

@@ -6,10 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
 /** Stream-static composition: enrich or screen an unbounded stream
-  * against bounded reference data — the third join family Structured
-  * Streaming supports (alongside stream-stream interval joins,
-  * [[StreamJoin]]), and the streaming face of the batch reference-data
-  * operators.
+  * against bounded reference data — the join family Structured
+  * Streaming supports without state, and the streaming face of the
+  * batch reference-data operators.
   *
   * Both operators are STATELESS on the stream side (no watermark, no
   * state store): the static side broadcasts, so every micro-batch is a

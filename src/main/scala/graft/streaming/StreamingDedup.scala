@@ -2,81 +2,16 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 
-/** Streaming deduplication — the ingest-side twin of the batch dedup
-  * operators: drop repeated records as they arrive, before they ever hit
-  * storage. Both variants are pure DataFrame→DataFrame functions that
-  * also work on batch inputs (unified API).
-  *
-  * State sizing at scale: `exact` keeps every key seen since the query
-  * started (unbounded state — only for keyspaces known to be small);
-  * `withinWatermark` bounds state by event time: a key's state is
-  * dropped once the watermark passes it, so state ∝ (arrival rate ×
-  * watermark delay), independent of stream lifetime — the only viable
-  * shape for an unbounded 100 TB/day ingest.
+/** Streaming deduplication — the ingest-side screens of the batch dedup
+  * operators: drop arriving records that duplicate a persisted corpus
+  * index, before they ever hit storage. Every screen is a stateless
+  * stream-static join (no watermark, no state store) and a pure
+  * DataFrame→DataFrame function that also works on batch inputs
+  * (unified API). First-arrival dedup WITHIN a stream is Spark's own
+  * `dropDuplicates` (unbounded state) or `dropDuplicatesWithinWatermark`
+  * (state evicted as the watermark advances) on the key columns.
   */
 object StreamingDedup {
-
-  /** Keep the first row per key; unbounded state. On a STREAM "first"
-    * means first-arrived (well-defined). On a bounded DataFrame
-    * `dropDuplicates` keeps an ARBITRARY row per key — fine when rows
-    * with equal keys are identical (the exact-dup case); when they
-    * differ, batch callers who need a deterministic survivor should use
-    * [[graft.operators.Dedup.keepLatest]] with an explicit order.
-    */
-  def exact(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    df.dropDuplicates(keyCols)
-
-  /** Keep the first row per key among rows whose event times fall
-    * within the watermark delay of each other; state is evicted as the
-    * watermark advances. `df` must already carry a watermark on its
-    * event-time column when streaming.
-    */
-  def withinWatermark(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    if (df.isStreaming) df.dropDuplicatesWithinWatermark(keyCols)
-    else df.dropDuplicates(keyCols)
-
-  /** Passage-level dedup at ingest — the streaming twin of
-    * [[graft.operators.Dedup.dedupPassages]]: chunk each arriving
-    * document into `window`-token passages at `stride` steps, fingerprint
-    * them (all map-side codegen expressions, so the stream never
-    * shuffles for this part), and keep the FIRST-ARRIVED row per
-    * passage hash. Emits (id, chunk_id, phash).
-    *
-    * Batch keeps min (id, chunk_id) per hash; streaming keeps first
-    * arrival — the surviving HASH SET is identical, which is what
-    * downstream containment checks consume. State is one entry per
-    * distinct passage hash: bounded only by corpus novelty. For an
-    * unbounded ingest, watermark the input and dedup via
-    * [[withinWatermark]] on the same (phash) key so state is evicted as
-    * event time advances.
-    */
-  def passages(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      window: Int,
-      stride: Int
-  ): DataFrame = {
-    import org.apache.spark.sql.functions.{col, min, posexplode, struct}
-    import graft.operators.TextAnalysis
-    val fp = df
-      .select(
-        col(idCol).as("id"),
-        posexplode(TextAnalysis.chunkTokens(col(textCol), window, stride))
-          .as(Seq("chunk_id", "chunk_text")))
-      .select(col("id"), col("chunk_id"),
-        TextAnalysis.fingerprint(col("chunk_text")).as("phash"))
-    if (df.isStreaming) fp.dropDuplicates("phash")
-    else
-      // bounded input: deterministic min-(id, chunk) survivor — exactly
-      // [[graft.operators.Dedup.dedupPassages]] (dropDuplicates on a
-      // batch DataFrame keeps an ARBITRARY row, which would make batch
-      // re-runs disagree with each other)
-      fp.groupBy(col("phash"))
-        .agg(min(struct(col("id"), col("chunk_id"))).as("keep"))
-        .select(col("keep.id").as("id"), col("keep.chunk_id").as("chunk_id"),
-          col("phash"))
-  }
 
   /** Stream-static EXACT-dedup screen — drop arriving rows whose text
     * digest already exists in the persisted corpus index
@@ -97,7 +32,7 @@ object StreamingDedup {
     * batch — the standard pattern, same stateless join per batch.
     *
     * Within-stream repeats are a separate concern by design (state vs
-    * statelessness): compose with [[exact]] or [[withinWatermark]] on
+    * statelessness): compose with `dropDuplicatesWithinWatermark` on
     * the digest column when first-arrival semantics across the stream
     * itself are needed.
     */

@@ -186,7 +186,7 @@ object ScaleProbe {
       // production k-means update: one partial-aggregated shuffle,
       // scalar reducer state — growth must be linear in the scan
       probe(s"kmeans_update_scale x$k") {
-        graft.operators.Clustering.updateStepAtScale(e, "vec_id", "embedding",
+        graft.operators.Clustering.updateStepAtScale(e, "embedding",
           graft.operators.Clustering.initialCentroids(
             emb, "vec_id", "embedding", 8)).count()
       }
@@ -235,7 +235,7 @@ object ScaleProbe {
       // broadcast codebooks, map-side argmin fold, scalar-state
       // (sub, code, lane) aggregation; growth must track the scan
       probe(s"pq_train x$k") {
-        graft.operators.Quantize.pqUpdateStep(e, "vec_id", "embedding",
+        graft.operators.Quantize.pqUpdateStep(e, "embedding",
           graft.operators.Quantize.pqCodebooks(
             emb, "vec_id", "embedding", 64, 8, 16),
           64, 8).count()

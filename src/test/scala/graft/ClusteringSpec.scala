@@ -85,7 +85,7 @@ class ClusteringSpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> (r.getDouble(2), r.getLong(3)))
       .toMap
-    val scale = Clustering.updateStepAtScale(emb, "vec_id", "embedding", cents)
+    val scale = Clustering.updateStepAtScale(emb, "embedding", cents)
       .collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> (r.getDouble(2), r.getLong(3)))
       .toMap
@@ -103,7 +103,7 @@ class ClusteringSpec extends SparkSpec {
   test("updateStepAtScale plan: one partial-aggregated shuffle, no join, no collect_list") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Clustering.initialCentroids(emb, "vec_id", "embedding", 8)
-    val plan = Clustering.updateStepAtScale(emb, "vec_id", "embedding", cents)
+    val plan = Clustering.updateStepAtScale(emb, "embedding", cents)
       .queryExecution.executedPlan.toString
     // exactly one corpus shuffle (the grouped mean); centroids ride a
     // broadcast; nothing joins on id and no reducer buffers members

@@ -373,21 +373,6 @@ class CorpusStatsSpec extends SparkSpec {
     assert(viaMerged == onePass)
   }
 
-  test("unigramNll: rare tokens score higher; token counts are exact") {
-    val df = Seq(
-      (1L, "common common common common"),
-      (2L, "common common common rare")
-    ).toDF("doc_id", "text")
-    val out = TextAnalysis.unigramNll(df, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(3)))).toMap
-    assert(out(1L)._1 === 4L)
-    assert(out(2L)._1 === 4L)
-    // doc 2 contains the corpus-rare token -> higher avg surprisal
-    assert(out(2L)._2 > out(1L)._2)
-    // doc 1 is all-"common" (7 of 8 corpus tokens): avg_nll = ln(8/7)
-    assert(math.abs(out(1L)._2 - math.log(8.0 / 7.0)) < 1e-12)
-  }
-
   test("unigramSurprisal: pinned components reproduce the nll derivation") {
     val df = Seq(
       (1L, "common common common common"),
@@ -399,9 +384,12 @@ class CorpusStatsSpec extends SparkSpec {
     assert(parts(1L)._1 === 4L)
     assert(math.abs(parts(1L)._2 - 4.0 * math.log(7.0)) < 1e-12)
     assert(math.abs(parts(2L)._2 - 3.0 * math.log(7.0)) < 1e-12)
-    // nll = n_tokens * ln(NN) - nll_tab, NN = 8
-    val nll = TextAnalysis.unigramNll(df, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(math.abs(nll(1L) - (4.0 * math.log(8.0) - parts(1L)._2)) < 1e-12)
+    assert(parts(2L)._1 === 4L)
+    // nll = n_tokens * ln(NN) - nll_tab, NN = 8: doc 1 is all-"common"
+    // (7 of 8 corpus tokens), so its avg nll is ln(8/7); doc 2 holds the
+    // corpus-rare token and scores higher
+    def avgNll(id: Long) = (parts(id)._1 * math.log(8.0) - parts(id)._2) / parts(id)._1
+    assert(math.abs(avgNll(1L) - math.log(8.0 / 7.0)) < 1e-12)
+    assert(avgNll(2L) > avgNll(1L))
   }
 }

@@ -58,7 +58,7 @@ class DocxSpec extends SparkSpec {
     assert(Docx.paragraphs(whole, maxParagraphs = 1) == Seq("one"))
   }
 
-  test("textRows/paragraphRows: distributed walk map-only; mixed outcomes coexist") {
+  test("textRows: distributed walk map-only; mixed outcomes coexist; paragraphs in order") {
     import spark.implicits._
     val df = Seq(
       (1L, Docx.docx(Seq(Seq("alpha"), Seq("beta")))),
@@ -69,10 +69,8 @@ class DocxSpec extends SparkSpec {
     val rows = t.collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getString(3)))
     assert(rows.toSet == Set(
       (1L, "ok", 2, "alpha\nbeta"), (2L, "zip", 0, null), (3L, "encrypted", 0, null)))
-    val p = Docx.paragraphRows(df, "media_id", "payload")
-    graft.queries.Q.requireNoShuffle(p)
-    assert(p.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet ==
-      Set((1L, 0, "alpha"), (1L, 1, "beta")))
+    assert(Docx.read(Docx.docx(Seq(Seq("alpha"), Seq("beta")))).paragraphs ==
+      Seq("alpha", "beta"))
   }
 
   test("adversarial: truncation and bit flips never throw") {

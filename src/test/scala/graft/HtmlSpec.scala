@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.operators.{Html, Warc}
 
 /** HTML outlink extraction + RFC 3986 §5 reference resolution — the
@@ -189,44 +188,44 @@ class HtmlSpec extends SparkSpec {
     assert(!got.contains(3) && !got.contains(7))
   }
 
-  test("anchorPairs: visible text, case-free tags, skips, torn anchors, budgets") {
-    import graft.operators.Html.anchorPairs
-    assert(anchorPairs("""x<a href="u1">plain</a>y""") == Seq(("u1", "plain")))
-    assert(anchorPairs("""<A HREF="U2">nested <b>bold</b>  t</A>""") == Seq(("U2", "nested bold t")))
-    assert(anchorPairs("""<a href="u3"><img src="i.png"></a>""") == Seq(("u3", "")))
-    assert(anchorPairs("""<a name="n">no href</a><a href="#f">frag</a>""") == Seq.empty)
-    assert(anchorPairs("""<a href="u4">A &amp; B</a>""") == Seq(("u4", "A & B")))
+  test("htmlAnchorPairs: visible text, case-free tags, skips, torn anchors, budgets") {
+    import graft.functions.GraftMath.htmlAnchorPairs
+    assert(htmlAnchorPairs("""x<a href="u1">plain</a>y""") == Seq(("u1", "plain")))
+    assert(htmlAnchorPairs("""<A HREF="U2">nested <b>bold</b>  t</A>""") == Seq(("U2", "nested bold t")))
+    assert(htmlAnchorPairs("""<a href="u3"><img src="i.png"></a>""") == Seq(("u3", "")))
+    assert(htmlAnchorPairs("""<a name="n">no href</a><a href="#f">frag</a>""") == Seq.empty)
+    assert(htmlAnchorPairs("""<a href="u4">A &amp; B</a>""") == Seq(("u4", "A & B")))
     // '<abbr' is not an anchor; a torn anchor ends the walk with the prefix
-    assert(anchorPairs("""<abbr href="x">t</abbr><a href="u5">ok</a><a href="u6">torn""") ==
+    assert(htmlAnchorPairs("""<abbr href="x">t</abbr><a href="u5">ok</a><a href="u6">torn""") ==
       Seq(("u5", "ok")))
-    assert(anchorPairs("""<a href="u">""" + "w " * 600 + "</a>").head._2.length <= 512)
-    assert(anchorPairs((1 to 30).map(i => s"""<a href="u$i">t</a>""").mkString,
+    assert(htmlAnchorPairs("""<a href="u">""" + "w " * 600 + "</a>").head._2.length <= 512)
+    assert(htmlAnchorPairs((1 to 30).map(i => s"""<a href="u$i">t</a>""").mkString,
       maxAnchors = 7).length == 7)
-    assert(anchorPairs(null) == Seq.empty)
+    assert(htmlAnchorPairs(null) == Seq.empty)
   }
 
-  test("anchorPairs rides the hardened scanner: review-pass arms") {
-    import graft.operators.Html.anchorPairs
+  test("htmlAnchorPairs rides the hardened scanner: review-pass arms") {
+    import graft.functions.GraftMath.htmlAnchorPairs
     // </abbr> is not </a>: trailing text survives
-    assert(anchorPairs("""<a href="u"><abbr>API</abbr> docs</a>""") == Seq(("u", "API docs")))
+    assert(htmlAnchorPairs("""<a href="u"><abbr>API</abbr> docs</a>""") == Seq(("u", "API docs")))
     // single-quoted and unquoted hrefs parse like the link scanner
-    assert(anchorPairs("<a href='u1'>s</a><a href=u2>q</a>") ==
+    assert(htmlAnchorPairs("<a href='u1'>s</a><a href=u2>q</a>") ==
       Seq(("u1", "s"), ("u2", "q")))
     // comments and script bodies cannot fake an anchor
-    assert(anchorPairs("""<!-- <a href="/old">dead</a> --><a href="u">live</a>""") ==
+    assert(htmlAnchorPairs("""<!-- <a href="/old">dead</a> --><a href="u">live</a>""") ==
       Seq(("u", "live")))
-    assert(anchorPairs("""<script>var x='<a href="spam">x</a>';</script>""") == Seq.empty)
+    assert(htmlAnchorPairs("""<script>var x='<a href="spam">x</a>';</script>""") == Seq.empty)
     // a quoted '>' does not end the open tag early
-    assert(anchorPairs("""<a href="u" title="x > y">label</a>""") == Seq(("u", "label")))
+    assert(htmlAnchorPairs("""<a href="u" title="x > y">label</a>""") == Seq(("u", "label")))
     // data-href is not href
-    assert(anchorPairs("""<a data-href="/t" class="x">Click</a>""") == Seq.empty)
+    assert(htmlAnchorPairs("""<a data-href="/t" class="x">Click</a>""") == Seq.empty)
     // CRLF-formatted attributes
-    assert(anchorPairs("<a\r\nhref=\"u\">label</a>") == Seq(("u", "label")))
+    assert(htmlAnchorPairs("<a\r\nhref=\"u\">label</a>") == Seq(("u", "label")))
     // a new <a> implicitly closes the previous (anchors never nest)
-    assert(anchorPairs("""<a href="a">x<a href="b">y</a>""") ==
+    assert(htmlAnchorPairs("""<a href="a">x<a href="b">y</a>""") ==
       Seq(("a", "x"), ("b", "y")))
     // a lone '<' inside anchor text is prose
-    assert(anchorPairs("""<a href="u">2 < 3</a>""") == Seq(("u", "2 < 3")))
+    assert(htmlAnchorPairs("""<a href="u">2 < 3</a>""") == Seq(("u", "2 < 3")))
   }
 
   test("blocks: block-tag segmentation, word floor, integer link-density rule") {

@@ -255,12 +255,12 @@ class LayoutSpec extends SparkSpec {
     assert(plan.contains("dynamicpruning"), plan.take(4000))
   }
 
-  test("zOrderBy partitions cover compact ranges of both columns") {
+  test("zValue range partitions cover compact ranges of both columns") {
     val n = 1 << 12
     // a 64x64 grid, shuffled input order
     val grid = (0 until n).map(i => ((i * 2654435761L) % 64, (i * 40503L) % 64))
       .toDF("x", "y")
-    val parts = Layout.zOrderBy(grid, col("x"), col("y"), numPartitions = 16)
+    val parts = grid.repartitionByRange(16, Layout.zValue(col("x"), col("y")))
       .select(spark_partition_id().as("p"), col("x"), col("y"))
       .groupBy("p")
       .agg(count(lit(1)).as("cnt"),

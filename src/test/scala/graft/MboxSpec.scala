@@ -52,7 +52,6 @@ class MboxSpec extends SparkSpec {
     val b64 = s"Content-Type: text/plain; charset=utf-8\nContent-Transfer-Encoding: base64\n\n$b64body"
     assert(Mbox.parseMessage(b64).text == "日本語 mail")
     // a LYING charset still NULLs (the strict layer's contract)
-    val lying = "Content-Type: text/plain; charset=utf-8\n\ncafé".getBytes("UTF-8")
     val lyingMsg = "Content-Type: text/plain; charset=utf-8\n" +
       "Content-Transfer-Encoding: quoted-printable\n\ncaf=E9"
     assert(Mbox.parseMessage(lyingMsg).text == null)

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Multimodal
 
 /** Multimodal plumbing: schema, determinism, format sniff, frame
-  * sampling, and size-based rebalance — plus the REAL pure-JVM PPM
+  * sampling — plus the REAL pure-JVM PPM
   * decoder (golden-raster parse, integer moments, dHash halves,
   * corrupt-payload fallback). The fake-feature generator remains only
   * for the embedding-plumbing contract a heavier codec drops into.
@@ -55,41 +53,6 @@ class MultimodalSpec extends SparkSpec {
     val frames = Multimodal.sampleFrames(df, "media_id", "payload", nFrames = 4).collect()
     assert(frames.length == 4)
     assert(frames.map(_.getAs[Int]("frame_no")).toSeq == Seq(0, 1, 2, 3))
-  }
-
-  test("rebalanceBySize targets ~targetBytes per partition from a known total") {
-    val df = Seq.tabulate(64)(i => (i.toLong, Array.fill(1000)(i.toByte)))
-      .toDF("media_id", "payload")
-    val re = Multimodal.rebalanceBySize(df, "payload", targetBytes = 8000L,
-      totalBytes = Some(64000L))
-    assert(re.rdd.getNumPartitions == 8) // 64 KB / 8 KB
-  }
-
-  test("rebalanceBySize keeps input partitioning on unknown stats; clamps huge totals") {
-    // Catalyst's unknown-stats sentinel (Long.MaxValue) carries no sizing
-    // signal: the partitioning must pass through unchanged, not wrap
-    // through .toInt into an arbitrary count
-    val df = Seq.tabulate(8)(i => (i.toLong, s"payload$i")).toDF("media_id", "payload")
-      .repartition(5)
-    val joined = df.as("a").join(df.as("b"),
-      col("a.media_id") === col("b.media_id") + 1000) // no-match join: stats unknown
-    if (joined.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(Long.MaxValue)) {
-      val re = Multimodal.rebalanceBySize(joined, "a.payload", targetBytes = 1L)
-      assert(re.rdd.getNumPartitions == joined.rdd.getNumPartitions)
-    }
-    // explicit huge totals clamp to the ceiling instead of Int-wrapping
-    val clamped = Multimodal.rebalanceBySize(df, "payload",
-      targetBytes = 1L, totalBytes = Some(Long.MaxValue))
-    assert(clamped.rdd.getNumPartitions == Multimodal.MaxRebalanceParts)
-  }
-
-  test("rebalanceBySize derives the count from plan stats without scanning") {
-    // file-backed input: stats come from parquet footers, not a job
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val statsBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val re = Multimodal.rebalanceBySize(docs, "text",
-      targetBytes = (statsBytes / 4).toLong)
-    assert(re.rdd.getNumPartitions == 4)
   }
 
   test("decodePpm: golden 2x2 image parses to the exact raster") {
@@ -199,7 +162,7 @@ class MultimodalSpec extends SparkSpec {
       Array(0xFF, 0xD8).map(_.toByte), Array(0x89, 'P', 'N', 'G').map(_.toByte),
       Array(31, -117, 8, 0).map(_.toByte), "P6\n".getBytes, "BM".getBytes,
       Array[Byte]('I', 'I', 42, 0), Array[Byte]('M', 'M', 0, 42))
-    for (n <- Seq(0, 1, 7, 64, 513, 4096); m <- magics; rep <- 1 to 4) {
+    for (n <- Seq(0, 1, 7, 64, 513, 4096); m <- magics; _ <- 1 to 4) {
       val payload = m ++ arr(n)
       // each must return cleanly — None/null/sniffed stats — not throw
       Multimodal.decodeGif(payload)

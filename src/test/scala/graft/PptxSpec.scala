@@ -40,7 +40,7 @@ class PptxSpec extends SparkSpec {
     assert(Pptx.read(noSlides).stage == "part")
   }
 
-  test("textRows/slideRows: distributed walk map-only; mixed outcomes coexist") {
+  test("textRows: distributed walk map-only; mixed outcomes coexist; slides in order") {
     import spark.implicits._
     val df = Seq(
       (1L, Pptx.pptx(Seq(Seq("alpha"), Seq("beta", "gamma")))),
@@ -49,10 +49,8 @@ class PptxSpec extends SparkSpec {
     graft.queries.Q.requireNoShuffle(t)
     assert(t.collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getString(3))).toSet ==
       Set((1L, "ok", 2, "alpha\nbeta\ngamma"), (2L, "zip", 0, null)))
-    val s = Pptx.slideRows(df, "media_id", "payload")
-    graft.queries.Q.requireNoShuffle(s)
-    assert(s.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(3), r.getInt(4))).toSet ==
-      Set((1L, 1, "alpha", 1), (1L, 2, "beta\ngamma", 2)))
+    assert(Pptx.read(Pptx.pptx(Seq(Seq("alpha"), Seq("beta", "gamma")))).slides
+      .map { case (no, _, ps) => (no, ps) } == Seq((1, Seq("alpha")), (2, Seq("beta", "gamma"))))
   }
 
   test("adversarial: truncation and bit flips never throw") {

@@ -29,13 +29,12 @@ class QuantizeSpec extends SparkSpec {
 
   test("round-trip error bounded by scale/2 per lane") {
     val out = Quantize.toInt8(vecs, "id", "vec")
-      .select(col("id"), col("scale"),
-        Quantize.fromInt8("qvec", "scale").as("deq"))
       .join(vecs, "id")
       .collect()
     out.foreach { r =>
       val scale = r.getAs[Double]("scale")
-      val deq = r.getSeq[Double](r.fieldIndex("deq"))
+      // dequantize: v ≈ q · scale
+      val deq = r.getSeq[Int](r.fieldIndex("qvec")).map(_.toDouble * scale)
       val orig = r.getSeq[Float](r.fieldIndex("vec"))
       deq.zip(orig).foreach { case (d, o) =>
         assert(math.abs(d - o.toDouble) <= scale / 2 + 1e-12,
@@ -170,7 +169,7 @@ class QuantizeSpec extends SparkSpec {
       (0, 0L, Array(0.0, 0.0)),
       (0, 1L, Array(9.0, 9.0))
     ).toDF("sub", "code", "centroid")
-    val upd = Quantize.pqUpdateStep(vecs, "id", "vec", prev, dim = 2, subspaces = 1)
+    val upd = Quantize.pqUpdateStep(vecs, "vec", prev, dim = 2, subspaces = 1)
     assert(upd.select("code").distinct().as[Long].collect().toSet == Set(0L))
     val out = Quantize.pqCodebooksFromUpdate(upd, prev)
       .collect().map(r => r.getLong(1) -> r.getSeq[Double](2)).toMap

@@ -119,7 +119,7 @@ class SimilaritySpec extends SparkSpec {
     assert(grown == rebuilt)
   }
 
-  test("purgeFromIndex rewrites only affected cells; empty-cell bound as documented") {
+  test("purgeFromIndex rewrites only affected cells; a cell it empties is removed") {
     // two well-separated cells; cell 2's only member is the centroid row
     val corpus = Seq(
       (1L, Array(1.0f, 0.0f, 0.0f)),
@@ -138,18 +138,22 @@ class SimilaritySpec extends SparkSpec {
     assert(spark.read.parquet(path).select("vec_id").as[Long].collect().toSet
       == Set(1L, 2L, 11L))
 
-    // documented bound: deleting a cell's LAST row cannot be expressed
-    // as a dynamic partition overwrite (no survivor rows reference the
-    // cell), so its stale file remains — the read-side anti-join is the
-    // remedy until compaction/full rewrite
+    // deleting a cell's LAST row leaves no survivor for the dynamic
+    // overwrite to replace the cell with: the purge removes the cell,
+    // so the deleted id is not readable, and the other cell's files
+    // are left untouched
+    import org.apache.hadoop.fs.Path
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def cellFiles(c: Long) = fs.listStatus(new Path(root, s"centroid_id=$c")).toSeq
+      .filter(_.isFile).map(st => (st.getPath.getName, st.getLen, st.getModificationTime)).toSet
+    val cell1 = cellFiles(1L)
     Similarity.purgeFromIndex(spark, path,
       Seq(Tuple1(2L)).toDF("vec_id"), "vec_id")
     val after = spark.read.parquet(path).select("vec_id").as[Long].collect().toSet
-    assert(after == Set(1L, 2L, 11L)) // 2 is stale, exactly as documented
-    val screened = spark.read.parquet(path)
-      .join(Seq(Tuple1(2L)).toDF("vec_id"), Seq("vec_id"), "left_anti")
-      .select("vec_id").as[Long].collect().toSet
-    assert(screened == Set(1L, 11L)) // the documented read-side remedy
+    assert(after == Set(1L, 11L))
+    assert(!fs.exists(new Path(root, "centroid_id=2")))
+    assert(cellFiles(1L) == cell1)
   }
 
   test("twoStageTopK recalls most single-stage exact neighbors") {
@@ -233,7 +237,7 @@ class SimilaritySpec extends SparkSpec {
       maxRows = 3).count() == 0)
   }
 
-  test("withPurgePending screens a fully-emptied cell's stale rows until rewrite") {
+  test("purgeFromIndex of a whole cell: no deleted row stays readable") {
     import org.apache.hadoop.fs.Path
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = emb.orderBy($"vec_id").limit(8)
@@ -242,38 +246,27 @@ class SimilaritySpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("centroid_id").parquet(path)
 
     // delete EVERY member of cell 0 (nonempty by construction: centroid
-    // 0 is its own nearest centroid) — the dynamic-overwrite blind spot
+    // 0 is its own nearest centroid) plus one member of another cell
     val cell0Ids = spark.read.parquet(path).filter($"centroid_id" === 0)
       .select("vec_id").as[Long].collect().toSeq
     assert(cell0Ids.nonEmpty)
-    val deletes = cell0Ids.toDF("vec_id")
-    Similarity.purgeFromIndex(spark, path, deletes, "vec_id")
+    val other = spark.read.parquet(path).filter($"centroid_id" =!= 0)
+      .select("vec_id").as[Long].head()
+    val deleted = cell0Ids :+ other
+    Similarity.purgeFromIndex(spark, path, deleted.toDF("vec_id"), "vec_id")
 
-    // the emptied cell's stale files still serve the deleted rows…
+    // no deleted id is readable, the emptied cell is gone, and the read
+    // equals a rebuild from the filtered corpus against the same frozen
+    // centroids
     val back = spark.read.parquet(path)
-    assert(back.filter($"centroid_id" === 0).count() == cell0Ids.size.toLong)
-    // …and the guard screens them: guarded read == rebuild from the
-    // filtered corpus against the same frozen centroids
-    val guarded = Similarity.withPurgePending(back, deletes, "vec_id")
-      .select($"vec_id", $"centroid_id".cast("long").as("centroid_id"))
-      .as[(Long, Long)].collect().toSet
-    val rebuilt = Similarity.assignToCentroids(
-        emb.filter(!$"vec_id".isin(cell0Ids: _*)), cents, "vec_id", "embedding")
-      .select($"vec_id", $"centroid_id").as[(Long, Long)].collect().toSet
-    assert(guarded == rebuilt)
-
-    // remediation: the maintenance sweep applies the delete list and
-    // removes the emptied cell outright — the guard becomes a no-op
-    val report = graft.operators.Layout.maintainTable(
-      spark, path, "centroid_id", deletes, "vec_id",
-      targetBytes = 1L << 26, maxFiles = 100)
-    assert(report.emptied == Seq("0"), report.toString)
+    assert(back.filter($"vec_id".isin(deleted: _*)).count() == 0L)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new Path(s"$path/centroid_id=0")))
-    val after = spark.read.parquet(path)
-      .select($"vec_id", $"centroid_id".cast("long").as("centroid_id"))
-      .as[(Long, Long)].collect().toSet
-    assert(after == rebuilt)
+    val rebuilt = Similarity.assignToCentroids(
+        emb.filter(!$"vec_id".isin(deleted: _*)), cents, "vec_id", "embedding")
+      .select($"vec_id", $"centroid_id").as[(Long, Long)].collect().toSet
+    assert(back.select($"vec_id", $"centroid_id".cast("long").as("centroid_id"))
+      .as[(Long, Long)].collect().toSet == rebuilt)
   }
 
   test("dot/norm/cosine column math is exact on known values") {

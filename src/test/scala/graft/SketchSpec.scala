@@ -298,35 +298,6 @@ class SketchSpec extends SparkSpec {
     assert(r6 == r6p)
   }
 
-  test("hllEstimateByComplete: absent groups fill with the exact empty-sketch row") {
-    // g_empty's only document tokenizes to nothing (NULL text — the
-    // whitespace splitter yields [""] even for blank strings, so null
-    // is the true token-less case): the group key never reaches the
-    // sketch, and hllEstimateBy has NO row for it
-    val docs = Seq(("g_a", "alpha beta gamma"), ("g_empty", null: String))
-      .toDF("g", "text")
-    val regs = graft.operators.Sketch.hllRegistersBy(docs, "text", "g")
-    val bare = graft.operators.Sketch.hllEstimateBy(regs)
-    assert(bare.filter($"group" === "g_empty").isEmpty)
-    val universe = docs.select($"g".as("group"))
-    val full = graft.operators.Sketch.hllEstimateByComplete(regs, universe)
-      .collect().map(r => r.getAs[String]("group") -> r).toMap
-    assert(full.keySet == Set("g_a", "g_empty"))
-    // the filled row equals hllEstimate on a genuinely empty frame,
-    // column for column — downstream can't tell fill from computation
-    val emptyRow = graft.operators.Sketch.hllEstimate(
-      graft.operators.Sketch.hllRegisters(
-        Seq.empty[String].toDF("text"), "text")).head()
-    val filled = full("g_empty")
-    for (c <- Seq("n_present", "n_zero", "s_sum", "est_raw", "est"))
-      assert(filled.getAs[Long](c) == emptyRow.getAs[Long](c), c)
-    assert(filled.getAs[String]("method") == emptyRow.getAs[String]("method"))
-    assert(filled.getAs[Long]("est") == 0L)
-    // present groups pass through untouched
-    assert(full("g_a").getAs[Long]("est") ==
-      bare.filter($"group" === "g_a").head().getAs[Long]("est"))
-  }
-
   test("kmvDifferenceEstimate: exact regime is exact; sampled difference within band") {
     // all under K: union exhaustive, difference exact
     val a = (0 until 30).map(i => s"key$i").toDF("k")

@@ -4,8 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.operators.{Dedup, Multimodal, Sampling, TextAnalysis}
-import graft.streaming.StreamingDedup
+import graft.operators.{Multimodal, Sampling, TextAnalysis}
 
 /** The corpus-shaping operators are pure column expressions, so the
   * SAME code runs on streaming inputs unchanged (Spark's unified API —
@@ -137,57 +136,6 @@ class StreamingCorpusOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("passage dedup screens a stream exactly like the batch twin") {
-    implicit val sqlCtx = spark.sqlContext
-    // doc 2 repeats doc 1's opening paragraph; doc 3 is fresh text
-    val shared = (1 to 40).map(i => s"w$i").mkString(" ")
-    val data = Seq(
-      (1L, shared + " " + (1 to 30).map(i => s"a$i").mkString(" ")),
-      (2L, shared + " " + (1 to 30).map(i => s"b$i").mkString(" ")),
-      (3L, (1 to 60).map(i => s"c$i").mkString(" ")))
-
-    val in = MemoryStream[(Long, String)]
-    val deduped = StreamingDedup.passages(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      window = 20, stride = 20)
-    val q = deduped.writeStream
-      .format("memory").queryName("sc_passage_out")
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      in.addData(data: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("sc_passage_out")
-      // survivor HASH SET matches the batch operator (which survivor row
-      // wins differs only by tie policy: min vs first-arrived)
-      val batchHashes = Dedup.dedupPassages(
-        data.toDF("doc_id", "text"), "doc_id", "text",
-        window = 20, stride = 20)
-        .select("phash").as[Long].collect().toSet
-      val streamHashes = streamed.select("phash").as[Long].collect().toSet
-      assert(streamHashes == batchHashes)
-      // each distinct passage hash survives exactly once
-      assert(streamed.count() == batchHashes.size)
-      // the two shared 20-token passages were deduped across docs:
-      // doc1: 4 passages (70 toks -> 20,20,20,10-tail), doc2 contributes
-      // only its fresh chunks, doc3 all 3
-      val perDoc = streamed.groupBy("id").count()
-        .as[(Long, Long)].collect().toMap
-      assert(perDoc(1L) + perDoc.getOrElse(2L, 0L) + perDoc(3L) == batchHashes.size)
-      assert(perDoc.getOrElse(2L, 0L) < 4) // doc 2 lost its shared passages
-
-      // batch mode of the SAME function routes to the deterministic
-      // min-(id, chunk) survivor — identical rows to Dedup.dedupPassages
-      val viaBatch = StreamingDedup.passages(
-        data.toDF("doc_id", "text"), "doc_id", "text", window = 20, stride = 20)
-        .as[(Long, Int, Long)].collect().toSet
-      val viaOperator = Dedup.dedupPassages(
-        data.toDF("doc_id", "text"), "doc_id", "text", window = 20, stride = 20)
-        .as[(Long, Int, Long)].collect().toSet
-      assert(viaBatch == viaOperator)
-    } finally q.stop()
-  }
-
   test("mixture resampling multiplies a stream exactly like the batch twin") {
     implicit val sqlCtx = spark.sqlContext
     val data = (0L until 300L).map(i => (i, if (i % 2 == 0) "a" else "b"))
@@ -219,8 +167,9 @@ class StreamingCorpusOpsSpec extends SparkSpec {
       (2L, "spam spam spam spam spam spam spam spam"))
 
     val in = MemoryStream[(Long, String)]
-    val out = TextAnalysis.repetitionFilter(
-      in.toDF().toDF("doc_id", "text"), "text", maxDupTokFrac = 0.5, maxDupNgramFrac = 0.5)
+    val out = in.toDF().toDF("doc_id", "text")
+      .filter(TextAnalysis.dupTokenFrac(col("text")) <= 0.5 &&
+        TextAnalysis.dupNgramFrac(col("text"), 3) <= 0.5)
       .select(col("doc_id"), TextAnalysis.redactPii(col("text")).as("clean"))
     val q = out.writeStream
       .format("memory").queryName("sc_rep_out")
@@ -368,7 +317,7 @@ class StreamingCorpusOpsSpec extends SparkSpec {
       (1L to 20L).map(i => (i, "alpha beta alpha", true)) ++
         (21L to 50L).map(i => (i, "gamma delta gamma", false))
     ).toDF("doc_id", "text", "is_tgt")
-    val deltas = Sampling.dsirModelArray(
+    val deltas = Sampling.dsirModelArrayCentered(
       Sampling.dsirBucketModel(train, "text", col("is_tgt"), buckets = 32), 32)
     // arrivals the model never saw: one target-like, one background-like
     val arriving = Seq((100L, "alpha beta"), (101L, "gamma delta"))
@@ -1003,7 +952,7 @@ class StreamingCorpusOpsSpec extends SparkSpec {
 
   test("pptx slide text streams identically to batch (map-only)") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{Docx, Pptx}
+    import graft.operators.Pptx
     val blobs = Seq(
       (1L, Pptx.pptx(Seq(Seq("s1 title"), Seq("s2 body")))),
       (2L, graft.operators.Cfb.encryptedOoxmlFixture(2L)),

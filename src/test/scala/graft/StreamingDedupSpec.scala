@@ -1,69 +1,17 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamingDedup
 
-/** Streaming dedup semantics over a MemoryStream: duplicates arriving in
-  * later micro-batches are dropped; watermark-bounded state variant
-  * keeps only the first row per key.
+/** Streaming dedup screens over a MemoryStream: arriving rows that
+  * duplicate a static corpus index (by digest, LSH band or embedding
+  * cell) are dropped statelessly, like the batch twin on the same data.
   */
 class StreamingDedupSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def ts(s: String) = Timestamp.valueOf(s)
-
-  test("exact streaming dedup drops cross-batch duplicates") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val deduped = StreamingDedup.exact(
-      in.toDF().toDF("event_id", "payload"), Seq("event_id"))
-    val q = deduped.writeStream
-      .format("memory").queryName("dedup_exact_out")
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      in.addData((1L, "a"), (2L, "b"), (1L, "a-dup"))
-      q.processAllAvailable()
-      in.addData((2L, "b-dup"), (3L, "c"))
-      q.processAllAvailable()
-      val rows = spark.table("dedup_exact_out")
-        .as[(Long, String)].collect().sortBy(_._1)
-      assert(rows.map(_._1).sameElements(Array(1L, 2L, 3L)))
-      assert(rows.map(_._2).sameElements(Array("a", "b", "c")))
-    } finally q.stop()
-  }
-
-  test("watermark-bounded dedup keeps first row per key within the delay") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Timestamp, String)]
-    val deduped = StreamingDedup.withinWatermark(
-      in.toDF().toDF("event_id", "ts", "payload").withWatermark("ts", "1 hour"),
-      Seq("event_id"))
-    val q = deduped.writeStream
-      .format("memory").queryName("dedup_wm_out")
-      .outputMode(OutputMode.Append())
-      .start()
-    try {
-      in.addData(
-        (1L, ts("2024-01-01 10:00:00"), "first"),
-        (1L, ts("2024-01-01 10:10:00"), "dup-within-delay"))
-      q.processAllAvailable()
-      val rows = spark.table("dedup_wm_out")
-        .select("event_id", "payload").as[(Long, String)].collect()
-      assert(rows.toSet == Set((1L, "first")))
-    } finally q.stop()
-  }
-
-  test("batch twin: same function dedups a bounded DataFrame") {
-    val df = Seq((1L, "a"), (1L, "a2"), (2L, "b")).toDF("event_id", "payload")
-    assert(StreamingDedup.withinWatermark(df, Seq("event_id")).count() == 2)
-    assert(StreamingDedup.exact(df, Seq("event_id")).count() == 2)
-  }
 
   test("digest screen drops arriving rows already in the static index, statelessly") {
     implicit val sqlCtx = spark.sqlContext

@@ -147,7 +147,9 @@ class TextAnalysisSpec extends SparkSpec {
     assert(fracs("solo")._2 == 0.0)
     // filter composes both thresholds
     val docs = Seq("a b c d e f g h", "x x x x x x x x").toDF("text")
-    val kept = TextAnalysis.repetitionFilter(docs, "text", 0.5, 0.5, n = 2)
+    val kept = docs
+      .filter(TextAnalysis.dupTokenFrac(col("text")) <= 0.5 &&
+        TextAnalysis.dupNgramFrac(col("text"), 2) <= 0.5)
       .collect().map(_.getString(0))
     assert(kept.toSeq == Seq("a b c d e f g h"))
   }

@@ -2,8 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.TimeSeries
 
 class TimeSeriesSpec extends SparkSpec {

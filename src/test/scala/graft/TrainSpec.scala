@@ -47,9 +47,9 @@ class TrainSpec extends SparkSpec {
   }
 
   test("stumpTrain finds the exact separating threshold and polarity") {
-    // y = +1 iff f2 >= 4; f1 is noise
+    // y = +1 iff f2 >= 3; f1 is noise
     val rows = (1L to 100L).map(i => (if (i % 7 >= 3) 1L else -1L, i % 5, (i % 7)))
-      .map { case (y, f1, f2) => (if (f2 >= 3) 1L else -1L, f1, f2) }
+      .map { case (_, f1, f2) => (if (f2 >= 3) 1L else -1L, f1, f2) }
       .toDF("y", "f1", "f2")
     val out = Train.stumpTrain(rows, Seq("f1", "f2"), "y")
       .collect().map(r => r.getAs[String]("feature") ->

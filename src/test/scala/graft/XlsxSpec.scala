@@ -126,10 +126,7 @@ class XlsxSpec extends SparkSpec {
     assert(cells.collect().map(r =>
       (r.getLong(0), r.getInt(2), r.getInt(3), r.getString(4))).toSet ==
       Set((1L, 1, 1, "x"), (1L, 1, 2, "1")))
-    val gt = Xlsx.gridTextRows(df, "media_id", "payload")
-    graft.queries.Q.requireNoShuffle(gt)
-    assert(gt.collect().map(r => (r.getLong(0), r.getString(1), r.getString(3))).toSet ==
-      Set((1L, "ok", "x\t1"), (2L, "zip", null)))
+    assert(Xlsx.gridText(graft.operators.ZipShard.entries(ok)) == (("ok", 2, "x\t1")))
     (0 until ok.length by 13).foreach(cut =>
       Xlsx.readGrid(java.util.Arrays.copyOfRange(ok, 0, cut)))
     (0 until ok.length by 17).foreach { i =>

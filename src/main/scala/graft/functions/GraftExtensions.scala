@@ -19,7 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
 
   private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "", "", "", "", "", "", "")
 
   /** The single source of truth for the SQL surface — consumed both by
     * session-build injection (the class above) and by runtime

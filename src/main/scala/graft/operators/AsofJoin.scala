@@ -39,7 +39,7 @@ object AsofJoin {
   ): DataFrame = {
     val pu = probe.select(
       col(keyCol).as("__key"), col(timeCol).as("__t"), lit(probeSide).as("__side"),
-      struct(probe.columns.map(col): _*).as("__row"))
+      struct(probe.columns.toSeq.map(col): _*).as("__row"))
     val bu = build.select(
       col(keyCol).as("__key"), col(timeCol).as("__t"), lit(buildSide).as("__side"))
       .withColumn("__row", lit(null).cast(pu.schema("__row").dataType))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.model.Audit
 
@@ -16,29 +17,38 @@ import graft.model.Audit
   *     null).
   *
   * Spark-first mapping: `from_json` in PERMISSIVE mode gives exactly the
-  * lenient-parse / null-on-corrupt contract with zero custom code, stays
-  * inside whole-stage codegen, and lets Catalyst prune the parsed struct
-  * down to the fields downstream operators actually read
-  * (`OptimizeJsonExprs` rewrites `from_json(...).field` chains) — an
-  * optimization the row-at-a-time reference cannot perform.
+  * lenient-parse / null-on-corrupt contract with zero custom code.
+  * Catalyst does not narrow the parse to the fields downstream operators
+  * read: `OptimizeJsonExprs` leaves a `from_json` with options (ours has
+  * `timestampFormat`) alone, so a caller that reads a few fields names
+  * them ([[parse]]'s `fields`) and the parser skips the rest unconverted.
   */
 object AuditJson {
 
   /** `lines` must have a single string column named `value` (the schema
     * of `spark.read.text` / `readStream.text`). Works identically on
     * batch and streaming DataFrames.
+    *
+    * Returns the `Audit` columns named in `fields` (default: all 23, in
+    * schema order), in that order; `reqUser` must be one of them. A field
+    * left out is skipped by the parser, and the kept rows and values are
+    * exactly those of the whole-record parse.
+    *
+    * Each line is parsed once. The struct leaves `from_json` through
+    * `inline(array(...))`, a generator: a filter on its columns (ours on
+    * `reqUser`, `session_window`'s on the event time) cannot be pushed
+    * below a generator, whereas through a plain projection the
+    * optimizer pushes the filter down with the `from_json` copied into
+    * it, and every line is parsed again.
     */
-  def parse(lines: DataFrame): DataFrame =
+  def parse(lines: DataFrame, fields: Seq[String] = Audit.schema.fieldNames.toSeq): DataFrame = {
+    require(fields.contains("reqUser"), s"parse needs reqUser among its fields, got: $fields")
+    val schema = StructType(fields.map(Audit.schema(_)))
     lines
-      .select(
-        from_json(
-          col("value"),
-          Audit.schema,
-          Map("timestampFormat" -> Audit.TimestampFormat)
-        ).as("a")
-      )
-      .select(col("a.*"))
+      .select(inline(array(
+        from_json(col("value"), schema, Map("timestampFormat" -> Audit.TimestampFormat)))))
       .filter(col("reqUser").isNotNull)
+  }
 
   /** PERMISSIVE `from_json` yields an all-null struct for malformed
     * input (never a null struct), so distinguishing corrupt from merely
@@ -49,7 +59,7 @@ object AuditJson {
     lines.select(
       from_json(
         col("value"),
-        Audit.schema.add("_corrupt_record", org.apache.spark.sql.types.StringType),
+        Audit.schema.add("_corrupt_record", StringType),
         Map(
           "timestampFormat" -> Audit.TimestampFormat,
           "columnNameOfCorruptRecord" -> "_corrupt_record")

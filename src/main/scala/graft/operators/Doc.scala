@@ -46,7 +46,7 @@ object Doc {
   private val FWhichTblStm = 0x0200
 
   /** Is this `WordDocument` stream's FIB flagged encrypted? The
-    * routing peek [[Office.detect]] uses so a locked .doc classifies
+    * routing peek [[Office.routedText]] uses so a locked .doc classifies
     * `encrypted` (not `doc`) without running the piece table.
     */
   private[operators] def fibEncrypted(wd: Array[Byte]): Boolean =

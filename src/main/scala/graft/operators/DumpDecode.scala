@@ -3,7 +3,8 @@ package graft.operators
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.apache.commons.compress.compressors.bzip2.{BZip2CompressorInputStream, BZip2CompressorOutputStream}
-import org.apache.commons.compress.compressors.xz.{XZCompressorInputStream, XZCompressorOutputStream}
+import org.apache.commons.compress.compressors.xz.XZCompressorInputStream
+import org.tukaani.xz.{LZMA2Options, XZOutputStream}
 
 /** bzip2 + xz member decode — the compression formats PUBLISHED data
   * dumps actually ship in, completing the ingest family next to gzip
@@ -128,7 +129,7 @@ object DumpDecode {
       maxOutPerMember: Int = Bytes.MaxOut,
       maxOutTotal: Long = Bytes.MaxOutTotal): Seq[Array[Byte]] =
     walkMembers(bytes, maxOutPerMember, maxOutTotal, xzHeaderAt,
-      in => new XZCompressorInputStream(in, false))._1
+      in => new XZCompressorInputStream(in))._1
 
   /** STRICT whole-payload decode — the single-document contract
     * ([[CompressedMeta.allOrNullConcat]], the family's one combine
@@ -155,7 +156,7 @@ object DumpDecode {
       maxOutTotal: Long = Bytes.MaxOutTotal): Array[Byte] = {
     if (bytes == null || bytes.length < 32) return null // header+footer+index minimum
     decodeAll(walkMembers(bytes, maxOutPerMember, maxOutTotal, xzHeaderAt,
-      in => new XZCompressorInputStream(in, false)), bytes.length)
+      in => new XZCompressorInputStream(in)), bytes.length)
   }
 
   /** Decode the ONE stream starting at `offset` (byte-aligned, as the
@@ -237,7 +238,7 @@ object DumpDecode {
     */
   def xzMember(data: Array[Byte]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    val xz = new XZCompressorOutputStream(out, 0)
+    val xz = new XZOutputStream(out, new LZMA2Options(0))
     xz.write(data); xz.close()
     out.toByteArray
   }

@@ -117,8 +117,8 @@ object Epub {
   }
 
   /** Spine-ordered chapters per book row: (media_id, chapter_idx,
-    * href, xhtml). Degraded books emit nothing here — [[docRows]]
-    * carries their countable stage. Map-only.
+    * href, xhtml). Degraded books emit nothing here — [[read]] gives
+    * their countable stage. Map-only.
     */
   def chapterRows(df: DataFrame, idCol: String, binCol: String): DataFrame = {
     val spark = df.sparkSession
@@ -129,19 +129,6 @@ object Epub {
         read(b).chapters.map { case (i, href, xhtml) => (id, i, href, xhtml) }
       }
       .toDF(idCol, "chapter_idx", "href", "xhtml")
-  }
-
-  /** One row per book: (media_id, stage, n_chapters). Map-only. */
-  def docRows(df: DataFrame, idCol: String, binCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(df(idCol).cast("long"), df(binCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, b) =>
-        val d = read(b)
-        (id, d.stage, d.chapters.length)
-      }
-      .toDF(idCol, "stage", "n_chapters")
   }
 
   // ---- fixture writer (tests + gates only) ----

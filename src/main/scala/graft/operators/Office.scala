@@ -30,7 +30,7 @@ object Office {
       b(2) == 'r' && b(3) == 't' && b(4) == 'f'
 
   /** Route an already-opened zip archive by its distinguishing member
-    * — the ONE rule set [[detect]] and [[routedText]] both consult.
+    * — the ONE rule set [[routeOne]] consults.
     * ODF subtypes discriminate on the mandatory `mimetype` member
     * ([[Odt.subtype]]); a mimetype-less `content.xml` zip stays `odt`
     * (the lenient legacy route).
@@ -61,22 +61,6 @@ object Office {
         else "cfb"
     }
 
-  /** Content-based kind: `docx` | `pptx` | `xlsx` | `odt` | `ods` |
-    * `odp` | `rtf` | `doc` | `xls` | `ppt` | `msg` | `pdf` |
-    * `encrypted` | `cfb` | `zip` (a zip that is none of the routed
-    * families) | `unknown`.
-    */
-  def detect(bytes: Array[Byte]): String = {
-    if (bytes == null) return "unknown"
-    if (Cfb.isCfb(bytes))
-      return Cfb.parse(bytes).map(detectCfb).getOrElse("cfb")
-    if (isRtf(bytes)) return "rtf"
-    if (isPdf(bytes)) return "pdf"
-    val es = ZipShard.entries(bytes)
-    if (es.isEmpty) return "unknown"
-    detectEntries(es)
-  }
-
   /** Is this payload a PDF (`%PDF-` magic)? The one non-office kind
     * the triage routes — real mail attachments are DOMINATED by pdf,
     * so the attachment walk needs the arm and the document triage
@@ -95,7 +79,7 @@ object Office {
     * pdf, recipients for msg); degraded/quarantined payloads keep
     * NULL text, countable per kind.
     */
-  private[operators] def routeOne(b: Array[Byte]): (String, Int, String) = {
+  private[graft] def routeOne(b: Array[Byte]): (String, Int, String) = {
     if (b == null) ("unknown", 0, null)
     else if (Cfb.isCfb(b)) Cfb.parse(b) match {
       case None => ("cfb", 0, null)

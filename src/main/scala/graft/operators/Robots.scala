@@ -678,7 +678,7 @@ object Robots {
         // "most octets" = UTF-8 bytes, matching allowedColumnExact
         expr("octet_length(path)").as("__len"))
     val (side, _) = Guard.guardedSide(effective, maxBroadcastRules, keepPinned = false)
-    val passthrough = urls.columns.filterNot(_ == idCol)
+    val passthrough = urls.columns.toSeq.filterNot(_ == idCol)
     urls
       .join(side,
         urls(domainCol) === col("__rd") &&
@@ -691,7 +691,7 @@ object Robots {
             (col("__rule") === "allow").as("a")))).as("__best"),
         passthrough.map(c => first(col(c)).as(c)): _*)
       .withColumn("allowed", coalesce(col("__best.a"), lit(true)))
-      .select(urls.columns.map(col) :+ col("allowed"): _*)
+      .select(urls.columns.toSeq.map(col) :+ col("allowed"): _*)
   }
 
   /** RFC 9309 §2.2.1 group selection, the distributed form every
@@ -748,7 +748,7 @@ object Robots {
     val exactHit = regexp_like(col(pathCol), col("__re"))
     val consHit = col("__prefix").isNotNull &&
       col(pathCol).startsWith(col("__prefix"))
-    val passthrough = urls.columns.filterNot(_ == idCol)
+    val passthrough = urls.columns.toSeq.filterNot(_ == idCol)
     urls
       .join(side, urls(domainCol) === col("__rd") && (exactHit || consHit),
         "left")
@@ -763,7 +763,7 @@ object Robots {
           passthrough.map(c => first(col(c)).as(c))): _*)
       .withColumn("allowed", coalesce(col("__bx.a"), lit(true)))
       .withColumn("allowed_conservative", coalesce(col("__bc.a"), lit(true)))
-      .select(urls.columns.map(col) :+ col("allowed") :+
+      .select(urls.columns.toSeq.map(col) :+ col("allowed") :+
         col("allowed_conservative"): _*)
   }
 
@@ -825,7 +825,7 @@ object Robots {
     // row), so first() re-attaches them deterministically. Rows
     // sharing an idCol — outside the documented unique-id contract —
     // collapse to one rated row.
-    val passthrough = urls.columns.filterNot(_ == idCol)
+    val passthrough = urls.columns.toSeq.filterNot(_ == idCol)
     urls
       .join(side,
         urls(domainCol) === col("__rd") &&
@@ -841,6 +841,6 @@ object Robots {
             (col("__rule") === "allow").as("a")))).as("__best"),
         passthrough.map(c => first(col(c)).as(c)): _*)
       .withColumn("allowed", coalesce(col("__best.a"), lit(true)))
-      .select(urls.columns.map(col) :+ col("allowed"): _*)
+      .select(urls.columns.toSeq.map(col) :+ col("allowed"): _*)
   }
 }

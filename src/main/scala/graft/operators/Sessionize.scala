@@ -87,15 +87,22 @@ object Sessionize {
     */
   def auditDeniedCounts(audits: DataFrame, gapSeconds: Long): DataFrame = {
     require(gapSeconds > 0, s"session.duration must be positive, got: $gapSeconds")
+    val Seq(key, time, result, weight) = AuditFields
     deniedCounts(
       audits,
-      timeCol = "evtTime",
-      keyCol = "reqUser",
+      timeCol = time,
+      keyCol = key,
       gap = s"$gapSeconds seconds",
-      denied = col("result") =!= 1,
-      weight = col("event_count")
+      denied = col(result) =!= 1,
+      weight = col(weight)
     )
   }
+
+  /** The `Audit` fields [[auditDeniedCounts]] reads — key, event time,
+    * result, weight — and so all a caller needs to parse for it
+    * ([[AuditJson.parse]]).
+    */
+  val AuditFields: Seq[String] = Seq("reqUser", "evtTime", "result", "event_count")
 
   /** F2 of the reference: the stdout/Kafka string projection
     * (`App.java:69-74`), epoch millis for the window bounds.

@@ -6466,26 +6466,26 @@ object CorpusQueries {
           |    WHEN 19 THEN 'default' WHEN 20 THEN 'default'
           |    ELSE 'header' END AS charset_source,
           |  CASE CAST(i AS INT)
-          |    WHEN 0 THEN 'caf\u00e9 page ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 1 THEN 'caf\u00e9 r\u00e9sum\u00e9 ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 2 THEN 'price \u20ac' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 0 THEN 'café page ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 1 THEN 'café résumé ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 2 THEN 'price €' || CAST(n_nationkey AS VARCHAR)
           |    WHEN 3 THEN 'plain page ' || CAST(n_nationkey AS VARCHAR)
           |    WHEN 5 THEN 'nihongo ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 6 THEN '<html><head><meta charset="iso-8859-1"></head><body>caf\u00e9 meta '
+          |    WHEN 6 THEN '<html><head><meta charset="iso-8859-1"></head><body>café meta '
           |      || CAST(n_nationkey AS VARCHAR) || '</body></html>'
-          |    WHEN 7 THEN '<meta http-equiv="Content-Type" content="text/html; charset=iso-8859-1">caf\u00e9 hdr '
+          |    WHEN 7 THEN '<meta http-equiv="Content-Type" content="text/html; charset=iso-8859-1">café hdr '
           |      || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 8 THEN '\u65e5\u672c\u8a9e\u30da\u30fc\u30b8 ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 9 THEN '<meta charset="euc-jp">\u8a00\u8a9e\u30c6\u30b9\u30c8 ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 10 THEN '\ud55c\uad6d\uc5b4 \ud398\uc774\uc9c0 ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 11 THEN '\u4e2d\u6587\u7f51\u9875 ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 12 THEN '\u4e2d\u6587\u0f00\u9875 ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 13 THEN '\u7e41\u9ad4\u4e2d\u6587 ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 14 THEN '\u0440\u0443\u0441\u0441\u043a\u0438\u0439 \u0442\u0435\u043a\u0441\u0442 ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 15 THEN '\u043a\u0438\u0440\u0438\u043b\u043b\u0438\u0446\u0430 ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 16 THEN '\u03b5\u03bb\u03bb\u03b7\u03bd\u03b9\u03ba\u03ac ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 17 THEN '\u010de\u0161tina str\u00e1nka ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 19 THEN 'legacy caf\u00e9 ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 8 THEN '日本語ページ ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 9 THEN '<meta charset="euc-jp">言語テスト ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 10 THEN '한국어 페이지 ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 11 THEN '中文网页 ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 12 THEN '中文ༀ页 ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 13 THEN '繁體中文 ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 14 THEN 'русский текст ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 15 THEN 'кириллица ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 16 THEN 'ελληνικά ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 17 THEN 'čeština stránka ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 19 THEN 'legacy café ' || CAST(n_nationkey AS VARCHAR)
           |    ELSE NULL END AS text
           |FROM nation, UNNEST(generate_series(0, 20)) AS u(i)""".stripMargin
       )
@@ -6532,11 +6532,11 @@ object CorpusQueries {
           |    ELSE 'utf-8' END AS charset,
           |  'header' AS charset_source,
           |  CASE CAST(i AS INT)
-          |    WHEN 0 THEN 'caf\u00e9 page ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 1 THEN 'chunked caf\u00e9 ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 2 THEN 'gz caf\u00e9 r\u00e9sum\u00e9 ' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 3 THEN 'price \u20ac' || CAST(n_nationkey AS VARCHAR)
-          |    WHEN 4 THEN 'both caf\u00e9 ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 0 THEN 'café page ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 1 THEN 'chunked café ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 2 THEN 'gz café résumé ' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 3 THEN 'price €' || CAST(n_nationkey AS VARCHAR)
+          |    WHEN 4 THEN 'both café ' || CAST(n_nationkey AS VARCHAR)
           |    WHEN 8 THEN repeat('zs' || CAST(n_nationkey AS VARCHAR) || ' ', 4) || 'end'
           |    ELSE NULL END AS text
           |FROM nation, UNNEST(generate_series(0, 8)) AS u(i)""".stripMargin

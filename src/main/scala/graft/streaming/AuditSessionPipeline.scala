@@ -30,14 +30,15 @@ object AuditSessionPipeline {
   val DefaultWatermark = "2 days"
 
   /** Parse → watermark → sessionize → non-zero filter. Works on any
-    * DataFrame with a string `value` column, bounded or unbounded.
+    * DataFrame with a string `value` column, bounded or unbounded. Only
+    * the fields the sessionizer reads are parsed.
     */
   def transform(
       lines: DataFrame,
       gapSeconds: Long,
       watermark: String = DefaultWatermark
   ): DataFrame = {
-    val parsed = AuditJson.parse(lines)
+    val parsed = AuditJson.parse(lines, Sessionize.AuditFields)
     val withWm =
       if (parsed.isStreaming) parsed.withWatermark("evtTime", watermark)
       else parsed
@@ -157,9 +158,8 @@ object AuditSessionPipeline {
       .builder(sys.props.get("spark.sql.shuffle.partitions")
         .fold(Runtime.getRuntime.availableProcessors)(_.toInt))
       .appName("audit-sessions")
-    val spark = sys.props.get("spark.master")
-      .fold(builder.master("local[*]"))(_ => builder)
-      .getOrCreate()
+    val spark = GraftSession.create(sys.props.get("spark.master")
+      .fold(builder.master("local[*]"))(_ => builder))
     spark.sparkContext.setLogLevel("WARN")
     // min-date pruning happens at LISTING time on every poll (the glob
     // skips dead day dirs, matching the reference's per-poll

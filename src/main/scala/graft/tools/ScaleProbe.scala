@@ -23,7 +23,7 @@ import graft.queries.Q
 object ScaleProbe {
 
   private def replicate(df: DataFrame, idCol: String, copies: Int): DataFrame = {
-    val shift = df.agg(max(col(idCol))).head.getLong(0) + 1L
+    val shift = df.agg(max(col(idCol))).head().getLong(0) + 1L
     (0 until copies).map { c =>
       df.withColumn(idCol, col(idCol) + lit(c * shift))
     }.reduce(_ unionByName _)

@@ -1,6 +1,11 @@
 package graft
 
-import graft.operators.AuditJson
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, TimestampType}
+
+import graft.model.Audit
+import graft.operators.{AuditJson, Sessionize}
 
 /** Conformance port of the reference's JSON parse golden test
   * (`TestJson.java:21-33`): a realistic Ranger kafka audit record must
@@ -66,5 +71,59 @@ class AuditJsonSpec extends SparkSpec {
 
     val dead = AuditJson.corruptLines(lines).as[String].collect().toSet
     assert(dead == Set("not json at all {{{", "{broken"))
+  }
+
+  /** `golden` with `field` set to the raw JSON `value`. */
+  private def withField(field: String, value: String): String =
+    golden.stripSuffix("}") + s""","$field":$value}"""
+
+  /** The lines the narrow parse must read exactly as the whole-record
+    * parse does.
+    */
+  private val adversarial: Seq[String] = {
+    val truncated = golden.indices.map(golden.take)
+    // a value of every other JSON kind, for each of the 23 fields (the
+    // later duplicate key wins, so appending overrides the golden value)
+    val wrongTypes = for {
+      f <- Audit.schema.fields.toSeq
+      v <- (f.dataType match {
+        case IntegerType => Seq("\"9\"", "9.5", "true", "99999999999")
+        case StringType => Seq("7", "false")
+        case TimestampType => Seq("1619712511025", "true")
+        case ArrayType(_, _) => Seq("\"tag\"", "3", "[1,{\"a\":2}]")
+        case other => fail(s"no wrong values for $other")
+      }) ++ Seq("{\"reqUser\":\"inner\",\"result\":0}", "[\"reqUser\",1]", "null")
+    } yield withField(f.name, v)
+    val badTimes = Seq("2021-04-29", "2021-04-29T16:08:31.025Z", "2021-04-29 16:08:31",
+      "29/04/2021 16:08:31.025", "2021-13-45 25:61:61.000", "", " 2021-04-29 16:08:31.025")
+      .map(t => withField("evtTime", s"\"$t\""))
+    val keys = Seq(
+      """{"reqUser":"a","reqUser":"b","evtTime":"2021-04-29 16:08:31.025","result":0}""",
+      """{"reqUser":"a","result":0,"result":1,"event_count":2,"event_count":null}""",
+      """{"reqUser":"a","extra":{"reqUser":"b","evtTime":{"result":[{"event_count":9}]}},"result":0}""",
+      """{"deep":[[[{"reqUser":"x"}]]],"reqUser":"a","event_count":3}""")
+    val shapes = Seq(s"[$golden,$golden]", "[]", "42", "\"wdyson\"", "null", "true", "", "   ", "{}")
+    truncated ++ wrongTypes ++ badTimes ++ keys ++ shapes
+  }
+
+  test("the four-field parse keeps exactly the whole-record parse's rows and values") {
+    val lines = (adversarial.map(Option(_)) :+ None).toDF("value")
+    val fields = Sessionize.AuditFields
+    def bag(df: DataFrame): Map[Row, Int] =
+      df.collect().toSeq.groupBy(identity).map { case (r, rs) => r -> rs.size }
+    val narrow = AuditJson.parse(lines, fields)
+    assert(narrow.columns.toSeq == fields)
+    val kept = bag(narrow)
+    assert(kept == bag(AuditJson.parse(lines).select(fields.map(col): _*)))
+    // the corpus reaches both sides of the filter
+    assert(kept.nonEmpty && kept.values.sum < adversarial.size)
+    val good = AuditJson.parseStats(lines).collect().head.getAs[Long]("n_good")
+    assert(good == kept.values.sum)
+  }
+
+  test("parse rejects a field list without the key and names it doesn't know") {
+    val lines = Seq(golden).toDF("value")
+    intercept[IllegalArgumentException](AuditJson.parse(lines, Seq("evtTime", "result")))
+    intercept[IllegalArgumentException](AuditJson.parse(lines, Seq("reqUser", "no_such_field")))
   }
 }

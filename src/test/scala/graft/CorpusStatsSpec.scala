@@ -161,7 +161,7 @@ class CorpusStatsSpec extends SparkSpec {
       .embeddingOutliers(vecs, "vec_id", "embedding", tau = 4.0)
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
     assert(out(99L)._2, s"planted outlier not flagged: ${out(99L)}")
-    assert(out.filterKeys(_ != 99L).values.forall(!_._2),
+    assert(out.view.filterKeys(_ != 99L).values.forall(!_._2),
       "an inlier was flagged")
     // scoring side is map-side: exactly one exchange (the lane-stats agg)
     val plan = graft.operators.Normalize
@@ -185,7 +185,7 @@ class CorpusStatsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
     assert(out(77L) == ((Double.PositiveInfinity, true)), s"empty vec: ${out(77L)}")
     assert(out(88L) == ((Double.PositiveInfinity, true)), s"null vec: ${out(88L)}")
-    assert(out.filterKeys(k => k != 77L && k != 88L).values.forall(!_._2))
+    assert(out.view.filterKeys(k => k != 77L && k != 88L).values.forall(!_._2))
   }
 
   test("kAnonymity: group sizes and the k-threshold flag; broadcast join-back") {
@@ -282,7 +282,7 @@ class CorpusStatsSpec extends SparkSpec {
 
   test("tCloseness: all-NULL-sensitive group stays in the gate; exact TVD; zero cache residue") {
     val spark2 = spark
-    val before = spark2.sparkContext.getPersistentRDDs.keySet
+    val before = spark2.sparkContext.getPersistentRDDs.keySet.toSet
     val df = Seq(
       ("A", Option.empty[String]), ("A", Option.empty[String]),
       ("B", Some("x")), ("B", Some("y"))
@@ -305,13 +305,13 @@ class CorpusStatsSpec extends SparkSpec {
     assert(strict.forall(_ == false))
     // the guarded-small path localizes the decision table and unpins
     // everything — a long-lived session accumulates NO cache from audits
-    val after = spark2.sparkContext.getPersistentRDDs.keySet
+    val after = spark2.sparkContext.getPersistentRDDs.keySet.toSet
     assert((after -- before).isEmpty, s"leaked persisted RDDs: ${after -- before}")
   }
 
   test("tCloseness/kAnonymity: over-guard regime (shuffle join) — same decisions, released caches") {
     val spark2 = spark
-    val before = spark2.sparkContext.getPersistentRDDs.keySet
+    val before = spark2.sparkContext.getPersistentRDDs.keySet.toSet
     val df = (1L to 40L).map(i => (s"g${i % 8}", s"v${i % 3}")).toDF("g", "s")
     // force every guardedSide past the threshold: the group tables take
     // the pinned-shuffle-join path instead of localize+broadcast
@@ -327,7 +327,7 @@ class CorpusStatsSpec extends SparkSpec {
     // tCloseness materializes before returning, so it unpins the
     // guarded sides even in the over-guard regime (only the pinned
     // output remained, unpinned above)
-    val after = spark2.sparkContext.getPersistentRDDs.keySet
+    val after = spark2.sparkContext.getPersistentRDDs.keySet.toSet
     assert((after -- before).isEmpty, s"leaked persisted RDDs: ${after -- before}")
 
     val ka = graft.operators.Profile.kAnonymity(df, Seq("g"), k = 5L,
@@ -338,12 +338,12 @@ class CorpusStatsSpec extends SparkSpec {
     // lazy-returning audits must leak NOTHING even past the guard
     // (keepPinned=false: the shuffle side recomputes rather than
     // staying pinned with no owner to release it)
-    val afterKa = spark2.sparkContext.getPersistentRDDs.keySet
+    val afterKa = spark2.sparkContext.getPersistentRDDs.keySet.toSet
     assert((afterKa -- before).isEmpty, s"kAnonymity leaked: ${afterKa -- before}")
     val ld = graft.operators.Profile.lDiversity(df, Seq("g"), "s", l = 2L,
       maxBroadcastGroups = 1L)
     ld.collect()
-    val afterLd = spark2.sparkContext.getPersistentRDDs.keySet
+    val afterLd = spark2.sparkContext.getPersistentRDDs.keySet.toSet
     assert((afterLd -- before).isEmpty, s"lDiversity leaked: ${afterLd -- before}")
   }
 

@@ -56,7 +56,7 @@ class DedupSpec extends SparkSpec {
 
     // lifecycle: append delta1 survivors' digests, screen a second delta
     Dedup.digestIndex(
-        delta1.filter(col("doc_id").isin(kept1: _*)), "text")
+        delta1.filter(col("doc_id").isin(kept1.toIndexedSeq: _*)), "text")
       .write.mode("append").parquet(path)
     val delta2 = docs(
       20L -> "brand new text",      // dup of an APPENDED digest -> dropped

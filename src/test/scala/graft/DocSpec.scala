@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cfb, Doc, Docx, Msg, Office}
+import graft.operators.{Cfb, Doc, Docx, Msg, Office, Xls}
 
 /** CFB container walk + legacy Word 97 (.doc) text extraction: the
   * sector machine (FAT/DIFAT/directory/mini stream), FIB flags, piece
@@ -133,13 +133,13 @@ class DocSpec extends SparkSpec {
   }
 
   test("office triage routes CFB: doc extracts, encrypted holds, other OLE quarantines") {
-    assert(Office.detect(Doc.doc(Seq("legacy"))) == "doc")
-    assert(Office.detect(Doc.doc(Seq("x"), encrypted = true)) == "encrypted")
-    assert(Office.detect(Cfb.encryptedOoxmlFixture(1L)) == "encrypted")
-    assert(Office.detect(Docx.encryptedFixture(1L)) == "cfb")
+    assert(Office.routeOne(Doc.doc(Seq("legacy")))._1 == "doc")
+    assert(Office.routeOne(Doc.doc(Seq("x"), encrypted = true))._1 == "encrypted")
+    assert(Office.routeOne(Cfb.encryptedOoxmlFixture(1L))._1 == "encrypted")
+    assert(Office.routeOne(Docx.encryptedFixture(1L))._1 == "cfb")
     // sibling legacy binaries route to their OWN readers now
-    assert(Office.detect(Cfb.cfb(Seq(("Workbook", "xls".getBytes("UTF-8"))))) == "xls")
-    assert(Office.detect(Cfb.cfb(Seq(("SomeOther", "x".getBytes("UTF-8"))))) == "cfb")
+    assert(Office.routeOne(Xls.xls(Seq((1, Seq(("s", "cell"))))))._1 == "xls")
+    assert(Office.routeOne(Cfb.cfb(Seq(("SomeOther", "x".getBytes("UTF-8")))))._1 == "cfb")
   }
 
   test("textRows: distributed walk map-only; mixed outcomes coexist") {

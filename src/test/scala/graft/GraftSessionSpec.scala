@@ -62,5 +62,6 @@ object GraftSessionSpec {
   val localTouches: Seq[String] = Seq(
     "spark.sql.session.timeZone",
     "spark.sql.shuffle.partitions",
-    "spark.sql.adaptive.enabled") ++ GraftSession.localFileSystem.keys
+    "spark.sql.adaptive.enabled",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold") ++ GraftSession.localFileSystem.keys
 }

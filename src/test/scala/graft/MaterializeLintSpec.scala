@@ -17,8 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - typed plan assertions: no gate in `queries/` matches on
   *     `executedPlan.toString`, whose shape is not a stable API;
   *   - no spec-only API: every public object-level `def` of the
-  *     operator, streaming, source and function packages is named by
-  *     some other code line of the library or of `perfbench/src` (a
+  *     operator, streaming, source and function packages is used by
+  *     the library or `perfbench/src` — as `Object.name`, through an
+  *     import of the object, or by name inside its own file (a
   *     reference twin only a spec calls is `private[graft]`).
   */
 class MaterializeLintSpec extends AnyFunSuite {
@@ -79,21 +80,49 @@ class MaterializeLintSpec extends AnyFunSuite {
 
   test("every public def of operators/, streaming/, sources/ and functions/ has a non-spec caller") {
     val packages = Seq("operators", "streaming", "sources", "functions").map(Paths.get("graft", _))
+    val owner = """^(?:(?:final|sealed|abstract|case|private\[\w+\]) )*(object|class|trait) (\w+)""".r
     val defLine = """^  def ([A-Za-z_]\w*)""".r
+    // (object or null for a class/trait member, name, file, line)
     val defs = for {
       (f, lines) <- library if packages.exists(p => root.relativize(f).startsWith(p))
-      (line, i) <- lines.zipWithIndex
+      owners = lines.scanLeft(Option.empty[(String, String)])((o, line) =>
+        owner.findPrefixMatchOf(line).map(m => (m.group(1), m.group(2))).orElse(o)).tail
+      ((line, o), i) <- lines.zip(owners).zipWithIndex
       m <- defLine.findPrefixMatchOf(line)
-    } yield (m.group(1), s"$f:${i + 1}")
+    } yield (o.collect { case ("object", n) => n }.orNull, m.group(1), f, i + 1)
     assert(defs.size > 100)
-    // a name is used where a code line names it other than as `def name`;
-    // matching is by name, so a name another def shares can slip past
+    val files = library ++ scalaFiles(Paths.get("perfbench/src"))
+    // names a code line uses other than as `def name`, per file
     val token = """(def\s+)?([A-Za-z_]\w*)""".r
-    val used = (library ++ scalaFiles(Paths.get("perfbench/src"))).iterator
-      .flatMap { case (_, lines) => lines }
-      .flatMap(line => token.findAllMatchIn(code(line)).filter(_.group(1) == null).map(_.group(2)))
-      .toSet
-    val found = defs.collect { case (name, at) if !used(name) => s"$at: $name" }
+    val bare = files.map { case (f, lines) =>
+      f -> lines.flatMap(line =>
+        token.findAllMatchIn(code(line)).filter(_.group(1) == null).map(_.group(2))).toSet
+    }.toMap
+    // `Object.name`, anywhere
+    val dotted = """([A-Z]\w*)\.([A-Za-z_]\w*)""".r
+    val qualified = files.iterator.flatMap(_._2)
+      .flatMap(line => dotted.findAllMatchIn(code(line)))
+      .map(m => (m.group(1), m.group(2))).toSet
+    // `import ...Object.name`, `import ...Object.{a, b => c}` and
+    // `import ...Object._`: an import counts as a use, and a wildcard
+    // import makes the file's bare names uses of the object's defs
+    val imported = """^import (?:[\w.]*\.)?([A-Z]\w*)\.(\w+|\{[^}]*\})""".r
+    val imports = files.flatMap { case (f, lines) =>
+      lines.map(_.trim).flatMap(imported.findPrefixMatchOf(_)).flatMap { m =>
+        val names = m.group(2).stripPrefix("{").stripSuffix("}").split(",")
+          .map(_.split("=>")(0).trim).toSeq
+        names.flatMap(n => if (n == "_") bare(f).map((m.group(1), _)) else Seq((m.group(1), n)))
+      }
+    }.toSet
+    // a class or trait member is called on an instance: its name is all
+    // a line can show; `main` is the JVM's to call
+    val anyFile = bare.values.flatten.toSet
+    val found = defs.collect {
+      case (obj, name, f, at) if name != "main" && !(
+        if (obj == null) anyFile(name)
+        else bare(f)(name) || qualified((obj, name)) || imports((obj, name))) =>
+        s"$f:$at: ${Option(obj).fold(name)(o => s"$o.$name")}"
+    }
     assert(found.isEmpty, found.mkString(
       "only a spec calls these: delete them, or make a reference twin private[graft]:\n", "\n", ""))
   }

@@ -71,7 +71,7 @@ class MsgSpec extends SparkSpec {
     assert(Msg.read(Docx.encryptedFixture(3L)).stage == "cfb")
     assert(Msg.read("junk".getBytes("UTF-8")).stage == "cfb")
     assert(Msg.read(Cfb.cfb(Seq(("Other", "x".getBytes("UTF-8"))))).stage == "part")
-    assert(Office.detect(Msg.msg("s", "x", "b", Seq("r"))) == "msg")
+    assert(Office.routeOne(Msg.msg("s", "x", "b", Seq("r")))._1 == "msg")
     // adversarial: truncation and bit flips never throw
     val whole = Msg.msg("subject line", "sender", "body text", Seq("a", "b"))
     (1 until whole.length by 157).foreach(n => Msg.read(whole.take(n)): Unit)

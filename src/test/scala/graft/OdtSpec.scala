@@ -64,13 +64,13 @@ class OdtSpec extends SparkSpec {
 
   test("ODF subtypes route on the mimetype member; odp/ods extract through the shared walk") {
     import graft.operators.{Office, ZipShard}
-    assert(Office.detect(Odt.odt(Seq("x"))) == "odt")
-    assert(Office.detect(Odt.ods(Seq(Seq("a", "b")))) == "ods")
-    assert(Office.detect(Odt.odp(Seq(Seq("s")))) == "odp")
+    assert(Office.routeOne(Odt.odt(Seq("x")))._1 == "odt")
+    assert(Office.routeOne(Odt.ods(Seq(Seq("a", "b"))))._1 == "ods")
+    assert(Office.routeOne(Odt.odp(Seq(Seq("s"))))._1 == "odp")
     // a mimetype-less content.xml zip stays the lenient odt route
     val bare = ZipShard.zip(Seq(
       ("content.xml", "<office:body/>".getBytes("UTF-8"))), deflate = false)
-    assert(Office.detect(bare) == "odt")
+    assert(Office.routeOne(bare)._1 == "odt")
     // ODP: page text surfaces, speaker notes never do
     val p = Odt.read(Odt.odp(Seq(Seq("Title", "point one"), Seq("End"))))
     assert(p.stage == "ok" && p.paragraphs == Seq("Title", "point one", "End"))

@@ -67,16 +67,16 @@ class PptxSpec extends SparkSpec {
   test("office triage: content-based routing, one unified frame") {
     import spark.implicits._
     import graft.operators.{Docx, Odt, Office, Pptx}
-    assert(Office.detect(Docx.docx(Seq(Seq("x")))) == "docx")
-    assert(Office.detect(Pptx.pptx(Seq(Seq("x")))) == "pptx")
-    assert(Office.detect(Odt.odt(Seq("x"))) == "odt")
-    assert(Office.detect(Cfb.encryptedOoxmlFixture(1L)) == "encrypted")
-    assert(Office.detect("{\\rtf1 x}".getBytes("UTF-8")) == "rtf")
-    assert(Office.detect("junk".getBytes("UTF-8")) == "unknown")
-    assert(Office.detect(null) == "unknown")
+    assert(Office.routeOne(Docx.docx(Seq(Seq("x"))))._1 == "docx")
+    assert(Office.routeOne(Pptx.pptx(Seq(Seq("x"))))._1 == "pptx")
+    assert(Office.routeOne(Odt.odt(Seq("x")))._1 == "odt")
+    assert(Office.routeOne(Cfb.encryptedOoxmlFixture(1L))._1 == "encrypted")
+    assert(Office.routeOne("{\\rtf1 x}".getBytes("UTF-8"))._1 == "rtf")
+    assert(Office.routeOne("junk".getBytes("UTF-8"))._1 == "unknown")
+    assert(Office.routeOne(null)._1 == "unknown")
     // a zip that is none of the three kinds routes as bare 'zip'
-    assert(Office.detect(graft.operators.ZipShard.zip(
-      Seq(("readme.txt", "hi".getBytes("UTF-8"))), deflate = false)) == "zip")
+    assert(Office.routeOne(graft.operators.ZipShard.zip(
+      Seq(("readme.txt", "hi".getBytes("UTF-8"))), deflate = false))._1 == "zip")
     val df = Seq(
       (1L, Docx.docx(Seq(Seq("w")))),
       (2L, Pptx.pptx(Seq(Seq("s1"), Seq("s2")))),

@@ -182,8 +182,8 @@ class XlsPptSpec extends SparkSpec {
   test("triage routes xls/ppt; distributed rows map-only; streams match batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    assert(Office.detect(Xls.xls(grid)) == "xls")
-    assert(Office.detect(Ppt.ppt(Seq(Seq("s")))) == "ppt")
+    assert(Office.routeOne(Xls.xls(grid))._1 == "xls")
+    assert(Office.routeOne(Ppt.ppt(Seq(Seq("s"))))._1 == "ppt")
     val blobs = Seq(
       (1L, Xls.xls(Seq((1, Seq(("s", "cell"), ("n", "7")))))),
       (2L, Ppt.ppt(Seq(Seq("old deck")))),

@@ -44,7 +44,7 @@ class XlsxSpec extends SparkSpec {
 
   test("office triage routes xlsx; textRows map-only") {
     import spark.implicits._
-    assert(graft.operators.Office.detect(Xlsx.xlsx(Seq("x"))) == "xlsx")
+    assert(graft.operators.Office.routeOne(Xlsx.xlsx(Seq("x")))._1 == "xlsx")
     val df = Seq(
       (1L, Xlsx.xlsx(Seq("alpha", "beta"))),
       (2L, "junk".getBytes("UTF-8"))).toDF("media_id", "payload")

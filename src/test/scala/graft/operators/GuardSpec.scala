@@ -29,7 +29,7 @@ class GuardSpec extends SparkSpec {
   private def residue[T](body: => T): (T, Int) = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = body
-    (out, (spark.sparkContext.getPersistentRDDs.keySet -- before).size)
+    (out, (spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).size)
   }
 
   test("pin: the first action fills the frame; unpin frees it") {

@@ -7,9 +7,6 @@ import org.apache.spark.sql.SparkSession
   *
   *   - UTC session timezone (the audit timestamp format is zone-less;
   *     reproducible epoch-millis output, `App.java:72-73` semantics);
-  *   - [[graft.functions.GraftExtensions]] installed so the native
-  *     expressions are callable from SQL (`graft_dot`,
-  *     `graft_poly_hash`, `graft_simhash64`);
   *   - AQE left on (runtime coalescing + skew-join splitting);
   *   - shuffle parallelism sized to the caller's cluster, not the
   *     200-partition default;
@@ -65,16 +62,10 @@ object GraftSession {
     spark
   }
 
-  /** NOTE: `spark.sql.extensions` is a static conf — getOrCreate
-    * ignores it when a session already exists in the JVM. [[local]]
-    * compensates by registering the SQL functions on whatever session
-    * it gets back; callers using this builder directly should do the
-    * same ([[graft.functions.GraftExtensions.registerAll]]).
-    */
+  /** The session settings above, before a master is chosen. */
   def builder(shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config(localFileSystem)
@@ -93,14 +84,7 @@ object GraftSession {
     spark
   }
 
-  /** Local session for tests / single-node runs. The SQL functions are
-    * guaranteed registered even when getOrCreate returns a
-    * pre-existing session (where the extensions static conf is
-    * silently ignored).
-    */
-  def local(cores: Int): SparkSession = {
-    val spark = create(builder(shufflePartitions = cores).master(s"local[$cores]"))
-    graft.functions.GraftExtensions.registerAll(spark)
-    spark
-  }
+  /** Local session for tests / single-node runs. */
+  def local(cores: Int): SparkSession =
+    create(builder(shufflePartitions = cores).master(s"local[$cores]"))
 }

@@ -9,8 +9,8 @@ object Verify {
     // for gate-checking a few new queries without a full run.
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // the library's recommended wiring (UTC, extensions, AQE) — Verify
+      args.lift(2).map(a => SparkEntry.named(a.split(",").toSeq).map(_._1).toSet)
+    // the library's recommended wiring (UTC, AQE) — Verify
     // runs on exactly the session configuration users are pointed at
     val spark = GraftSession.forMain("WARN")
     new java.io.File(outDir).mkdirs()

@@ -569,7 +569,8 @@ object Warc {
     * Envelope.Payload-Metadata.HTTP-Response-Metadata.HTML-Metadata
     * .Links[] as (url, path) entries. One row PER LINK — the link
     * graph's source, ready for [[Graph]]'s domain collapse. Parsing is
-    * Spark-native `from_json` (codegen'd, null-safe): a corrupt
+    * Spark-native `from_json` (null-safe; a `CodegenFallback`
+    * expression, so the parse runs outside whole-stage codegen): a corrupt
     * envelope or a record without links contributes nothing — the
     * lenient degrade every untrusted-input parser here shares.
     * Map-only.

@@ -88,7 +88,7 @@ object Q {
     * accumulate temp data. Unique per call: a shared path would race when
     * two processes (Bench + Verify) hit the same sf dir concurrently.
     * One static shutdown hook drains a shared queue — repeated calls in
-    * a long-lived session (MicroBench reps) don't grow the hook list.
+    * a long-lived session (Bench repeats) don't grow the hook list.
     */
   private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
   private lazy val scratchHook: Unit = Runtime.getRuntime.addShutdownHook(new Thread(() => {

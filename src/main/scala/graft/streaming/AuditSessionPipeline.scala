@@ -113,7 +113,6 @@ object AuditSessionPipeline {
     val withCp = config.checkpoint.fold(base)(cp => base.option("checkpointLocation", cp))
     config.output match {
       case "print" => withCp.format("console")
-      case "memory" => withCp.format("memory").queryName("audit_sessions")
       // exactly-once file sink: the manifest-committed parquet sink is
       // the strongest guarantee of the three (Kafka stays at-least-once,
       // matching the reference's DeliveryGuarantee.AT_LEAST_ONCE)

@@ -10,10 +10,11 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val selected = SparkEntry.named(names)
     val spark = GraftSession.forMain("ERROR")
-    names.foreach { n =>
+    selected.foreach { case (n, fn) =>
       println(s"\n===== $n =====")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

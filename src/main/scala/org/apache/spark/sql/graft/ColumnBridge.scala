@@ -19,18 +19,6 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Register a SQL function on an EXISTING session (the
-    * `sessionState` accessor is `private[sql]` too). Lets applications
-    * adopt the graft SQL functions without rebuilding their session
-    * with `spark.sql.extensions`.
-    */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession,
-      ident: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-
   /** `df`, a local checkpoint (a `LogicalRDD`), with its size estimate
     * capped at Long.MaxValue bytes and rows — the estimate Spark gives a
     * frame it knows nothing about. A checkpoint inherits the estimate of

@@ -16,6 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     `Q.nationKeys` (`queries/Q.scala`);
   *   - typed plan assertions: no gate in `queries/` matches on
   *     `executedPlan.toString`, whose shape is not a stable API;
+  *   - one session setup: only `GraftSession.scala` builds a session,
+  *     and nothing installs session extensions (graft's functions are
+  *     DataFrame functions, with no SQL registry);
   *   - no spec-only API: every public object-level `def` of the
   *     operator, streaming, source and function packages is used by
   *     the library or `perfbench/src` — as `Object.name`, through an
@@ -76,6 +79,14 @@ class MaterializeLintSpec extends AnyFunSuite {
     val found = hits("""executedPlan\.toString""".r, 10)(
       _.startsWith(Paths.get("graft", "queries")))
     assert(found.isEmpty, found.mkString("assert plans through Q's typed checks:\n", "\n", ""))
+  }
+
+  test("no code line outside GraftSession.scala builds a session, and none sets session extensions") {
+    val session = Paths.get("graft", "GraftSession.scala")
+    val found = hits(Regex.quote("SparkSession.builder").r, 50)(_ != session) ++
+      hits(Regex.quote("spark.sql.extensions").r, 50)(_ => true)
+    assert(found.isEmpty, found.mkString(
+      "build sessions through GraftSession, with no SQL extensions:\n", "\n", ""))
   }
 
   test("every public def of operators/, streaming/, sources/ and functions/ has a non-spec caller") {

@@ -17,10 +17,13 @@ import org.apache.spark.sql.functions._
   * named `YYYYMMDD` older than `audit.min_date`; hidden/`_`-prefixed
   * files are always skipped (Spark file sources do this by default too).
   *
-  * Spark-first mapping: `readStream.format("text")` with
-  * `recursiveFileLookup`; the poll interval becomes the query trigger
-  * (`Trigger.ProcessingTime`), configured at sink time. Date pruning
-  * for a bare `YYYYMMDD/` tree (the reference's layout):
+  * Spark-first mapping: a file stream with `recursiveFileLookup`; the
+  * poll interval becomes the query trigger (`Trigger.ProcessingTime`),
+  * configured at sink time. Every read here, batch or stream, pruned or
+  * not, goes through one line reader, [[AuditLines]]: Spark's `text`
+  * rows, with Hadoop's reader set up once per task instead of once per
+  * file (most of a scan over many small rolled files). Date pruning for
+  * a bare `YYYYMMDD/` tree (the reference's layout):
   *
   *   - **Batch:** [[batchPruned]] lists through [[DatePrunedFileIndex]],
   *     which never descends into a below-min-date directory — full
@@ -51,17 +54,21 @@ object AuditSource {
     minDate
   }
 
-  /** Streaming text source over a directory tree. */
+  /** Streaming text source over a directory tree. The schema is the one
+    * `text` infers; a file stream over any format but Spark's own text
+    * class must be given it.
+    */
   def stream(spark: SparkSession, path: String): DataFrame =
     spark.readStream
-      .format("text")
+      .format(classOf[AuditLines].getName)
+      .schema("value STRING")
       .option("recursiveFileLookup", "true")
       .load(path)
 
   /** Batch twin — identical downstream operators apply (unified API). */
   def batch(spark: SparkSession, path: String): DataFrame =
     spark.read
-      .format("text")
+      .format(classOf[AuditLines].getName)
       .option("recursiveFileLookup", "true")
       .load(path)
 
@@ -163,7 +170,6 @@ object AuditSource {
       minDate: Option[String]
   ): (DataFrame, DatePrunedFileIndex) = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.text.TextFileFormat
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     minDate.foreach(checkedMinDate)
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -173,7 +179,7 @@ object AuditSource {
       partitionSchema = StructType(Nil),
       dataSchema = StructType(Seq(StructField("value", StringType))),
       bucketSpec = None,
-      fileFormat = new TextFileFormat(),
+      fileFormat = new AuditLines(),
       options = Map.empty)(classic)
     (classic.baseRelationToDataFrame(relation), index)
   }

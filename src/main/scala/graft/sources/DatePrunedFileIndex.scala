@@ -42,8 +42,6 @@ class DatePrunedFileIndex(
     minDate: Option[String]
 ) extends FileIndex {
 
-  private val hadoopConf = spark.sparkContext.hadoopConfiguration
-
   /** Directories the walk actually entered (absolute paths) — exposed so
     * tests can assert pruned dirs were never visited, not merely that
     * their rows were filtered later.
@@ -93,8 +91,13 @@ class DatePrunedFileIndex(
       catch { case _: java.io.IOException => fs.makeQualified(dir).toString }
     else fs.makeQualified(dir).toString
 
+  /** Lists through the session's Hadoop conf as the walk runs — as
+    * Spark's own index and the scan of the walk's files do — so settings
+    * made with `spark.conf.set` (a per-session `fs.s3a.*` credential, a
+    * file system implementation) reach the listing too.
+    */
   private def listPruned(): Seq[FileStatus] = {
-    val fs = root.getFileSystem(hadoopConf)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val visited = mutable.ArrayBuffer.empty[String]
     val seen = mutable.HashSet.empty[String]
     val out = mutable.ArrayBuffer.empty[FileStatus]

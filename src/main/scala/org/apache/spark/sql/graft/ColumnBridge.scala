@@ -7,7 +7,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 /** Column ⇄ Expression bridge, and the other `private[sql]`/`private[spark]`
   * access graft needs (a checkpoint's size estimate, [[capSizeEstimate]];
-  * freeing its blocks, [[freeBlocks]]).
+  * freeing its blocks, [[freeBlocks]]; a reader's Hadoop conf,
+  * [[broadcastConf]]).
   *
   * Spark 4 hides the classic Column↔Expression converters behind
   * `private[sql]`; libraries that ship native Catalyst expressions (the
@@ -44,4 +45,14 @@ object ColumnBridge {
     */
   def freeBlocks(rdd: org.apache.spark.rdd.RDD[_], blocking: Boolean): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking)
+
+  /** `conf` broadcast serialized-only, as Spark's own file readers ship
+    * it to their tasks (`SerializableConfiguration.broadcast` is
+    * `private[spark]`): only its serialized bytes are kept.
+    */
+  def broadcastConf(
+      sc: org.apache.spark.SparkContext,
+      conf: org.apache.hadoop.conf.Configuration
+  ): org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration] =
+    org.apache.spark.util.SerializableConfiguration.broadcast(sc, conf)
 }

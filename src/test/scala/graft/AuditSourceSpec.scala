@@ -1,6 +1,14 @@
 package graft
 
+import java.io.{ByteArrayOutputStream, File}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
+import java.util.zip.GZIPOutputStream
+
+import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, input_file_name}
 
 import graft.sources.AuditSource
 
@@ -9,6 +17,7 @@ import graft.sources.AuditSource
   * skipped, non-date paths always pass.
   */
 class AuditSourceSpec extends SparkSpec {
+  import AuditSourceSpec._
 
   test("recursive batch source reads nested date directories") {
     val root = Files.createTempDirectory("audits").toFile
@@ -85,6 +94,96 @@ class AuditSourceSpec extends SparkSpec {
       spark, root.getAbsolutePath, Some("20210101"))
     assert(df.collect().map(_.getString(0)).toSeq == Seq("x"))
     assert(index.inputFiles.length == 1)
+  }
+
+  test("DatePrunedFileIndex lists through the session's Hadoop settings, read when it walks") {
+    val root = Files.createTempDirectory("audits_conf").toFile
+    for (d <- Seq("20210101", "20210301", "20210302")) {
+      val dir = new File(root, d)
+      dir.mkdirs()
+      Files.writeString(new File(dir, "audit.log").toPath, d + "\n")
+    }
+    // built before the setting: the walk, not the constructor, reads it
+    val (df, index) = AuditSource.batchPrunedWithIndex(spark, root.getAbsolutePath, Some("20210201"))
+    withRestoredConf(Seq("fs.file.impl", "fs.file.impl.disable.cache")) {
+      spark.conf.set("fs.file.impl", classOf[CountingFs].getName)
+      spark.conf.set("fs.file.impl.disable.cache", "true")
+      CountingFs.entries.set(0)
+      assert(index.inputFiles.length == 2)
+      // the root's three day dirs, then one file in each kept day
+      assert(CountingFs.entries.get == 5)
+      assert(df.collect().map(_.getString(0)).sorted.toSeq == Seq("20210301", "20210302"))
+    }
+  }
+
+  /** A tree of files whose bytes stress a line reader: LF, CRLF, CR and
+    * mixed line endings, multi-byte characters, a UTF-8 BOM (and a file
+    * of only a BOM), an empty file, a file of blank lines, 170 KB lines
+    * and a gzip file.
+    */
+  private def lineCorpus(): File = {
+    val root = Files.createTempDirectory("audit_lines").toFile
+    def write(rel: String, bytes: Array[Byte]): Unit = {
+      val f = new File(root, rel)
+      f.getParentFile.mkdirs()
+      Files.write(f.toPath, bytes)
+    }
+    def lines(tag: String, n: Int, end: String): Array[Byte] =
+      (1 to n).map(i => s"$tag é line $i " + "z" * (i % 23)).mkString("", end, end).getBytes(UTF_8)
+    val bom = Array(0xEF, 0xBB, 0xBF).map(_.toByte)
+    write("20210101/lf.log", lines("lf", 60, "\n"))
+    write("20210101/crlf.log", lines("crlf", 60, "\r\n"))
+    write("20210101/cr.log", lines("cr", 60, "\r"))
+    write("20210102/mixed.log", "a\nb\r\nc\rd\r\n\re\n\n\rf ü".getBytes(UTF_8))
+    write("20210102/bom.log", bom ++ lines("bom", 20, "\r\n"))
+    write("20210102/bom_only.log", bom)
+    write("20210103/empty.log", Array.emptyByteArray)
+    write("20210103/blank.log", "\n\n\r\n\r\r\n \n".getBytes(UTF_8))
+    write("20210103/long.log", ("x" * 170000 + "\r\nshort\n" + "y" * 170000).getBytes(UTF_8))
+    val gz = new ByteArrayOutputStream()
+    val out = new GZIPOutputStream(gz)
+    out.write(bom ++ lines("gz", 30, "\n"))
+    out.close()
+    write("20210104/packed.log.gz", gz.toByteArray)
+    root
+  }
+
+  test("audit reads return Spark's text rows at every split size; the stream returns the batch's") {
+    val root = lineCorpus()
+    def pairs(df: DataFrame): Seq[(String, String)] =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+    def rows(df: DataFrame): Seq[(String, String)] = pairs(df.select(input_file_name(), col("value")))
+    def text(): DataFrame =
+      spark.read.format("text").option("recursiveFileLookup", "true").load(root.getAbsolutePath)
+    val maxBytes = "spark.sql.files.maxPartitionBytes"
+    val maxLine = "mapreduce.input.linerecordreader.line.maxlength"
+    // (split size, line length limit); no open cost, so tiny splits stay tiny
+    val settings = Seq(Some("64") -> None, Some("1000") -> None, None -> None, Some("1000") -> Some("100"))
+    for ((split, limit) <- settings)
+      withRestoredConf(Seq(maxBytes, maxLine, "spark.sql.files.openCostInBytes")) {
+        spark.conf.set("spark.sql.files.openCostInBytes", "0")
+        split.foreach(spark.conf.set(maxBytes, _))
+        limit.foreach(spark.conf.set(maxLine, _))
+        val expected = rows(text())
+        assert(expected.nonEmpty)
+        if (split.contains("64")) assert(text().rdd.getNumPartitions > 1000)
+        for ((read, df) <- Seq(
+            "batch" -> AuditSource.batch(spark, root.getAbsolutePath),
+            "pruned" -> AuditSource.batchPruned(spark, root.getAbsolutePath, Some("20210101")))) {
+          // counted first: a reader that splits lines wrongly can return
+          // thousands of copies of the 170 KB lines
+          assert(df.count() == expected.length, s"$read at split $split, limit $limit")
+          assert(rows(df) == expected, s"$read at split $split, limit $limit")
+        }
+      }
+
+    val query = AuditSource.stream(spark, root.getAbsolutePath)
+      .select(input_file_name().as("file"), col("value"))
+      .writeStream.format("memory").queryName("audit_lines_stream").start()
+    try {
+      query.processAllAvailable()
+      assert(pairs(spark.table("audit_lines_stream")) == rows(AuditSource.batch(spark, root.getAbsolutePath)))
+    } finally query.stop()
   }
 
   test("minDateGlob keeps exactly the names the min-date rule keeps") {
@@ -192,5 +291,21 @@ class AuditSourceSpec extends SparkSpec {
     // a real date still prunes as before
     assert(AuditSource.batchPruned(spark, path, Some("20210615"))
       .collect().map(_.getString(0)).toSeq == Seq("20210801"))
+  }
+}
+
+object AuditSourceSpec {
+
+  /** The local file system, counting the entries `listStatus` returns. */
+  class CountingFs extends LocalFileSystem {
+    override def listStatus(f: Path): Array[FileStatus] = {
+      val out = super.listStatus(f)
+      CountingFs.entries.addAndGet(out.length.toLong)
+      out
+    }
+  }
+
+  object CountingFs {
+    val entries = new AtomicLong
   }
 }

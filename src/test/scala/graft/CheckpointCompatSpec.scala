@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.{AbstractFileSystem, FileSystem}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{AuditJson, Sessionize}
@@ -17,6 +18,10 @@ import graft.streaming.AuditSessionPipeline
   * only in the state store, so the output is exact only if the second
   * file system reads the first one's offsets, commits, state deltas and
   * sink manifest (each with its `.crc` sidecar).
+  *
+  * The same holds across the source's reader: a checkpoint whose file
+  * source log Spark's own `text` stream wrote restarts under
+  * `AuditSource.stream`, and the other way round.
   */
 class CheckpointCompatSpec extends SparkSpec {
   import GraftLocalFileSystemSpec.{graft, local, stock}
@@ -66,7 +71,18 @@ class CheckpointCompatSpec extends SparkSpec {
     }
   }
 
-  private def restartAcross(first: Map[String, String], second: Map[String, String]): Unit = {
+  /** The audit stream, and the one Spark's `text` reader served before
+    * `AuditSource` had its own (deployed checkpoints hold its source log).
+    */
+  private def audit(path: String): DataFrame = AuditSource.stream(spark, path)
+  private def sparkText(path: String): DataFrame =
+    spark.readStream.format("text").option("recursiveFileLookup", "true").load(path)
+
+  private def restartAcross(
+      first: Map[String, String],
+      second: Map[String, String],
+      sources: (String => DataFrame, String => DataFrame) = (audit, audit)
+  ): Unit = {
     val root = Files.createTempDirectory("audit_compat").toFile
     val day = new File(root, "20210401")
     day.mkdirs()
@@ -83,20 +99,20 @@ class CheckpointCompatSpec extends SparkSpec {
       kafkaOptions = Map.empty,
       outputPath = Some(outDir.getAbsolutePath))
 
-    def drain(): Unit = {
+    def drain(source: String => DataFrame): Unit = {
       val results = AuditSessionPipeline.transform(
-        AuditSource.stream(spark, root.getAbsolutePath), gapSeconds, watermark = "10 minutes")
+        source(root.getAbsolutePath), gapSeconds, watermark = "10 minutes")
       val q = AuditSessionPipeline.writer(results, config).trigger(Trigger.AvailableNow()).start()
       try assert(q.awaitTermination(120000), "query did not self-terminate")
       finally q.stop()
     }
 
     publish(day, firstHalf)
-    under(first)(drain())
+    under(first)(drain(sources._1))
     publish(day, secondHalf)
-    under(second)(drain())
+    under(second)(drain(sources._2))
 
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
     val streamed = rows(spark.read.parquet(outDir.getAbsolutePath))
     val batch = rows(Sessionize.auditDeniedCounts(
       AuditJson.parse(AuditSource.batch(spark, root.getAbsolutePath)), gapSeconds))
@@ -118,5 +134,13 @@ class CheckpointCompatSpec extends SparkSpec {
 
   test("a checkpoint written under graft's local file system restarts under Hadoop's") {
     restartAcross(first = graft, second = stock)
+  }
+
+  test("a checkpoint written through Spark's text reader restarts under AuditSource's") {
+    restartAcross(first = graft, second = graft, sources = (sparkText, audit))
+  }
+
+  test("a checkpoint written through AuditSource's reader restarts under Spark's text reader") {
+    restartAcross(first = graft, second = graft, sources = (audit, sparkText))
   }
 }

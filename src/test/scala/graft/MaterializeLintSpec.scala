@@ -19,6 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - one session setup: only `GraftSession.scala` builds a session,
   *     and nothing installs session extensions (graft's functions are
   *     DataFrame functions, with no SQL registry);
+  *   - one text reader: audit files are read only through
+  *     `sources/AuditLines.scala`, which sets Hadoop's line reader up
+  *     once per task, never through Spark's per-file `text` reader;
   *   - no spec-only API: every public object-level `def` of the
   *     operator, streaming, source and function packages is used by
   *     the library or `perfbench/src` — as `Object.name`, through an
@@ -87,6 +90,13 @@ class MaterializeLintSpec extends AnyFunSuite {
       hits(Regex.quote("spark.sql.extensions").r, 50)(_ => true)
     assert(found.isEmpty, found.mkString(
       "build sessions through GraftSession, with no SQL extensions:\n", "\n", ""))
+  }
+
+  test("no code line outside sources/AuditLines.scala names Spark's text reader") {
+    val reader = """format\("text"\)|TextFileFormat|HadoopFileLinesReader""".r
+    val lines = Paths.get("graft", "sources", "AuditLines.scala")
+    val found = hits(reader, 50)(_ != lines)
+    assert(found.isEmpty, found.mkString("read text through sources/AuditLines:\n", "\n", ""))
   }
 
   test("every public def of operators/, streaming/, sources/ and functions/ has a non-spec caller") {

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Data-layout operators for 100 TB table maintenance: Z-order (Morton)
   * interleaving so multi-column range predicates prune well under a
   * single sort order.
@@ -130,7 +132,7 @@ object Layout {
   ): (Int, Int) = {
     import org.apache.hadoop.fs.Path
     val dir = new Path(partDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fileSystem(spark, dir)
     def dataFiles() = fs.listStatus(dir).toSeq
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
@@ -250,7 +252,7 @@ object Layout {
   ): MaintenanceReport = {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fileSystem(spark, root)
     val prefix = s"$partitionCol="
     def partDirs() = fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))

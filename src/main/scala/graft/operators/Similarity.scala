@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.functions.GraftFunctions
 
 /** Similarity search over embedding columns (`array<float>`).
@@ -326,7 +327,7 @@ object Similarity {
       .join(broadcast(deletes), Seq(idCol), "left_anti")
 
     val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fileSystem(spark, dir)
     // no leading dot: Spark treats dot-prefixed roots as hidden in one
     // listing path (reads still work, but with an "All paths were
     // ignored" WARN) — a plain sibling name avoids the subtlety

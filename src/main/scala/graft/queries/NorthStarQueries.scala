@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.{Decontaminate, Dedup, Guard, Multimodal, Profile, Quantize, Sampling, Similarity, TextAnalysis}
 
 /** North-star LLM-data-pipeline operators (BASELINE.json `north_star`)
@@ -1172,7 +1173,7 @@ object NorthStarQueries {
           .write.mode("overwrite").partitionBy("centroid_id").parquet(scratch)
 
         val root = new Path(scratch)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val fs = GraftSession.fileSystem(spark, root)
         def snapshot(): Map[String, Seq[(String, Long, Long)]] =
           fs.listStatus(root).toSeq
             .filter(st => st.isDirectory && st.getPath.getName.startsWith("centroid_id="))
@@ -1304,7 +1305,7 @@ object NorthStarQueries {
           docs.filter(col("lang").isin("en", "es") && col("doc_id") % 3 === k)
             .repartition(1).write.partitionBy("lang").mode("append").parquet(path)
         }
-        val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val fs = GraftSession.fileSystem(spark, new Path(path))
         def snapshot(lang: String) = fs.listStatus(new Path(s"$path/lang=$lang"))
           .toSeq.filter(_.isFile)
           .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))

@@ -9,6 +9,8 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.GraftSession
+
 /** One named, driver-checkable query: a Spark DataFrame program plus (when
   * SQL-expressible) an equivalent ANSI SQL string the driver runs in DuckDB
   * on the same parquet tables. Column names AND types must match between
@@ -143,7 +145,7 @@ object Q {
           new org.apache.hadoop.fs.Path(wh, s"${lower(db)}.db"), lower(ident.table))
         case None => new org.apache.hadoop.fs.Path(wh, lower(ident.table))
       })
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = GraftSession.fileSystem(spark, path)
     if (fs.exists(path)) { fs.delete(path, true): Unit }
   }
 

@@ -97,7 +97,9 @@ object AuditSource {
     *     the first midnight);
     *   - every non-8-digit name and every name containing a non-digit
     *     (the reference passes names that don't parse as dates,
-    *     `DateFileFilter.java:29-33`).
+    *     `DateFileFilter.java:29-33`), except names starting with `.`
+    *     or `_`, which every other read here skips as hidden (a
+    *     writer's `_temporary` or `.staging` directory).
     *
     * Hadoop compiles `{a,b,...}` to ONE regex alternation, so a name
     * matching several branches lists once — no duplicate reads.
@@ -135,7 +137,12 @@ object AuditSource {
       d * 6 + "[4-9]" + d)
     // the superset around month-length non-dates: Feb 29-31, 31st of a 30-day month
     val monthLength = Seq(d * 4 + "0229", d * 4 + "023[01]", d * 4 + "0[469]31", d * 4 + "1131")
-    val nonDate = (1 to 7).map("?" * _) ++ Seq("*[^0-9]*", d * 9 + "*")
+    // every branch that can match a non-digit first character is kept
+    // off a leading `.` or `_`: those roots are hidden to batch reads,
+    // but Spark's hidden-path filter never sees a root a glob matched
+    val visible = "[^._]"
+    val nonDate = (0 to 6).map(visible + "?" * _) ++
+      Seq("[^._0-9]*", d + "*[^0-9]*", d * 9 + "*")
     (ge ++ nonParse ++ monthLength ++ nonDate).mkString("{", ",", "}")
   }
 

@@ -12,6 +12,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
+import graft.GraftSession
+
 /** Enumeration-time date pruning for bare `YYYYMMDD/` directory trees —
   * the exact effect of the reference's `DateFileFilter`
   * (`DateFileFilter.java:19-38`): a directory whose name parses as
@@ -91,13 +93,14 @@ class DatePrunedFileIndex(
       catch { case _: java.io.IOException => fs.makeQualified(dir).toString }
     else fs.makeQualified(dir).toString
 
-  /** Lists through the session's Hadoop conf as the walk runs — as
+  /** Lists through the session's Hadoop conf
+    * ([[GraftSession.fileSystem]]) as the walk runs — as
     * Spark's own index and the scan of the walk's files do — so settings
     * made with `spark.conf.set` (a per-session `fs.s3a.*` credential, a
     * file system implementation) reach the listing too.
     */
   private def listPruned(): Seq[FileStatus] = {
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = GraftSession.fileSystem(spark, root)
     val visited = mutable.ArrayBuffer.empty[String]
     val seen = mutable.HashSet.empty[String]
     val out = mutable.ArrayBuffer.empty[FileStatus]

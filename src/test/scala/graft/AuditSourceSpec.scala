@@ -200,9 +200,12 @@ class AuditSourceSpec extends SparkSpec {
       // 30-day month) — with the real date 20200229, which the row
       // filter then drops
       "20230230", "20230231", "20200431", "20230631", "20230931", "20231131",
-      "20190229", "20200229")
+      "20190229", "20200229", "a", "1a", "a.b", "x_tmp")
     val pruned = Seq("20240314", "20240101", "19991231", "20230228", "20230131",
-      "20230430", "20231031")
+      "20230430", "20231031",
+      // hidden to every other read, whatever follows the `.` or `_`
+      "_tmp", ".hidden", "_temporary", ".staging", "_", ".", "_a", ".a1",
+      "_20250101", ".20250101", "_2025010", "_202501011")
     kept.foreach(n => assert(p.matches(n), s"expected glob to keep $n"))
     pruned.foreach(n => assert(!p.matches(n), s"expected glob to prune $n"))
   }
@@ -245,7 +248,11 @@ class AuditSourceSpec extends SparkSpec {
         // invalid only by month length (kept by the reference) around a
         // real leap day below min (dropped)
         "20210230" -> "feb30", "20200431" -> "apr31", "20190229" -> "feb29",
-        "20200229" -> "leapday")) {
+        "20200229" -> "leapday",
+        // hidden at level 1 (a writer's scratch directory, date-named or
+        // not) and below it: no read keeps them
+        "_tmp" -> "tmp", ".hidden" -> "hidden", "_20250101" -> "udate",
+        ".20250101" -> "dotdate", "_tmp/20250101" -> "tmpdate", "notadate/_tmp" -> "subtmp")) {
       val dir = new java.io.File(root, d)
       dir.mkdirs()
       Files.writeString(new java.io.File(dir, "audit.log").toPath, line + "\n")

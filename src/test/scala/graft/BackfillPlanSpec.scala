@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.execution.SparkPlan
@@ -19,8 +20,9 @@ import graft.streaming.AuditSessionPipeline
 
 /** What a backfill pays for beyond its batch twin, pinned on the plans
   * and jobs it runs: every line is parsed once and only for the four
-  * fields the sessionizer reads, and on a local master a micro-batch's
-  * files are listed without a Spark job.
+  * fields the sessionizer reads, on a local master a micro-batch's
+  * files are listed without a Spark job, and a session's later
+  * streaming queries reuse the code its first one compiled.
   */
 class BackfillPlanSpec extends SparkSpec {
 
@@ -73,6 +75,30 @@ class BackfillPlanSpec extends SparkSpec {
       finally q.stop()
       assertOneNarrowParse(lastPlan(q).collect { case p => p })
     }
+  }
+
+  test("a second backfill on one session compiles no generated code") {
+    val root = tree(20)
+    def backfill(run: Int): Unit = {
+      val config = AuditSessionPipeline.Config(
+        auditPath = root, pollSeconds = 1, minDate = None, gapSeconds = 600, output = "files",
+        checkpoint = Some(s"$root-cp$run"), kafkaTopic = None, kafkaOptions = Map.empty,
+        outputPath = Some(s"$root-out$run"))
+      val q = AuditSessionPipeline
+        .writer(AuditSessionPipeline.formatted(AuditSource.stream(spark, root), 600, "0 seconds"), config)
+        .trigger(Trigger.AvailableNow()).start()
+      try assert(q.awaitTermination(120000), "query did not self-terminate")
+      finally q.stop()
+    }
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    backfill(1)
+    val before = compiles.getCount
+    backfill(2)
+    // each query runs on a clone of the session; with artifact isolation
+    // on, every clone's tasks got a fresh class loader and the code
+    // cache missed on all of them
+    assert(compiles.getCount - before == 0, "the second query compiled generated code")
+    assert(spark.read.parquet(s"$root-out2").count() == spark.read.parquet(s"$root-out1").count())
   }
 
   test("GraftSession lists files on the driver only on a local master") {

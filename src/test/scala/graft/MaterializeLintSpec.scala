@@ -7,7 +7,8 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source rules for `src/main/scala`, one walk shared by all:
+/** Source rules for `src/main/scala` (the session rule covers
+  * `src/test/scala` too), one walk shared by all:
   *
   *   - one way to materialize: every persist, cache, local checkpoint
   *     and unpersist in the library goes through `operators/Guard.scala`
@@ -17,8 +18,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - typed plan assertions: no gate in `queries/` matches on
   *     `executedPlan.toString`, whose shape is not a stable API;
   *   - one session setup: only `GraftSession.scala` builds a session,
-  *     and nothing installs session extensions (graft's functions are
-  *     DataFrame functions, with no SQL registry);
+  *     in the library and in specs, and nothing installs session
+  *     extensions (graft's functions are DataFrame functions, with no
+  *     SQL registry);
+  *   - one Hadoop conf: graft looks file systems up only through
+  *     `GraftSession.fileSystem`, over the session's Hadoop conf, so a
+  *     Hadoop key set with `spark.conf.set` reaches every lookup;
   *   - one text reader: audit files are read only through
   *     `sources/AuditLines.scala`, which sets Hadoop's line reader up
   *     once per task, never through Spark's per-file `text` reader;
@@ -41,6 +46,10 @@ class MaterializeLintSpec extends AnyFunSuite {
 
   private lazy val library = scalaFiles(root)
 
+  private val specRoot = Paths.get("src/test/scala")
+
+  private lazy val specs = scalaFiles(specRoot)
+
   /** The code part of a line: comment lines and trailing `//` comments
     * dropped.
     */
@@ -51,11 +60,14 @@ class MaterializeLintSpec extends AnyFunSuite {
   }
 
   /** Every code line matching `rule` in the `.scala` files under
-    * `src/main/scala` that `scope` admits, as `file:line: text`; more
+    * `src/main/scala` (or `src/test/scala` when `inSpecs`) that `scope`
+    * admits by their path below that root, as `file:line: text`; more
     * than `minFiles` files must be admitted.
     */
-  private def hits(rule: Regex, minFiles: Int)(scope: Path => Boolean): List[String] = {
-    val files = library.filter { case (f, _) => scope(root.relativize(f)) }
+  private def hits(rule: Regex, minFiles: Int, inSpecs: Boolean = false)(
+      scope: Path => Boolean): List[String] = {
+    val (base, all) = if (inSpecs) (specRoot, specs) else (root, library)
+    val files = all.filter { case (f, _) => scope(base.relativize(f)) }
     assert(files.size > minFiles)
     files.flatMap { case (f, lines) =>
       lines.zipWithIndex.collect {
@@ -86,10 +98,23 @@ class MaterializeLintSpec extends AnyFunSuite {
 
   test("no code line outside GraftSession.scala builds a session, and none sets session extensions") {
     val session = Paths.get("graft", "GraftSession.scala")
-    val found = hits(Regex.quote("SparkSession.builder").r, 50)(_ != session) ++
-      hits(Regex.quote("spark.sql.extensions").r, 50)(_ => true)
+    // specs too: the shared spec session is built on GraftSession.builder,
+    // so specs run with the settings fixed at session creation
+    val lint = Paths.get("graft", "MaterializeLintSpec.scala")
+    val found = Seq(false, true).flatMap { inSpecs =>
+      hits(Regex.quote("SparkSession.builder").r, 50, inSpecs)(p => p != session && p != lint) ++
+        hits(Regex.quote("spark.sql.extensions").r, 50, inSpecs)(_ != lint)
+    }
     assert(found.isEmpty, found.mkString(
       "build sessions through GraftSession, with no SQL extensions:\n", "\n", ""))
+  }
+
+  test("no code line outside GraftSession.scala builds a Hadoop conf for a file system lookup") {
+    val conf = """sparkContext\.hadoopConfiguration|newHadoopConf\(""".r
+    val session = Paths.get("graft", "GraftSession.scala")
+    val found = hits(conf, 50)(_ != session)
+    assert(found.isEmpty, found.mkString(
+      "look file systems up with GraftSession.fileSystem (the session's Hadoop conf):\n", "\n", ""))
   }
 
   test("no code line outside sources/AuditLines.scala names Spark's text reader") {

@@ -22,15 +22,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+
+  /** The product's session settings ([[GraftSession.builder]]), so specs
+    * run with the settings fixed at session creation that mains get.
+    */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder(shufflePartitions = 4)
       .master("local[4]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
       .config("spark.ui.enabled", "false")
-      .config(GraftSession.localFileSystem)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
